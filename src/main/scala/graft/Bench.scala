@@ -493,24 +493,13 @@ object Bench {
     val failed = scala.collection.mutable.ArrayBuffer[String]()
     // under SPARK_GRAFT_ONLY, still warm ALL index caches (isolated
     // queries must serve from warm caches like in-suite ones) — but a
-    // NON-requested build runs as a plain prewarm (no invalidation, no
+    // NON-requested build runs its `warm` thunk (no invalidation, no
     // timing), so the isolation probe doesn't pay ~60 s of forced
     // rebuilds it didn't ask for
-    val prewarmMap = SparkEntry.indexPrewarms.toMap
-    // an indexBuilds entry without an indexPrewarms twin would throw
-    // inside the try below, be swallowed as "prewarm failed", and leave
-    // that family's caches COLD under SPARK_GRAFT_ONLY — skewing exactly
-    // the isolation measurement the prewarm protects. Surface the drift
-    // loudly and fall back to the build thunk (warm, just not forced).
-    val unpaired = SparkEntry.indexBuilds.map(_._1)
-      .filterNot(prewarmMap.contains)
-    if (unpaired.nonEmpty)
-      System.err.println("[bench] indexBuilds without an indexPrewarms " +
-        s"twin (falling back to the build thunk): ${unpaired.mkString(", ")}")
     val buildResults: Seq[(String, Double)] =
-      SparkEntry.indexBuilds.flatMap { case (name, run) =>
+      SparkEntry.indexBuilds.flatMap { case SparkEntry.IndexBuild(name, run, warm) =>
         if (only.exists(names => !names.contains(name))) {
-          try prewarmMap.getOrElse(name, run)(spark, sfDir)
+          try warm(spark, sfDir)
           catch { case e: Throwable =>
             System.err.println(s"[bench] prewarm $name failed: ${e.getMessage}")
           }
@@ -635,7 +624,7 @@ object Bench {
         docs.length.toLong
       })
     val writeRunnerMap = writeRunners.toMap
-    val buildRunnerMap = SparkEntry.indexBuilds.toMap
+    val buildRunnerMap = SparkEntry.indexBuilds.map(b => b.name -> b.build).toMap
     // Warmup is INTERLEAVED per query (warm q at sf0.001, then time q at
     // the target SF), not a separate all-queries warmup pass: codegen
     // cache or not, the JVM's own JIT state for a query's generated

@@ -7,12 +7,14 @@ import graft.operators._
 import graft.sources.Tables
 import graft.functions.TextOps
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7).
   *
-  * Every `queries` entry is deterministic (explicit total ORDER BY and
-  * exact-decimal aggregation — see Relational's numeric policy) and has a
-  * DuckDB-equivalent `oracleSql` with matching column names/types unless
-  * the op is not SQL-expressible (then rows-only check).
+  * The registry is one list, [[registry]]: each operator family
+  * declares its own `queries: Seq[Query]` (name, builder, DuckDB oracle
+  * SQL) beside its code, and `queries` / `oracleSql` are views over it.
+  * Every query is deterministic (explicit total ORDER BY and
+  * exact-decimal aggregation — see Relational's numeric policy) and its
+  * oracle has matching column names/types.
   */
 object SparkEntry {
 
@@ -24,7 +26,7 @@ object SparkEntry {
       Tables.documents(spark, "/root/testdata/sf0.001"))
 
   /** Fixed export path for oracle-support tables (see oracleAux). */
-  val OracleAuxDir = "/tmp/graft_oracle_aux"
+  val OracleAuxDir: String = Query.OracleAuxDir
 
   /** Oracle-support tables: Spark-computed inputs that oracle SQL reads
     * back via read_parquet(OracleAuxDir). Exists for exactly one
@@ -136,3871 +138,145 @@ object SparkEntry {
     // from unigram_segs
     "unigram_incr_segs" -> ((s, d) => Unigram.incrSegTable(s, d)))
 
-  /** One-time index builds for the ANN family, with the SAME parameters
-    * the registry entries below use (ivf_topk/ann_topk/semantic_dedup →
-    * Ivf.cachedCentroids(16, 2); pq_topk → Pq.cachedCodebook(8, 16, 1)).
-    * Bench calls this in its untimed warmup — the deployment posture:
+  /** One-time index build for the ANN/PCA/tokenizer families, with the
+    * SAME parameters the registry queries use (ivf_topk/ann_topk/
+    * semantic_dedup → Ivf.cachedCentroids(16, 2); knn_graph →
+    * (autoCells, 0) and its (16, 0) sibling; pq_topk → (8, 16, 1)).
+    * The bench gives each its own timed line — the deployment posture:
     * an index is built offline once and persisted, and query jobs serve
-    * from it (the prebuilt-index paths are spec-gated). The builds
-    * populate the process-level caches, so every later consumer —
-    * including the oracleAux exports — reuses them. Keep the parameters
-    * here in lockstep with the registry entries.
+    * from it (the prebuilt-index paths are spec-gated). BPE is
+    * deliberately NOT here — it is uncached by design (Bpe.corpusMerges)
+    * so BPE-family timings stay self-contained including training.
+    *
+    * `build` FORCES a fresh build (invalidating its stamped cache — and,
+    * for the suffix index, the persisted parquet — first), so a flagged
+    * rerun measures the build again rather than a cache hit that would
+    * launder a real regression into "noise". `warm` only makes sure the
+    * cache is populated (no invalidation): the bench's SPARK_GRAFT_ONLY
+    * isolation probe runs it for builds it did not ask for, so isolated
+    * queries serve from warm caches like in-suite ones without paying
+    * the forced rebuild — a persisted artifact re-serves from disk, a
+    * driver-held one builds once lazily, exactly like a fresh serving
+    * process would. For the incremental builds the two differ in what
+    * they touch, not just in forcing: maintenance is timed whole, while
+    * serving needs only the cached occupancy pass.
     */
-  def prewarmIndexes(s: SparkSession, d: String): Unit =
-    indexBuilds.foreach(_._2(s, d))
+  final case class IndexBuild(
+      name: String,
+      build: (SparkSession, String) => Unit,
+      warm: (SparkSession, String) => Unit)
 
-  /** The same builds as named, individually timeable steps — the bench
-    * gives each its own floored line instead of one untimed
-    * `index_build_sec` lump (a build-path regression was invisible
-    * while the queries it serves stayed gated). Each thunk FORCES a
-    * fresh build (invalidating its stamped cache — and, for the suffix
-    * index, the persisted parquet — first), so a flagged rerun
-    * measures the build again rather than a cache hit that would
-    * launder a real regression into "noise". Keep parameters in
-    * lockstep with the registry entries (ivf_topk/ann_topk/
-    * semantic_dedup → (16, 2); knn_graph → (autoCells, 0) and its
-    * (16, 0) sibling; pq_topk → (8, 16, 1)). BPE is deliberately NOT
-    * here — it is uncached by design (Bpe.corpusMerges) so BPE-family
-    * timings stay self-contained including training.
-    */
-  def indexBuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "build_ivf_c16_i2" -> { (s, d) =>
-      Ivf.invalidateCentroids(d, 16, 2)
-      Ivf.cachedCentroids(s, d, 16, 2); ()
-    },
-    "build_ivf_c16_i0" -> { (s, d) =>
-      Ivf.invalidateCentroids(d, 16, 0)
-      Ivf.cachedCentroids(s, d, 16, 0); ()
-    },
+  def indexBuilds: Seq[IndexBuild] = Seq(
+    IndexBuild("build_ivf_c16_i2",
+      (s, d) => {
+        Ivf.invalidateCentroids(d, 16, 2)
+        Ivf.cachedCentroids(s, d, 16, 2); ()
+      },
+      (s, d) => { Ivf.cachedCentroids(s, d, 16, 2); () }),
+    IndexBuild("build_ivf_c16_i0",
+      (s, d) => {
+        Ivf.invalidateCentroids(d, 16, 0)
+        Ivf.cachedCentroids(s, d, 16, 0); ()
+      },
+      (s, d) => { Ivf.cachedCentroids(s, d, 16, 0); () }),
     // knn_graph's sqrt(N)-sized cell set
-    "build_ivf_auto_i0" -> { (s, d) =>
-      val cells = Similarity.autoCells(s, d)
-      Ivf.invalidateCentroids(d, cells, 0)
-      Ivf.cachedCentroids(s, d, cells, 0); ()
-    },
-    "build_pq_codebook" -> { (s, d) =>
-      Pq.invalidateCodebook(d, 8, 16, 1)
-      Pq.cachedCodebook(s, d, 8, 16, 1); ()
-    },
+    IndexBuild("build_ivf_auto_i0",
+      (s, d) => {
+        val cells = Similarity.autoCells(s, d)
+        Ivf.invalidateCentroids(d, cells, 0)
+        Ivf.cachedCentroids(s, d, cells, 0); ()
+      },
+      (s, d) => {
+        Ivf.cachedCentroids(s, d, Similarity.autoCells(s, d), 0); ()
+      }),
+    IndexBuild("build_pq_codebook",
+      (s, d) => {
+        Pq.invalidateCodebook(d, 8, 16, 1)
+        Pq.cachedCodebook(s, d, 8, 16, 1); ()
+      },
+      (s, d) => { Pq.cachedCodebook(s, d, 8, 16, 1); () }),
     // one k=2 fit serves the whole PCA family: cachedPcaFitK hands
     // smaller-k requests the prefix of this build
-    "build_pca_fit" -> { (s, d) =>
-      Vectors.invalidatePcaFit(d, 3, 2)
-      Vectors.cachedPcaFitK(s, d, 3, 2); ()
-    },
+    IndexBuild("build_pca_fit",
+      (s, d) => {
+        Vectors.invalidatePcaFit(d, 3, 2)
+        Vectors.cachedPcaFitK(s, d, 3, 2); ()
+      },
+      (s, d) => { Vectors.cachedPcaFitK(s, d, 3, 2); () }),
     // unigram-LM tokenizer fit: trained offline once like the ANN
     // indexes; unigram_seed/train/tokenize and tokenizer_compare's
     // unigram leg all serve from the cached vocabularies. The persisted
     // word table is retired too, so the forced rebuild measures the
     // corpus scan as well (not a disk-served table).
-    "build_unigram_vocabs" -> { (s, d) =>
-      Unigram.invalidateVocabs(d)
-      Unigram.invalidateWordFreqs(s, d)
-      Unigram.cachedVocabs(s, d); ()
-    },
+    IndexBuild("build_unigram_vocabs",
+      (s, d) => {
+        Unigram.invalidateVocabs(d)
+        Unigram.invalidateWordFreqs(s, d)
+        Unigram.cachedVocabs(s, d); ()
+      },
+      (s, d) => { Unigram.cachedVocabs(s, d); () }),
     // suffix-rank index: built offline once and PERSISTED (parquet) —
     // suffix_ranks / repeated_spans_sa serve from the on-disk table
-    "build_suffix_index" -> { (s, d) =>
-      SuffixRanks.invalidateIndex(s, d)
-      SuffixRanks.cachedRanks(s, d); ()
-    },
+    IndexBuild("build_suffix_index",
+      (s, d) => {
+        SuffixRanks.invalidateIndex(s, d)
+        SuffixRanks.cachedRanks(s, d); ()
+      },
+      (s, d) => { SuffixRanks.cachedRanks(s, d); () }),
     // incremental IVF maintenance: the delta-bounded alternative to
     // build_ivf_c16_i2's full re-seed — timed with its occupancy pass
     // forced fresh (the pass is stamp-cached in steady state, but a
     // flagged rerun must measure the whole maintenance). Depends on
     // the (16,2) centroids built above, like a real maintainer would.
-    "build_ivf_incremental" -> { (s, d) =>
-      Ivf.invalidateCellCounts(d, 16, 2)
-      // all maintenance work (assignment aggregate + driver fold) runs
-      // eagerly inside; the returned DF is a local relation
-      Ivf.incrementalCentroids(s, d, Ivf.syntheticDelta(s, d), 16, 2); ()
-    },
-    "build_pq_incremental" -> { (s, d) =>
-      Pq.invalidateCodeCounts(d, 8, 16, 1)
-      Pq.incrementalCodebook(s, d, Ivf.syntheticDelta(s, d), 8, 16, 1); ()
-    },
+    IndexBuild("build_ivf_incremental",
+      (s, d) => {
+        Ivf.invalidateCellCounts(d, 16, 2)
+        // all maintenance work (assignment aggregate + driver fold) runs
+        // eagerly inside; the returned DF is a local relation
+        Ivf.incrementalCentroids(s, d, Ivf.syntheticDelta(s, d), 16, 2); ()
+      },
+      (s, d) => { Ivf.cellCounts(s, d, 16, 2); () }),
+    IndexBuild("build_pq_incremental",
+      (s, d) => {
+        Pq.invalidateCodeCounts(d, 8, 16, 1)
+        Pq.incrementalCodebook(s, d, Ivf.syntheticDelta(s, d), 8, 16, 1); ()
+      },
+      (s, d) => { Pq.codeCounts(s, d, 8, 16, 1); () }),
     // incremental PCA maintenance: one warm iteration from the served
     // fit (built by build_pca_fit above) over the merged corpus — the
     // delta-bounded-iteration alternative to a cold refit. Nothing of
     // the maintenance itself is cached, so reruns measure the work.
-    "build_pca_incremental" -> { (s, d) =>
-      Vectors.incrementalPcaFitK(s, d, Ivf.syntheticDelta(s, d), 3, 1); ()
-    },
+    IndexBuild("build_pca_incremental",
+      (s, d) => {
+        Vectors.incrementalPcaFitK(s, d, Ivf.syntheticDelta(s, d), 3, 1); ()
+      },
+      (s, d) => { Vectors.cachedPcaFitK(s, d, 3, 2); () }),
     // incremental unigram maintenance: delta census merged into the
     // PERSISTED word table (built by build_unigram_vocabs above —
     // serving from it IS the maintenance) + the census/EM tail; no
     // corpus re-scan. Forced fresh via its own demo cache.
-    "build_unigram_incremental" -> { (s, d) =>
-      Unigram.invalidateIncrVocabs(d)
-      Unigram.cachedIncrVocabs(s, d); ()
-    })
+    IndexBuild("build_unigram_incremental",
+      (s, d) => {
+        Unigram.invalidateIncrVocabs(d)
+        Unigram.cachedIncrVocabs(s, d); ()
+      },
+      (s, d) => { Unigram.cachedIncrVocabs(s, d); () }))
 
-  /** Warm (no forced invalidation) variants of [[indexBuilds]], for
-    * the bench's SPARK_GRAFT_ONLY isolation probe: a NON-requested
-    * build still needs its cache warm so the isolated queries serve
-    * like in-suite ones, but must not pay (or time) the forced rebuild
-    * the probe didn't ask for — a persisted artifact (the suffix
-    * index) re-serves from disk, a driver-held one builds once lazily,
-    * exactly like a fresh serving process would. */
-  def indexPrewarms: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "build_ivf_c16_i2" -> ((s, d) => { Ivf.cachedCentroids(s, d, 16, 2); () }),
-    "build_ivf_c16_i0" -> ((s, d) => { Ivf.cachedCentroids(s, d, 16, 0); () }),
-    "build_ivf_auto_i0" -> { (s, d) =>
-      Ivf.cachedCentroids(s, d, Similarity.autoCells(s, d), 0); ()
-    },
-    "build_pq_codebook" -> ((s, d) => { Pq.cachedCodebook(s, d, 8, 16, 1); () }),
-    "build_pca_fit" -> ((s, d) => { Vectors.cachedPcaFitK(s, d, 3, 2); () }),
-    "build_unigram_vocabs" -> ((s, d) => { Unigram.cachedVocabs(s, d); () }),
-    "build_suffix_index" -> ((s, d) => { SuffixRanks.cachedRanks(s, d); () }),
-    "build_ivf_incremental" -> ((s, d) => {
-      Ivf.cellCounts(s, d, 16, 2); ()
-    }),
-    "build_pq_incremental" -> ((s, d) => {
-      Pq.codeCounts(s, d, 8, 16, 1); ()
-    }),
-    "build_pca_incremental" -> ((s, d) => {
-      Vectors.cachedPcaFitK(s, d, 3, 2); ()
-    }),
-    "build_unigram_incremental" -> ((s, d) => {
-      Unigram.cachedIncrVocabs(s, d); ()
-    }))
+  /** Every registry query, in family order. Adding a query is one
+    * `Query` in its family's `queries`; nothing here changes. */
+  lazy val registry: Seq[Query] = Seq(
+    TextAnalysis.queries, Relational.queries, StarSchema.queries,
+    Dedup.queries, Similarity.queries, Ivf.queries, Pq.queries,
+    Pipeline.queries, Temporal.queries, Multimodal.queries,
+    Lossy.queries, Video.queries, EventOps.queries, Analytics.queries,
+    TpcH.queries, SqlKit.queries, TextQuality.queries,
+    Boilerplate.queries, QualityClassifier.queries, Dsir.queries,
+    Vectors.queries, SuffixRanks.queries, Bpe.queries,
+    Unigram.queries).flatten
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // -- reference flagship + text pipeline ------------------------------
-    "inverted_index" -> ((s, d) =>
-      InvertedIndex.asStrings(Tables.documents(s, d)).orderBy(col("word"))),
-    "word_stats" -> ((s, d) => TextAnalysis.wordStats(s, d)),
-    "top_words" -> ((s, d) => TextAnalysis.topWords(s, d)),
-    "lang_profile" -> ((s, d) => TextAnalysis.langProfile(s, d)),
-    "doc_stats" -> ((s, d) => TextAnalysis.docStats(s, d)),
-    "lang_id" -> ((s, d) => TextAnalysis.langIdQuery(s, d)),
-    "tfidf_top_term" -> ((s, d) => TextAnalysis.tfidfTopTerm(s, d)),
-    "doc_fingerprints" -> ((s, d) => TextAnalysis.fingerprints(s, d)),
-    "topk_words_per_lang" -> ((s, d) => TextAnalysis.topWordsPerLang(s, d)),
-    // -- relational core -------------------------------------------------
-    "q1_pricing" -> ((s, d) => Relational.q1Pricing(s, d)),
-    "q3_shipping_priority" -> ((s, d) => Relational.q3ShippingPriority(s, d)),
-    "q5_local_volume" -> ((s, d) => Relational.q5LocalVolume(s, d)),
-    "top_orders" -> ((s, d) => Relational.topOrders(s, d)),
-    "semi_join_customers" -> ((s, d) => Relational.semiJoinCustomers(s, d)),
-    "anti_join_customers" -> ((s, d) => Relational.antiJoinCustomers(s, d)),
-    "orders_per_nation" -> ((s, d) => Relational.ordersPerNation(s, d)),
-    "setops_nations" -> ((s, d) => Relational.setOpsNations(s, d)),
-    "distinct_parts" -> ((s, d) => Relational.distinctParts(s, d)),
-    "rollup_orders" -> ((s, d) => Relational.rollupOrders(s, d)),
-    "cube_parts" -> ((s, d) => Relational.cubeParts(s, d)),
-    "grouping_sets" -> ((s, d) => Relational.groupingSetsLineitem(s, d)),
-    "percentiles" -> ((s, d) => Relational.quantityPercentiles(s, d)),
-    "monthly_revenue" -> ((s, d) => Relational.monthlyRevenue(s, d)),
-    "window_top_orders" -> ((s, d) => Relational.windowTopOrdersPerCustomer(s, d)),
-    "window_running_qty" -> ((s, d) => Relational.windowRunningQty(s, d)),
-    "above_brand_avg" -> ((s, d) => Relational.aboveBrandAvgParts(s, d)),
-    "window_analytics" -> ((s, d) => Relational.windowAnalytics(s, d)),
-    "pivot_orders" -> ((s, d) => Relational.pivotOrders(s, d)),
-    // star-schema runtime filtering: DPP over the nation-partitioned
-    // fact copy; runtime bloom-filter join on the non-partition key.
-    // Oracles are the plain joins over the ORIGINAL tables — the fact
-    // copy holds the same rows, and the bloom filter never changes a
-    // result; the mechanisms are plan-gated in PlanShapeSpec.
-    "dpp_star_revenue" -> ((s, d) => StarSchema.dppStarRevenue(s, d)),
-    "bloom_join_revenue" -> ((s, d) => StarSchema.bloomJoinRevenue(s, d)),
-    // -- dedup (LLM-pipeline) --------------------------------------------
-    "dedup_exact" -> ((s, d) => Dedup.exactDedup(s, d)),
-    "dedup_fingerprint" -> ((s, d) => Dedup.fingerprintDedup(s, d)),
-    "dedup_ngram_jaccard" -> ((s, d) => Dedup.ngramJaccardDedup(s, d)),
-    "dedup_minhash_lsh" -> ((s, d) => Dedup.minhashLshDedup(s, d)),
-    "dedup_simhash" -> ((s, d) => Dedup.simhashDedup(s, d)),
-    "dedup_clusters" -> ((s, d) => Dedup.nearDupClusters(s, d)),
-    "dedup_clusters_star" -> ((s, d) => Dedup.nearDupClustersStar(s, d)),
-    "decontaminate" -> ((s, d) => Dedup.decontaminate(s, d)),
-    "simhash_pairs" -> ((s, d) => Dedup.simhashPairs(s, d)),
-    // -- similarity search -----------------------------------------------
-    "cosine_topk" -> ((s, d) => Similarity.cosineTopK(s, d)),
-    "ann_topk" -> ((s, d) => Similarity.annTopK(s, d)),
-    "ivf_topk" -> ((s, d) => Ivf.ivfTopK(s, d)),
-    // incremental index maintenance for the embedding side: fold a
-    // synthetic ingest batch into the served centroids (occupancy-
-    // weighted mini-batch update, drift-gated rebuild fallback) and
-    // search the merged corpus under the maintained index
-    "ivf_incremental_topk" -> ((s, d) => Ivf.incrementalQuery(s, d)),
-    "pq_topk" -> ((s, d) => Pq.pqTopK(s, d)),
-    // incremental codebook maintenance (the IVF pattern per subspace):
-    // fold the shared synthetic ingest batch into the served codebook
-    // and search the merged corpus under it
-    "pq_incremental_topk" -> ((s, d) => Pq.incrementalQuery(s, d)),
-    "approx_stats" -> ((s, d) => Relational.approxStats(s, d)),
-    "hll_rollup" -> ((s, d) => Relational.hllRollup(s, d)),
-    "cosine_near_dup" -> ((s, d) => Similarity.cosineNearDupExact(s, d)),
-    "cosine_near_dup_lsh" -> ((s, d) => Similarity.cosineNearDupLsh(s, d)),
-    "knn_graph" -> ((s, d) => Similarity.knnGraph(s, d)),
-    "semantic_dedup" -> ((s, d) => Similarity.semanticDedup(s, d)),
-    "hard_negatives" -> ((s, d) => Similarity.hardNegatives(s, d)),
-    "curated_corpus" -> ((s, d) => Pipeline.curatedCorpus(s, d)),
-    "split_assign" -> ((s, d) => Pipeline.splitAssign(s, d)),
-    "pack_sequences" -> ((s, d) => Pipeline.packSequences(s, d)),
-    "chunk_docs" -> ((s, d) => Pipeline.chunkDocs(s, d)),
-    // -- temporal joins --------------------------------------------------
-    "asof_join" -> ((s, d) => Temporal.purchaseAsofClick(s, d)),
-    "asof_join_native" -> ((s, d) => Temporal.purchaseAsofClickNative(s, d)),
-    "asof_join_forward" -> ((s, d) => Temporal.errorNextPurchase(s, d)),
-    "asof_join_forward_native" ->
-      ((s, d) => Temporal.errorNextPurchaseNative(s, d)),
-    "range_join" -> ((s, d) => Temporal.purchaseThenError(s, d)),
-    // -- multimodal ------------------------------------------------------
-    "media_stats" -> ((s, d) => Multimodal.mediaStats(s, d)),
-    "media_features" -> ((s, d) => Multimodal.mediaFeatures(s, d)),
-    "media_decode" -> ((s, d) => Multimodal.mediaDecode(s, d)),
-    // real RIFF/WAVE container walk (variable JUNK chunk, word
-    // alignment, malformed subset decodes empty) — the oracle rebuilds
-    // every column from documents.text without seeing the container
-    "media_wav" -> ((s, d) => Multimodal.mediaWav(s, d)),
-    // real BMP container walk (bfOffBits indirection, 4-byte row
-    // stride, bottom-up vs top-down row order; corrupted subset
-    // decodes empty) — oracle rebuilds every column from documents.text
-    "media_bmp" -> ((s, d) => Multimodal.mediaBmp(s, d)),
-    // real PNG container walk with an ENTROPY-CODED payload: per-chunk
-    // CRC32 validation, split-IDAT zlib inflate, all five scanline
-    // filters reconstructed; corrupted subset decodes empty — oracle
-    // rebuilds every column from documents.text
-    "media_png" -> ((s, d) => Multimodal.mediaPng(s, d)),
-    // real GIF container walk with the SECOND entropy coding:
-    // variable-width LZW (growing dictionary, width-widening points,
-    // clear/EOI), sub-block stream reassembly, extension skipping,
-    // 4-pass interlace; corrupted subset decodes empty
-    "media_gif" -> ((s, d) => Multimodal.mediaGif(s, d)),
-    "media_near_dup" -> ((s, d) => Multimodal.mediaNearDup(s, d)),
-    "media_dup_clusters" -> ((s, d) => Multimodal.mediaDupClusters(s, d)),
-    // energy-envelope fingerprint over DECODED WAV samples: the audio
-    // analog of media_near_dup, same chunk-blocked join + CC closure;
-    // corrupted payloads and sub-65-sample clips absent by construction
-    "audio_near_dup" -> ((s, d) => Multimodal.audioNearDup(s, d)),
-    "audio_dup_clusters" -> ((s, d) => Multimodal.audioDupClusters(s, d)),
-    // LOSSY codec through the media seam (JPEG-shaped quantize /
-    // dequantize): feature battery over the dequantized stream, and
-    // near-dup pairs across the original -> lossy-re-encode boundary
-    // (the perceptual family's reason to exist); corrupted subset
-    // decodes empty
-    "media_jpegish" -> ((s, d) => Lossy.mediaJpegish(s, d)),
-    "media_lossy_near_dup" -> ((s, d) => Lossy.mediaLossyNearDup(s, d)),
-    // video-shaped clips (animated GIF, multi-frame LZW + GCE skip):
-    // per-frame dHash, majority-vote clip fingerprint, the shared
-    // chunk-blocked pair join + CC closure; corrupted clips decode to
-    // no frames
-    "video_near_dup" -> ((s, d) => Video.videoNearDup(s, d)),
-    "video_dup_clusters" -> ((s, d) => Video.videoDupClusters(s, d)),
-    // -- events ----------------------------------------------------------
-    "hourly_rollup" -> ((s, d) => EventOps.hourlyRollup(s, d)),
-    "sessionize" -> ((s, d) => EventOps.sessionize(s, d)),
-    "json_prop_rollup" -> ((s, d) => EventOps.jsonPropRollup(s, d)),
-    "type_funnel" -> ((s, d) => EventOps.typeFunnel(s, d)),
-    "cohort_retention" -> ((s, d) => EventOps.cohortRetention(s, d)),
-    "rolling_users_7d" -> ((s, d) => EventOps.rollingUsers7d(s, d)),
-    "zorder_key" -> ((s, d) => Analytics.zorderKey(s, d)),
-    "type_transitions" -> ((s, d) => EventOps.typeTransitions(s, d)),
-    "extra_orders_multiset" -> ((s, d) => Relational.extraOrdersMultiset(s, d)),
-    // -- analytic extensions ---------------------------------------------
-    "full_outer_nations" -> ((s, d) => Analytics.fullOuterNationActivity(s, d)),
-    "stats_lineitem" -> ((s, d) => Analytics.statsLineitem(s, d)),
-    "order_ship_latency" -> ((s, d) => Analytics.orderShipLatency(s, d)),
-    "rolling_7d_qty" -> ((s, d) => Analytics.rolling7dQty(s, d)),
-    "conditional_agg" -> ((s, d) => Analytics.conditionalAgg(s, d)),
-    "string_kit" -> ((s, d) => Analytics.stringKit(s, d)),
-    "levenshtein_pairs" -> ((s, d) => Analytics.levenshteinPairs(s, d)),
-    "zipf_buckets" -> ((s, d) => Analytics.zipfBuckets(s, d)),
-    "array_agg_orders" -> ((s, d) => Analytics.arrayAggOrders(s, d)),
-    "map_roundtrip" -> ((s, d) => Analytics.mapRoundtrip(s, d)),
-    "source_ids" -> ((s, d) => Analytics.sourceIds(s, d)),
-    "upsert_snapshot" -> ((s, d) => Analytics.upsertSnapshot(s, d)),
-    "hash_sample" -> ((s, d) => Analytics.hashSample(s, d)),
-    "stratified_sample" -> ((s, d) => Analytics.stratifiedSample(s, d)),
-    "quota_sample" -> ((s, d) => Analytics.quotaSample(s, d)),
-    "corr_subquery" -> ((s, d) => Analytics.corrSubquery(s, d)),
-    "null_semantics" -> ((s, d) => Analytics.nullSemantics(s, d)),
-    "sql_cte_having" -> ((s, d) => Analytics.sqlCteHaving(s, d)),
-    // -- TPC-H composite family ------------------------------------------
-    "q4_priority_exists" -> ((s, d) => TpcH.q4PriorityExists(s, d)),
-    "q6_revenue_delta" -> ((s, d) => TpcH.q6RevenueDelta(s, d)),
-    "q7_nation_volume" -> ((s, d) => TpcH.q7NationVolume(s, d)),
-    "q8_market_share" -> ((s, d) => TpcH.q8MarketShare(s, d)),
-    "q10_returned_revenue" -> ((s, d) => TpcH.q10ReturnedRevenue(s, d)),
-    "q12_priority_class" -> ((s, d) => TpcH.q12PriorityClass(s, d)),
-    "q13_cust_distribution" -> ((s, d) => TpcH.q13CustDistribution(s, d)),
-    "q14_promo_share" -> ((s, d) => TpcH.q14PromoShare(s, d)),
-    "q16_supplier_variety" -> ((s, d) => TpcH.q16SupplierVariety(s, d)),
-    "q15_top_supplier" -> ((s, d) => TpcH.q15TopSupplier(s, d)),
-    "q17_small_quantity" -> ((s, d) => TpcH.q17SmallQuantity(s, d)),
-    // r17: the last three TPC-H members (partsupp-adapted shapes —
-    // correlated MIN, scalar-subquery HAVING, nested IN chain)
-    "q2_min_cost_supplier" -> ((s, d) => TpcH.q2MinCostSupplier(s, d)),
-    "q11_important_stock" -> ((s, d) => TpcH.q11ImportantStock(s, d)),
-    "q20_promotion_suppliers" ->
-      ((s, d) => TpcH.q20PromotionSuppliers(s, d)),
-    "q18_large_orders" -> ((s, d) => TpcH.q18LargeOrders(s, d)),
-    "q19_disjunctive" -> ((s, d) => TpcH.q19Disjunctive(s, d)),
-    "q21_waiting_suppliers" -> ((s, d) => TpcH.q21WaitingSuppliers(s, d)),
-    "q9_profit" -> ((s, d) => TpcH.q9Profit(s, d)),
-    "q22_dormant_rich" -> ((s, d) => TpcH.q22DormantRich(s, d)),
-    // -- SQL-surface kit -------------------------------------------------
-    "unpivot_orders" -> ((s, d) => SqlKit.unpivotOrders(s, d)),
-    "listagg_nations" -> ((s, d) => SqlKit.listaggNations(s, d)),
-    "price_histogram" -> ((s, d) => SqlKit.priceHistogram(s, d)),
-    "robust_stats" -> ((s, d) => SqlKit.robustStats(s, d)),
-    "date_kit" -> ((s, d) => SqlKit.dateKit(s, d)),
-    "window_lag_lead" -> ((s, d) => SqlKit.windowLagLead(s, d)),
-    "bitwise_kit" -> ((s, d) => SqlKit.bitwiseKit(s, d)),
-    "month_spine" -> ((s, d) => SqlKit.monthSpine(s, d)),
-    "safe_casts" -> ((s, d) => SqlKit.safeCasts(s, d)),
-    // -- corpus quality + vector analytics -------------------------------
-    "doc_repetition" -> ((s, d) => TextQuality.docRepetition(s, d)),
-    "doc_entropy" -> ((s, d) => TextQuality.docEntropy(s, d)),
-    "pii_scrub" -> ((s, d) => TextQuality.piiScrub(s, d)),
-    "gopher_filter" -> ((s, d) => TextQuality.gopherQualityFilter(s, d)),
-    // over the re-lineated view (see TextQuality.relineated): the
-    // line/paragraph repetition signals need line structure, and the
-    // view's planted boilerplate line is a real cross-line duplicate
-    "gopher_repetition" -> ((s, d) => TextQuality.gopherRepetition(s, d)),
-    "c4_filter" -> ((s, d) => TextQuality.c4Filter(s, d)),
-    // trafilatura/jusText-shaped markup removal over the closed-form
-    // HTML page view: tag strip + entity decode + per-block link
-    // density; verdicts and the extracted-content digest replay in SQL
-    "boilerplate_blocks" -> ((s, d) => Boilerplate.boilerplateBlocks(s, d)),
-    "boilerplate_filter" -> ((s, d) => Boilerplate.boilerplateFilter(s, d)),
-    // the composed crawl-pipeline stage: C4 line rules over the
-    // boilerplate-EXTRACTED main content — both stages replayed in SQL
-    "html_curated" -> ((s, d) => Boilerplate.htmlCurated(s, d)),
-    "ccnet_buckets" -> ((s, d) => TextQuality.ccnetBuckets(s, d)),
-    "quality_classifier" -> ((s, d) => QualityClassifier.scores(s, d)),
-    // fastText-style one-vs-rest lang-id over the same hashed-bigram
-    // GD recipe; the oracle replays all K trainings and the argmax
-    "lang_id_learned" -> ((s, d) => QualityClassifier.langIdLearned(s, d)),
-    "dsir_weights" -> ((s, d) => Dsir.importanceWeights(s, d)),
-    "dsir_sample" -> ((s, d) => Dsir.gumbelTopK(s, d)),
-    "label_centroids" -> ((s, d) => Vectors.labelCentroids(s, d)),
-    "vec_quantize" -> ((s, d) => Vectors.vecQuantize(s, d)),
-    "pca_top_component" -> ((s, d) => Vectors.pcaTopComponent(s, d)),
-    "pca_incremental" -> ((s, d) => Vectors.pcaIncremental(s, d)),
-    "abtt_debias" -> ((s, d) => Vectors.abttDebias(s, d)),
-    "pca_components" -> ((s, d) => Vectors.pcaComponents(s, d)),
-    "bm25_topk" -> ((s, d) => TextAnalysis.bm25TopK(s, d)),
-    "pmi_pairs" -> ((s, d) => TextAnalysis.pmiPairs(s, d)),
-    "data_mix" -> ((s, d) => Pipeline.dataMix(s, d)),
-    "dup_span_coverage" -> ((s, d) => Dedup.dupSpanCoverage(s, d)),
-    // the at-scale (128-bit gram key) mode of the same operator: both
-    // gated against the identical string-keyed oracle, so the shipped
-    // answer to the 64-bit birthday-bound caveat is itself oracle-green
-    "dup_span_coverage128" ->
-      ((s, d) => Dedup.dupSpanCoverage(s, d, wideHash = true)),
-    "top_dup_spans" -> ((s, d) => Dedup.topDupSpans(s, d)),
-    "dedup_span_removal" ->
-      ((s, d) => Dedup.dupSpanRemoval(Tables.documents(s, d))),
-    // over the re-lineated view: the raw corpus has no line structure
-    // (TextQuality.relineated Scaladoc), and the view's planted
-    // boilerplate line is exactly the cross-doc duplicate to find
-    "line_dedup" ->
-      ((s, d) => Dedup.lineDedup(
-        TextQuality.relineated(Tables.documents(s, d)))),
-    "pagerank_neardup" -> ((s, d) => Dedup.pagerankNearDup(s, d)),
-    "suffix_ranks" -> ((s, d) => SuffixRanks.suffixRankTable(s, d)),
-    "repeated_spans_sa" -> ((s, d) => SuffixRanks.repeatedSpans(s, d)),
-    // delta ingest merged into the persisted index WITHOUT re-running
-    // the doubling over old positions; the oracle replays the merged
-    // corpus's dense rank from scratch, so only an exact merge
-    // (shifted old ranks AND interleaved delta ranks) matches
-    "suffix_ranks_incremental" ->
-      ((s, d) => SuffixRanks.incrementalQuery(s, d)),
-    "bpe_pairs" -> ((s, d) => TextAnalysis.bpePairs(s, d)),
-    "bpe_train" -> ((s, d) => Bpe.train(s, d, BpeK)),
-    "bpe_incremental" -> ((s, d) => Bpe.incrementalTrain(s, d, BpeK)),
-    "bpe_tokenize" -> ((s, d) => Bpe.tokenizeDocs(s, d, BpeK)),
-    "unigram_seed" -> ((s, d) => Unigram.seed(s, d)),
-    "unigram_train" -> ((s, d) => Unigram.train(s, d)),
-    "unigram_incremental" -> ((s, d) => Unigram.incrementalTrain(s, d)),
-    "unigram_tokenize" -> ((s, d) => Unigram.tokenizeDocs(s, d)),
-    "tokenizer_compare" -> ((s, d) => Unigram.compareWithBpe(s, d, BpeK)),
-    "doc_perplexity" -> ((s, d) => TextAnalysis.docPerplexity(s, d)),
-    "rank_corr" -> ((s, d) => Analytics.rankCorr(s, d)),
-    "tfidf_cosine_pairs" -> ((s, d) => TextAnalysis.tfidfCosinePairs(s, d)),
-    "weighted_sample" -> ((s, d) => Analytics.weightedSample(s, d)),
-    "cms_heavy_hitters" -> ((s, d) => TextAnalysis.cmsHeavyHitters(s, d)),
-  )
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
-  /** Shared by dedup_ngram_jaccard (exact path) and dedup_minhash_lsh:
-    * with these LSH parameters (n=64, r=2, b=32) the candidate miss
-    * probability at the 0.5 threshold is < 1e-14, so the LSH output
-    * equals the exact similarity join and both check against the same
-    * brute-force DuckDB oracle.
-    */
-  /** Shared by dup_span_coverage and dup_span_coverage128: the oracle
-    * groups the literal gram STRINGS, so one SQL gates both the 64-bit
-    * and the 128-bit hash-keyed modes — the hash width is an engine-side
-    * implementation detail the result must be independent of.
-    */
-  /** Shared by c4_filter and line_dedup: the deterministic
-    * re-lineation of the flat synthetic corpus. Mirrors
-    * `TextQuality.relineated` — see its Scaladoc for why the line-rule
-    * operators cannot discriminate on the raw corpus (no newlines, no
-    * punctuation) and how each rule's violators are planted by integer
-    * arithmetic on (doc_id, line index).
-    */
-  private val RelineatedCte: String =
-    """WITH tok AS (
-      |  SELECT doc_id,
-      |    list_filter(string_split_regex(text, '[ \t\n]+'), t -> length(t) > 0) AS tk
-      |  FROM documents),
-      |structured AS (
-      |  SELECT doc_id,
-      |    concat(
-      |      coalesce(array_to_string(list_transform(
-      |        range(0, CAST(floor((len(tk) + 7) / 8.0) AS BIGINT)), i ->
-      |          CASE WHEN (doc_id + i) % 11 = 0
-      |               THEN 'all rights reserved by the original author.'
-      |               ELSE array_to_string(tk[i*8+1 : i*8+8], ' ')
-      |                 || CASE WHEN (doc_id + i) % 3 <> 0 THEN '.' ELSE '' END
-      |                 || CASE WHEN (doc_id + i) % 7 = 0 THEN ' javascript.' ELSE '' END
-      |          END),
-      |        chr(10)), ''),
-      |      CASE WHEN doc_id % 23 = 0 THEN chr(10) || 'lorem ipsum here it comes.' ELSE '' END,
-      |      CASE WHEN doc_id % 29 = 0 THEN chr(10) || 'brace { line here.' ELSE '' END,
-      |      CASE WHEN doc_id % 31 = 0 THEN chr(10) || 'visit our casino today now.' ELSE '' END
-      |    ) AS text
-      |  FROM tok)""".stripMargin
-
-  /** Shared by boilerplate_blocks and boilerplate_filter: per-block
-    * signals predicted from the closed-form HTML page
-    * ([[graft.operators.Boilerplate.htmlView]] — nav at block 0, one
-    * `<p>` per relineated line with the planted entity token and
-    * "read more" anchor, footer last). The oracle never parses HTML:
-    * it derives each block's visible text, word count, and anchor-text
-    * length directly from the integer arithmetic the page was built
-    * with, so only an extractor that actually walks the body, strips
-    * tags, and decodes entities can match it.
-    */
-  private val BoilerSigCte: String = RelineatedCte + """,
-    |ls AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM structured),
-    |lb AS (
-    |  SELECT doc_id, i AS block_idx, 'p' AS tag,
-    |    ls[i]
-    |      || CASE WHEN (doc_id + i - 1) % 13 = 5 THEN ' a<b' ELSE '' END
-    |      || CASE WHEN (doc_id + i - 1) % 5 = 2 THEN ' read more' ELSE '' END AS vis,
-    |    CASE WHEN (doc_id + i - 1) % 5 = 2 THEN 9 ELSE 0 END AS link_len
-    |  FROM ls, unnest(range(1, len(ls) + 1)) AS t(i)),
-    |nv AS (
-    |  SELECT doc_id, 0 AS block_idx, 'nav' AS tag,
-    |    'home about us' AS vis, 12 AS link_len
-    |  FROM structured),
-    |ft AS (
-    |  SELECT doc_id, len(ls) + 1 AS block_idx, 'footer' AS tag,
-    |    'copyright 2024 privacy & terms' AS vis, 12 AS link_len
-    |  FROM ls),
-    |blocks AS (
-    |  SELECT * FROM nv UNION ALL SELECT * FROM lb UNION ALL SELECT * FROM ft),
-    |sig AS (
-    |  SELECT doc_id, CAST(block_idx AS INT) AS block_idx, tag,
-    |    CAST(len(list_filter(string_split_regex(trim(vis), '[ \t]+'),
-    |      w -> length(w) > 0)) AS BIGINT) AS n_words,
-    |    CAST(length(trim(vis)) AS BIGINT) AS text_len,
-    |    CAST(link_len AS BIGINT) AS link_len,
-    |    trim(vis) AS text
-    |  FROM blocks),
-    |verd AS (
-    |  SELECT *,
-    |    CASE WHEN text_len = 0 THEN 1.0
-    |         ELSE round(CAST(link_len AS DOUBLE) / text_len, 6)
-    |    END AS link_density,
-    |    (tag = 'p' AND n_words >= 5
-    |      AND link_len * 100 <= text_len * 33) AS keep
-    |  FROM sig)""".stripMargin
-
-  /** Shared by audio_near_dup and audio_dup_clusters: per-doc 4x16-bit
-    * energy-envelope fingerprint chunks, recomputed from the WAV
-    * table's closed-form decoded sample stream (the printable
-    * projection; `Multimodal.audioHashChunks` semantics — 65 equal
-    * spans, exact integer span energies, bit k = span k+1 louder than
-    * span k). Corrupted subset (doc_id % 11 = 7) and sub-65-sample
-    * clips excluded by construction.
-    */
-  private val AudioH4Cte: String =
-    """WITH cl AS (
-      |  SELECT doc_id, regexp_replace(text, '[^ -~]', '', 'g') AS s
-      |  FROM documents WHERE doc_id % 11 <> 7),
-      |m AS (
-      |  SELECT doc_id, s, length(s) AS n FROM cl WHERE length(s) >= 65),
-      |sam AS (
-      |  SELECT doc_id, n, t.i AS pos,
-      |    ascii(substr(s, CAST(t.i + 1 AS INTEGER), 1)) AS v
-      |  FROM m, unnest(range(m.n)) AS t(i)),
-      |fr AS (
-      |  SELECT doc_id, (pos * 65) // n AS f, sum(v) AS e
-      |  FROM sam GROUP BY doc_id, (pos * 65) // n),
-      |ck AS (
-      |  SELECT a.doc_id, a.f // 16 AS chunk,
-      |    CAST(sum(CASE WHEN b.e > a.e THEN 1 << CAST(a.f % 16 AS INTEGER)
-      |             ELSE 0 END) AS INTEGER) AS ck
-      |  FROM fr a JOIN fr b ON a.doc_id = b.doc_id AND b.f = a.f + 1
-      |  GROUP BY a.doc_id, a.f // 16),
-      |h4 AS (
-      |  SELECT doc_id,
-      |    max(CASE WHEN chunk = 0 THEN ck END) AS c0,
-      |    max(CASE WHEN chunk = 1 THEN ck END) AS c1,
-      |    max(CASE WHEN chunk = 2 THEN ck END) AS c2,
-      |    max(CASE WHEN chunk = 3 THEN ck END) AS c3
-      |  FROM ck GROUP BY doc_id)""".stripMargin
-
-  /** Shared by video_near_dup and video_dup_clusters: per-clip 4x16-bit
-    * MAJORITY-VOTE fingerprint chunks, recomputed from the animated-GIF
-    * closed form (geometry w = (len % 6) + 2; F = (len % 3) + 2 frames:
-    * F-1 content frames whose uniform +f brightness shift preserves
-    * every gradient — so they share the base raster's dHash — plus one
-    * reversed-raster outlier). Majority (bit set iff 2*count > F)
-    * therefore reduces to: content hash for F >= 3, content AND
-    * reversed for F = 2. Corrupted subset (doc_id % 29 = 11) decodes
-    * to no frames and is excluded by construction.
-    */
-  private val VideoH4Cte: String =
-    """WITH cl AS (
-      |  SELECT doc_id, regexp_replace(text, '[^ -~]', '', 'g') AS s
-      |  FROM documents WHERE doc_id % 29 <> 11),
-      |geo AS (
-      |  SELECT doc_id, s, (length(s) % 3) + 2 AS nf,
-      |    (length(s) % 6) + 2 AS w,
-      |    (length(s) + (length(s) % 6) + 1) // ((length(s) % 6) + 2) AS h
-      |  FROM cl WHERE length(s) > 0),
-      |sides AS (
-      |  SELECT doc_id, w, h, 0 AS side,
-      |         rpad(s, CAST(w * h AS INTEGER), ' ') AS r FROM geo
-      |  UNION ALL
-      |  SELECT doc_id, w, h, 1,
-      |         reverse(rpad(s, CAST(w * h AS INTEGER), ' ')) FROM geo),
-      |grid AS (
-      |  SELECT doc_id, side, w, r, (t1.j * 8 + t2.i) AS bit,
-      |    (t1.j * h) // 8 AS y, (t2.i * w) // 9 AS x0,
-      |    ((t2.i + 1) * w) // 9 AS x1
-      |  FROM sides, unnest(range(8)) AS t1(j), unnest(range(8)) AS t2(i)),
-      |ck AS (
-      |  SELECT doc_id, side, bit // 16 AS chunk,
-      |    CAST(sum(CASE WHEN
-      |        ascii(substr(r, CAST(y * w + x1 + 1 AS INTEGER), 1)) >
-      |        ascii(substr(r, CAST(y * w + x0 + 1 AS INTEGER), 1))
-      |      THEN 1 << (bit % 16) ELSE 0 END) AS INTEGER) AS ck
-      |  FROM grid GROUP BY doc_id, side, bit // 16),
-      |piv AS (
-      |  SELECT ck.doc_id, chunk,
-      |    max(CASE WHEN side = 0 THEN ck END) AS cc,
-      |    max(CASE WHEN side = 1 THEN ck END) AS cd
-      |  FROM ck GROUP BY ck.doc_id, chunk),
-      |vote AS (
-      |  SELECT piv.doc_id, chunk,
-      |    CASE WHEN g.nf = 2 THEN piv.cc & piv.cd ELSE piv.cc END AS ck
-      |  FROM piv JOIN geo g ON piv.doc_id = g.doc_id),
-      |h4 AS (
-      |  SELECT doc_id,
-      |    max(CASE WHEN chunk = 0 THEN ck END) AS c0,
-      |    max(CASE WHEN chunk = 1 THEN ck END) AS c1,
-      |    max(CASE WHEN chunk = 2 THEN ck END) AS c2,
-      |    max(CASE WHEN chunk = 3 THEN ck END) AS c3
-      |  FROM vote GROUP BY doc_id)""".stripMargin
-
-  /** Independent DuckDB replay of the BPE training loop
-    * ([[graft.operators.Bpe]]): k chained CTE triples (pair census →
-    * 1-row argmax → merge application). The segmentation travels as
-    * the same chr(31)-wrapped string the engine uses, so DuckDB's
-    * left-to-right non-overlapping `replace` reproduces the greedy
-    * merge pass exactly (see Bpe's representation Scaladoc for the
-    * proof sketch). The LEFT JOIN ON TRUE guard keeps v_t = v_{t-1}
-    * when a tiny corpus runs out of pairs before k merges.
-    */
-  private val BpeK = 20
-
-  private def bpeVocabCte(k: Int, pre: String = "",
-      docsRel: String = "documents"): String = {
-    val S = "chr(31)"
-    val SS = "chr(31) || chr(31)"
-    val sb = new StringBuilder
-    sb.append(
-      s"""WITH ${pre}dtoks AS (
-        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \\t\\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-        |  FROM $docsRel),
-        |v0 AS MATERIALIZED (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS n,
-        |    chr(31) || array_to_string(list_transform(range(1, length(word) + 1), i -> substring(word, CAST(i AS INTEGER), 1)), chr(31) || chr(31)) || chr(31) AS s
-        |  FROM dtoks WHERE length(word) >= 2 GROUP BY word)""".stripMargin)
-    for (t <- 1 to k) {
-      sb.append(s""",
-        |p$t AS (
-        |  SELECT syms[CAST(i AS INTEGER)] AS a, syms[CAST(i AS INTEGER) + 1] AS b, sum(n) AS cnt
-        |  FROM (SELECT n, string_split(s[2:-2], $SS) AS syms FROM v${t - 1}),
-        |       unnest(range(1, len(syms))) AS u$t(i)
-        |  GROUP BY 1, 2),
-        |best$t AS MATERIALIZED (SELECT a, b, cnt FROM p$t ORDER BY cnt DESC, a, b LIMIT 1),
-        |v$t AS MATERIALIZED (
-        |  SELECT word, n, CASE WHEN b.a IS NULL THEN v.s
-        |    ELSE replace(v.s, $S || b.a || $SS || b.b || $S, $S || b.a || b.b || $S) END AS s
-        |  FROM v${t - 1} v LEFT JOIN best$t b ON TRUE)""".stripMargin)
-    }
-    sb.toString
-  }
-
-  private def bpeMergesTail(k: Int): String =
-    "\n" + (1 to k).map(t =>
-      s"""SELECT CAST($t AS INTEGER) AS "rank", a AS lhs, b AS rhs, a || b AS merged, CAST(cnt AS BIGINT) AS n FROM best$t""")
-      .mkString("SELECT * FROM (\n", "\nUNION ALL\n", s"""\n) ORDER BY "rank"""")
-
-  private val BpeTrainSql: String = bpeVocabCte(BpeK) + bpeMergesTail(BpeK)
-
-  /** bpe_incremental oracle: the identical merge-loop replay, over the
-    * merged corpus (documents + the re-keyed reversed every-29th
-    * delta) — training from the merged census is bit-equal to a full
-    * retrain, so the oracle IS the retrain. */
-  private val BpeIncrementalSql: String =
-    bpeVocabCte(BpeK,
-      pre = """mx AS (SELECT max(doc_id) + 1 AS m FROM documents),
-        |docs2 AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + m AS doc_id, reverse(text) AS text
-        |  FROM documents, mx WHERE doc_id % 29 = 3),
-        |""".stripMargin,
-      docsRel = "docs2") + bpeMergesTail(BpeK)
-
-  private val BpeTokenizeSql: String =
-    bpeVocabCte(BpeK) +
-      s""",
-        |tokc AS (
-        |  SELECT word, CAST(1 + (length(s) - length(replace(s, chr(31) || chr(31), ''))) // 2 AS BIGINT) AS tok FROM v$BpeK
-        |  UNION ALL
-        |  SELECT DISTINCT word, CAST(1 AS BIGINT) FROM dtoks WHERE length(word) = 1),
-        |dw AS (
-        |  SELECT doc_id, word, CAST(count(*) AS BIGINT) AS c
-        |  FROM dtoks WHERE length(word) > 0 GROUP BY doc_id, word),
-        |agg AS (
-        |  SELECT doc_id, sum(c) AS w, sum(c * tok) AS t, sum(c * length(word)) AS ch
-        |  FROM dw JOIN tokc USING (word) GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(a.w, 0) AS BIGINT) AS n_words,
-        |  CAST(coalesce(a.t, 0) AS BIGINT) AS n_tokens,
-        |  CAST(coalesce(a.ch, 0) AS BIGINT) AS n_chars,
-        |  round(CASE WHEN coalesce(a.t, 0) = 0 THEN 0.0 ELSE CAST(a.ch AS DOUBLE) / a.t END, 6) AS chars_per_token
-        |FROM documents d LEFT JOIN agg a USING (doc_id)
-        |ORDER BY doc_id""".stripMargin
-
-  /** Unigram-LM oracle (Unigram's oracle-decomposition Scaladoc). The
-    * seed census + prune is replayed from `documents` directly; each
-    * EM round's vocabulary is then rebuilt from the exported per-round
-    * segmentations (oracleAux `unigram_segs`) with validity guards
-    * folded into the joins: a segmentation row only counts if its
-    * (word, n) matches the independently recomputed frequency table,
-    * its pieces concatenate back to the word, and every piece exists
-    * in the PREVIOUS round's re-derived vocabulary. The multi-piece
-    * prune cap replays Unigram.multiCap's pure-integer schedule with
-    * the char-alphabet size read from the census (DuckDB `//` and
-    * Scala Int `/` agree on the positive operands involved).
-    * `throughRound` = how many EM vocab rebuilds to emit (0 = seed
-    * only, which also skips the aux read so the seed oracle stands
-    * alone).
-    */
-  private def unigramCte(throughRound: Int): String =
-    """WITH dtoks AS (
-      |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-      |  FROM documents),
-      |""".stripMargin + unigramBodyCte(throughRound)
-
-  /** The unigram CTE chain sans the WITH/dtoks header, so it can also
-    * be appended to [[bpeVocabCte]] (which defines the identical
-    * `dtoks`) for the combined tokenizer-comparison oracle.
-    * `segsTable` picks which exported segmentation aux feeds the EM
-    * rebuild — `unigram_segs` (base corpus) or `unigram_incr_segs`
-    * (the incremental demo's merged corpus). */
-  private def unigramBodyCte(throughRound: Int,
-      segsTable: String = "unigram_segs"): String = {
-    val base = """wf AS MATERIALIZED (
-      |  SELECT word, CAST(count(*) AS BIGINT) AS n FROM dtoks WHERE length(word) > 0 GROUP BY word),
-      |census AS MATERIALIZED (
-      |  SELECT piece, CAST(sum(n) AS BIGINT) AS cnt FROM (
-      |    SELECT substring(word, CAST(i AS INTEGER), CAST(l AS INTEGER)) AS piece, n
-      |    FROM wf,
-      |         unnest(range(1, length(word) + 1)) AS u(i),
-      |         unnest(range(1, least(@MPL, length(word) - i + 1) + 1)) AS v(l)) t
-      |  GROUP BY piece),
-      |chars AS MATERIALIZED (SELECT piece, cnt FROM census WHERE length(piece) = 1),
-      |vocab0 AS MATERIALIZED (
-      |  SELECT piece, cnt FROM chars
-      |  UNION ALL
-      |  SELECT piece, cnt FROM (SELECT piece, cnt FROM census WHERE length(piece) > 1 ORDER BY cnt DESC, piece LIMIT @SEEDM) q)"""
-      .stripMargin
-      .replace("@MPL", Unigram.MaxPieceLen.toString)
-      .replace("@SEEDM", Unigram.SeedMulti.toString)
-    val S = "chr(31)"
-    val sb = new StringBuilder(base)
-    if (throughRound >= 1)
-      sb.append(s""",
-        |segs AS MATERIALIZED (SELECT round, word, n, seg FROM read_parquet('$OracleAuxDir/$segsTable/*.parquet'))"""
-        .stripMargin)
-    val nCh = "(SELECT count(*) FROM chars)"
-    val tgt = s"greatest(1, ${Unigram.VocabSize} - $nCh)"
-    for (r <- 1 to throughRound) {
-      val cap =
-        s"$tgt + ((${Unigram.SeedMulti} - $tgt) * (${Unigram.Rounds} - ${math.min(r, Unigram.Rounds)})) // ${Unigram.Rounds}"
-      sb.append(s""",
-        |segok$r AS (
-        |  SELECT s.word, s.n, s.seg FROM segs s JOIN wf USING (word, n)
-        |  WHERE s.round = $r AND replace(s.seg, $S, '') = s.word),
-        |pc$r AS MATERIALIZED (
-        |  SELECT p.piece, CAST(sum(p.n) AS BIGINT) AS cnt
-        |  FROM (SELECT unnest(string_split(seg, $S)) AS piece, n FROM segok$r) p
-        |  JOIN vocab${r - 1} v ON p.piece = v.piece GROUP BY p.piece),
-        |vocab$r AS MATERIALIZED (
-        |  SELECT c.piece, coalesce(p.cnt, 0) AS cnt
-        |  FROM chars c LEFT JOIN pc$r p ON c.piece = p.piece
-        |  UNION ALL
-        |  SELECT piece, cnt FROM (
-        |    SELECT piece, cnt FROM pc$r WHERE length(piece) > 1
-        |    QUALIFY row_number() OVER (ORDER BY cnt DESC, piece) <= $cap) q)"""
-        .stripMargin)
-    }
-    sb.toString
-  }
-
-  /** (rank, piece, len, cnt) projection of vocab`r`, the shape
-    * Unigram.vocabDf emits. */
-  private def unigramVocabSql(r: Int): String =
-    unigramCte(r) + s"""
-      |SELECT CAST(row_number() OVER (ORDER BY cnt DESC, piece) AS INTEGER) AS "rank",
-      |  piece, CAST(length(piece) AS INTEGER) AS len, CAST(cnt AS BIGINT) AS cnt
-      |FROM vocab$r ORDER BY "rank"""".stripMargin
-
-  /** unigram_incremental oracle: the full unigram census→EM→prune
-    * rebuild — but over the MERGED corpus (original documents ∪ the
-    * re-keyed reversed every-29th delta, rebuilt here in SQL — the
-    * suffix_ranks_incremental fixture) with the incremental demo's
-    * exported segmentations. The Spark side never re-scans the old
-    * corpus (persisted word table + delta census); the oracle knows
-    * nothing of the split and recomputes the merged word table
-    * wholesale, so a stale count, a missed delta word, or a wrong
-    * prune all hash-mismatch.
-    */
-  private def unigramIncrVocabSql(r: Int): String =
-    """WITH mx AS (SELECT max(doc_id) + 1 AS m FROM documents),
-      |docs2 AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + m AS doc_id, reverse(text) AS text
-      |  FROM documents, mx WHERE doc_id % 29 = 3),
-      |dtoks AS (
-      |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-      |  FROM docs2),
-      |""".stripMargin +
-      unigramBodyCte(r, segsTable = "unigram_incr_segs") + s"""
-      |SELECT CAST(row_number() OVER (ORDER BY cnt DESC, piece) AS INTEGER) AS "rank",
-      |  piece, CAST(length(piece) AS INTEGER) AS len, CAST(cnt AS BIGINT) AS cnt
-      |FROM vocab$r ORDER BY "rank"""".stripMargin
-
-  /** Application-pass CTEs (guarded round Rounds+1 segmentations and
-    * their per-word unigram token counts), appended after a CTE chain
-    * that already defines wf/segs/vocab{Rounds}. */
-  private def unigramAppCte: String = {
-    val S = "chr(31)"
-    val app = Unigram.Rounds + 1
-    s""",
-      |segok$app AS (
-      |  SELECT s.word, s.seg FROM segs s JOIN wf USING (word, n)
-      |  WHERE s.round = $app AND replace(s.seg, $S, '') = s.word),
-      |papp AS (SELECT word, unnest(string_split(seg, $S)) AS piece FROM segok$app),
-      |validw AS (
-      |  SELECT papp.word FROM papp LEFT JOIN vocab${Unigram.Rounds} v ON papp.piece = v.piece
-      |  GROUP BY papp.word HAVING count(*) = count(v.piece)),
-      |utokc AS (
-      |  SELECT s.word, CAST(len(string_split(s.seg, $S)) AS BIGINT) AS utok
-      |  FROM segok$app s JOIN validw USING (word))""".stripMargin
-  }
-
-  private val UnigramTokenizeSql: String = {
-    unigramCte(Unigram.Rounds) + unigramAppCte + s""",
-      |tokc AS (SELECT word, utok AS tok FROM utokc),
-      |dw AS (
-      |  SELECT doc_id, word, CAST(count(*) AS BIGINT) AS c
-      |  FROM dtoks WHERE length(word) > 0 GROUP BY doc_id, word),
-      |agg AS (
-      |  SELECT doc_id, sum(c) AS w, sum(c * tok) AS t, sum(c * length(word)) AS ch
-      |  FROM dw JOIN tokc USING (word) GROUP BY doc_id)
-      |SELECT d.doc_id,
-      |  CAST(coalesce(a.w, 0) AS BIGINT) AS n_words,
-      |  CAST(coalesce(a.t, 0) AS BIGINT) AS n_tokens,
-      |  CAST(coalesce(a.ch, 0) AS BIGINT) AS n_chars,
-      |  round(CASE WHEN coalesce(a.t, 0) = 0 THEN 0.0 ELSE CAST(a.ch AS DOUBLE) / a.t END, 6) AS chars_per_token
-      |FROM documents d LEFT JOIN agg a USING (doc_id)
-      |ORDER BY doc_id""".stripMargin
-  }
-
-  /** tokenizer_compare: BOTH tokenizer replays in one statement — the
-    * BPE merge chain (bpeVocabCte) and the unigram EM rebuild
-    * (unigramBodyCte; the two share the identical `dtoks` and their
-    * other CTE names are disjoint) — joined per word, then per doc.
-    */
-  private val TokenizerCompareSql: String = {
-    val SS = "chr(31) || chr(31)"
-    bpeVocabCte(BpeK) + ",\n" + unigramBodyCte(Unigram.Rounds) +
-      unigramAppCte + s""",
-      |btokc AS (
-      |  SELECT word, CAST(1 + (length(s) - length(replace(s, $SS, ''))) // 2 AS BIGINT) AS btok FROM v$BpeK
-      |  UNION ALL
-      |  SELECT DISTINCT word, CAST(1 AS BIGINT) FROM dtoks WHERE length(word) = 1),
-      |cdw AS (
-      |  SELECT doc_id, word, CAST(count(*) AS BIGINT) AS c
-      |  FROM dtoks WHERE length(word) > 0 GROUP BY doc_id, word),
-      |cagg AS (
-      |  SELECT doc_id, sum(c) AS w, sum(c * btok) AS bt, sum(c * utok) AS ut, sum(c * length(word)) AS ch
-      |  FROM cdw JOIN btokc USING (word) JOIN utokc USING (word) GROUP BY doc_id)
-      |SELECT d.doc_id,
-      |  CAST(coalesce(a.w, 0) AS BIGINT) AS n_words,
-      |  CAST(coalesce(a.ch, 0) AS BIGINT) AS n_chars,
-      |  CAST(coalesce(a.bt, 0) AS BIGINT) AS bpe_tokens,
-      |  CAST(coalesce(a.ut, 0) AS BIGINT) AS uni_tokens,
-      |  round(CASE WHEN coalesce(a.bt, 0) = 0 THEN 0.0 ELSE CAST(a.ch AS DOUBLE) / a.bt END, 6) AS bpe_chars_per_token,
-      |  round(CASE WHEN coalesce(a.ut, 0) = 0 THEN 0.0 ELSE CAST(a.ch AS DOUBLE) / a.ut END, 6) AS uni_chars_per_token,
-      |  round(CASE WHEN coalesce(a.bt, 0) = 0 THEN 0.0 ELSE CAST(a.ut AS DOUBLE) / a.bt END, 6) AS token_ratio
-      |FROM documents d LEFT JOIN cagg a USING (doc_id)
-      |ORDER BY d.doc_id""".stripMargin
-  }
-
-  /** Shared by the suffix-rank oracles: every position's PrefixLen-char
-    * window of the normalized char stream. */
-  private val SuffixPosCte: String =
-    """WITH st AS (
-      |  SELECT doc_id, array_to_string(list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0), ' ') AS s
-      |  FROM documents),
-      |pos AS (
-      |  SELECT doc_id, CAST(i AS INTEGER) AS pos, substring(s, CAST(i AS INTEGER), @PLEN) AS pfx
-      |  FROM st, unnest(range(1, length(s) + 1)) AS u(i)
-      |  WHERE length(s) > 0)"""
-      .stripMargin
-      .replace("@PLEN", graft.operators.SuffixRanks.PrefixLen.toString)
-
-  // suffix_ranks: the prefix-doubling dense rank must equal a plain
-  // dense_rank over the window STRINGS (memcmp order both engines);
-  // repeated_spans_sa recounts occurrences on the strings, so a rank
-  // collision or split in the doubling would mismatch either query.
-  private val SuffixRanksSql: String = SuffixPosCte + """
-    |SELECT doc_id, pos,
-    |  CAST(dense_rank() OVER (ORDER BY pfx) - 1 AS BIGINT) AS r
-    |FROM pos ORDER BY doc_id, pos""".stripMargin
-
-  // suffix_ranks_incremental: the Spark side merges a re-keyed,
-  // text-REVERSED slice (every 29th doc, ~3%) into the persisted index via
-  // SuffixRanks.incremental; the oracle knows nothing of the merge —
-  // it rebuilds the dense rank over the synthetic merged corpus from
-  // scratch, so stale old ranks, missed shifts, or mis-interleaved
-  // delta classes all hash-mismatch.
-  private val SuffixRanksIncrSql: String =
-    ("""WITH mx AS (SELECT max(doc_id) + 1 AS m FROM documents),
-      |docs2 AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + m AS doc_id, reverse(text) AS text
-      |  FROM documents, mx WHERE doc_id % 29 = 3),
-      |st AS (
-      |  SELECT doc_id, array_to_string(list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0), ' ') AS s
-      |  FROM docs2),
-      |pos AS (
-      |  SELECT doc_id, CAST(i AS INTEGER) AS pos, substring(s, CAST(i AS INTEGER), @PLEN) AS pfx
-      |  FROM st, unnest(range(1, length(s) + 1)) AS u(i)
-      |  WHERE length(s) > 0)
-      |SELECT doc_id, pos,
-      |  CAST(dense_rank() OVER (ORDER BY pfx) - 1 AS BIGINT) AS r
-      |FROM pos ORDER BY doc_id, pos""")
-      .stripMargin
-      .replace("@PLEN", graft.operators.SuffixRanks.PrefixLen.toString)
-
-  private val RepeatedSpansSql: String = SuffixPosCte + """,
-    |occ AS (SELECT pfx, CAST(count(*) AS BIGINT) AS occ FROM pos GROUP BY pfx),
-    |per AS (
-    |  SELECT doc_id,
-    |    CAST(count(*) AS BIGINT) AS n_pos,
-    |    CAST(sum(CASE WHEN occ > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_repeated,
-    |    CAST(max(occ) AS BIGINT) AS max_occ
-    |  FROM pos JOIN occ USING (pfx) GROUP BY doc_id)
-    |SELECT d.doc_id,
-    |  CAST(coalesce(p.n_pos, 0) AS BIGINT) AS n_pos,
-    |  CAST(coalesce(p.n_repeated, 0) AS BIGINT) AS n_repeated,
-    |  CAST(coalesce(p.max_occ, 0) AS BIGINT) AS max_occ
-    |FROM documents d LEFT JOIN per p USING (doc_id)
-    |ORDER BY d.doc_id""".stripMargin
-
-  private val DupSpanCoverageOracle: String =
-    """WITH words AS (
-      |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
-      |  FROM documents),
-      |g AS (
-      |  SELECT doc_id, array_to_string(ws[i:i+7], ' ') AS gram
-      |  FROM words, unnest(range(1, len(ws) - 6)) AS t(i)
-      |  WHERE len(ws) >= 8),
-      |pg AS (SELECT doc_id, gram, CAST(count(*) AS BIGINT) AS tf
-      |       FROM g GROUP BY doc_id, gram),
-      |occ AS (SELECT gram, CAST(sum(tf) AS BIGINT) AS n_occ
-      |        FROM pg GROUP BY gram),
-      |per AS (
-      |  SELECT pg.doc_id,
-      |    CAST(sum(tf) AS BIGINT) AS n_grams,
-      |    CAST(sum(CASE WHEN n_occ > 1 THEN tf ELSE 0 END) AS BIGINT) AS n_dup_grams
-      |  FROM pg JOIN occ ON pg.gram = occ.gram
-      |  GROUP BY pg.doc_id)
-      |SELECT d.doc_id,
-      |  COALESCE(n_grams, 0) AS n_grams,
-      |  COALESCE(n_dup_grams, 0) AS n_dup_grams,
-      |  CASE WHEN n_grams IS NULL THEN 0.0
-      |       ELSE round(CAST(n_dup_grams AS DOUBLE) / CAST(n_grams AS DOUBLE), 6)
-      |  END AS dup_frac
-      |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-      |ORDER BY d.doc_id""".stripMargin
-
-  /** Transitive closure of the exact >= 0.5 Jaccard pair graph —
-    * shared by `dedup_clusters` (label propagation) and
-    * `dedup_clusters_star` (large-star/small-star): the two
-    * formulations must produce identical components.
-    */
-  private val DedupClustersOracle: String =
-    """WITH RECURSIVE words AS (
-      |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
-      |  FROM documents),
-      |ng AS (
-      |  SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS ngram
-      |  FROM words, unnest(range(1, len(ws) - 1)) AS t(i)
-      |  WHERE len(ws) >= 3),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM ng GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-      |  FROM ng a JOIN ng b ON a.ngram = b.ngram AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2),
-      |p AS (
-      |  SELECT d1, d2 FROM inter
-      |  JOIN sizes s1 ON d1 = s1.doc_id JOIN sizes s2 ON d2 = s2.doc_id
-      |  WHERE CAST(c AS DOUBLE) / CAST(s1.n + s2.n - c AS DOUBLE) >= 0.5),
-      |edges AS (
-      |  SELECT d1 AS src, d2 AS dst FROM p
-      |  UNION ALL SELECT d2, d1 FROM p),
-      |reach(src, dst) AS (
-      |  SELECT src, dst FROM edges
-      |  UNION
-      |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-      |SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
-      |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin
-
-  /** Shared by asof_join_forward (window formulation) and
-    * asof_join_forward_native (AsOfMergeJoinExec, forward direction).
-    */
-  private val AsOfForwardOracle: String =
-    """WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'error'),
-      |     r AS (SELECT user_id, ts, MIN(value) AS value FROM events
-      |           WHERE event_type = 'purchase' GROUP BY 1, 2)
-      |SELECT l.event_id, l.user_id,
-      |       CAST(epoch_ns(l.ts) // 1000000000 AS BIGINT) AS error_sec,
-      |       CAST(epoch_ns(r.ts) // 1000000000 AS BIGINT) AS purchase_sec,
-      |       r.value AS purchase_value
-      |FROM l ASOF JOIN r ON l.user_id = r.user_id AND l.ts <= r.ts
-      |ORDER BY event_id""".stripMargin
-
-  private val NgramJaccardOracle: String =
-    """WITH words AS (
-      |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
-      |  FROM documents),
-      |ng AS (
-      |  SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS ngram
-      |  FROM words, unnest(range(1, len(ws) - 1)) AS t(i)
-      |  WHERE len(ws) >= 3),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM ng GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2, count(*) AS c
-      |  FROM ng a JOIN ng b ON a.ngram = b.ngram AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
-      |SELECT doc_id_1, doc_id_2,
-      |       round(CAST(c AS DOUBLE) / CAST(s1.n + s2.n - c AS DOUBLE), 6) AS jaccard
-      |FROM inter
-      |JOIN sizes s1 ON doc_id_1 = s1.doc_id
-      |JOIN sizes s2 ON doc_id_2 = s2.doc_id
-      |WHERE CAST(c AS DOUBLE) / CAST(s1.n + s2.n - c AS DOUBLE) >= 0.5
-      |ORDER BY doc_id_1, doc_id_2""".stripMargin
-
-  /** Shared IVF search oracle (see the ivf_topk/ann_topk entries):
-    * probe the nProbe nearest exported centroids per query (ties on
-    * cid, matching the Spark window's (qd, cid) order), score every
-    * vector assigned to a probed cell, rank (cos desc, vec_id), top 5.
-    */
-  private def IvfSearchOracle(nProbe: Int): String =
-    s"""WITH cents AS (SELECT cid, CAST(cvec AS DOUBLE[]) AS cv
-       |               FROM read_parquet('/tmp/graft_oracle_aux/ivf_centroids/*.parquet')),
-       |cells AS (SELECT vec_id, cell FROM read_parquet('/tmp/graft_oracle_aux/ivf_cells/*.parquet')),
-       |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-       |probes AS (
-       |  SELECT query_id, cid FROM (
-       |    SELECT q.query_id, c.cid,
-       |           row_number() OVER (PARTITION BY q.query_id ORDER BY
-       |             -(list_dot_product(q.qv, c.cv) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.cv, c.cv)))),
-       |             c.cid) AS rn
-       |    FROM q, cents c) WHERE rn <= $nProbe),
-       |scored AS (
-       |  SELECT q.query_id, e.vec_id,
-       |         list_dot_product(q.qv, e.v) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(e.v, e.v))) AS cos
-       |  FROM q JOIN probes p ON q.query_id = p.query_id
-       |       JOIN cells ce ON ce.cell = p.cid
-       |       JOIN e ON e.vec_id = ce.vec_id
-       |  WHERE e.vec_id <> q.query_id),
-       |ranked AS (
-       |  SELECT query_id, vec_id, cos,
-       |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
-       |  FROM scored)
-       |SELECT query_id, vec_id AS neighbor_id, rank, round(cos, 6) AS cos_sim
-       |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  /** ivf_incremental_topk oracle: same probe/score/rank replay as
-    * [[IvfSearchOracle]], but over the MERGED corpus (original
-    * embeddings plus the re-keyed reversed every-17th slice, rebuilt
-    * here in SQL — the oracle never sees Spark's union) under the
-    * exported MAINTAINED index. Mis-assigned delta vectors, a stale
-    * centroid table, or a wrong merged id-space all mismatch.
-    */
-  private val IvfIncrSearchOracle: String =
-    s"""WITH cents AS (SELECT cid, CAST(cvec AS DOUBLE[]) AS cv
-       |               FROM read_parquet('$OracleAuxDir/ivf_incr_centroids/*.parquet')),
-       |cells AS (SELECT vec_id, cell FROM read_parquet('$OracleAuxDir/ivf_incr_cells/*.parquet')),
-       |mx AS (SELECT max(vec_id) + 1 AS m FROM embeddings),
-       |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |      UNION ALL
-       |      SELECT vec_id + (SELECT m FROM mx),
-       |             CAST(list_reverse(embedding) AS DOUBLE[])
-       |      FROM embeddings WHERE vec_id % 17 = 4),
-       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-       |probes AS (
-       |  SELECT query_id, cid FROM (
-       |    SELECT q.query_id, c.cid,
-       |           row_number() OVER (PARTITION BY q.query_id ORDER BY
-       |             -(list_dot_product(q.qv, c.cv) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.cv, c.cv)))),
-       |             c.cid) AS rn
-       |    FROM q, cents c) WHERE rn <= 4),
-       |scored AS (
-       |  SELECT q.query_id, e.vec_id,
-       |         list_dot_product(q.qv, e.v) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(e.v, e.v))) AS cos
-       |  FROM q JOIN probes p ON q.query_id = p.query_id
-       |       JOIN cells ce ON ce.cell = p.cid
-       |       JOIN e ON e.vec_id = ce.vec_id
-       |  WHERE e.vec_id <> q.query_id),
-       |ranked AS (
-       |  SELECT query_id, vec_id, cos,
-       |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
-       |  FROM scored)
-       |SELECT query_id, vec_id AS neighbor_id, rank, round(cos, 6) AS cos_sim
-       |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  /** pca_top_component oracle: the fixed-iteration power method
-    * replayed in SQL, one CTE block per iteration (the pagerank
-    * chained-CTE pattern). Every numeric step mirrors the Spark
-    * implementation exactly — list_dot_product == VecDot's
-    * left-to-right fold, decimal(28,12)/(20,6) sums are
-    * order-independent in both engines, and the s/normalization
-    * arithmetic is the same IEEE expression tree — so the comparison
-    * is a full-precision hash match, not a tolerance. dim=64 and
-    * iters=3 are literals here (oracle SQL pins corpus facts, like
-    * the PQ oracle's m=8/dim=64).
-    */
-  private def pcaCtes(iters: Int): String = {
-    def iter(k: Int): String = {
-      val p = if (k == 1) "v0" else s"v${k - 1}"
-      s"""d$k AS MATERIALIZED (SELECT x, list_dot_product(x, (SELECT v FROM $p)) - list_dot_product((SELECT mv FROM mv), (SELECT v FROM $p)) AS dd FROM e),
-         |g$k AS MATERIALIZED (SELECT j, sum(CAST(dd * x[j] AS DECIMAL(28,12))) AS a
-         |  FROM d$k, unnest(range(1, 65)) AS t(j) GROUP BY j),
-         |b$k AS MATERIALIZED (SELECT sum(CAST(dd AS DECIMAL(28,12))) AS b FROM d$k),
-         |s$k AS MATERIALIZED (SELECT g.j, CAST(g.a AS DOUBLE) - mj.m * CAST((SELECT b FROM b$k) AS DOUBLE) AS s
-         |  FROM g$k g JOIN mj ON mj.j = g.j),
-         |sv$k AS MATERIALIZED (SELECT list(s ORDER BY j) AS sv FROM s$k),
-         |v$k AS MATERIALIZED (SELECT CASE WHEN list_dot_product(sv, sv) = 0 THEN list_transform(sv, z -> 0.0)
-         |  ELSE list_transform(sv, z -> z / sqrt(list_dot_product(sv, sv))) END AS v FROM sv$k),""".stripMargin
-    }
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x FROM embeddings WHERE embedding IS NOT NULL),
-       |cnt AS MATERIALIZED (SELECT count(*) AS n FROM e),
-       |mj AS MATERIALIZED (
-       |  SELECT j, CAST(sum(CAST(x[j] AS DECIMAL(20,6))) AS DOUBLE) / (SELECT n FROM cnt) AS m
-       |  FROM e, unnest(range(1, 65)) AS t(j) GROUP BY j),
-       |mv AS MATERIALIZED (SELECT list(m ORDER BY j) AS mv FROM mj),
-       |v0 AS MATERIALIZED (SELECT list(CASE WHEN j = 1 THEN 1.0 ELSE 0.0 END ORDER BY j) AS v
-       |  FROM unnest(range(1, 65)) AS t(j)),
-       |${(1 to iters).map(iter).mkString("\n")}
-       |fin AS MATERIALIZED (SELECT v FROM v$iters)""".stripMargin
-  }
-
-  private def pcaOracle(iters: Int): String =
-    s"""${pcaCtes(iters)}
-       |SELECT CAST(t.j AS BIGINT) AS dim, round(mj.m, 6) AS mu,
-       |  round(fin.v[t.j], 6) AS loading
-       |FROM unnest(range(1, 65)) AS t(j) JOIN mj ON mj.j = t.j CROSS JOIN fin
-       |ORDER BY dim""".stripMargin
-
-  /** pca_components oracle (k=2): component 1 is the pcaCtes fit;
-    * component 2 re-runs the same iteration blocks with the extracted
-    * component projected out of the RAW iterate by Gram-Schmidt —
-    * s = s_raw − (v1·s_raw) v1 — before normalization, exactly as the
-    * driver does it (so the two components are orthogonal by
-    * construction). Eigenvalues are the final projected iterate's
-    * Rayleigh estimate sqrt(sv·sv) in both engines.
-    */
-  private def pcaComponentsOracle(iters: Int): String = {
-    def wIter(k: Int): String = {
-      val p = if (k == 1) "w0" else s"wv${k - 1}"
-      s"""wd$k AS MATERIALIZED (SELECT x, list_dot_product(x, (SELECT v FROM $p)) - list_dot_product((SELECT mv FROM mv), (SELECT v FROM $p)) AS dd FROM e),
-         |wg$k AS MATERIALIZED (SELECT j, sum(CAST(dd * x[j] AS DECIMAL(28,12))) AS a
-         |  FROM wd$k, unnest(range(1, 65)) AS t(j) GROUP BY j),
-         |wb$k AS MATERIALIZED (SELECT sum(CAST(dd AS DECIMAL(28,12))) AS b FROM wd$k),
-         |wsr$k AS MATERIALIZED (SELECT g.j,
-         |  CAST(g.a AS DOUBLE) - mj.m * CAST((SELECT b FROM wb$k) AS DOUBLE) AS s
-         |  FROM wg$k g JOIN mj ON mj.j = g.j),
-         |wsvr$k AS MATERIALIZED (SELECT list(s ORDER BY j) AS sv FROM wsr$k),
-         |ws$k AS MATERIALIZED (SELECT r.j,
-         |  r.s - list_dot_product(fin.v, wsvr$k.sv) * fin.v[r.j] AS s
-         |  FROM wsr$k r CROSS JOIN fin CROSS JOIN wsvr$k),
-         |wsv$k AS MATERIALIZED (SELECT list(s ORDER BY j) AS sv FROM ws$k),
-         |wv$k AS MATERIALIZED (SELECT CASE WHEN list_dot_product(sv, sv) = 0 THEN list_transform(sv, z -> 0.0)
-         |  ELSE list_transform(sv, z -> z / sqrt(list_dot_product(sv, sv))) END AS v FROM wsv$k),""".stripMargin
-    }
-    s"""${pcaCtes(iters)},
-       |w0 AS MATERIALIZED (SELECT list(CASE WHEN j = 2 THEN 1.0 ELSE 0.0 END ORDER BY j) AS v
-       |  FROM unnest(range(1, 65)) AS t(j)),
-       |${(1 to iters).map(wIter).mkString("\n")}
-       |wfin AS MATERIALIZED (SELECT v FROM wv$iters)
-       |SELECT CAST(1 AS BIGINT) AS component, CAST(t.j AS BIGINT) AS dim,
-       |  round(sqrt(list_dot_product(sv$iters.sv, sv$iters.sv)), 6) AS eigenvalue,
-       |  round(fin.v[t.j], 6) AS loading
-       |FROM unnest(range(1, 65)) AS t(j) CROSS JOIN fin CROSS JOIN sv$iters
-       |UNION ALL
-       |SELECT CAST(2 AS BIGINT), CAST(t.j AS BIGINT),
-       |  round(sqrt(list_dot_product(wsv$iters.sv, wsv$iters.sv)), 6),
-       |  round(wfin.v[t.j], 6)
-       |FROM unnest(range(1, 65)) AS t(j) CROSS JOIN wfin CROSS JOIN wsv$iters
-       |ORDER BY component, dim""".stripMargin
-  }
-
-  /** pca_incremental oracle: the served fit (the cold pcaCtes blocks
-    * over the ORIGINAL corpus → `fin`), then the merged corpus rebuilt
-    * in SQL (original ∪ re-keyed reversed every-17th — the
-    * IvfIncrSearchOracle fixture), its exact decimal mean, and the warm
-    * power iteration(s) starting FROM `fin` — precisely what
-    * Vectors.incrementalPcaFitK computes, block for block, so the
-    * comparison is a full-precision hash match like the other PCA
-    * oracles. A maintenance that served a stale mean, skipped the warm
-    * iteration, or warm-started from the wrong vector all mismatch.
-    */
-  private def pcaIncrOracle(iters: Int, warmIters: Int): String = {
-    def wIter(k: Int): String = {
-      val p = if (k == 1) "fin" else s"uv${k - 1}"
-      s"""ud$k AS MATERIALIZED (SELECT x, list_dot_product(x, (SELECT v FROM $p)) - list_dot_product((SELECT mv FROM mv2), (SELECT v FROM $p)) AS dd FROM e2),
-         |ug$k AS MATERIALIZED (SELECT j, sum(CAST(dd * x[j] AS DECIMAL(28,12))) AS a
-         |  FROM ud$k, unnest(range(1, 65)) AS t(j) GROUP BY j),
-         |ub$k AS MATERIALIZED (SELECT sum(CAST(dd AS DECIMAL(28,12))) AS b FROM ud$k),
-         |us$k AS MATERIALIZED (SELECT g.j, CAST(g.a AS DOUBLE) - mj2.m * CAST((SELECT b FROM ub$k) AS DOUBLE) AS s
-         |  FROM ug$k g JOIN mj2 ON mj2.j = g.j),
-         |usv$k AS MATERIALIZED (SELECT list(s ORDER BY j) AS sv FROM us$k),
-         |uv$k AS MATERIALIZED (SELECT CASE WHEN list_dot_product(sv, sv) = 0 THEN list_transform(sv, z -> 0.0)
-         |  ELSE list_transform(sv, z -> z / sqrt(list_dot_product(sv, sv))) END AS v FROM usv$k),""".stripMargin
-    }
-    s"""${pcaCtes(iters)},
-       |e2 AS MATERIALIZED (
-       |  SELECT CAST(embedding AS DOUBLE[]) AS x FROM embeddings
-       |  WHERE embedding IS NOT NULL
-       |  UNION ALL
-       |  SELECT CAST(list_reverse(embedding) AS DOUBLE[]) FROM embeddings
-       |  WHERE vec_id % 17 = 4 AND embedding IS NOT NULL),
-       |cnt2 AS MATERIALIZED (SELECT count(*) AS n FROM e2),
-       |mj2 AS MATERIALIZED (
-       |  SELECT j, CAST(sum(CAST(x[j] AS DECIMAL(20,6))) AS DOUBLE) / (SELECT n FROM cnt2) AS m
-       |  FROM e2, unnest(range(1, 65)) AS t(j) GROUP BY j),
-       |mv2 AS MATERIALIZED (SELECT list(m ORDER BY j) AS mv FROM mj2),
-       |${(1 to warmIters).map(wIter).mkString("\n")}
-       |ufin AS MATERIALIZED (SELECT v FROM uv$warmIters)
-       |SELECT CAST(t.j AS BIGINT) AS dim, round(mj2.m, 6) AS mu,
-       |  round(ufin.v[t.j], 6) AS loading
-       |FROM unnest(range(1, 65)) AS t(j) JOIN mj2 ON mj2.j = t.j CROSS JOIN ufin
-       |ORDER BY dim""".stripMargin
-  }
-
-  /** abtt_debias oracle: same fit CTEs, then the per-row projection /
-    * residual replayed with the identical IEEE expression tree (see
-    * Vectors.abttDebias — the expanded ||x−μ||² form exists exactly so
-    * every term is a left-to-right list_dot_product here).
-    */
-  private def abttOracle(iters: Int): String =
-    s"""${pcaCtes(iters)},
-       |scal AS MATERIALIZED (SELECT list_dot_product(mv.mv, fin.v) AS mdv,
-       |    list_dot_product(mv.mv, mv.mv) AS mdm FROM mv CROSS JOIN fin)
-       |SELECT e.vec_id,
-       |  round(list_dot_product(e.x, fin.v) - scal.mdv, 6) AS proj,
-       |  round(sqrt(greatest(
-       |    list_dot_product(e.x, e.x) - 2.0 * list_dot_product(e.x, mv.mv) + scal.mdm
-       |      - (list_dot_product(e.x, fin.v) - scal.mdv) * (list_dot_product(e.x, fin.v) - scal.mdv),
-       |    0.0)), 6) AS resid_norm
-       |FROM e CROSS JOIN fin CROSS JOIN mv CROSS JOIN scal
-       |ORDER BY vec_id""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "pca_top_component" -> pcaOracle(3),
-    "pca_incremental" -> pcaIncrOracle(3, 1),
-    "abtt_debias" -> abttOracle(3),
-    "pca_components" -> pcaComponentsOracle(3),
-    "inverted_index" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-        |  FROM documents
-        |), pairs AS (
-        |  SELECT DISTINCT word, doc_id FROM toks WHERE length(word) > 0
-        |)
-        |SELECT word, string_agg(CAST(doc_id AS VARCHAR), ' ' ORDER BY doc_id) AS doc_ids,
-        |       CAST(count(*) AS BIGINT) AS n_docs
-        |FROM pairs GROUP BY word ORDER BY word""".stripMargin,
-    "word_stats" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-        |  FROM documents
-        |)
-        |SELECT word, CAST(count(*) AS BIGINT) AS n_occurrences,
-        |       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-        |FROM toks WHERE length(word) > 0 GROUP BY word ORDER BY word""".stripMargin,
-    "top_words" ->
-      """WITH toks AS (
-        |  SELECT lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-        |  FROM documents
-        |)
-        |SELECT word, CAST(count(*) AS BIGINT) AS n
-        |FROM toks WHERE length(word) > 0 GROUP BY word
-        |ORDER BY n DESC, word LIMIT 20""".stripMargin,
-    "lang_profile" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS total_chars,
-        |       CAST(sum(n_chars) AS DOUBLE) / count(*) AS avg_chars,
-        |       min(n_chars) AS min_chars, max(n_chars) AS max_chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "doc_stats" ->
-      """WITH base AS (
-        |  SELECT doc_id, lang, text,
-        |    list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
-        |  FROM documents)
-        |SELECT doc_id, lang,
-        |  CAST(len(list_filter(string_split_regex(text, '[ \t\n]+'), t -> length(t) > 0)) AS BIGINT) AS n_tokens,
-        |  CAST(len(regexp_extract_all(text, '[a-zA-Z0-9]+')) + length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS BIGINT) AS n_bpeish_tokens,
-        |  CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct_words,
-        |  round(CASE WHEN len(ws) > 0 THEN CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE) / len(ws) ELSE 0.0 END, 4) AS mean_word_len,
-        |  round(CASE WHEN length(text) > 0 THEN CAST(length(regexp_replace(text, '[a-zA-Z0-9 \t\n]', '', 'g')) AS DOUBLE) / length(text) ELSE 0.0 END, 4) AS punct_ratio,
-        |  round(CASE WHEN len(ws) > 0 THEN CAST(len(list_filter(ws, w -> w IN ('the','a','an','and','or','of','to','in','is','are','was','on','for','it','that','this','with','as','by','at'))) AS DOUBLE) / len(ws) ELSE 0.0 END, 4) AS stopword_ratio,
-        |  round((
-        |    least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-        |    + (1.0 - least((CASE WHEN length(text) > 0 THEN CAST(length(regexp_replace(text, '[a-zA-Z0-9 \t\n]', '', 'g')) AS DOUBLE) / length(text) ELSE 0.0 END) * 4.0, 1.0))
-        |    + greatest(1.0 - abs((CASE WHEN len(ws) > 0 THEN CAST(len(list_filter(ws, w -> w IN ('the','a','an','and','or','of','to','in','is','are','was','on','for','it','that','this','with','as','by','at'))) AS DOUBLE) / len(ws) ELSE 0.0 END) - 0.35) * 2.0, 0.0)
-        |  ) / 3.0, 4) AS quality
-        |FROM base ORDER BY doc_id""".stripMargin,
-    "lang_id" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
-        |  FROM documents),
-        |scores AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(ws, w -> w IN ('the','and','of','to','in','is','that','with'))) AS BIGINT) AS s_en,
-        |    CAST(len(list_filter(ws, w -> w IN ('der','die','das','und','ist','nicht','mit','ein'))) AS BIGINT) AS s_de,
-        |    CAST(len(list_filter(ws, w -> w IN ('el','la','de','que','y','en','un','es'))) AS BIGINT) AS s_es,
-        |    CAST(len(list_filter(ws, w -> w IN ('le','la','de','et','un','est','que','dans'))) AS BIGINT) AS s_fr,
-        |    CAST(len(list_filter(ws, w -> w IN ('de','shi','le','zai','he','you','wo','ta'))) AS BIGINT) AS s_zh
-        |  FROM base)
-        |SELECT doc_id,
-        |  CASE WHEN s_zh = m THEN 'zh' WHEN s_fr = m THEN 'fr' WHEN s_es = m THEN 'es'
-        |       WHEN s_en = m THEN 'en' ELSE 'de' END AS pred_lang,
-        |  m AS marker_hits
-        |FROM (SELECT *, greatest(s_en, s_de, s_es, s_fr, s_zh) AS m FROM scores)
-        |ORDER BY doc_id""".stripMargin,
-    "q1_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(round(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_disc_price,
-        |  CAST(round(sum(CAST(l_extendedprice*(1.0-l_discount)*(1.0+l_tax) AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_charge,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_price,
-        |  CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_disc,
-        |  CAST(count(*) AS BIGINT) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_shipping_priority" ->
-      """SELECT l_orderkey,
-        |  CAST(CAST(o_orderdate AS DATE) AS VARCHAR) AS o_orderdate,
-        |  CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q5_local_volume" ->
-      """SELECT n_name,
-        |  CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-    "top_orders" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-    // dpp_star_revenue: the engine reads a nation-partitioned fact COPY
-    // (orders x customer.nationkey) so the region filter prunes fact
-    // partitions at runtime; the copy holds exactly these rows, so the
-    // plain star join over the original tables is the oracle.
-    "dpp_star_revenue" ->
-      """SELECT n_name,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_orders
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE n_regionkey = 1
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    // bloom_join_revenue: the runtime bloom filter is a pure pruning
-    // device — the join verifies every surviving row — so the plain
-    // filtered join IS the oracle.
-    "bloom_join_revenue" ->
-      """SELECT o_orderpriority,
-        |  CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "semi_join_customers" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 400000.0)
-        |ORDER BY c_custkey""".stripMargin,
-    "anti_join_customers" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice > 450000.0)
-        |ORDER BY c_custkey""".stripMargin,
-    "orders_per_nation" ->
-      """SELECT n_name, CAST(count(*) AS BIGINT) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "setops_nations" ->
-      """WITH cn AS (SELECT DISTINCT CAST(c_nationkey AS BIGINT) AS nationkey FROM customer),
-        |     sn AS (SELECT DISTINCT CAST(s_nationkey AS BIGINT) AS nationkey FROM supplier)
-        |SELECT nationkey, 'both' AS which FROM (SELECT * FROM cn INTERSECT SELECT * FROM sn)
-        |UNION ALL
-        |SELECT nationkey, 'cust_only' AS which FROM (SELECT * FROM cn EXCEPT SELECT * FROM sn)
-        |UNION ALL
-        |SELECT nationkey, 'supp_only' AS which FROM (SELECT * FROM sn EXCEPT SELECT * FROM cn)
-        |ORDER BY which, nationkey""".stripMargin,
-    "distinct_parts" ->
-      """SELECT DISTINCT p_brand, p_type FROM part ORDER BY p_brand, p_type""".stripMargin,
-    "rollup_orders" ->
-      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
-        |       coalesce(o_orderpriority, 'ALL') AS priority,
-        |       CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-        |ORDER BY status, priority""".stripMargin,
-    "cube_parts" ->
-      """SELECT coalesce(p_brand, 'ALL') AS brand,
-        |       coalesce(CAST(p_size AS VARCHAR), 'ALL') AS size,
-        |       CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        |FROM part GROUP BY CUBE(p_brand, p_size)
-        |ORDER BY brand, size""".stripMargin,
-    "window_analytics" ->
-      """SELECT o_orderstatus, o_orderkey,
-        |  CAST(ntile(4) OVER w AS INTEGER) AS quartile,
-        |  round(percent_rank() OVER w, 6) AS pct_rank,
-        |  round(cume_dist() OVER w, 6) AS cume,
-        |  first_value(o_orderkey) OVER w AS cheapest_order
-        |FROM orders WHERE o_custkey <= 50
-        |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_orderstatus, o_orderkey""".stripMargin,
-    "pivot_orders" ->
-      """SELECT o_orderpriority,
-        |  CAST(count(*) FILTER (WHERE o_orderstatus = 'F') AS BIGINT) AS n_f,
-        |  CAST(count(*) FILTER (WHERE o_orderstatus = 'O') AS BIGINT) AS n_o,
-        |  CAST(count(*) FILTER (WHERE o_orderstatus = 'P') AS BIGINT) AS n_p
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "grouping_sets" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-        |       coalesce(l_linestatus, 'ALL') AS linestatus,
-        |       CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        |ORDER BY returnflag, linestatus""".stripMargin,
-    "percentiles" ->
-      """SELECT l_returnflag,
-        |       round(quantile_cont(l_quantity, 0.25), 4) AS p25,
-        |       round(quantile_cont(l_quantity, 0.5), 4) AS p50,
-        |       round(quantile_cont(l_quantity, 0.75), 4) AS p75,
-        |       round(quantile_cont(l_extendedprice, 0.9), 4) AS price_p90
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "monthly_revenue" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
-        |       CAST(month(o_orderdate) AS BIGINT) AS mon,
-        |       CAST(count(*) AS BIGINT) AS n_orders,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |       round(sqrt(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)), 6) AS revenue_sqrt,
-        |       round(ln(CAST(count(*) AS DOUBLE)), 6) AS log_orders
-        |FROM orders GROUP BY 1, 2 ORDER BY yr, mon""".stripMargin,
-    "window_top_orders" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    CAST(row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS rn
-        |  FROM orders) t
-        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-    "window_running_qty" ->
-      """SELECT l_suppkey, l_orderkey, l_linenumber,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))
-        |    OVER (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_qty
-        |FROM lineitem WHERE l_suppkey <= 10
-        |ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin,
-    "above_brand_avg" ->
-      """WITH ba AS (
-        |  SELECT p_brand, CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS brand_avg
-        |  FROM part GROUP BY p_brand)
-        |SELECT p_partkey, part.p_brand, p_retailprice
-        |FROM part JOIN ba ON part.p_brand = ba.p_brand
-        |WHERE p_retailprice > brand_avg ORDER BY p_partkey""".stripMargin,
-    "split_assign" ->
-      """WITH b AS (
-        |  SELECT doc_id,
-        |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INTEGER) % 100 AS bucket
-        |  FROM documents)
-        |SELECT doc_id, CAST(bucket AS BIGINT) AS bucket,
-        |  CASE WHEN bucket < 80 THEN 'train'
-        |       WHEN bucket < 90 THEN 'validation'
-        |       ELSE 'test' END AS split
-        |FROM b ORDER BY doc_id""".stripMargin,
-    "pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(list_filter(string_split_regex(text, '[ \t\n]+'), t -> length(t) > 0)) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, lang, n_tokens,
-        |    COALESCE(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-        |  FROM t)
-        |SELECT doc_id, lang, n_tokens,
-        |  CAST(FLOOR(cum_before / 2048) AS BIGINT) AS bin,
-        |  CAST(cum_before % 2048 AS BIGINT) AS bin_offset
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "chunk_docs" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CASE WHEN length(trim(text)) = 0 THEN []
-        |         ELSE string_split_regex(trim(text), '[ \t\n]+') END AS ws
-        |  FROM documents),
-        |s AS (SELECT doc_id, ws, len(ws) AS n FROM t WHERE len(ws) > 0),
-        |c AS (
-        |  SELECT doc_id, ws, n, CAST(i AS INTEGER) AS chunk_id
-        |  FROM s, unnest(range(0, CAST(ceil(CAST(n AS DOUBLE) / 48) AS BIGINT))) AS u(i))
-        |SELECT doc_id, chunk_id,
-        |  CAST(len(ws[chunk_id * 48 + 1 : least(chunk_id * 48 + 64, n)]) AS BIGINT) AS n_chunk_tokens,
-        |  md5(array_to_string(ws[chunk_id * 48 + 1 : least(chunk_id * 48 + 64, n)], ' ')) AS chunk_md5
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
-    "curated_corpus" ->
-      """WITH normed AS (
-        |  SELECT doc_id, lang, text,
-        |    md5(array_to_string(list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0), ' ')) AS fp
-        |  FROM documents),
-        |keepers AS (
-        |  SELECT doc_id, lang, text FROM (
-        |    SELECT doc_id, lang, text,
-        |           min(doc_id) OVER (PARTITION BY fp) AS keeper
-        |    FROM normed) WHERE doc_id = keeper),
-        |words AS (
-        |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
-        |  FROM keepers),
-        |ng AS (
-        |  SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS ngram
-        |  FROM words, unnest(range(1, len(ws) - 1)) AS t(i)
-        |  WHERE len(ws) >= 3),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM ng GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM ng a JOIN ng b ON a.ngram = b.ngram AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |losers AS (
-        |  SELECT DISTINCT d2 AS doc_id FROM inter
-        |  JOIN sizes s1 ON d1 = s1.doc_id JOIN sizes s2 ON d2 = s2.doc_id
-        |  WHERE CAST(c AS DOUBLE) / CAST(s1.n + s2.n - c AS DOUBLE) >= 0.5)
-        |SELECT k.doc_id, k.lang,
-        |  CAST(len(list_filter(string_split_regex(k.text, '[ \t\n]+'), t -> length(t) > 0)) AS BIGINT) AS n_tokens
-        |FROM keepers k
-        |WHERE k.doc_id NOT IN (SELECT doc_id FROM losers)
-        |  AND len(list_filter(string_split_regex(k.text, '[ \t\n]+'), t -> length(t) > 0)) >= 10
-        |  AND k.lang IN ('en', 'de', 'fr', 'es')
-        |ORDER BY k.doc_id""".stripMargin,
-    "topk_words_per_lang" ->
-      """WITH toks AS (
-        |  SELECT lang, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-        |  FROM documents),
-        |counts AS (SELECT lang, word, CAST(count(*) AS BIGINT) AS n
-        |           FROM toks WHERE length(word) > 0 GROUP BY lang, word),
-        |ranked AS (
-        |  SELECT lang, word, n,
-        |         CAST(row_number() OVER (PARTITION BY lang ORDER BY n DESC, word) AS INTEGER) AS rank
-        |  FROM counts)
-        |SELECT lang, word, n, rank FROM ranked WHERE rank <= 3
-        |ORDER BY lang, rank""".stripMargin,
-    "asof_join" ->
-      """WITH l AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'),
-        |     r AS (SELECT user_id, ts, MIN(value) AS value FROM events
-        |           WHERE event_type = 'click' GROUP BY 1, 2)
-        |SELECT l.event_id, l.user_id,
-        |       CAST(epoch_ns(l.ts) // 1000000000 AS BIGINT) AS purchase_sec,
-        |       CAST(epoch_ns(r.ts) // 1000000000 AS BIGINT) AS click_sec,
-        |       r.value AS click_value
-        |FROM l ASOF JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY event_id""".stripMargin,
-    // identical SQL to asof_join by design: the native merge operator
-    // must reproduce the window formulation's rows exactly
-    "asof_join_native" ->
-      """WITH l AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'),
-        |     r AS (SELECT user_id, ts, MIN(value) AS value FROM events
-        |           WHERE event_type = 'click' GROUP BY 1, 2)
-        |SELECT l.event_id, l.user_id,
-        |       CAST(epoch_ns(l.ts) // 1000000000 AS BIGINT) AS purchase_sec,
-        |       CAST(epoch_ns(r.ts) // 1000000000 AS BIGINT) AS click_sec,
-        |       r.value AS click_value
-        |FROM l ASOF JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY event_id""".stripMargin,
-    "asof_join_forward" -> AsOfForwardOracle,
-    // native forward merge: same rows as the window formulation by the
-    // AsOfMergeJoinExec direction contract (bit-equality spec'd)
-    "asof_join_forward_native" -> AsOfForwardOracle,
-    "range_join" ->
-      """SELECT a.event_id AS purchase_id, b.event_id AS error_id,
-        |       a.user_id AS user_id,
-        |       CAST((epoch_ns(b.ts) - epoch_ns(a.ts)) // 1000000000 AS BIGINT) AS gap_sec
-        |FROM events a JOIN events b
-        |  ON a.user_id = b.user_id AND a.event_type = 'purchase' AND b.event_type = 'error'
-        | AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 60 MINUTE
-        |ORDER BY purchase_id, error_id""".stripMargin,
-    "media_stats" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 3 = 0 THEN 'image'
-        |       WHEN doc_id % 3 = 1 THEN 'audio'
-        |       ELSE 'video' END AS kind,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  sha256(text) AS sha_hex
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // media_features is fully deterministic (the stub codec is the
-    // identity), so DuckDB recomputes every column from the UTF-8
-    // bytes: the 16-bin HIGH-nibble histogram/entropy read off the odd
-    // positions of the hex rendering, ceil-division frame count, and
-    // the stride-sampled 16-byte preview.
-    "media_features" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 3 = 0 THEN 'image'
-        |              WHEN doc_id % 3 = 1 THEN 'audio'
-        |              ELSE 'video' END AS kind,
-        |         hex(encode(text)) AS hx,
-        |         octet_length(encode(text)) AS n
-        |  FROM documents),
-        |nib AS (
-        |  SELECT m.doc_id, substr(m.hx, 2*t.i + 1, 1) AS hi, count(*) AS c
-        |  FROM m, UNNEST(range(m.n)) AS t(i)
-        |  GROUP BY 1, 2),
-        |ent AS (
-        |  SELECT nib.doc_id,
-        |         round(-SUM((c::DOUBLE / m.n) * ln(c::DOUBLE / m.n)) / ln(2), 6) AS entropy
-        |  FROM nib JOIN m USING (doc_id)
-        |  GROUP BY 1)
-        |SELECT m.doc_id, m.kind, CAST(m.n AS BIGINT) AS n_bytes,
-        |       COALESCE(ent.entropy, 0.0) AS entropy,
-        |       CAST(CASE WHEN m.n = 0 THEN 0 ELSE (m.n - 1) // 64 + 1 END AS INT) AS frames_sampled,
-        |       CASE WHEN m.n = 0 THEN repeat('00', 16)
-        |            ELSE list_aggregate([substr(m.hx, 2*CAST(i * m.n // 16 AS BIGINT) + 1, 2) FOR i IN range(16)], 'string_agg', '')
-        |       END AS preview_hex
-        |FROM m LEFT JOIN ent USING (doc_id)
-        |ORDER BY m.doc_id""".stripMargin,
-    // media_decode runs the NON-identity RleCodec: the oracle rebuilds
-    // the decoded byte stream itself (each printable-ASCII char of the
-    // document repeated by its closed-form run length) from
-    // documents.text — it never sees the payload, so only a correct
-    // run expansion reproduces n_bytes, the high-nibble histogram
-    // entropy, the ceil-division frame count, and the stride preview.
-    // media_wav: the decoded stream IS the printable projection (the
-    // WAV samples), so the oracle replays n_bytes/entropy/frames/
-    // preview from documents.text directly; the corrupted subset
-    // (doc_id % 11 = 7) must decode EMPTY — a codec that threw, or
-    // walked past the JUNK chunk wrongly, mismatches those rows
-    "media_wav" ->
-      """WITH cl AS (
-        |  SELECT doc_id, 'audio' AS kind,
-        |         CASE WHEN doc_id % 11 = 7 THEN ''
-        |              ELSE regexp_replace(text, '[^ -~]', '', 'g') END AS ds
-        |  FROM documents),
-        |m AS (
-        |  SELECT doc_id, kind, hex(encode(ds)) AS hx,
-        |         octet_length(encode(ds)) AS n
-        |  FROM cl),
-        |nib AS (
-        |  SELECT m.doc_id, substr(m.hx, 2*t.i + 1, 1) AS hi, count(*) AS c
-        |  FROM m, UNNEST(range(m.n)) AS t(i)
-        |  GROUP BY 1, 2),
-        |ent AS (
-        |  SELECT nib.doc_id,
-        |         round(-SUM((c::DOUBLE / m.n) * ln(c::DOUBLE / m.n)) / ln(2), 6) AS entropy
-        |  FROM nib JOIN m USING (doc_id)
-        |  GROUP BY 1)
-        |SELECT m.doc_id, m.kind, CAST(m.n AS BIGINT) AS n_bytes,
-        |       COALESCE(ent.entropy, 0.0) AS entropy,
-        |       CAST(CASE WHEN m.n = 0 THEN 0 ELSE (m.n - 1) // 64 + 1 END AS INT) AS frames_sampled,
-        |       CASE WHEN m.n = 0 THEN repeat('00', 16)
-        |            ELSE list_aggregate([substr(m.hx, 2*CAST(i * m.n // 16 AS BIGINT) + 1, 2) FOR i IN range(16)], 'string_agg', '')
-        |       END AS preview_hex
-        |FROM m LEFT JOIN ent USING (doc_id)
-        |ORDER BY m.doc_id""".stripMargin,
-    // media_bmp: the decoded raster is the printable projection padded
-    // with spaces to w*ceil(len/w) where w = (len % 5) + 1 — a closed
-    // form replayed from documents.text; the corrupted subset
-    // (doc_id % 13 = 5) must decode EMPTY. A decoder that read the
-    // palette as pixels (ignored bfOffBits), kept the stride padding,
-    // or mis-ordered bottom-up rows mismatches on every column.
-    "media_bmp" ->
-      """WITH cl AS (
-        |  SELECT doc_id, 'image' AS kind,
-        |         CASE WHEN doc_id % 13 = 5 THEN ''
-        |              ELSE regexp_replace(text, '[^ -~]', '', 'g') END AS s
-        |  FROM documents),
-        |pad AS (
-        |  SELECT doc_id, kind,
-        |         CASE WHEN length(s) = 0 THEN ''
-        |              ELSE rpad(s, CAST(((length(s) % 5) + 1)
-        |                * ((length(s) + (length(s) % 5))
-        |                   // ((length(s) % 5) + 1)) AS INTEGER), ' ')
-        |         END AS ds
-        |  FROM cl),
-        |m AS (
-        |  SELECT doc_id, kind, hex(encode(ds)) AS hx,
-        |         octet_length(encode(ds)) AS n
-        |  FROM pad),
-        |nib AS (
-        |  SELECT m.doc_id, substr(m.hx, 2*t.i + 1, 1) AS hi, count(*) AS c
-        |  FROM m, UNNEST(range(m.n)) AS t(i)
-        |  GROUP BY 1, 2),
-        |ent AS (
-        |  SELECT nib.doc_id,
-        |         round(-SUM((c::DOUBLE / m.n) * ln(c::DOUBLE / m.n)) / ln(2), 6) AS entropy
-        |  FROM nib JOIN m USING (doc_id)
-        |  GROUP BY 1)
-        |SELECT m.doc_id, m.kind, CAST(m.n AS BIGINT) AS n_bytes,
-        |       COALESCE(ent.entropy, 0.0) AS entropy,
-        |       CAST(CASE WHEN m.n = 0 THEN 0 ELSE (m.n - 1) // 64 + 1 END AS INT) AS frames_sampled,
-        |       CASE WHEN m.n = 0 THEN repeat('00', 16)
-        |            ELSE list_aggregate([substr(m.hx, 2*CAST(i * m.n // 16 AS BIGINT) + 1, 2) FOR i IN range(16)], 'string_agg', '')
-        |       END AS preview_hex
-        |FROM m LEFT JOIN ent USING (doc_id)
-        |ORDER BY m.doc_id""".stripMargin,
-    // media_png: the decoded raster is the printable projection padded
-    // with spaces to w*ceil(len/w) where w = (len % 6) + 1 — the BMP
-    // closed form at a different modulus; the corrupted subset
-    // (doc_id % 17 = 3) must decode EMPTY. Unlike BMP the raster is
-    // UNREACHABLE without actually inflating the split-IDAT zlib
-    // stream and reconstructing the five cycling scanline filters —
-    // no header arithmetic reproduces these columns.
-    "media_png" ->
-      """WITH cl AS (
-        |  SELECT doc_id, 'image' AS kind,
-        |         CASE WHEN doc_id % 17 = 3 THEN ''
-        |              ELSE regexp_replace(text, '[^ -~]', '', 'g') END AS s
-        |  FROM documents),
-        |pad AS (
-        |  SELECT doc_id, kind,
-        |         CASE WHEN length(s) = 0 THEN ''
-        |              ELSE rpad(s, CAST(((length(s) % 6) + 1)
-        |                * ((length(s) + (length(s) % 6))
-        |                   // ((length(s) % 6) + 1)) AS INTEGER), ' ')
-        |         END AS ds
-        |  FROM cl),
-        |m AS (
-        |  SELECT doc_id, kind, hex(encode(ds)) AS hx,
-        |         octet_length(encode(ds)) AS n
-        |  FROM pad),
-        |nib AS (
-        |  SELECT m.doc_id, substr(m.hx, 2*t.i + 1, 1) AS hi, count(*) AS c
-        |  FROM m, UNNEST(range(m.n)) AS t(i)
-        |  GROUP BY 1, 2),
-        |ent AS (
-        |  SELECT nib.doc_id,
-        |         round(-SUM((c::DOUBLE / m.n) * ln(c::DOUBLE / m.n)) / ln(2), 6) AS entropy
-        |  FROM nib JOIN m USING (doc_id)
-        |  GROUP BY 1)
-        |SELECT m.doc_id, m.kind, CAST(m.n AS BIGINT) AS n_bytes,
-        |       COALESCE(ent.entropy, 0.0) AS entropy,
-        |       CAST(CASE WHEN m.n = 0 THEN 0 ELSE (m.n - 1) // 64 + 1 END AS INT) AS frames_sampled,
-        |       CASE WHEN m.n = 0 THEN repeat('00', 16)
-        |            ELSE list_aggregate([substr(m.hx, 2*CAST(i * m.n // 16 AS BIGINT) + 1, 2) FOR i IN range(16)], 'string_agg', '')
-        |       END AS preview_hex
-        |FROM m LEFT JOIN ent USING (doc_id)
-        |ORDER BY m.doc_id""".stripMargin,
-    // media_gif: the decoded raster is the printable projection padded
-    // with spaces to w*ceil(len/w) where w = (len % 7) + 1 — the
-    // BMP/PNG closed form at modulus 7; the corrupted subset
-    // (doc_id % 19 = 7) must decode EMPTY. The raster is unreachable
-    // without reassembling the sub-block stream, decoding variable-
-    // width LZW through every code-width widening point, and
-    // de-interlacing the 4-pass row order on even-length docs.
-    "media_gif" ->
-      """WITH cl AS (
-        |  SELECT doc_id, 'image' AS kind,
-        |         CASE WHEN doc_id % 19 = 7 THEN ''
-        |              ELSE regexp_replace(text, '[^ -~]', '', 'g') END AS s
-        |  FROM documents),
-        |pad AS (
-        |  SELECT doc_id, kind,
-        |         CASE WHEN length(s) = 0 THEN ''
-        |              ELSE rpad(s, CAST(((length(s) % 7) + 1)
-        |                * ((length(s) + (length(s) % 7))
-        |                   // ((length(s) % 7) + 1)) AS INTEGER), ' ')
-        |         END AS ds
-        |  FROM cl),
-        |m AS (
-        |  SELECT doc_id, kind, hex(encode(ds)) AS hx,
-        |         octet_length(encode(ds)) AS n
-        |  FROM pad),
-        |nib AS (
-        |  SELECT m.doc_id, substr(m.hx, 2*t.i + 1, 1) AS hi, count(*) AS c
-        |  FROM m, UNNEST(range(m.n)) AS t(i)
-        |  GROUP BY 1, 2),
-        |ent AS (
-        |  SELECT nib.doc_id,
-        |         round(-SUM((c::DOUBLE / m.n) * ln(c::DOUBLE / m.n)) / ln(2), 6) AS entropy
-        |  FROM nib JOIN m USING (doc_id)
-        |  GROUP BY 1)
-        |SELECT m.doc_id, m.kind, CAST(m.n AS BIGINT) AS n_bytes,
-        |       COALESCE(ent.entropy, 0.0) AS entropy,
-        |       CAST(CASE WHEN m.n = 0 THEN 0 ELSE (m.n - 1) // 64 + 1 END AS INT) AS frames_sampled,
-        |       CASE WHEN m.n = 0 THEN repeat('00', 16)
-        |            ELSE list_aggregate([substr(m.hx, 2*CAST(i * m.n // 16 AS BIGINT) + 1, 2) FOR i IN range(16)], 'string_agg', '')
-        |       END AS preview_hex
-        |FROM m LEFT JOIN ent USING (doc_id)
-        |ORDER BY m.doc_id""".stripMargin,
-    // media_near_dup: dHash over the PNG table's decoded rasters.
-    // The oracle recomputes the hash from the closed-form raster
-    // (printable projection padded to w*ceil(n/w), w = n%6+1), with
-    // the corrupted subset (doc_id % 17 = 3, empty decode) and
-    // degenerate w < 2 geometries excluded by construction. The
-    // brute-force pair join here equals the engine's chunk-blocked
-    // join exactly: pigeonhole makes blocking lossless at hamming<=3.
-    "media_near_dup" ->
-      """WITH cl AS (
-        |  SELECT doc_id, regexp_replace(text, '[^ -~]', '', 'g') AS s
-        |  FROM documents WHERE doc_id % 17 <> 3),
-        |geo AS (
-        |  SELECT doc_id, s, (length(s) % 6) + 1 AS w,
-        |    (length(s) + (length(s) % 6)) // ((length(s) % 6) + 1) AS h
-        |  FROM cl WHERE length(s) > 0),
-        |ras AS (
-        |  SELECT doc_id, w, h, rpad(s, CAST(w * h AS INTEGER), ' ') AS r
-        |  FROM geo WHERE w >= 2),
-        |grid AS (
-        |  SELECT doc_id, w, r, (t1.j * 8 + t2.i) AS bit,
-        |    (t1.j * h) // 8 AS y, (t2.i * w) // 9 AS x0,
-        |    ((t2.i + 1) * w) // 9 AS x1
-        |  FROM ras, unnest(range(8)) AS t1(j), unnest(range(8)) AS t2(i)),
-        |ck AS (
-        |  SELECT doc_id, bit // 16 AS chunk,
-        |    CAST(sum(CASE WHEN
-        |        ascii(substr(r, CAST(y * w + x1 + 1 AS INTEGER), 1)) >
-        |        ascii(substr(r, CAST(y * w + x0 + 1 AS INTEGER), 1))
-        |      THEN 1 << (bit % 16) ELSE 0 END) AS INTEGER) AS ck
-        |  FROM grid GROUP BY doc_id, bit // 16),
-        |h4 AS (
-        |  SELECT doc_id,
-        |    max(CASE WHEN chunk = 0 THEN ck END) AS c0,
-        |    max(CASE WHEN chunk = 1 THEN ck END) AS c1,
-        |    max(CASE WHEN chunk = 2 THEN ck END) AS c2,
-        |    max(CASE WHEN chunk = 3 THEN ck END) AS c3
-        |  FROM ck GROUP BY doc_id)
-        |SELECT * FROM (
-        |  SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2,
-        |    CAST(bit_count(xor(a.c0, b.c0)) + bit_count(xor(a.c1, b.c1)) +
-        |         bit_count(xor(a.c2, b.c2)) + bit_count(xor(a.c3, b.c3))
-        |      AS INTEGER) AS hamming
-        |  FROM h4 a JOIN h4 b ON a.doc_id < b.doc_id)
-        |WHERE hamming <= 3
-        |ORDER BY doc_id_1, doc_id_2""".stripMargin,
-    // media_dup_clusters: the same pair graph, closed transitively —
-    // the dedup_clusters recursive-CTE pattern over dHash pairs
-    "media_dup_clusters" ->
-      """WITH RECURSIVE cl AS (
-        |  SELECT doc_id, regexp_replace(text, '[^ -~]', '', 'g') AS s
-        |  FROM documents WHERE doc_id % 17 <> 3),
-        |geo AS (
-        |  SELECT doc_id, s, (length(s) % 6) + 1 AS w,
-        |    (length(s) + (length(s) % 6)) // ((length(s) % 6) + 1) AS h
-        |  FROM cl WHERE length(s) > 0),
-        |ras AS (
-        |  SELECT doc_id, w, h, rpad(s, CAST(w * h AS INTEGER), ' ') AS r
-        |  FROM geo WHERE w >= 2),
-        |grid AS (
-        |  SELECT doc_id, w, r, (t1.j * 8 + t2.i) AS bit,
-        |    (t1.j * h) // 8 AS y, (t2.i * w) // 9 AS x0,
-        |    ((t2.i + 1) * w) // 9 AS x1
-        |  FROM ras, unnest(range(8)) AS t1(j), unnest(range(8)) AS t2(i)),
-        |ck AS (
-        |  SELECT doc_id, bit // 16 AS chunk,
-        |    CAST(sum(CASE WHEN
-        |        ascii(substr(r, CAST(y * w + x1 + 1 AS INTEGER), 1)) >
-        |        ascii(substr(r, CAST(y * w + x0 + 1 AS INTEGER), 1))
-        |      THEN 1 << (bit % 16) ELSE 0 END) AS INTEGER) AS ck
-        |  FROM grid GROUP BY doc_id, bit // 16),
-        |h4 AS (
-        |  SELECT doc_id,
-        |    max(CASE WHEN chunk = 0 THEN ck END) AS c0,
-        |    max(CASE WHEN chunk = 1 THEN ck END) AS c1,
-        |    max(CASE WHEN chunk = 2 THEN ck END) AS c2,
-        |    max(CASE WHEN chunk = 3 THEN ck END) AS c3
-        |  FROM ck GROUP BY doc_id),
-        |p AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2
-        |  FROM h4 a JOIN h4 b ON a.doc_id < b.doc_id
-        |  WHERE bit_count(xor(a.c0, b.c0)) + bit_count(xor(a.c1, b.c1)) +
-        |        bit_count(xor(a.c2, b.c2)) + bit_count(xor(a.c3, b.c3)) <= 3),
-        |edges AS (
-        |  SELECT d1 AS src, d2 AS dst FROM p
-        |  UNION ALL SELECT d2, d1 FROM p),
-        |reach(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r2.src, e.dst FROM reach r2 JOIN edges e ON r2.dst = e.src)
-        |SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
-        |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin,
-    // audio_near_dup: energy-envelope fingerprint over the WAV table's
-    // DECODED PCM samples (the printable projection — unreachable
-    // without a correct RIFF chunk walk). The oracle recomputes the
-    // 65-span envelope from the closed-form sample stream with exact
-    // integer span energies, rebuilds the 64 delta-sign bits, and
-    // brute-force pair-joins: pigeonhole makes the engine's chunk
-    // blocking lossless at hamming<=3, so the joins are equal. The
-    // corrupted subset (doc_id % 11 = 7, empty decode) and sub-65-
-    // sample clips are excluded by construction.
-    "audio_near_dup" ->
-      (AudioH4Cte + """
-        |SELECT * FROM (
-        |  SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2,
-        |    CAST(bit_count(xor(a.c0, b.c0)) + bit_count(xor(a.c1, b.c1)) +
-        |         bit_count(xor(a.c2, b.c2)) + bit_count(xor(a.c3, b.c3))
-        |      AS INTEGER) AS hamming
-        |  FROM h4 a JOIN h4 b ON a.doc_id < b.doc_id)
-        |WHERE hamming <= 3
-        |ORDER BY doc_id_1, doc_id_2""".stripMargin),
-    // audio_dup_clusters: the same pair graph, closed transitively —
-    // the media_dup_clusters recursive-CTE pattern over envelope pairs
-    "audio_dup_clusters" ->
-      ("WITH RECURSIVE" + AudioH4Cte.stripPrefix("WITH") + """,
-        |p AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2
-        |  FROM h4 a JOIN h4 b ON a.doc_id < b.doc_id
-        |  WHERE bit_count(xor(a.c0, b.c0)) + bit_count(xor(a.c1, b.c1)) +
-        |        bit_count(xor(a.c2, b.c2)) + bit_count(xor(a.c3, b.c3)) <= 3),
-        |edges AS (
-        |  SELECT d1 AS src, d2 AS dst FROM p
-        |  UNION ALL SELECT d2, d1 FROM p),
-        |reach(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r2.src, e.dst FROM reach r2 JOIN edges e ON r2.dst = e.src)
-        |SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
-        |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin),
-    // media_jpegish: the decoded stream is the DEQUANTIZATION of the
-    // padded printable projection — byte i decodes to (a//q)*q + q//2
-    // (bucket midpoint; identity at q=1 since q//2=0), q = 1/4/16 by
-    // doc_id % 3, geometry w = (len % 5) + 2. The oracle rebuilds the
-    // decoded string per char, so only a decoder that walks the marker
-    // segments, validates the quantizer, and reconstructs midpoints
-    // matches; the corrupted subset (doc_id % 23 = 5) decodes empty.
-    "media_jpegish" ->
-      """WITH cl AS (
-        |  SELECT doc_id, 'image' AS kind,
-        |         CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 4 ELSE 16 END AS q,
-        |         CASE WHEN doc_id % 23 = 5 THEN ''
-        |              ELSE regexp_replace(text, '[^ -~]', '', 'g') END AS s
-        |  FROM documents),
-        |pad AS (
-        |  SELECT doc_id, kind, q,
-        |         CASE WHEN length(s) = 0 THEN ''
-        |              ELSE rpad(s, CAST(((length(s) % 5) + 2)
-        |                * ((length(s) + (length(s) % 5) + 1)
-        |                   // ((length(s) % 5) + 2)) AS INTEGER), ' ')
-        |         END AS ds0
-        |  FROM cl),
-        |dq AS (
-        |  SELECT doc_id, kind,
-        |         CASE WHEN length(ds0) = 0 THEN ''
-        |              ELSE list_aggregate([chr(CAST((ascii(c)//q)*q + q//2 AS INTEGER))
-        |                     FOR c IN string_split(ds0, '')], 'string_agg', '')
-        |         END AS ds
-        |  FROM pad),
-        |m AS (
-        |  SELECT doc_id, kind, hex(encode(ds)) AS hx,
-        |         octet_length(encode(ds)) AS n
-        |  FROM dq),
-        |nib AS (
-        |  SELECT m.doc_id, substr(m.hx, 2*t.i + 1, 1) AS hi, count(*) AS c
-        |  FROM m, UNNEST(range(m.n)) AS t(i)
-        |  GROUP BY 1, 2),
-        |ent AS (
-        |  SELECT nib.doc_id,
-        |         round(-SUM((c::DOUBLE / m.n) * ln(c::DOUBLE / m.n)) / ln(2), 6) AS entropy
-        |  FROM nib JOIN m USING (doc_id)
-        |  GROUP BY 1)
-        |SELECT m.doc_id, m.kind, CAST(m.n AS BIGINT) AS n_bytes,
-        |       COALESCE(ent.entropy, 0.0) AS entropy,
-        |       CAST(CASE WHEN m.n = 0 THEN 0 ELSE (m.n - 1) // 64 + 1 END AS INT) AS frames_sampled,
-        |       CASE WHEN m.n = 0 THEN repeat('00', 16)
-        |            ELSE list_aggregate([substr(m.hx, 2*CAST(i * m.n // 16 AS BIGINT) + 1, 2) FOR i IN range(16)], 'string_agg', '')
-        |       END AS preview_hex
-        |FROM m LEFT JOIN ent USING (doc_id)
-        |ORDER BY m.doc_id""".stripMargin,
-    // media_lossy_near_dup: dHash pairs across the lossy re-encode
-    // boundary. Side A (id = doc_id) hashes the original raster (q=1),
-    // side B (id = doc_id + 10000000) hashes the doc's dequantized
-    // raster ((a//q)*q + q//2, q = 1/4/16 by doc_id % 3) — quantization
-    // is monotone, so gradients collapse but never reverse, and the
-    // oracle's brute-force join equals the engine's chunk-blocked join
-    // by the hamming<=3 pigeonhole. Corrupted docs (doc_id % 23 = 5)
-    // decode empty and are absent; w = (len % 5) + 2 is always >= 2.
-    "media_lossy_near_dup" ->
-      """WITH cl AS (
-        |  SELECT doc_id, regexp_replace(text, '[^ -~]', '', 'g') AS s,
-        |         CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 4 ELSE 16 END AS q
-        |  FROM documents WHERE doc_id % 23 <> 5),
-        |geo AS (
-        |  SELECT doc_id, s, q, (length(s) % 5) + 2 AS w,
-        |    (length(s) + (length(s) % 5) + 1) // ((length(s) % 5) + 2) AS h
-        |  FROM cl WHERE length(s) > 0),
-        |ras AS (
-        |  SELECT doc_id, q, w, h, rpad(s, CAST(w * h AS INTEGER), ' ') AS r
-        |  FROM geo),
-        |sides AS (
-        |  SELECT doc_id AS id, 1 AS q, w, h, r FROM ras
-        |  UNION ALL
-        |  SELECT doc_id + 10000000, q, w, h, r FROM ras),
-        |grid AS (
-        |  SELECT id, q, w, r, (t1.j * 8 + t2.i) AS bit,
-        |    (t1.j * h) // 8 AS y, (t2.i * w) // 9 AS x0,
-        |    ((t2.i + 1) * w) // 9 AS x1
-        |  FROM sides, unnest(range(8)) AS t1(j), unnest(range(8)) AS t2(i)),
-        |ck AS (
-        |  SELECT id, bit // 16 AS chunk,
-        |    CAST(sum(CASE WHEN
-        |        (ascii(substr(r, CAST(y * w + x1 + 1 AS INTEGER), 1))//q)*q + q//2 >
-        |        (ascii(substr(r, CAST(y * w + x0 + 1 AS INTEGER), 1))//q)*q + q//2
-        |      THEN 1 << (bit % 16) ELSE 0 END) AS INTEGER) AS ck
-        |  FROM grid GROUP BY id, bit // 16),
-        |h4 AS (
-        |  SELECT id,
-        |    max(CASE WHEN chunk = 0 THEN ck END) AS c0,
-        |    max(CASE WHEN chunk = 1 THEN ck END) AS c1,
-        |    max(CASE WHEN chunk = 2 THEN ck END) AS c2,
-        |    max(CASE WHEN chunk = 3 THEN ck END) AS c3
-        |  FROM ck GROUP BY id)
-        |SELECT * FROM (
-        |  SELECT a.id AS doc_id_1, b.id AS doc_id_2,
-        |    CAST(bit_count(xor(a.c0, b.c0)) + bit_count(xor(a.c1, b.c1)) +
-        |         bit_count(xor(a.c2, b.c2)) + bit_count(xor(a.c3, b.c3))
-        |      AS INTEGER) AS hamming
-        |  FROM h4 a JOIN h4 b ON a.id < b.id)
-        |WHERE hamming <= 3
-        |ORDER BY doc_id_1, doc_id_2""".stripMargin,
-    // video_near_dup: majority-vote clip fingerprints over the animated
-    // closed form (see VideoH4Cte), brute-force pair join — equal to
-    // the engine's chunk-blocked join by the hamming<=3 pigeonhole
-    "video_near_dup" ->
-      (VideoH4Cte + """
-        |SELECT * FROM (
-        |  SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2,
-        |    CAST(bit_count(xor(a.c0, b.c0)) + bit_count(xor(a.c1, b.c1)) +
-        |         bit_count(xor(a.c2, b.c2)) + bit_count(xor(a.c3, b.c3))
-        |      AS INTEGER) AS hamming
-        |  FROM h4 a JOIN h4 b ON a.doc_id < b.doc_id)
-        |WHERE hamming <= 3
-        |ORDER BY doc_id_1, doc_id_2""".stripMargin),
-    // video_dup_clusters: the same pair graph, closed transitively —
-    // the media_dup_clusters recursive-CTE pattern over clip pairs
-    "video_dup_clusters" ->
-      ("WITH RECURSIVE" + VideoH4Cte.stripPrefix("WITH") + """,
-        |p AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2
-        |  FROM h4 a JOIN h4 b ON a.doc_id < b.doc_id
-        |  WHERE bit_count(xor(a.c0, b.c0)) + bit_count(xor(a.c1, b.c1)) +
-        |        bit_count(xor(a.c2, b.c2)) + bit_count(xor(a.c3, b.c3)) <= 3),
-        |edges AS (
-        |  SELECT d1 AS src, d2 AS dst FROM p
-        |  UNION ALL SELECT d2, d1 FROM p),
-        |reach(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r2.src, e.dst FROM reach r2 JOIN edges e ON r2.dst = e.src)
-        |SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
-        |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin),
-    "media_decode" ->
-      """WITH cl AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 3 = 0 THEN 'image'
-        |              WHEN doc_id % 3 = 1 THEN 'audio'
-        |              ELSE 'video' END AS kind,
-        |         regexp_replace(text, '[^ -~]', '', 'g') AS s
-        |  FROM documents),
-        |ch AS (
-        |  SELECT doc_id, substring(s, CAST(i AS INTEGER), 1) AS c,
-        |         CAST((i % 5) + 1 AS INTEGER) AS rl, i
-        |  FROM cl, unnest(range(1, length(s) + 1)) AS u(i)),
-        |dec AS (
-        |  SELECT doc_id, string_agg(repeat(c, rl), '' ORDER BY i) AS ds
-        |  FROM ch GROUP BY doc_id),
-        |m AS (
-        |  SELECT cl.doc_id, cl.kind,
-        |         hex(encode(coalesce(dec.ds, ''))) AS hx,
-        |         octet_length(encode(coalesce(dec.ds, ''))) AS n
-        |  FROM cl LEFT JOIN dec USING (doc_id)),
-        |nib AS (
-        |  SELECT m.doc_id, substr(m.hx, 2*t.i + 1, 1) AS hi, count(*) AS c
-        |  FROM m, UNNEST(range(m.n)) AS t(i)
-        |  GROUP BY 1, 2),
-        |ent AS (
-        |  SELECT nib.doc_id,
-        |         round(-SUM((c::DOUBLE / m.n) * ln(c::DOUBLE / m.n)) / ln(2), 6) AS entropy
-        |  FROM nib JOIN m USING (doc_id)
-        |  GROUP BY 1)
-        |SELECT m.doc_id, m.kind, CAST(m.n AS BIGINT) AS n_bytes,
-        |       COALESCE(ent.entropy, 0.0) AS entropy,
-        |       CAST(CASE WHEN m.n = 0 THEN 0 ELSE (m.n - 1) // 64 + 1 END AS INT) AS frames_sampled,
-        |       CASE WHEN m.n = 0 THEN repeat('00', 16)
-        |            ELSE list_aggregate([substr(m.hx, 2*CAST(i * m.n // 16 AS BIGINT) + 1, 2) FOR i IN range(16)], 'string_agg', '')
-        |       END AS preview_hex
-        |FROM m LEFT JOIN ent USING (doc_id)
-        |ORDER BY m.doc_id""".stripMargin,
-    // rolling_users_7d: the HLL estimate crosses engines as DATA (aux
-    // export, same pattern as the ANN indexes); the deterministic part
-    // — which days exist, which feed each 7-day window, n_days — is
-    // recomputed independently. LEFT JOIN, not INNER: the aux comes
-    // from the same Spark function under test, so a day the Spark side
-    // dropped would vanish from an inner join in lockstep and go
-    // undetected — the left join keeps the independently-derived spine
-    // authoritative, surfacing a dropped day as a NULL estimate row
-    // the hash compare then catches (extra/mispaired days change the
-    // row set either way).
-    "rolling_users_7d" ->
-      """WITH days AS (
-        |  SELECT DISTINCT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day FROM events),
-        |w AS (
-        |  SELECT a.day, CAST(count(*) AS BIGINT) AS n_days
-        |  FROM days a JOIN days b ON b.day BETWEEN a.day - 6 AND a.day
-        |  GROUP BY a.day)
-        |SELECT w.day, s.approx_users_7d, w.n_days
-        |FROM w LEFT JOIN read_parquet('/tmp/graft_oracle_aux/rolling_users_7d_est/*.parquet') s USING (day)
-        |ORDER BY w.day""".stripMargin,
-    // hll_rollup: the deterministic skeleton — which returnflag groups
-    // the rollup must produce — comes from DuckDB's own DISTINCT scan;
-    // the merged HLL estimate crosses as aux data (per-register max →
-    // merge-order independent, byte-stable across re-runs). LEFT JOIN
-    // for the same reason as rolling_users_7d: a group the Spark side
-    // dropped must surface as a NULL-estimate row, not vanish from an
-    // inner join in lockstep.
-    "hll_rollup" ->
-      """SELECT g.l_returnflag, s.approx_parts_merged
-        |FROM (SELECT DISTINCT l_returnflag FROM lineitem) g
-        |LEFT JOIN read_parquet('/tmp/graft_oracle_aux/hll_rollup_est/*.parquet') s USING (l_returnflag)
-        |ORDER BY g.l_returnflag""".stripMargin,
-    // approx_stats: same skeleton-plus-estimates shape as hll_rollup
-    // (see the oracleAux notes for the determinism argument per leg).
-    // HLL estimates cross as aux data (estimate-as-data pattern); the
-    // histogram median is DETERMINISTIC integer math and replays
-    // exactly: smallest unit bin with 2*cum >= n, at the bin midpoint
-    "approx_stats" ->
-      """WITH h AS (
-        |  SELECT l_returnflag, CAST(floor(l_quantity) AS BIGINT) AS bin,
-        |    count(*) AS c
-        |  FROM lineitem GROUP BY 1, 2),
-        |m AS (
-        |  SELECT l_returnflag, min(bin) + 0.5 AS approx_median_qty
-        |  FROM (
-        |    SELECT l_returnflag, bin,
-        |      sum(c) OVER (PARTITION BY l_returnflag ORDER BY bin) AS cum,
-        |      sum(c) OVER (PARTITION BY l_returnflag) AS n
-        |    FROM h)
-        |  WHERE cum * 2 >= n GROUP BY 1)
-        |SELECT g.l_returnflag, s.approx_parts, s.approx_orders, m.approx_median_qty
-        |FROM (SELECT DISTINCT l_returnflag FROM lineitem) g
-        |LEFT JOIN read_parquet('/tmp/graft_oracle_aux/approx_stats_est/*.parquet') s USING (l_returnflag)
-        |LEFT JOIN m USING (l_returnflag)
-        |ORDER BY g.l_returnflag""".stripMargin,
-    "dedup_exact" ->
-      """SELECT doc_id, md5(text) AS content_key,
-        |  count(*) OVER (PARTITION BY md5(text)) AS cluster_size,
-        |  doc_id = min(doc_id) OVER (PARTITION BY md5(text)) AS is_keeper
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "dedup_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(array_to_string(list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0), ' ')) AS content_key,
-        |  count(*) OVER (PARTITION BY md5(array_to_string(list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0), ' '))) AS cluster_size,
-        |  doc_id = min(doc_id) OVER (PARTITION BY md5(array_to_string(list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0), ' '))) AS is_keeper
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "dedup_ngram_jaccard" -> NgramJaccardOracle,
-    "decontaminate" ->
-      """WITH words AS (
-        |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
-        |  FROM documents),
-        |ng AS (
-        |  SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS ngram
-        |  FROM words, unnest(range(1, len(ws) - 1)) AS t(i)
-        |  WHERE len(ws) >= 3),
-        |shared AS (
-        |  SELECT t.doc_id, b.doc_id AS bench_id, count(*) AS n_shared
-        |  FROM ng t JOIN ng b ON t.ngram = b.ngram
-        |  WHERE t.doc_id >= 50 AND b.doc_id < 50
-        |  GROUP BY t.doc_id, b.doc_id
-        |  HAVING count(*) >= 5)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_contaminated_refs,
-        |       CAST(max(n_shared) AS BIGINT) AS max_shared
-        |FROM shared GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "dedup_minhash_lsh" -> NgramJaccardOracle,
-    // SimHash oracles recompute the bit votes, fingerprint pack, and
-    // (for pairs) the ground-truth quadratic hamming join from the
-    // Spark-exported word-hash table (oracleAux: DuckDB has no
-    // xxhash64). Shift semantics match Spark: >> is arithmetic on
-    // BIGINT in both engines, and (wh >> i) & 1 extracts bit i either
-    // way; bit 63 of the pack is the MIN_VALUE literal because DuckDB
-    // errors on 1 << 63 rather than wrapping.
-    "dedup_simhash" ->
-      """WITH w AS (SELECT doc_id, tf, wh
-        |           FROM read_parquet('/tmp/graft_oracle_aux/simhash_words/*.parquet')),
-        |bits AS (
-        |  SELECT w.doc_id, t.i,
-        |         SUM(CASE WHEN ((w.wh >> t.i) & 1) = 1 THEN w.tf ELSE -w.tf END) AS s
-        |  FROM w, range(64) t(i)
-        |  GROUP BY w.doc_id, t.i),
-        |fp AS (
-        |  SELECT doc_id,
-        |         bit_or(CASE WHEN s > 0 THEN
-        |           (CASE WHEN i = 63 THEN (-9223372036854775807 - 1)
-        |                 ELSE (1::BIGINT << CAST(i AS INTEGER)) END)
-        |           ELSE 0 END) AS simhash
-        |  FROM bits GROUP BY doc_id)
-        |SELECT doc_id, to_hex(simhash) AS simhash_hex
-        |FROM fp ORDER BY doc_id""".stripMargin,
-    "simhash_pairs" ->
-      """WITH w AS (SELECT doc_id, tf, wh
-        |           FROM read_parquet('/tmp/graft_oracle_aux/simhash_words/*.parquet')),
-        |bits AS (
-        |  SELECT w.doc_id, t.i,
-        |         SUM(CASE WHEN ((w.wh >> t.i) & 1) = 1 THEN w.tf ELSE -w.tf END) AS s
-        |  FROM w, range(64) t(i)
-        |  GROUP BY w.doc_id, t.i),
-        |fp AS (
-        |  SELECT doc_id,
-        |         bit_or(CASE WHEN s > 0 THEN
-        |           (CASE WHEN i = 63 THEN (-9223372036854775807 - 1)
-        |                 ELSE (1::BIGINT << CAST(i AS INTEGER)) END)
-        |           ELSE 0 END) AS simhash
-        |  FROM bits GROUP BY doc_id)
-        |SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2,
-        |       bit_count(xor(a.simhash, b.simhash)) AS hamming
-        |FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-        |ORDER BY doc_id_1, doc_id_2""".stripMargin,
-    "dedup_clusters" -> DedupClustersOracle,
-    // same pair graph, same transitive closure — the star formulation
-    // must be output-identical to label propagation
-    "dedup_clusters_star" -> DedupClustersOracle,
-    "cosine_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |scored AS (
-        |  SELECT query_id, vec_id,
-        |         list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cos
-        |  FROM q JOIN c ON vec_id <> query_id),
-        |ranked AS (
-        |  SELECT query_id, vec_id, cos,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
-        |  FROM scored)
-        |SELECT query_id, vec_id AS neighbor_id, rank, round(cos, 6) AS cos_sim
-        |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // IVF search oracles: the index (centroids + assignments) crosses
-    // engines as DATA (oracleAux export of the bit-deterministic
-    // build); probe selection, scoring, and ranking are recomputed
-    // independently. ivf_topk probes 4 cells, ann_topk (the IVF-routed
-    // ANN entry point) probes 8 — same index, same SQL shape.
-    "ivf_topk" -> IvfSearchOracle(nProbe = 4),
-    "ivf_incremental_topk" -> IvfIncrSearchOracle,
-    "ann_topk" -> IvfSearchOracle(nProbe = 8),
-    // PQ search oracle: codebook + codes cross as data; the ADC
-    // lookup table (decimal partial dots), approximate candidate
-    // ranking, and exact re-rank are recomputed in SQL. DECIMAL(28,12)
-    // sums are exact in both engines, so the approximate scores — and
-    // therefore the candidate cut — are bit-identical.
-    "pq_topk" ->
-      """WITH cb AS (SELECT sub, code, CAST(cword AS DOUBLE[]) AS cw
-        |            FROM read_parquet('/tmp/graft_oracle_aux/pq_codebook/*.parquet')),
-        |codes AS (SELECT vec_id, sub, code FROM read_parquet('/tmp/graft_oracle_aux/pq_codes/*.parquet')),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv, sqrt(list_dot_product(v, v)) AS qnorm
-        |      FROM e WHERE vec_id < 10),
-        |qsub AS (SELECT query_id, s.s AS sub, list_slice(qv, s.s*8 + 1, s.s*8 + 8) AS svec
-        |         FROM q, (VALUES (0),(1),(2),(3),(4),(5),(6),(7)) s(s)),
-        |lut AS (SELECT query_id, cb.sub, cb.code,
-        |               CAST(list_dot_product(qsub.svec, cb.cw) AS DECIMAL(28,12)) AS pdot,
-        |               CAST(list_dot_product(cb.cw, cb.cw) AS DECIMAL(28,12)) AS c2
-        |        FROM qsub JOIN cb ON cb.sub = qsub.sub),
-        |approx AS (
-        |  SELECT l.query_id, c.vec_id,
-        |         CAST(SUM(l.pdot) AS DOUBLE) AS adot,
-        |         sqrt(CAST(SUM(l.c2) AS DOUBLE)) AS rnorm
-        |  FROM codes c JOIN lut l ON l.sub = c.sub AND l.code = c.code
-        |  GROUP BY l.query_id, c.vec_id),
-        |cand AS (
-        |  SELECT query_id, vec_id FROM (
-        |    SELECT a.query_id, a.vec_id,
-        |           row_number() OVER (PARTITION BY a.query_id ORDER BY
-        |             (a.adot / (q.qnorm * a.rnorm)) DESC, a.vec_id) AS crn
-        |    FROM approx a JOIN q ON q.query_id = a.query_id
-        |    WHERE a.vec_id <> a.query_id) WHERE crn <= 50),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id,
-        |         list_dot_product(q.qv, e.v) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(e.v, e.v))) AS cos
-        |  FROM cand JOIN q ON q.query_id = cand.query_id
-        |       JOIN e ON e.vec_id = cand.vec_id),
-        |ranked AS (
-        |  SELECT query_id, vec_id, cos,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
-        |  FROM scored)
-        |SELECT query_id, vec_id AS neighbor_id, rank, round(cos, 6) AS cos_sim
-        |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // pq_incremental_topk: the same ADC/candidate/re-rank replay over
-    // the MERGED corpus (rebuilt in SQL — original embeddings plus the
-    // re-keyed reversed every-17th slice) under the exported MAINTAINED
-    // codebook + merged codes. A stale codebook, mis-encoded delta, or
-    // wrong merged id-space all mismatch.
-    "pq_incremental_topk" ->
-      """WITH cb AS (SELECT sub, code, CAST(cword AS DOUBLE[]) AS cw
-        |            FROM read_parquet('/tmp/graft_oracle_aux/pq_incr_codebook/*.parquet')),
-        |codes AS (SELECT vec_id, sub, code FROM read_parquet('/tmp/graft_oracle_aux/pq_incr_codes/*.parquet')),
-        |mx AS (SELECT max(vec_id) + 1 AS m FROM embeddings),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |      UNION ALL
-        |      SELECT vec_id + (SELECT m FROM mx),
-        |             CAST(list_reverse(embedding) AS DOUBLE[])
-        |      FROM embeddings WHERE vec_id % 17 = 4),
-        |q AS (SELECT vec_id AS query_id, v AS qv, sqrt(list_dot_product(v, v)) AS qnorm
-        |      FROM e WHERE vec_id < 10),
-        |qsub AS (SELECT query_id, s.s AS sub, list_slice(qv, s.s*8 + 1, s.s*8 + 8) AS svec
-        |         FROM q, (VALUES (0),(1),(2),(3),(4),(5),(6),(7)) s(s)),
-        |lut AS (SELECT query_id, cb.sub, cb.code,
-        |               CAST(list_dot_product(qsub.svec, cb.cw) AS DECIMAL(28,12)) AS pdot,
-        |               CAST(list_dot_product(cb.cw, cb.cw) AS DECIMAL(28,12)) AS c2
-        |        FROM qsub JOIN cb ON cb.sub = qsub.sub),
-        |approx AS (
-        |  SELECT l.query_id, c.vec_id,
-        |         CAST(SUM(l.pdot) AS DOUBLE) AS adot,
-        |         sqrt(CAST(SUM(l.c2) AS DOUBLE)) AS rnorm
-        |  FROM codes c JOIN lut l ON l.sub = c.sub AND l.code = c.code
-        |  GROUP BY l.query_id, c.vec_id),
-        |cand AS (
-        |  SELECT query_id, vec_id FROM (
-        |    SELECT a.query_id, a.vec_id,
-        |           row_number() OVER (PARTITION BY a.query_id ORDER BY
-        |             (a.adot / (q.qnorm * a.rnorm)) DESC, a.vec_id) AS crn
-        |    FROM approx a JOIN q ON q.query_id = a.query_id
-        |    WHERE a.vec_id <> a.query_id) WHERE crn <= 50),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id,
-        |         list_dot_product(q.qv, e.v) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(e.v, e.v))) AS cos
-        |  FROM cand JOIN q ON q.query_id = cand.query_id
-        |       JOIN e ON e.vec_id = cand.vec_id),
-        |ranked AS (
-        |  SELECT query_id, vec_id, cos,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
-        |  FROM scored)
-        |SELECT query_id, vec_id AS neighbor_id, rank, round(cos, 6) AS cos_sim
-        |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // Count-min heavy-hitter oracle: the cell map crosses as data; the
-    // grid (sum per touched cell over the full token stream), the
-    // min-of-d-cells estimate, and the top-k cut are recomputed in SQL
-    // — including the never-undercount property (overcount >= 0).
-    "cms_heavy_hitters" ->
-      """WITH m AS (SELECT word, row_i, cell FROM read_parquet('/tmp/graft_oracle_aux/cms_cells/*.parquet')),
-        |toks AS (
-        |  SELECT lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-        |  FROM documents),
-        |cnt AS (SELECT word, CAST(count(*) AS BIGINT) AS n
-        |        FROM toks WHERE length(word) > 0 GROUP BY word),
-        |grid AS (SELECT m.row_i, m.cell, CAST(SUM(cnt.n) AS BIGINT) AS g
-        |         FROM cnt JOIN m USING (word) GROUP BY m.row_i, m.cell),
-        |exact AS (SELECT word, n AS n_exact FROM cnt ORDER BY n DESC, word LIMIT 20)
-        |SELECT e.word AS word, e.n_exact AS n_exact,
-        |       CAST(MIN(g.g) AS BIGINT) AS n_est,
-        |       CAST(MIN(g.g) - e.n_exact AS BIGINT) AS overcount
-        |FROM exact e
-        |JOIN m ON m.word = e.word
-        |JOIN grid g ON g.row_i = m.row_i AND g.cell = m.cell
-        |GROUP BY e.word, e.n_exact
-        |ORDER BY e.n_exact DESC, e.word""".stripMargin,
-    // LSH near-dup oracle: buckets cross as data; the Hamming-ball
-    // probe masks (nPlanes=4, maxFlips=2: all 4-bit values with <= 2
-    // bits set) and the verify join are recomputed in SQL.
-    "cosine_near_dup_lsh" ->
-      """WITH b AS (SELECT vec_id, bucket FROM read_parquet('/tmp/graft_oracle_aux/lsh_buckets/*.parquet')),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |             sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-        |      FROM embeddings),
-        |probing AS (
-        |  SELECT b.vec_id, xor(b.bucket, m.m) AS bucket
-        |  FROM b, (VALUES (0),(1),(2),(3),(4),(5),(6),(8),(9),(10),(12)) m(m)),
-        |pairs AS (
-        |  SELECT DISTINCT a.vec_id AS vec_id_1, bb.vec_id AS vec_id_2
-        |  FROM probing a JOIN b bb ON a.bucket = bb.bucket AND a.vec_id < bb.vec_id)
-        |SELECT p.vec_id_1, p.vec_id_2,
-        |       round(list_dot_product(e1.v, e2.v) / (e1.nrm * e2.nrm), 6) AS cos_sim
-        |FROM pairs p
-        |JOIN e e1 ON e1.vec_id = p.vec_id_1
-        |JOIN e e2 ON e2.vec_id = p.vec_id_2
-        |WHERE list_dot_product(e1.v, e2.v) / (e1.nrm * e2.nrm) >= 0.4
-        |ORDER BY vec_id_1, vec_id_2""".stripMargin,
-    "cosine_near_dup" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |                  sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-        |           FROM embeddings)
-        |SELECT a.vec_id AS vec_id_1, b.vec_id AS vec_id_2,
-        |       round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) AS cos_sim
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE list_dot_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.4
-        |ORDER BY vec_id_1, vec_id_2""".stripMargin,
-    "knn_graph" ->
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v,
-        |                  sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-        |           FROM embeddings),
-        |s AS (SELECT a.vec_id, a.label, b.vec_id AS neighbor_id,
-        |             list_dot_product(a.v, b.v) / (a.nrm * b.nrm) AS cos
-        |      FROM e a JOIN e b ON a.label = b.label AND a.vec_id <> b.vec_id),
-        |r AS (SELECT vec_id, label, neighbor_id, cos,
-        |             CAST(row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rank
-        |      FROM s)
-        |SELECT vec_id, label, rank, neighbor_id, round(cos, 6) AS cos_sim
-        |FROM r WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin,
-    // within-cell pair scan + lower-id drop rule replayed in SQL from
-    // the exported IVF cell assignment (the same ivf_cells artifact the
-    // search oracles use)
-    "semantic_dedup" ->
-      """WITH cells AS (SELECT vec_id, cell FROM read_parquet('/tmp/graft_oracle_aux/ivf_cells/*.parquet')),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |             sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-        |      FROM embeddings),
-        |j AS (SELECT c.vec_id, c.cell, e.v, e.nrm
-        |      FROM cells c JOIN e ON c.vec_id = e.vec_id),
-        |d AS (SELECT DISTINCT b.vec_id
-        |      FROM j a JOIN j b ON a.cell = b.cell AND a.vec_id < b.vec_id
-        |      WHERE list_dot_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.4)
-        |SELECT j.vec_id, j.cell, (d.vec_id IS NULL) AS kept
-        |FROM j LEFT JOIN d ON j.vec_id = d.vec_id
-        |ORDER BY j.vec_id""".stripMargin,
-    "hourly_rollup" ->
-      """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_start,
-        |       event_type, CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
-        |       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin,
-    "sessionize" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, ts,
-        |    CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS sec,
-        |    lag(CAST(epoch(date_trunc('second', ts)) AS BIGINT))
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_sec
-        |  FROM events),
-        |flagged AS (
-        |  SELECT user_id, event_id, ts, sec,
-        |    CASE WHEN prev_sec IS NULL OR sec - prev_sec > 1800 THEN 1 ELSE 0 END AS new_session
-        |  FROM e),
-        |sessions AS (
-        |  SELECT user_id, sec,
-        |    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |  FROM flagged),
-        |per_session AS (
-        |  SELECT user_id, session_id, CAST(count(*) AS BIGINT) AS n_events,
-        |    max(sec) - min(sec) AS duration_sec
-        |  FROM sessions GROUP BY user_id, session_id)
-        |SELECT user_id, CAST(max(session_id) AS BIGINT) AS n_sessions,
-        |       CAST(sum(n_events) AS BIGINT) AS n_events,
-        |       CAST(max(duration_sec) AS BIGINT) AS longest_session_sec
-        |FROM per_session GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "tfidf_top_term" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-        |  FROM documents),
-        |tf AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
-        |       FROM toks WHERE length(word) > 0 GROUP BY doc_id, word),
-        |df AS (SELECT word, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY word),
-        |nd AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n FROM documents),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.word,
-        |         round(CAST(tf.tf AS DOUBLE) * ln(CAST(nd.n AS DOUBLE) / CAST(df.df AS DOUBLE)), 6) AS tfidf
-        |  FROM tf JOIN df ON tf.word = df.word CROSS JOIN nd),
-        |ranked AS (
-        |  SELECT doc_id, word, tfidf,
-        |         row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, word) AS rn
-        |  FROM scored)
-        |SELECT doc_id, word AS top_term, tfidf FROM ranked WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    "json_prop_rollup" ->
-      """SELECT CAST(floor(CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS BIGINT) / 10.0) AS BIGINT) AS k_bucket,
-        |       CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1 ORDER BY k_bucket""".stripMargin,
-    "type_transitions" ->
-      """WITH seq AS (
-        |  SELECT user_id, event_type,
-        |         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
-        |  FROM events)
-        |SELECT prev_type, event_type, CAST(count(*) AS BIGINT) AS n
-        |FROM seq WHERE prev_type IS NOT NULL
-        |GROUP BY prev_type, event_type ORDER BY prev_type, event_type""".stripMargin,
-    "extra_orders_multiset" ->
-      """WITH extra AS (
-        |  SELECT o_custkey AS custkey FROM orders
-        |  EXCEPT ALL
-        |  SELECT c_custkey AS custkey FROM customer)
-        |SELECT custkey, CAST(count(*) AS BIGINT) AS n_extra_orders
-        |FROM extra GROUP BY custkey ORDER BY custkey""".stripMargin,
-    "type_funnel" ->
-      """WITH agg AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n FROM events GROUP BY event_type)
-        |SELECT event_type, n, round(CAST(n AS DOUBLE) / CAST(sum(n) OVER () AS DOUBLE), 6) AS share
-        |FROM agg ORDER BY event_type""".stripMargin,
-    "full_outer_nations" ->
-      """WITH c AS (SELECT CAST(c_nationkey AS BIGINT) AS ck, CAST(count(*) AS BIGINT) AS n_rich_cust
-        |           FROM customer WHERE c_acctbal > 9800.0 GROUP BY 1),
-        |     s AS (SELECT CAST(s_nationkey AS BIGINT) AS sk, CAST(count(*) AS BIGINT) AS n_rich_supp
-        |           FROM supplier WHERE s_acctbal > 5000.0 GROUP BY 1)
-        |SELECT coalesce(ck, sk) AS nationkey,
-        |       coalesce(n_rich_cust, 0) AS n_rich_cust,
-        |       coalesce(n_rich_supp, 0) AS n_rich_supp
-        |FROM c FULL OUTER JOIN s ON ck = sk
-        |ORDER BY nationkey""".stripMargin,
-    "stats_lineitem" ->
-      """WITH m AS (
-        |  SELECT l_returnflag,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(28,2))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(l_quantity*l_quantity AS DECIMAL(28,4))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(l_extendedprice*l_extendedprice AS DECIMAL(28,4))) AS DOUBLE) AS syy,
-        |    CAST(sum(CAST(l_quantity*l_extendedprice AS DECIMAL(28,4))) AS DOUBLE) AS sxy,
-        |    round(quantile_cont(l_quantity, 0.5), 4) AS median_qty
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l_returnflag, n,
-        |  round((n*sxy - sx*sy) / (sqrt(n*sxx - sx*sx) * sqrt(n*syy - sy*sy)), 6) AS corr_qty_price,
-        |  round((n*sxy - sx*sy) / (n*(n-1)), 4) AS covar_qty_price,
-        |  round(sqrt((n*sxx - sx*sx) / (n*(n-1))), 6) AS stddev_qty,
-        |  median_qty
-        |FROM m ORDER BY l_returnflag""".stripMargin,
-    "order_ship_latency" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
-        |       CAST(month(o_orderdate) AS BIGINT) AS mon,
-        |       CAST(count(*) AS BIGINT) AS n_lines,
-        |       CAST(sum(date_diff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE))) AS BIGINT) AS total_days,
-        |       CAST(sum(date_diff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE))) AS DOUBLE) / count(*) AS avg_days,
-        |       CAST(min(date_diff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE))) AS BIGINT) AS min_days,
-        |       CAST(max(date_diff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE))) AS BIGINT) AS max_days
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1, 2 ORDER BY yr, mon""".stripMargin,
-    "rolling_7d_qty" ->
-      """WITH t AS (
-        |  SELECT l_suppkey, l_orderkey, l_linenumber, l_quantity,
-        |         date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)) AS day
-        |  FROM lineitem WHERE l_suppkey <= 10)
-        |SELECT l_suppkey, l_orderkey, l_linenumber, CAST(day AS BIGINT) AS day,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) OVER (
-        |    PARTITION BY l_suppkey ORDER BY day
-        |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE) AS qty_7d
-        |FROM t ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin,
-    "conditional_agg" ->
-      """SELECT n_name, CAST(count(*) AS BIGINT) AS n_cust,
-        |  CAST(count(*) FILTER (WHERE c_acctbal < 0.0) AS BIGINT) AS n_negative,
-        |  CAST(count(*) FILTER (WHERE c_acctbal > 7000.0) AS BIGINT) AS n_high,
-        |  round(CAST(count(*) FILTER (WHERE c_acctbal < 0.0) AS DOUBLE) / count(*), 6) AS share_negative,
-        |  CAST(sum(CAST(CASE WHEN c_acctbal > 0.0 THEN c_acctbal ELSE 0.0 END AS DECIMAL(28,2))) AS DOUBLE) AS sum_positive
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "string_kit" ->
-      """SELECT p_partkey,
-        |  concat_ws('-', p_brand, lpad(CAST(p_size AS VARCHAR), 2, '0')) AS brand_size,
-        |  translate(p_type, ' ', '_') AS type_key,
-        |  reverse(p_name) AS name_rev,
-        |  upper(substr(p_name, 1, 5)) AS name_head,
-        |  CAST(length(p_name) AS BIGINT) AS name_len
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    // no ORDER BY: the Spark side deliberately returns the (quadratic
-    // -sized) pair multiset unsorted — see levenshteinPairs' Scaladoc;
-    // the compare is order-independent on both sides
-    "levenshtein_pairs" ->
-      """SELECT a.p_partkey AS partkey_1, b.p_partkey AS partkey_2, a.p_brand,
-        |       CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS edit_dist
-        |FROM part a JOIN part b ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-        |WHERE levenshtein(a.p_name, b.p_name) <= 3""".stripMargin,
-    "array_agg_orders" ->
-      """SELECT o_custkey,
-        |  array_to_string(list_sort(list_distinct(list(o_orderpriority))), ',') AS prios_csv,
-        |  CAST(len(list_distinct(list(o_orderpriority))) AS BIGINT) AS n_prios,
-        |  list_contains(list(o_orderpriority), '1-URGENT') AS has_urgent,
-        |  list_sort(list_distinct(list(o_orderpriority)))[1] AS first_prio
-        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    "map_roundtrip" ->
-      """SELECT o_orderstatus, o_orderpriority AS priority,
-        |       CAST(count(*) AS BIGINT) AS n_orders
-        |FROM orders GROUP BY 1, 2 ORDER BY o_orderstatus, priority""".stripMargin,
-    "source_ids" ->
-      """SELECT CAST(regexp_extract(source, 'src([0-9]+)', 1) AS BIGINT) AS source_id,
-        |       CAST(count(*) AS BIGINT) AS n_docs
-        |FROM documents GROUP BY 1 ORDER BY source_id""".stripMargin,
-    "upsert_snapshot" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice
-        |  FROM orders WHERE o_orderkey % 10 <> 0),
-        |upd AS (
-        |  SELECT o_orderkey, 'U' AS o_orderstatus, o_totalprice + 1000.0 AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 3 = 0)
-        |SELECT * FROM (
-        |  SELECT b.* FROM base b WHERE o_orderkey NOT IN (SELECT o_orderkey FROM upd)
-        |  UNION ALL
-        |  SELECT * FROM upd)
-        |ORDER BY o_orderkey""".stripMargin,
-    "hash_sample" ->
-      """SELECT doc_id, lang, n_chars FROM documents
-        |WHERE CAST(concat('0x', substr(md5(text), 1, 4)) AS INTEGER) % 100 < 10
-        |ORDER BY doc_id""".stripMargin,
-    "stratified_sample" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_kept
-        |FROM documents
-        |WHERE CAST(concat('0x', substr(md5(text), 1, 4)) AS INTEGER) % 100 <
-        |      CASE lang WHEN 'en' THEN 10 WHEN 'de' THEN 50 ELSE 100 END
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-    "quota_sample" ->
-      """SELECT lang, pick, doc_id FROM (
-        |  SELECT lang, doc_id,
-        |         CAST(row_number() OVER (PARTITION BY lang ORDER BY md5(text) NULLS LAST, doc_id) AS INTEGER) AS pick
-        |  FROM documents)
-        |WHERE pick <= 5 ORDER BY lang, pick""".stripMargin,
-    "corr_subquery" ->
-      """SELECT c_custkey,
-        |  (SELECT max(o_totalprice) FROM orders WHERE o_custkey = c_custkey) AS max_price
-        |FROM customer
-        |WHERE c_custkey <= 200
-        |ORDER BY c_custkey""".stripMargin,
-    "doc_fingerprints" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    string_split(trim(regexp_replace(lower(regexp_replace(text, '[^a-zA-Z \t\n]', '', 'g')), '[ \t\n]+', ' ', 'g')), ' ') AS ws
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, i,
-        |    CAST(concat('0x', substr(md5(ws[i-1] || ' ' || ws[i] || ' ' || ws[i+1]), 1, 8)) AS BIGINT) AS h
-        |  FROM s, unnest(range(2, len(ws))) AS r(i)
-        |  WHERE len(ws) >= 3),
-        |wmin AS (
-        |  SELECT doc_id,
-        |    min(h) OVER (PARTITION BY doc_id ORDER BY i
-        |                 ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS fp
-        |  FROM g),
-        |fps AS (SELECT DISTINCT doc_id, fp FROM wmin)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fps,
-        |       min(fp) AS min_fp, max(fp) AS max_fp,
-        |       CAST(sum(fp) AS BIGINT) AS fp_sum
-        |FROM fps GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "sql_cte_having" ->
-      """WITH active AS (
-        |  SELECT c_custkey, c_nationkey FROM customer
-        |  WHERE EXISTS (SELECT 1 FROM orders
-        |                WHERE o_custkey = c_custkey
-        |                  AND o_orderpriority = '1-URGENT'))
-        |SELECT n_name, CAST(count(*) AS BIGINT) AS n_active
-        |FROM active JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name
-        |HAVING count(*) * 25 > (SELECT count(*) FROM active)
-        |ORDER BY n_name""".stripMargin,
-    "null_semantics" ->
-      """SELECT o_orderstatus AS status,
-        |  CAST(count(*) AS BIGINT) AS n_all,
-        |  CAST(count(nullif(o_orderpriority, '3-MEDIUM')) AS BIGINT) AS n_nonnull,
-        |  CAST(count(DISTINCT nullif(o_orderpriority, '3-MEDIUM')) AS BIGINT) AS n_distinct_p,
-        |  max(nullif(o_orderpriority, '3-MEDIUM')) AS max_p,
-        |  CAST(count(*) FILTER (WHERE nullif(o_orderpriority, '3-MEDIUM') IS NULL) AS BIGINT) AS n_null
-        |FROM orders GROUP BY o_orderstatus ORDER BY status""".stripMargin,
-    "zipf_buckets" ->
-      """WITH toks AS (
-        |  SELECT lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-        |  FROM documents),
-        |wc AS (SELECT word, CAST(count(*) AS BIGINT) AS n FROM toks WHERE length(word) > 0 GROUP BY word)
-        |SELECT CAST(length(CAST(n AS VARCHAR)) AS BIGINT) AS digits,
-        |       CAST(count(*) AS BIGINT) AS n_words,
-        |       CAST(min(n) AS BIGINT) AS min_freq, CAST(max(n) AS BIGINT) AS max_freq
-        |FROM wc GROUP BY 1 ORDER BY digits""".stripMargin,
-    "q4_priority_exists" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1996-10-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q6_revenue_delta" ->
-      """SELECT CAST(sum(CAST(l_extendedprice*l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        |       CAST(count(*) AS BIGINT) AS n_lines
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-    "q7_nation_volume" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |       CAST(year(l_shipdate) AS BIGINT) AS ship_year,
-        |       CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS volume
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE (n1.n_name = 'NATION_18' AND n2.n_name = 'NATION_19')
-        |   OR (n1.n_name = 'NATION_19' AND n2.n_name = 'NATION_18')
-        |GROUP BY 1, 2, 3 ORDER BY supp_nation, cust_nation, ship_year""".stripMargin,
-    "q8_market_share" ->
-      """WITH flat AS (
-        |  SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |         CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4)) AS vol,
-        |         n2.n_name AS supp_nation
-        |  FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey AND p_type = 'PROMO'
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |  JOIN region ON n1.n_regionkey = r_regionkey AND r_name = 'ASIA'
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation n2 ON s_nationkey = n2.n_nationkey),
-        |agg AS (
-        |  SELECT o_year,
-        |    CAST(sum(CASE WHEN supp_nation = 'NATION_1' THEN vol
-        |             ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE) AS nation_volume,
-        |    CAST(sum(vol) AS DOUBLE) AS total_volume
-        |  FROM flat GROUP BY o_year)
-        |SELECT o_year, round(nation_volume, 4) AS nation_volume,
-        |       round(total_volume, 4) AS total_volume,
-        |       round(nation_volume / total_volume, 6) AS mkt_share
-        |FROM agg ORDER BY o_year""".stripMargin,
-    "q10_returned_revenue" ->
-      """SELECT c_custkey, c_name,
-        |       CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1996-04-01'
-        |GROUP BY c_custkey, c_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "q12_priority_class" ->
-      """SELECT l_returnflag,
-        |  CAST(count(*) FILTER (WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')) AS BIGINT) AS high_line_count,
-        |  CAST(count(*) FILTER (WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH')) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q13_cust_distribution" ->
-      """WITH per_cust AS (
-        |  SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-        |  FROM customer LEFT OUTER JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '3-MEDIUM'
-        |  GROUP BY c_custkey)
-        |SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-        |FROM per_cust GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q14_promo_share" ->
-      """WITH agg AS (
-        |  SELECT
-        |    CAST(sum(CASE WHEN p_type = 'PROMO'
-        |      THEN CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))
-        |      ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE) AS promo_revenue,
-        |    CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS total_revenue
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01')
-        |SELECT round(promo_revenue, 4) AS promo_revenue,
-        |       round(total_revenue, 4) AS total_revenue,
-        |       round(promo_revenue / total_revenue, 6) AS promo_share
-        |FROM agg""".stripMargin,
-    "q16_supplier_variety" ->
-      """SELECT p_brand, p_size, CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#1' AND p_size BETWEEN 1 AND 15
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY p_brand, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_size""".stripMargin,
-    "q18_large_orders" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS sq
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 300)
-        |SELECT c_name, c_custkey, o_orderkey, o_totalprice,
-        |       CAST(sq AS DOUBLE) AS sum_qty
-        |FROM big
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-    "q19_disjunctive" ->
-      """SELECT CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        |       CAST(count(*) AS BIGINT) AS n_lines
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 AND 20)
-        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 11 AND 20 AND l_quantity BETWEEN 10 AND 30)
-        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 21 AND 30 AND l_quantity BETWEEN 20 AND 40)""".stripMargin,
-    "q15_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey, sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS total_rev
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, CAST(total_rev AS DOUBLE) AS total_rev
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_rev = (SELECT max(total_rev) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q17_small_quantity" ->
-      """WITH pa AS (
-        |  SELECT l_partkey,
-        |         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) * 0.2 AS qty_limit
-        |  FROM lineitem GROUP BY l_partkey)
-        |SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0, 4) AS avg_yearly,
-        |       CAST(count(*) AS BIGINT) AS n_lines
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN pa ON lineitem.l_partkey = pa.l_partkey
-        |WHERE p_brand = 'Brand#3' AND l_quantity < qty_limit""".stripMargin,
-    // q2 adaptation: the supply relation derives from lineitem
-    // (supplier s supplies part p at unit cost min(extendedprice /
-    // quantity)); the double division is identical IEEE on both
-    // engines and MIN is an exact selection, so the cost = min_cost
-    // equality join-back is safe cross-engine.
-    "q2_min_cost_supplier" ->
-      """WITH rsupp AS (
-        |  SELECT s_suppkey, s_name, s_acctbal, n_name
-        |  FROM supplier
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |  WHERE r_name = 'EUROPE'),
-        |supply AS (
-        |  SELECT l_partkey, l_suppkey,
-        |         min(l_extendedprice / l_quantity) AS cost
-        |  FROM lineitem GROUP BY 1, 2),
-        |eligible AS (
-        |  SELECT l_partkey, cost, s_acctbal, s_name, n_name
-        |  FROM supply JOIN rsupp ON l_suppkey = s_suppkey),
-        |mc AS (
-        |  SELECT l_partkey, min(cost) AS min_cost
-        |  FROM eligible GROUP BY 1)
-        |SELECT s_acctbal, s_name, n_name, p_partkey, p_type,
-        |       round(min_cost, 4) AS min_cost
-        |FROM eligible e
-        |JOIN mc ON e.l_partkey = mc.l_partkey AND e.cost = mc.min_cost
-        |JOIN part ON e.l_partkey = p_partkey
-        |WHERE p_size BETWEEN 10 AND 20 AND p_type = 'LARGE'
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin,
-    // q11 adaptation: per-part revenue of one nation's suppliers
-    // stands in for partsupp stock value; the canonical fraction/SF
-    // threshold becomes the scale-invariant above-average form
-    // (value * n_parts > total), which runs entirely in decimal x
-    // integer arithmetic on both engines, so a boundary part cannot
-    // flip — at any SF.
-    "q11_important_stock" ->
-      """WITH val AS (
-        |  SELECT l_partkey AS p_partkey,
-        |         sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS value
-        |  FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  WHERE n_name = 'NATION_3'
-        |  GROUP BY 1),
-        |tot AS (SELECT sum(value) AS total, count(*) AS n_parts FROM val)
-        |SELECT p_partkey, CAST(value AS DOUBLE) AS value
-        |FROM val, tot
-        |WHERE value * n_parts > total
-        |ORDER BY value DESC, p_partkey""".stripMargin,
-    // q20 adaptation: shipped 1997 quantity stands in for partsupp
-    // availqty on both sides of the correlated comparison, which runs
-    // in exact decimal as sq * 2 > tq (no 0.5 double multiply).
-    "q20_promotion_suppliers" ->
-      """WITH shipped AS (
-        |  SELECT l_partkey, l_suppkey,
-        |         sum(CAST(l_quantity AS DECIMAL(18,2))) AS sq
-        |  FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey
-        |  WHERE p_type = 'ECONOMY'
-        |    AND l_shipdate >= TIMESTAMP '1997-01-01'
-        |    AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  GROUP BY 1, 2),
-        |totals AS (
-        |  SELECT l_partkey, sum(sq) AS tq FROM shipped GROUP BY 1)
-        |SELECT s_suppkey, s_name, n_name
-        |FROM supplier
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE s_suppkey IN (
-        |  SELECT s.l_suppkey
-        |  FROM shipped s JOIN totals t ON s.l_partkey = t.l_partkey
-        |  WHERE s.sq * 2 > t.tq)
-        |ORDER BY s_name""".stripMargin,
-    "q21_waiting_suppliers" ->
-      """SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
-        |FROM lineitem l1
-        |JOIN orders ON l1.l_orderkey = o_orderkey
-        |JOIN supplier ON l1.l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE o_orderstatus = 'F'
-        |  AND l1.l_shipdate > o_orderdate + INTERVAL 90 DAY
-        |  AND n_name = 'NATION_3'
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.l_shipdate > o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 100""".stripMargin,
-    // q9 adaptation: supply cost is 0.5 * p_retailprice (no partsupp
-    // in the testdata); the double expression is written in the same
-    // left-associated order as the Spark column so the IEEE sequence
-    // matches before the DECIMAL(18,4) cast. The literals are cast to
-    // DOUBLE explicitly — bare 1.0/0.5 parse as DECIMAL(2,1) in DuckDB
-    // and only become double today via promotion against the all-DOUBLE
-    // testdata columns; a future DECIMAL-typed testdata generation
-    // would silently flip the whole expression to decimal arithmetic
-    // while Spark's lit(1.0)/lit(0.5) stay double.
-    "q9_profit" ->
-      """SELECT n_name AS nation,
-        |       CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |       CAST(sum(CAST(l_extendedprice * (CAST(1.0 AS DOUBLE) - l_discount) -
-        |                     CAST(0.5 AS DOUBLE) * p_retailprice * l_quantity
-        |                     AS DECIMAL(18,4))) AS DOUBLE) AS sum_profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |WHERE p_name LIKE '%red%'
-        |GROUP BY 1, 2
-        |ORDER BY nation, o_year DESC""".stripMargin,
-    "q22_dormant_rich" ->
-      """WITH ab AS (
-        |  SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_bal
-        |  FROM customer WHERE c_acctbal > 0.0)
-        |SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n_cust,
-        |       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-        |FROM customer
-        |WHERE c_acctbal > (SELECT avg_bal FROM ab)
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey
-        |                    AND o_orderdate >= TIMESTAMP '2000-01-01')
-        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-    "doc_entropy" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-        |  FROM documents),
-        |w AS (SELECT doc_id, word FROM toks WHERE length(word) > 0),
-        |freq AS (SELECT word, CAST(count(*) AS BIGINT) AS freq FROM w GROUP BY word),
-        |tot AS (SELECT CAST(sum(freq) AS BIGINT) AS n_total FROM freq),
-        |per_doc AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-        |         round(CAST(sum(CAST(-ln(CAST(freq AS DOUBLE) / n_total) AS DECIMAL(28,12))) AS DOUBLE) / count(*), 6) AS cross_entropy
-        |  FROM w JOIN freq ON w.word = freq.word CROSS JOIN tot
-        |  GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |       coalesce(n_words, 0) AS n_words,
-        |       coalesce(cross_entropy, 0.0) AS cross_entropy
-        |FROM documents d LEFT JOIN per_doc ON d.doc_id = per_doc.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    "unpivot_orders" ->
-      """WITH wide AS (
-        |  SELECT o_orderstatus,
-        |    CAST(count(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS BIGINT) AS n_urgent,
-        |    CAST(count(*) FILTER (WHERE o_orderpriority = '2-HIGH') AS BIGINT) AS n_high,
-        |    CAST(count(*) FILTER (WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH')) AS BIGINT) AS n_other
-        |  FROM orders GROUP BY o_orderstatus)
-        |SELECT o_orderstatus, metric, n FROM (
-        |  SELECT o_orderstatus, 'n_urgent' AS metric, n_urgent AS n FROM wide
-        |  UNION ALL
-        |  SELECT o_orderstatus, 'n_high' AS metric, n_high AS n FROM wide
-        |  UNION ALL
-        |  SELECT o_orderstatus, 'n_other' AS metric, n_other AS n FROM wide)
-        |ORDER BY o_orderstatus, metric""".stripMargin,
-    "listagg_nations" ->
-      """SELECT r_name, CAST(count(*) AS BIGINT) AS n_nations,
-        |       string_agg(n_name, ',' ORDER BY n_name) AS nations_csv
-        |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-    "price_histogram" ->
-      """SELECT least(CAST(floor(o_totalprice / 50000.0) AS BIGINT), 9) AS bucket,
-        |       CAST(count(*) AS BIGINT) AS n_orders,
-        |       round(min(o_totalprice), 2) AS min_price,
-        |       round(max(o_totalprice), 2) AS max_price
-        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "robust_stats" ->
-      """WITH m AS (
-        |  SELECT l_returnflag,
-        |    CAST(count(*) AS DOUBLE) AS n,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS s1,
-        |    CAST(sum(CAST(l_quantity*l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS s2,
-        |    CAST(sum(CAST(l_quantity*l_quantity*l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS s3,
-        |    CAST(sum(CAST(l_quantity*l_quantity*l_quantity*l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS s4
-        |  FROM lineitem GROUP BY l_returnflag),
-        |d AS (
-        |  SELECT l_returnflag, n, s1 / n AS mean,
-        |         s2 / n - (s1/n) * (s1/n) AS m2,
-        |         s3 / n - 3.0 * (s1/n) * (s2/n) + 2.0 * (s1/n) * (s1/n) * (s1/n) AS m3,
-        |         s4 / n - 4.0 * (s1/n) * (s3/n) + 6.0 * (s1/n) * (s1/n) * (s2/n)
-        |           - 3.0 * (s1/n) * (s1/n) * (s1/n) * (s1/n) AS m4
-        |  FROM m),
-        |modes AS (
-        |  SELECT l_returnflag, l_quantity AS mode_qty FROM (
-        |    SELECT l_returnflag, l_quantity,
-        |           row_number() OVER (PARTITION BY l_returnflag
-        |                              ORDER BY count(*) DESC, l_quantity) AS rn
-        |    FROM lineitem GROUP BY l_returnflag, l_quantity)
-        |  WHERE rn = 1)
-        |SELECT d.l_returnflag, CAST(n AS BIGINT) AS n,
-        |       round(mean, 6) AS mean_qty,
-        |       round(m3 / pow(m2, 1.5), 6) AS skewness_qty,
-        |       round(m4 / (m2 * m2) - 3.0, 6) AS kurtosis_qty,
-        |       mode_qty
-        |FROM d JOIN modes ON d.l_returnflag = modes.l_returnflag
-        |ORDER BY d.l_returnflag""".stripMargin,
-    "date_kit" ->
-      """SELECT o_orderkey,
-        |       strftime(o_orderdate, '%Y-%m-%d') AS order_date,
-        |       CAST(quarter(o_orderdate) AS BIGINT) AS qtr,
-        |       CAST(week(o_orderdate) AS BIGINT) AS iso_week,
-        |       CAST(dayofweek(o_orderdate) AS BIGINT) AS dow,
-        |       strftime(last_day(CAST(o_orderdate AS DATE)), '%Y-%m-%d') AS month_end,
-        |       strftime(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH, '%Y-%m-%d') AS plus_3m,
-        |       CAST(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS epoch_day
-        |FROM orders WHERE o_orderkey <= 200 ORDER BY o_orderkey""".stripMargin,
-    "window_lag_lead" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice,
-        |       lag(o_totalprice, 1, -1.0) OVER w AS prev_price,
-        |       lead(o_totalprice, 1, -1.0) OVER w AS next_price,
-        |       CAST(dense_rank() OVER (PARTITION BY o_custkey ORDER BY o_orderpriority) AS BIGINT) AS prio_rank,
-        |       nth_value(o_orderkey, 2) OVER w AS second_order
-        |FROM orders WHERE o_custkey <= 30
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "bitwise_kit" ->
-      """SELECT event_type,
-        |       CAST(bit_and(user_id) AS BIGINT) AS and_uid,
-        |       CAST(bit_or(user_id) AS BIGINT) AS or_uid,
-        |       CAST(bit_xor(user_id) AS BIGINT) AS xor_uid,
-        |       CAST(count(*) AS BIGINT) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "safe_casts" ->
-      """SELECT o_orderkey,
-        |       TRY_CAST(o_orderstatus AS INTEGER) AS status_as_int,
-        |       TRY_CAST(substr(o_orderpriority, 1, 1) AS INTEGER) AS prio_digit,
-        |       round(o_totalprice / nullif(CAST(o_orderkey % 3 AS DOUBLE), 0.0), 4) AS per_bucket
-        |FROM orders WHERE o_orderkey <= 200 ORDER BY o_orderkey""".stripMargin,
-    "month_spine" ->
-      """WITH b AS (
-        |  SELECT date_trunc('month', min(o_orderdate)) AS lo,
-        |         date_trunc('month', max(o_orderdate)) AS hi
-        |  FROM orders),
-        |spine AS (
-        |  SELECT unnest(generate_series(lo, hi, INTERVAL 1 MONTH)) AS m FROM b),
-        |rev AS (
-        |  SELECT date_trunc('month', o_orderdate) AS m,
-        |         CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS r
-        |  FROM orders GROUP BY 1)
-        |SELECT strftime(spine.m, '%Y-%m') AS month,
-        |       coalesce(n, 0) AS n_orders,
-        |       coalesce(r, 0.0) AS revenue
-        |FROM spine LEFT JOIN rev ON spine.m = rev.m
-        |ORDER BY month""".stripMargin,
-    "doc_repetition" ->
-      """WITH base AS (
-        |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
-        |  FROM documents),
-        |wc AS (
-        |  SELECT doc_id, w, count(*) AS c
-        |  FROM (SELECT doc_id, unnest(ws) AS w FROM base)
-        |  GROUP BY doc_id, w),
-        |wa AS (
-        |  SELECT doc_id, sum(c) AS n_words, count(*) AS n_distinct, max(c) AS top_freq
-        |  FROM wc GROUP BY doc_id),
-        |bg AS (
-        |  SELECT doc_id, ws[i] || ' ' || ws[i+1] AS g
-        |  FROM base, unnest(range(1, len(ws))) AS t(i)
-        |  WHERE len(ws) >= 2),
-        |ba AS (
-        |  SELECT doc_id, count(*) AS n_bg, count(DISTINCT g) AS n_bg_distinct
-        |  FROM bg GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(wa.n_words, 0) AS BIGINT) AS n_words,
-        |  round(CASE WHEN wa.n_words IS NULL OR wa.n_words = 0 THEN 0.0
-        |    ELSE CAST(wa.n_distinct AS DOUBLE) / CAST(wa.n_words AS DOUBLE) END, 6) AS distinct_word_ratio,
-        |  round(CASE WHEN wa.n_words IS NULL OR wa.n_words = 0 THEN 0.0
-        |    ELSE CAST(wa.top_freq AS DOUBLE) / CAST(wa.n_words AS DOUBLE) END, 6) AS top_word_share,
-        |  round(CASE WHEN ba.n_bg IS NULL OR ba.n_bg = 0 THEN 0.0
-        |    ELSE 1.0 - CAST(ba.n_bg_distinct AS DOUBLE) / CAST(ba.n_bg AS DOUBLE) END, 6) AS dup_bigram_ratio
-        |FROM documents d
-        |LEFT JOIN wa ON d.doc_id = wa.doc_id
-        |LEFT JOIN ba ON d.doc_id = ba.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    "pii_scrub" ->
-      """SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text, 'https?://[^ \t\n]+')) AS BIGINT) AS n_urls,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-        |  CAST(len(regexp_extract_all(text, '[0-9]{6,}')) AS BIGINT) AS n_long_nums,
-        |  md5(regexp_replace(regexp_replace(regexp_replace(text,
-        |    'https?://[^ \t\n]+', '<URL>', 'g'),
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '[0-9]{6,}', '<NUM>', 'g')) AS scrubbed_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "gopher_filter" ->
-      """WITH base AS (
-        |  SELECT doc_id, text,
-        |    list_filter(string_split_regex(text, '[ \t\n]+'), t -> length(t) > 0) AS rt,
-        |    list_filter(string_split(text, chr(10)), l -> length(trim(l)) > 0) AS lines,
-        |    list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
-        |  FROM documents),
-        |sig AS (
-        |  SELECT doc_id,
-        |    CAST(len(rt) AS BIGINT) AS n_words,
-        |    round(CASE WHEN len(rt) = 0 THEN 0.0 ELSE CAST(list_sum(list_transform(rt, t -> length(t))) AS DOUBLE) / len(rt) END, 4) AS mean_word_len,
-        |    round(CASE WHEN len(rt) = 0 THEN 0.0 ELSE CAST((length(text) - length(replace(text, '#', ''))) + (length(text) - length(replace(text, '...', ''))) / 3 AS DOUBLE) / len(rt) END, 4) AS symbol_ratio,
-        |    round(CASE WHEN len(lines) = 0 THEN 0.0 ELSE CAST(len(list_filter(lines, l -> regexp_matches(trim(l), '^[-*•]'))) AS DOUBLE) / len(lines) END, 4) AS bullet_line_ratio,
-        |    round(CASE WHEN len(lines) = 0 THEN 0.0 ELSE CAST(len(list_filter(lines, l -> regexp_matches(trim(l), '\.\.\.$'))) AS DOUBLE) / len(lines) END, 4) AS ellipsis_line_ratio,
-        |    round(CASE WHEN len(rt) = 0 THEN 0.0 ELSE CAST(len(list_filter(rt, t -> regexp_matches(t, '[a-zA-Z]'))) AS DOUBLE) / len(rt) END, 4) AS alpha_word_ratio,
-        |    CAST((CASE WHEN list_contains(ws, 'the') THEN 1 ELSE 0 END)
-        |       + (CASE WHEN list_contains(ws, 'be') THEN 1 ELSE 0 END)
-        |       + (CASE WHEN list_contains(ws, 'to') THEN 1 ELSE 0 END)
-        |       + (CASE WHEN list_contains(ws, 'of') THEN 1 ELSE 0 END)
-        |       + (CASE WHEN list_contains(ws, 'and') THEN 1 ELSE 0 END)
-        |       + (CASE WHEN list_contains(ws, 'that') THEN 1 ELSE 0 END)
-        |       + (CASE WHEN list_contains(ws, 'have') THEN 1 ELSE 0 END)
-        |       + (CASE WHEN list_contains(ws, 'with') THEN 1 ELSE 0 END) AS BIGINT) AS n_stop_hits
-        |  FROM base)
-        |SELECT *,
-        |  (n_words BETWEEN 50 AND 100000) AND (mean_word_len BETWEEN 3.0 AND 10.0)
-        |  AND symbol_ratio <= 0.1 AND bullet_line_ratio <= 0.9
-        |  AND ellipsis_line_ratio <= 0.3 AND alpha_word_ratio >= 0.8
-        |  AND n_stop_hits >= 2 AS keep
-        |FROM sig ORDER BY doc_id""".stripMargin,
-    "gopher_repetition" ->
-      (RelineatedCte + """,
-        |ls AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM structured),
-        |lines AS (
-        |  SELECT doc_id, i - 1 AS idx, trim(ls[i]) AS l
-        |  FROM ls, unnest(range(1, len(ls) + 1)) AS t(i)
-        |  WHERE length(trim(ls[i])) > 0),
-        |linedup AS (SELECT doc_id, l, count(*) AS cnt FROM lines GROUP BY 1, 2),
-        |linestats AS (
-        |  SELECT doc_id, sum(cnt) AS n_line, sum(cnt - 1) AS n_dup_line,
-        |         sum((cnt - 1) * length(l)) AS dup_chars_line,
-        |         sum(cnt * length(l)) AS chars_line
-        |  FROM linedup GROUP BY doc_id),
-        |paras AS (
-        |  SELECT doc_id, idx // 4 AS pidx,
-        |         string_agg(l, chr(10) ORDER BY idx) AS u
-        |  FROM lines GROUP BY doc_id, idx // 4),
-        |paradup AS (SELECT doc_id, u, count(*) AS cnt FROM paras GROUP BY 1, 2),
-        |parastats AS (
-        |  SELECT doc_id, sum(cnt) AS n_para, sum(cnt - 1) AS n_dup_para,
-        |         sum((cnt - 1) * length(u)) AS dup_chars_para,
-        |         sum(cnt * length(u)) AS chars_para
-        |  FROM paradup GROUP BY doc_id),
-        |wordarr AS (
-        |  SELECT doc_id,
-        |    list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
-        |  FROM structured),
-        |wchars AS (
-        |  SELECT doc_id,
-        |    CAST(coalesce(list_sum(list_transform(ws, w -> length(w))), 0) AS BIGINT) AS w_chars
-        |  FROM wordarr),
-        |gr AS (
-        |  SELECT doc_id, n, g, length(g) - (n - 1) AS glen, count(*) AS cnt
-        |  FROM wordarr,
-        |       unnest([2, 3, 4, 5, 6, 7, 8, 9, 10]) AS tn(n),
-        |       unnest(list_transform(range(1, len(ws) - n + 2), i ->
-        |         array_to_string(ws[i : i + n - 1], ' '))) AS tg(g)
-        |  GROUP BY doc_id, n, g, glen),
-        |gramagg AS (
-        |  SELECT doc_id, n, max(cnt * glen) AS top_cov,
-        |         sum((cnt - 1) * glen) AS dup_cov
-        |  FROM gr GROUP BY doc_id, n),
-        |grambydoc AS (
-        |  SELECT doc_id,
-        |    max(CASE WHEN n = 2 THEN top_cov END) AS c2,
-        |    max(CASE WHEN n = 3 THEN top_cov END) AS c3,
-        |    max(CASE WHEN n = 4 THEN top_cov END) AS c4,
-        |    max(CASE WHEN n = 5 THEN dup_cov END) AS c5,
-        |    max(CASE WHEN n = 6 THEN dup_cov END) AS c6,
-        |    max(CASE WHEN n = 7 THEN dup_cov END) AS c7,
-        |    max(CASE WHEN n = 8 THEN dup_cov END) AS c8,
-        |    max(CASE WHEN n = 9 THEN dup_cov END) AS c9,
-        |    max(CASE WHEN n = 10 THEN dup_cov END) AS c10
-        |  FROM gramagg GROUP BY doc_id),
-        |sig AS (
-        |  SELECT d.doc_id,
-        |    round(CASE WHEN coalesce(n_line, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(n_dup_line, 0) AS DOUBLE) / n_line) END, 6) AS dup_line_frac,
-        |    round(CASE WHEN coalesce(chars_line, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(dup_chars_line, 0) AS DOUBLE) / chars_line) END, 6) AS dup_line_char_frac,
-        |    round(CASE WHEN coalesce(n_para, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(n_dup_para, 0) AS DOUBLE) / n_para) END, 6) AS dup_para_frac,
-        |    round(CASE WHEN coalesce(chars_para, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(dup_chars_para, 0) AS DOUBLE) / chars_para) END, 6) AS dup_para_char_frac,
-        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c2, 0) AS DOUBLE) / w_chars) END, 6) AS top_2gram_char_frac,
-        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c3, 0) AS DOUBLE) / w_chars) END, 6) AS top_3gram_char_frac,
-        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c4, 0) AS DOUBLE) / w_chars) END, 6) AS top_4gram_char_frac,
-        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c5, 0) AS DOUBLE) / w_chars) END, 6) AS dup_5gram_char_frac,
-        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c6, 0) AS DOUBLE) / w_chars) END, 6) AS dup_6gram_char_frac,
-        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c7, 0) AS DOUBLE) / w_chars) END, 6) AS dup_7gram_char_frac,
-        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c8, 0) AS DOUBLE) / w_chars) END, 6) AS dup_8gram_char_frac,
-        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c9, 0) AS DOUBLE) / w_chars) END, 6) AS dup_9gram_char_frac,
-        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c10, 0) AS DOUBLE) / w_chars) END, 6) AS dup_10gram_char_frac
-        |  FROM documents d
-        |  LEFT JOIN linestats USING (doc_id)
-        |  LEFT JOIN parastats USING (doc_id)
-        |  LEFT JOIN wchars USING (doc_id)
-        |  LEFT JOIN grambydoc USING (doc_id))
-        |SELECT *,
-        |  dup_line_frac <= 0.30 AND dup_line_char_frac <= 0.20
-        |  AND dup_para_frac <= 0.30 AND dup_para_char_frac <= 0.20
-        |  AND top_2gram_char_frac <= 0.20 AND top_3gram_char_frac <= 0.18
-        |  AND top_4gram_char_frac <= 0.16 AND dup_5gram_char_frac <= 0.15
-        |  AND dup_6gram_char_frac <= 0.14 AND dup_7gram_char_frac <= 0.13
-        |  AND dup_8gram_char_frac <= 0.12 AND dup_9gram_char_frac <= 0.11
-        |  AND dup_10gram_char_frac <= 0.10 AS keep
-        |FROM sig ORDER BY doc_id""".stripMargin),
-    "c4_filter" ->
-      (RelineatedCte + """,
-        |base AS (
-        |  SELECT doc_id, text,
-        |    string_split(text, chr(10)) AS lines,
-        |    list_filter(string_split(text, chr(10)), l ->
-        |      regexp_matches(trim(l), '[.!?"]$')
-        |      AND len(list_filter(string_split_regex(trim(l), '[ \t]+'), w -> length(w) > 0)) >= 5
-        |      AND NOT contains(lower(l), 'javascript')) AS kept,
-        |    list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
-        |  FROM structured),
-        |sig AS (
-        |  SELECT doc_id,
-        |    CAST(len(lines) AS BIGINT) AS n_lines,
-        |    CAST(len(kept) AS BIGINT) AS n_kept_lines,
-        |    round(CASE WHEN len(lines) = 0 THEN 0.0 ELSE CAST(len(kept) AS DOUBLE) / len(lines) END, 4) AS kept_ratio,
-        |    CAST(len(regexp_extract_all(coalesce(array_to_string(kept, chr(10)), ''), '[.!?]')) AS BIGINT) AS n_sentences,
-        |    contains(lower(text), 'lorem ipsum') AS has_lorem,
-        |    contains(text, '{') AS has_brace,
-        |    (list_contains(ws, 'viagra') OR list_contains(ws, 'casino')
-        |      OR list_contains(ws, 'xxx')) AS has_blocked,
-        |    md5(coalesce(array_to_string(kept, chr(10)), '')) AS clean_md5
-        |  FROM base)
-        |SELECT *,
-        |  n_sentences >= 3 AND NOT has_lorem AND NOT has_brace
-        |    AND NOT has_blocked AS keep
-        |FROM sig ORDER BY doc_id""".stripMargin),
-    // boilerplate removal: every block verdict predicted from the
-    // closed-form page — see BoilerSigCte
-    "boilerplate_blocks" ->
-      (BoilerSigCte + """
-        |SELECT doc_id, block_idx, tag, n_words, text_len, link_len,
-        |  link_density, keep
-        |FROM verd ORDER BY doc_id, block_idx""".stripMargin),
-    "boilerplate_filter" ->
-      (BoilerSigCte + """,
-        |per AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_blocks,
-        |    CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |    md5(coalesce(string_agg(CASE WHEN keep THEN text END,
-        |      chr(10) ORDER BY block_idx), '')) AS clean_md5
-        |  FROM verd GROUP BY doc_id)
-        |SELECT doc_id, n_blocks, n_kept,
-        |  round(CAST(n_kept AS DOUBLE) / n_blocks, 4) AS kept_ratio,
-        |  clean_md5, n_kept >= 3 AS keep
-        |FROM per ORDER BY doc_id""".stripMargin),
-    // html_curated: BOTH pipeline stages replayed — the extracted
-    // main content (kept blocks joined in document order) becomes the
-    // corpus the c4_filter rules run over
-    "html_curated" ->
-      (BoilerSigCte + """,
-        |cleaned AS (
-        |  SELECT doc_id, coalesce(string_agg(CASE WHEN keep THEN text END,
-        |    chr(10) ORDER BY block_idx), '') AS text
-        |  FROM verd GROUP BY doc_id),
-        |base AS (
-        |  SELECT doc_id, text,
-        |    string_split(text, chr(10)) AS lines,
-        |    list_filter(string_split(text, chr(10)), l ->
-        |      regexp_matches(trim(l), '[.!?"]$')
-        |      AND len(list_filter(string_split_regex(trim(l), '[ \t]+'), w -> length(w) > 0)) >= 5
-        |      AND NOT contains(lower(l), 'javascript')) AS kept,
-        |    list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
-        |  FROM cleaned),
-        |csig AS (
-        |  SELECT doc_id,
-        |    CAST(len(lines) AS BIGINT) AS n_lines,
-        |    CAST(len(kept) AS BIGINT) AS n_kept_lines,
-        |    round(CASE WHEN len(lines) = 0 THEN 0.0 ELSE CAST(len(kept) AS DOUBLE) / len(lines) END, 4) AS kept_ratio,
-        |    CAST(len(regexp_extract_all(coalesce(array_to_string(kept, chr(10)), ''), '[.!?]')) AS BIGINT) AS n_sentences,
-        |    contains(lower(text), 'lorem ipsum') AS has_lorem,
-        |    contains(text, '{') AS has_brace,
-        |    (list_contains(ws, 'viagra') OR list_contains(ws, 'casino')
-        |      OR list_contains(ws, 'xxx')) AS has_blocked,
-        |    md5(coalesce(array_to_string(kept, chr(10)), '')) AS clean_md5
-        |  FROM base)
-        |SELECT *,
-        |  n_sentences >= 3 AND NOT has_lorem AND NOT has_brace
-        |    AND NOT has_blocked AS keep
-        |FROM csig ORDER BY doc_id""".stripMargin),
-    "line_dedup" ->
-      (RelineatedCte + """,
-        |ls AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM structured),
-        |lines AS (
-        |  SELECT doc_id, i AS idx, trim(ls[i]) AS l
-        |  FROM ls, unnest(range(1, len(ls) + 1)) AS t(i)
-        |  WHERE length(trim(ls[i])) > 0),
-        |occ AS (SELECT l, CAST(count(*) AS BIGINT) AS n_occ FROM lines GROUP BY l),
-        |kept AS (
-        |  SELECT doc_id, idx, lines.l, n_occ < 3 AS keep
-        |  FROM lines JOIN occ USING (l)),
-        |per AS (
-        |  SELECT doc_id,
-        |    CAST(count(*) AS BIGINT) AS n_lines,
-        |    CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT) AS n_removed,
-        |    md5(coalesce(string_agg(CASE WHEN keep THEN l END, chr(10) ORDER BY idx), '')) AS clean_md5
-        |  FROM kept GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  coalesce(n_lines, 0) AS n_lines,
-        |  coalesce(n_removed, 0) AS n_removed,
-        |  coalesce(clean_md5, md5('')) AS clean_md5
-        |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-        |ORDER BY d.doc_id""".stripMargin),
-    "ccnet_buckets" ->
-      """WITH words AS (
-        |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
-        |  FROM documents),
-        |uni AS (SELECT w AS word, CAST(count(*) AS BIGINT) AS c1
-        |        FROM (SELECT unnest(ws) AS w FROM words) GROUP BY w),
-        |v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM uni),
-        |bg AS (
-        |  SELECT doc_id, ws[i] || ' ' || ws[i+1] AS bg, ws[i] AS w1,
-        |         CAST(count(*) AS BIGINT) AS tf
-        |  FROM words, unnest(range(1, len(ws))) AS t(i)
-        |  WHERE len(ws) >= 2
-        |  GROUP BY 1, 2, 3),
-        |c2 AS (SELECT bg, CAST(sum(tf) AS BIGINT) AS c2 FROM bg GROUP BY bg),
-        |scored AS (
-        |  SELECT doc_id, tf,
-        |    CAST(round(tf * -ln(CAST(c2.c2 + 1 AS DOUBLE) / CAST(c1 + v AS DOUBLE)), 12) AS DECIMAL(28,12)) AS term
-        |  FROM bg JOIN c2 USING (bg)
-        |  JOIN uni ON bg.w1 = uni.word
-        |  CROSS JOIN v),
-        |per AS (
-        |  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
-        |         round(CAST(sum(term) AS DOUBLE) / sum(tf), 6) AS cross_entropy
-        |  FROM scored GROUP BY doc_id),
-        |sc AS (
-        |  SELECT d.doc_id, d.lang,
-        |    COALESCE(n_bigrams, 0) AS n_bigrams,
-        |    COALESCE(cross_entropy, 0.0) AS cross_entropy
-        |  FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id),
-        |ranked AS (
-        |  SELECT *, percent_rank() OVER (
-        |    PARTITION BY lang ORDER BY cross_entropy, doc_id) AS pct
-        |  FROM sc)
-        |SELECT doc_id, lang, n_bigrams, cross_entropy,
-        |  round(pct, 9) AS pct_rank,
-        |  CASE WHEN pct * 3.0 < 1.0 THEN 'head'
-        |       WHEN pct * 3.0 < 2.0 THEN 'middle'
-        |       ELSE 'tail' END AS bucket
-        |FROM ranked ORDER BY doc_id""".stripMargin,
-    // 2-epoch full-batch logistic GD over hashed bigrams, replayed
-    // exactly: per-row products in IEEE double rounded to 12 dp and
-    // summed as DECIMAL (order-independent), sigmoid outputs rounded
-    // to 9 dp so libm ulp differences cannot propagate across epochs
-    "quality_classifier" ->
-      """WITH ws AS (
-        |  SELECT doc_id, lang,
-        |    list_filter(list_transform(string_split_regex(text, '[ \t\n]+'),
-        |      w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))),
-        |      w -> length(w) > 0) AS l
-        |  FROM documents),
-        |bgr AS (
-        |  SELECT doc_id, CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
-        |    len(l) - 1 AS n_bg,
-        |    CAST(concat('0x', substr(md5(l[i] || ' ' || l[i+1]), 1, 8)) AS BIGINT) % 1024 AS b
-        |  FROM ws, unnest(range(1, len(l))) AS t(i)
-        |  WHERE len(l) >= 2),
-        |feat AS (
-        |  SELECT doc_id, y, n_bg, b,
-        |    CAST(count(*) AS DOUBLE) / CAST(n_bg AS DOUBLE) AS x
-        |  FROM bgr GROUP BY doc_id, y, n_bg, b),
-        |w1 AS (
-        |  SELECT b, round(0.5 * CAST(sum(CAST(round((y - 0.5) * x, 12) AS DECIMAL(26,12))) AS DOUBLE), 12) AS w
-        |  FROM feat GROUP BY b),
-        |b1 AS (
-        |  SELECT round(0.5 * CAST(sum(CAST(round(y - 0.5, 12) AS DECIMAL(26,12))) AS DOUBLE), 12) AS bias0
-        |  FROM (SELECT DISTINCT doc_id, y FROM feat)),
-        |p1 AS (
-        |  SELECT doc_id, y, round(1.0 / (1.0 + exp(-z)), 9) AS p
-        |  FROM (
-        |    SELECT doc_id, y,
-        |      bias0 + CAST(sum(CAST(round(x * w, 12) AS DECIMAL(26,12))) AS DOUBLE) AS z
-        |    FROM feat JOIN w1 USING (b) CROSS JOIN b1
-        |    GROUP BY doc_id, y, bias0)),
-        |w2 AS (
-        |  SELECT w1.b, round(w1.w + 0.5 * coalesce(g.g, 0.0), 12) AS w
-        |  FROM w1 LEFT JOIN (
-        |    SELECT b, CAST(sum(CAST(round((feat.y - p.p) * x, 12) AS DECIMAL(26,12))) AS DOUBLE) AS g
-        |    FROM feat JOIN (SELECT doc_id, p FROM p1) p USING (doc_id)
-        |    GROUP BY b) g ON w1.b = g.b),
-        |b2 AS (
-        |  SELECT round(bias0 + 0.5 * CAST(sum(CAST(round(y - p, 12) AS DECIMAL(26,12))) AS DOUBLE), 12) AS bias2
-        |  FROM p1 CROSS JOIN b1 GROUP BY bias0),
-        |z2 AS (
-        |  SELECT doc_id, n_bg,
-        |    bias2 + CAST(sum(CAST(round(x * w, 12) AS DECIMAL(26,12))) AS DOUBLE) AS z
-        |  FROM feat JOIN w2 USING (b) CROSS JOIN b2
-        |  GROUP BY doc_id, n_bg, bias2)
-        |SELECT doc_id, CAST(n_bg AS BIGINT) AS n_bigrams,
-        |  round(1.0 / (1.0 + exp(-z)), 9) AS score,
-        |  (z >= 0.0) AS keep
-        |FROM z2 ORDER BY doc_id""".stripMargin,
-    // one-vs-rest lang-id: the quality_classifier training replay with
-    // a tgt (target language) dimension threaded through every CTE —
-    // K binary models trained in one pass of grouped SQL, then the
-    // per-doc argmax on raw margins (ties broken by language code)
-    "lang_id_learned" ->
-      """WITH ws AS (
-        |  SELECT doc_id, lang,
-        |    list_filter(list_transform(string_split_regex(text, '[ \t\n]+'),
-        |      w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))),
-        |      w -> length(w) > 0) AS l
-        |  FROM documents),
-        |bgr AS (
-        |  SELECT doc_id, lang, len(l) - 1 AS n_bg,
-        |    CAST(concat('0x', substr(md5(l[i] || ' ' || l[i+1]), 1, 8)) AS BIGINT) % 1024 AS b
-        |  FROM ws, unnest(range(1, len(l))) AS t(i)
-        |  WHERE len(l) >= 2),
-        |feat0 AS (
-        |  SELECT doc_id, lang, n_bg, b,
-        |    CAST(count(*) AS DOUBLE) / CAST(n_bg AS DOUBLE) AS x
-        |  FROM bgr GROUP BY doc_id, lang, n_bg, b),
-        |langs AS (SELECT DISTINCT lang AS tgt FROM documents),
-        |feat AS (
-        |  SELECT f.doc_id, l.tgt,
-        |    CASE WHEN f.lang = l.tgt THEN 1.0 ELSE 0.0 END AS y,
-        |    f.n_bg, f.b, f.x
-        |  FROM feat0 f CROSS JOIN langs l),
-        |w1 AS (
-        |  SELECT tgt, b, round(0.5 * CAST(sum(CAST(round((y - 0.5) * x, 12) AS DECIMAL(26,12))) AS DOUBLE), 12) AS w
-        |  FROM feat GROUP BY tgt, b),
-        |b1 AS (
-        |  SELECT tgt, round(0.5 * CAST(sum(CAST(round(y - 0.5, 12) AS DECIMAL(26,12))) AS DOUBLE), 12) AS bias0
-        |  FROM (SELECT DISTINCT tgt, doc_id, y FROM feat) GROUP BY tgt),
-        |p1 AS (
-        |  SELECT tgt, doc_id, y, round(1.0 / (1.0 + exp(-z)), 9) AS p
-        |  FROM (
-        |    SELECT f.tgt, doc_id, y,
-        |      bias0 + CAST(sum(CAST(round(x * w, 12) AS DECIMAL(26,12))) AS DOUBLE) AS z
-        |    FROM feat f JOIN w1 ON f.tgt = w1.tgt AND f.b = w1.b
-        |    JOIN b1 ON b1.tgt = f.tgt
-        |    GROUP BY f.tgt, doc_id, y, bias0)),
-        |w2 AS (
-        |  SELECT w1.tgt, w1.b, round(w1.w + 0.5 * coalesce(g.g, 0.0), 12) AS w
-        |  FROM w1 LEFT JOIN (
-        |    SELECT f.tgt, b, CAST(sum(CAST(round((f.y - p.p) * x, 12) AS DECIMAL(26,12))) AS DOUBLE) AS g
-        |    FROM feat f JOIN p1 p ON p.tgt = f.tgt AND p.doc_id = f.doc_id
-        |    GROUP BY f.tgt, b) g ON w1.tgt = g.tgt AND w1.b = g.b),
-        |b2 AS (
-        |  SELECT b1.tgt, round(bias0 + 0.5 * CAST(sum(CAST(round(y - p, 12) AS DECIMAL(26,12))) AS DOUBLE), 12) AS bias2
-        |  FROM p1 JOIN b1 ON b1.tgt = p1.tgt GROUP BY b1.tgt, bias0),
-        |z2 AS (
-        |  SELECT f.tgt, doc_id, n_bg,
-        |    bias2 + CAST(sum(CAST(round(x * w, 12) AS DECIMAL(26,12))) AS DOUBLE) AS z
-        |  FROM feat f JOIN w2 ON w2.tgt = f.tgt AND w2.b = f.b
-        |  JOIN b2 ON b2.tgt = f.tgt
-        |  GROUP BY f.tgt, doc_id, n_bg, bias2),
-        |pick AS (
-        |  SELECT doc_id, n_bg, tgt, z,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY z DESC, tgt) AS rn
-        |  FROM z2)
-        |SELECT p.doc_id, CAST(n_bg AS BIGINT) AS n_bigrams,
-        |  tgt AS pred_lang, round(1.0 / (1.0 + exp(-z)), 9) AS score,
-        |  (tgt = d.lang) AS matches_label
-        |FROM pick p JOIN documents d ON d.doc_id = p.doc_id
-        |WHERE rn = 1 ORDER BY p.doc_id""".stripMargin,
-    "dsir_weights" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang,
-        |    CAST(concat('0x', substr(md5(word), 1, 8)) AS BIGINT) % 1024 AS b
-        |  FROM (
-        |    SELECT doc_id, lang,
-        |      lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-        |    FROM documents) t
-        |  WHERE length(word) > 0),
-        |stats AS (
-        |  SELECT b, count(*) AS n_raw,
-        |    sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_tgt
-        |  FROM toks GROUP BY b),
-        |totals AS (SELECT sum(n_raw) AS t_raw, sum(n_tgt) AS t_tgt FROM stats),
-        |ratios AS (
-        |  SELECT b,
-        |    CAST(round(ln((n_tgt + 1.0) / (t_tgt + 1024.0))
-        |             - ln((n_raw + 1.0) / (t_raw + 1024.0)), 12) AS DECIMAL(20,12)) AS lr
-        |  FROM stats, totals)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(sum(lr) AS DOUBLE) AS log_weight
-        |FROM toks JOIN ratios USING (b)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "dsir_sample" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang,
-        |    CAST(concat('0x', substr(md5(word), 1, 8)) AS BIGINT) % 1024 AS b
-        |  FROM (
-        |    SELECT doc_id, lang,
-        |      lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-        |    FROM documents) t
-        |  WHERE length(word) > 0),
-        |stats AS (
-        |  SELECT b, count(*) AS n_raw,
-        |    sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_tgt
-        |  FROM toks GROUP BY b),
-        |totals AS (SELECT sum(n_raw) AS t_raw, sum(n_tgt) AS t_tgt FROM stats),
-        |ratios AS (
-        |  SELECT b,
-        |    CAST(round(ln((n_tgt + 1.0) / (t_tgt + 1024.0))
-        |             - ln((n_raw + 1.0) / (t_raw + 1024.0)), 12) AS DECIMAL(20,12)) AS lr
-        |  FROM stats, totals),
-        |w AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |    CAST(sum(lr) AS DOUBLE) AS log_weight
-        |  FROM toks JOIN ratios USING (b) GROUP BY doc_id)
-        |SELECT doc_id, n_tokens, log_weight,
-        |  round(log_weight + (-ln(-ln(
-        |    (CAST(concat('0x', substr(md5('dsir' || CAST(doc_id AS VARCHAR)), 1, 6)) AS BIGINT) + 0.5) / 16777216.0))), 9) AS gumbel_key
-        |FROM w
-        |ORDER BY gumbel_key DESC, doc_id LIMIT 100""".stripMargin,
-    "label_centroids" ->
-      """WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |norms AS (
-        |  SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
-        |    round(CAST(sum(CAST(sqrt(list_dot_product(v, v)) AS DECIMAL(28,6))) AS DOUBLE) / count(*), 6) AS avg_norm
-        |  FROM e GROUP BY label),
-        |dims AS (
-        |  SELECT label, i, CAST(sum(CAST(v[i] AS DECIMAL(20,6))) AS DOUBLE) / count(*) AS mean
-        |  FROM e, unnest(range(1, len(v) + 1)) AS t(i)
-        |  GROUP BY label, i),
-        |cent AS (
-        |  SELECT label, round(sqrt(CAST(sum(CAST(mean * mean AS DECIMAL(28,16))) AS DOUBLE)), 6) AS centroid_norm
-        |  FROM dims GROUP BY label)
-        |SELECT CAST(norms.label AS BIGINT) AS label, n_vecs, centroid_norm, avg_norm
-        |FROM norms JOIN cent ON norms.label = cent.label
-        |ORDER BY label""".stripMargin,
-    "vec_quantize" ->
-      """WITH q AS (
-        |  SELECT vec_id,
-        |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS scale,
-        |    embedding
-        |  FROM embeddings)
-        |SELECT vec_id, round(scale, 9) AS scale,
-        |  CASE WHEN scale = 0 THEN 0
-        |       ELSE CAST(list_sum(list_transform(embedding,
-        |         x -> CAST(round(CAST(x AS DOUBLE) / scale) AS BIGINT))) AS BIGINT)
-        |  END AS q_sum,
-        |  CASE WHEN scale = 0 THEN 0.0
-        |       ELSE round(list_max(list_transform(embedding,
-        |         x -> abs(CAST(x AS DOUBLE) - round(CAST(x AS DOUBLE) / scale) * scale))), 9)
-        |  END AS max_err
-        |FROM q ORDER BY vec_id""".stripMargin,
-    "bm25_topk" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-        |  FROM documents),
-        |w AS (SELECT doc_id, word FROM toks WHERE length(word) > 0),
-        |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM w GROUP BY doc_id),
-        |corpus AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |                  CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-        |tf AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
-        |       FROM w WHERE word IN ('hash', 'join', 'scan', 'filter')
-        |       GROUP BY doc_id, word),
-        |df AS (SELECT word, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY word),
-        |scored AS (
-        |  SELECT tf.doc_id,
-        |    CAST(round(
-        |      ln(1.0 + (CAST(n_docs - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) *
-        |      (tf * 2.25) / (tf + 1.25 * (0.25 + 0.75 * dl / avgdl)),
-        |      12) AS DECIMAL(28,12)) AS s
-        |  FROM tf JOIN df ON tf.word = df.word
-        |  JOIN dl ON tf.doc_id = dl.doc_id
-        |  CROSS JOIN corpus)
-        |SELECT doc_id, round(CAST(sum(s) AS DOUBLE), 6) AS bm25,
-        |       CAST(count(*) AS BIGINT) AS n_terms_hit
-        |FROM scored GROUP BY doc_id
-        |ORDER BY bm25 DESC, doc_id LIMIT 25""".stripMargin,
-    "pmi_pairs" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-        |  FROM documents),
-        |dw AS (SELECT DISTINCT doc_id, word FROM toks WHERE length(word) > 0),
-        |nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-        |df AS (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS df FROM dw GROUP BY word
-        |  HAVING count(*) * 10 >= (SELECT n_docs FROM nd)),
-        |fdw AS (SELECT dw.doc_id, dw.word, df.df FROM dw JOIN df ON dw.word = df.word),
-        |pairs AS (
-        |  SELECT a.word AS word_a, b.word AS word_b,
-        |    CAST(count(*) AS BIGINT) AS n_ab,
-        |    any_value(a.df) AS n_a, any_value(b.df) AS n_b
-        |  FROM fdw a JOIN fdw b ON a.doc_id = b.doc_id AND a.word < b.word
-        |  GROUP BY a.word, b.word
-        |  HAVING count(*) * 20 >= (SELECT n_docs FROM nd))
-        |SELECT word_a, word_b, n_ab,
-        |  round(ln(CAST(n_ab AS DOUBLE) * n_docs / (CAST(n_a AS DOUBLE) * n_b)), 6) AS pmi
-        |FROM pairs CROSS JOIN nd
-        |ORDER BY pmi DESC, word_a, word_b LIMIT 50""".stripMargin,
-    "data_mix" ->
-      """WITH per AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(len(list_filter(string_split_regex(text, '[ \t\n]+'), t -> length(t) > 0))) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY source),
-        |w AS (SELECT source, n_docs, n_tokens,
-        |        CAST(round(sqrt(CAST(n_tokens AS DOUBLE)), 9) AS DECIMAL(28,9)) AS w_raw
-        |      FROM per),
-        |tot AS (SELECT sum(n_tokens) AS tot_tokens, sum(w_raw) AS tot_w FROM w)
-        |SELECT source, n_docs, n_tokens,
-        |  round(CAST(w_raw AS DOUBLE) / CAST(tot_w AS DOUBLE), 9) AS weight,
-        |  round((CAST(w_raw AS DOUBLE) / CAST(tot_w AS DOUBLE)) /
-        |        (CAST(n_tokens AS DOUBLE) / CAST(tot_tokens AS DOUBLE)), 6) AS oversample
-        |FROM w CROSS JOIN tot ORDER BY source""".stripMargin,
-    "dup_span_coverage" -> DupSpanCoverageOracle,
-    "dup_span_coverage128" -> DupSpanCoverageOracle,
-    // same tokenization/window CTEs as DupSpanCoverageOracle, then the
-    // removal semantics replayed set-wise: a word position is covered
-    // iff a duplicated 8-word window starts within the 7 positions at
-    // or before it
-    "dedup_span_removal" ->
-      """WITH words0 AS (
-        |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id, i - 1 AS idx, ws[i] AS w
-        |  FROM words0, unnest(range(1, len(ws) + 1)) AS t(i)),
-        |g AS (
-        |  SELECT doc_id, i - 1 AS s, array_to_string(ws[i:i+7], ' ') AS gram
-        |  FROM words0, unnest(range(1, len(ws) - 6)) AS t(i)
-        |  WHERE len(ws) >= 8),
-        |occ AS (SELECT gram FROM g GROUP BY gram HAVING count(*) > 1),
-        |dup AS (SELECT g.doc_id, g.s FROM g JOIN occ ON g.gram = occ.gram),
-        |cov AS (
-        |  SELECT w.doc_id, w.idx, any_value(w.w) AS w,
-        |         count(dup.s) AS nc
-        |  FROM w LEFT JOIN dup
-        |    ON dup.doc_id = w.doc_id AND dup.s BETWEEN w.idx - 7 AND w.idx
-        |  GROUP BY w.doc_id, w.idx),
-        |kept AS (
-        |  SELECT doc_id, string_agg(w, ' ' ORDER BY idx) AS clean_text,
-        |         CAST(count(*) AS BIGINT) AS n_kept
-        |  FROM cov WHERE nc = 0 GROUP BY doc_id),
-        |tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words
-        |        FROM w GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  COALESCE(kept.clean_text, '') AS clean_text,
-        |  COALESCE(tot.n_words, 0) AS n_words,
-        |  COALESCE(tot.n_words, 0) - COALESCE(kept.n_kept, 0) AS n_removed
-        |FROM documents d
-        |LEFT JOIN tot ON d.doc_id = tot.doc_id
-        |LEFT JOIN kept ON d.doc_id = kept.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    "bpe_train" -> BpeTrainSql,
-    "bpe_incremental" -> BpeIncrementalSql,
-    "bpe_tokenize" -> BpeTokenizeSql,
-    "unigram_seed" -> unigramVocabSql(0),
-    "unigram_train" -> unigramVocabSql(Unigram.Rounds),
-    "unigram_incremental" -> unigramIncrVocabSql(Unigram.Rounds),
-    "unigram_tokenize" -> UnigramTokenizeSql,
-    "tokenizer_compare" -> TokenizerCompareSql,
-    "suffix_ranks" -> SuffixRanksSql,
-    "suffix_ranks_incremental" -> SuffixRanksIncrSql,
-    "repeated_spans_sa" -> RepeatedSpansSql,
-    "bpe_pairs" ->
-      """WITH toks AS (
-        |  SELECT lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-        |  FROM documents),
-        |wc AS (SELECT word, CAST(count(*) AS BIGINT) AS n_word
-        |       FROM toks WHERE length(word) >= 2 GROUP BY word),
-        |pairs AS (
-        |  SELECT substr(word, CAST(i AS INTEGER), 2) AS pair, n_word
-        |  FROM wc, unnest(range(1, length(word))) AS t(i))
-        |SELECT pair, CAST(sum(n_word) AS BIGINT) AS n
-        |FROM pairs GROUP BY pair
-        |ORDER BY n DESC, pair LIMIT 50""".stripMargin,
-    "doc_perplexity" ->
-      """WITH words AS (
-        |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
-        |  FROM documents),
-        |uni AS (SELECT w AS word, CAST(count(*) AS BIGINT) AS c1
-        |        FROM (SELECT unnest(ws) AS w FROM words) GROUP BY w),
-        |v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM uni),
-        |bg AS (
-        |  SELECT doc_id, ws[i] || ' ' || ws[i+1] AS bg, ws[i] AS w1,
-        |         CAST(count(*) AS BIGINT) AS tf
-        |  FROM words, unnest(range(1, len(ws))) AS t(i)
-        |  WHERE len(ws) >= 2
-        |  GROUP BY 1, 2, 3),
-        |c2 AS (SELECT bg, CAST(sum(tf) AS BIGINT) AS c2 FROM bg GROUP BY bg),
-        |scored AS (
-        |  SELECT doc_id, tf,
-        |    CAST(round(tf * -ln(CAST(c2.c2 + 1 AS DOUBLE) / CAST(c1 + v AS DOUBLE)), 12) AS DECIMAL(28,12)) AS term
-        |  FROM bg JOIN c2 USING (bg)
-        |  JOIN uni ON bg.w1 = uni.word
-        |  CROSS JOIN v),
-        |per AS (
-        |  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
-        |         round(CAST(sum(term) AS DOUBLE) / sum(tf), 6) AS cross_entropy
-        |  FROM scored GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  COALESCE(n_bigrams, 0) AS n_bigrams,
-        |  COALESCE(cross_entropy, 0.0) AS cross_entropy
-        |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    "rank_corr" ->
-      """WITH nr AS (SELECT CAST(count(*) AS BIGINT) AS nr FROM lineitem),
-        |r AS (
-        |  SELECT l_quantity AS x, l_extendedprice AS y,
-        |    CAST(2 * RANK() OVER (ORDER BY l_quantity)
-        |         + COUNT(*) OVER (PARTITION BY l_quantity) - 1 AS BIGINT) - nr - 1 AS cx,
-        |    CAST(2 * RANK() OVER (ORDER BY l_extendedprice)
-        |         + COUNT(*) OVER (PARTITION BY l_extendedprice) - 1 AS BIGINT) - nr - 1 AS cy
-        |  FROM lineitem CROSS JOIN nr),
-        |s AS (SELECT
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  sum(CAST(cx AS DECIMAL(38,0)) * CAST(cx AS DECIMAL(38,0))) AS sxx,
-        |  sum(CAST(cy AS DECIMAL(38,0)) * CAST(cy AS DECIMAL(38,0))) AS syy,
-        |  sum(CAST(cx AS DECIMAL(38,0)) * CAST(cy AS DECIMAL(38,0))) AS sxy,
-        |  CAST(sum(CAST(x AS DECIMAL(28,2))) AS DOUBLE) AS px,
-        |  CAST(sum(CAST(y AS DECIMAL(28,2))) AS DOUBLE) AS py,
-        |  CAST(sum(CAST(x * x AS DECIMAL(28,4))) AS DOUBLE) AS pxx,
-        |  CAST(sum(CAST(y * y AS DECIMAL(28,4))) AS DOUBLE) AS pyy,
-        |  CAST(sum(CAST(x * y AS DECIMAL(28,4))) AS DOUBLE) AS pxy
-        |  FROM r)
-        |SELECT n,
-        |  round(CAST(sxy AS DOUBLE) /
-        |    (sqrt(CAST(sxx AS DOUBLE)) * sqrt(CAST(syy AS DOUBLE))), 6) AS spearman_qty_price,
-        |  round((n * pxy - px * py) /
-        |    (sqrt(n * pxx - px * px) * sqrt(n * pyy - py * py)), 6) AS pearson_qty_price
-        |FROM s""".stripMargin,
-    "tfidf_cosine_pairs" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-        |  FROM documents),
-        |tf AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
-        |       FROM toks WHERE length(word) > 0 GROUP BY doc_id, word),
-        |df AS (SELECT word, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY word),
-        |nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        |vec AS (
-        |  SELECT doc_id, word, w FROM (
-        |    SELECT tf.doc_id, tf.word,
-        |      tf * ln(CAST(n AS DOUBLE) / df) AS w,
-        |      row_number() OVER (PARTITION BY tf.doc_id
-        |        ORDER BY tf * ln(CAST(n AS DOUBLE) / df) DESC, tf.word) AS rn
-        |    FROM tf JOIN df USING (word) CROSS JOIN nd
-        |    WHERE df * 8 <= n AND df <= 1000)
-        |  WHERE rn <= 8),
-        |norms AS (
-        |  SELECT doc_id,
-        |    sqrt(CAST(sum(CAST(round(w * w, 12) AS DECIMAL(38,12))) AS DOUBLE)) AS nrm
-        |  FROM vec GROUP BY doc_id),
-        |dots AS (
-        |  SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2,
-        |         sum(CAST(round(a.w * b.w, 12) AS DECIMAL(38,12))) AS dot
-        |  FROM vec a JOIN vec b ON a.word = b.word AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_id_1, doc_id_2,
-        |  round(CAST(dot AS DOUBLE) / (n1.nrm * n2.nrm), 6) AS cosine
-        |FROM dots
-        |JOIN norms n1 ON doc_id_1 = n1.doc_id
-        |JOIN norms n2 ON doc_id_2 = n2.doc_id
-        |WHERE CAST(dot AS DOUBLE) / (n1.nrm * n2.nrm) >= 0.7
-        |ORDER BY doc_id_1, doc_id_2""".stripMargin,
-    "weighted_sample" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split_regex(text, '[ \t\n]+'), x -> length(x) > 0)) AS BIGINT) AS n_tokens,
-        |    (CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) + 0.5) / 4294967296.0 AS u
-        |  FROM documents)
-        |SELECT doc_id, n_tokens, round(-ln(u) / n_tokens, 9) AS es_key
-        |FROM t WHERE n_tokens > 0
-        |ORDER BY -ln(u) / n_tokens, doc_id
-        |LIMIT 20""".stripMargin,
-    "hard_negatives" ->
-      """WITH q AS (SELECT vec_id AS query_id, label AS q_label, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |scored AS (
-        |  SELECT query_id, q_label, vec_id, label,
-        |    list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cos
-        |  FROM q JOIN c ON vec_id <> query_id),
-        |ranked AS (
-        |  SELECT query_id, vec_id, cos, (label = q_label) AS same,
-        |    row_number() OVER (PARTITION BY query_id, (label = q_label)
-        |                       ORDER BY cos DESC, vec_id) AS rn
-        |  FROM scored),
-        |pos AS (SELECT query_id, vec_id AS pos_id, cos AS pos_cos
-        |        FROM ranked WHERE same AND rn = 1),
-        |neg AS (SELECT query_id, vec_id AS neg_id, cos AS neg_cos
-        |        FROM ranked WHERE NOT same AND rn = 1)
-        |SELECT q.query_id, CAST(q.q_label AS BIGINT) AS q_label,
-        |  pos_id, round(pos_cos, 6) AS pos_cos,
-        |  neg_id, round(neg_cos, 6) AS neg_cos,
-        |  round(pos_cos - neg_cos, 6) AS margin
-        |FROM q
-        |LEFT JOIN pos ON q.query_id = pos.query_id
-        |LEFT JOIN neg ON q.query_id = neg.query_id
-        |ORDER BY q.query_id""".stripMargin,
-    "top_dup_spans" ->
-      """WITH words AS (
-        |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, array_to_string(ws[i:i+7], ' ') AS span
-        |  FROM words, unnest(range(1, len(ws) - 6)) AS t(i)
-        |  WHERE len(ws) >= 8)
-        |SELECT span, CAST(count(*) AS BIGINT) AS n_occ,
-        |       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |       min(doc_id) AS first_doc
-        |FROM g GROUP BY span
-        |HAVING count(*) > 1
-        |ORDER BY n_occ DESC, span LIMIT 25""".stripMargin,
-    "pagerank_neardup" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
-        |  FROM documents),
-        |tf AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
-        |       FROM toks WHERE length(word) > 0 GROUP BY doc_id, word),
-        |df AS (SELECT word, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY word),
-        |nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        |vec AS (
-        |  SELECT doc_id, word, w FROM (
-        |    SELECT tf.doc_id, tf.word,
-        |      tf * ln(CAST(n AS DOUBLE) / df) AS w,
-        |      row_number() OVER (PARTITION BY tf.doc_id
-        |        ORDER BY tf * ln(CAST(n AS DOUBLE) / df) DESC, tf.word) AS rn
-        |    FROM tf JOIN df USING (word) CROSS JOIN nd
-        |    WHERE df * 8 <= n AND df <= 1000)
-        |  WHERE rn <= 8),
-        |norms AS (
-        |  SELECT doc_id,
-        |    sqrt(CAST(sum(CAST(round(w * w, 12) AS DECIMAL(38,12))) AS DOUBLE)) AS nrm
-        |  FROM vec GROUP BY doc_id),
-        |dots AS (
-        |  SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2,
-        |         sum(CAST(round(a.w * b.w, 12) AS DECIMAL(38,12))) AS dot
-        |  FROM vec a JOIN vec b ON a.word = b.word AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_id_1, doc_id_2 FROM dots
-        |  JOIN norms n1 ON doc_id_1 = n1.doc_id
-        |  JOIN norms n2 ON doc_id_2 = n2.doc_id
-        |  WHERE CAST(dot AS DOUBLE) / (n1.nrm * n2.nrm) >= 0.7),
-        |edges AS (SELECT doc_id_1 AS src, doc_id_2 AS dst FROM pairs
-        |          UNION ALL
-        |          SELECT doc_id_2 AS src, doc_id_1 AS dst FROM pairs),
-        |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY src),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM deg),
-        |p0 AS (SELECT src AS node, 1.0 / n AS pr FROM deg CROSS JOIN nn),
-        |c1 AS (SELECT e.dst AS node, sum(CAST(round(p.pr / d.deg, 12) AS DECIMAL(38,12))) AS s
-        |       FROM edges e JOIN p0 p ON e.src = p.node JOIN deg d ON e.src = d.src
-        |       GROUP BY e.dst),
-        |p1 AS (SELECT deg.src AS node,
-        |         round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / n + 0.85 * CAST(COALESCE(s, 0) AS DOUBLE), 12) AS pr
-        |       FROM deg LEFT JOIN c1 ON deg.src = c1.node CROSS JOIN nn),
-        |c2 AS (SELECT e.dst AS node, sum(CAST(round(p.pr / d.deg, 12) AS DECIMAL(38,12))) AS s
-        |       FROM edges e JOIN p1 p ON e.src = p.node JOIN deg d ON e.src = d.src
-        |       GROUP BY e.dst),
-        |p2 AS (SELECT deg.src AS node,
-        |         round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / n + 0.85 * CAST(COALESCE(s, 0) AS DOUBLE), 12) AS pr
-        |       FROM deg LEFT JOIN c2 ON deg.src = c2.node CROSS JOIN nn),
-        |c3 AS (SELECT e.dst AS node, sum(CAST(round(p.pr / d.deg, 12) AS DECIMAL(38,12))) AS s
-        |       FROM edges e JOIN p2 p ON e.src = p.node JOIN deg d ON e.src = d.src
-        |       GROUP BY e.dst),
-        |p3 AS (SELECT deg.src AS node,
-        |         round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / n + 0.85 * CAST(COALESCE(s, 0) AS DOUBLE), 12) AS pr
-        |       FROM deg LEFT JOIN c3 ON deg.src = c3.node CROSS JOIN nn)
-        |SELECT node AS doc_id, pr AS pagerank
-        |FROM p3 ORDER BY pr DESC, node LIMIT 25""".stripMargin,
-    "cohort_retention" ->
-      """WITH ev AS (
-        |  SELECT user_id,
-        |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS eday
-        |  FROM events),
-        |f AS (SELECT user_id, min(eday) AS fday FROM ev GROUP BY user_id),
-        |cells AS (
-        |  SELECT CAST(floor(fday / 7) AS BIGINT) AS cohort_week,
-        |         CAST(floor((eday - fday) / 7) AS BIGINT) AS week_offset,
-        |         CAST(count(DISTINCT ev.user_id) AS BIGINT) AS n_users
-        |  FROM ev JOIN f ON ev.user_id = f.user_id
-        |  GROUP BY 1, 2),
-        |base AS (SELECT cohort_week, n_users AS cohort_size
-        |         FROM cells WHERE week_offset = 0)
-        |SELECT c.cohort_week, week_offset, n_users, cohort_size,
-        |  round(CAST(n_users AS DOUBLE) / cohort_size, 6) AS retention
-        |FROM cells c JOIN base b ON c.cohort_week = b.cohort_week
-        |ORDER BY c.cohort_week, week_offset""".stripMargin,
-    "zorder_key" ->
-      """WITH li AS (
-        |  SELECT CAST(l_orderkey AS BIGINT) AS orderkey,
-        |         CAST(l_partkey AS BIGINT) AS partkey
-        |  FROM lineitem),
-        |nr AS (SELECT CAST(count(*) AS BIGINT) AS nr FROM li),
-        |r AS (
-        |  SELECT orderkey, partkey,
-        |    CAST(2 * RANK() OVER (ORDER BY orderkey)
-        |         + COUNT(*) OVER (PARTITION BY orderkey) - 1 AS BIGINT) AS rx2,
-        |    CAST(2 * RANK() OVER (ORDER BY partkey)
-        |         + COUNT(*) OVER (PARTITION BY partkey) - 1 AS BIGINT) AS ry2
-        |  FROM li),
-        |b AS (
-        |  SELECT orderkey, partkey,
-        |    CAST(floor((rx2 - 1) * 256 / (nr * 2)) AS BIGINT) AS x,
-        |    CAST(floor((ry2 - 1) * 256 / (nr * 2)) AS BIGINT) AS y
-        |  FROM r CROSS JOIN nr),
-        |s1 AS (SELECT orderkey, partkey,
-        |         ((x | (x << 8)) & 16711935) AS xs,
-        |         ((y | (y << 8)) & 16711935) AS ys FROM b),
-        |s2 AS (SELECT orderkey, partkey,
-        |         ((xs | (xs << 4)) & 252645135) AS xs,
-        |         ((ys | (ys << 4)) & 252645135) AS ys FROM s1),
-        |s3 AS (SELECT orderkey, partkey,
-        |         ((xs | (xs << 2)) & 858993459) AS xs,
-        |         ((ys | (ys << 2)) & 858993459) AS ys FROM s2),
-        |s4 AS (SELECT orderkey, partkey,
-        |         ((xs | (xs << 1)) & 1431655765) AS xs,
-        |         ((ys | (ys << 1)) & 1431655765) AS ys FROM s3)
-        |SELECT orderkey, partkey, (xs | (ys << 1)) AS z
-        |FROM s4 ORDER BY z, orderkey, partkey LIMIT 100""".stripMargin,
-  )
+  def oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracleSql).toMap
 }

@@ -85,24 +85,28 @@ object Verify {
   * checked in seconds instead of re-running the whole registry
   * (tools/smoke_query.py drives it). Session, aux export, and the
   * oracle-json writer are Verify's own, so the dump is representative
-  * by construction. Queries whose oracle reads the aux exports
-  * (simhash, IVF/PQ, LSH, count-min families) need those in place:
-  * set SPARK_GRAFT_AUX to a comma-separated list of oracleAux names,
-  * or "all", to (re)export them first.
+  * by construction. The oracleAux tables the selected queries' oracle
+  * SQL reads (its `OracleAuxDir/<name>` paths) are re-exported first,
+  * and no others.
   */
 object VerifyOne {
+  private val AuxPath =
+    (java.util.regex.Pattern.quote(SparkEntry.OracleAuxDir) +
+      "/([A-Za-z0-9_]+)").r
+
+  /** The oracleAux names an oracle SQL text reads. */
+  private def auxRead(sql: String): Set[String] =
+    AuxPath.findAllMatchIn(sql).map(_.group(1)).toSet
+
   def main(args: Array[String]): Unit = {
     val Array(names, sfDir, outDir) = args
     val spark = Verify.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    sys.env.get("SPARK_GRAFT_AUX").foreach { auxArg =>
-      val auxNames =
-        if (auxArg.trim == "all") SparkEntry.oracleAux.keys
-        else auxArg.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-      Verify.exportAux(spark, sfDir, auxNames)
-    }
-    names.split(',').map(_.trim).filter(_.nonEmpty).foreach { name =>
+    val selected = names.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    Verify.exportAux(spark, sfDir,
+      selected.flatMap(SparkEntry.oracleSql.get).flatMap(auxRead).distinct)
+    selected.foreach { name =>
       SparkEntry.queries(name)(spark, sfDir).coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/$name")
       Cleanup.dropPersisted(spark)

@@ -103,7 +103,7 @@ object TextOps {
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "are",
     "was", "on", "for", "it", "that", "this", "with", "as", "by", "at")
 
-  /** Variant taking a precomputed word array — higher-order array
+  /** Takes a precomputed word array — higher-order array
     * functions are interpreted (CodegenFallback), so callers computing
     * several stats should materialize `words(text)` once and use the
     * `*Of` forms.
@@ -113,8 +113,6 @@ object TextOps {
     when(size(ws) > 0, size(stops).cast("double") / size(ws).cast("double"))
       .otherwise(lit(0.0))
   }
-
-  def stopwordRatio(text: Column): Column = stopwordRatioOf(words(text))
 
   /** Punctuation density: non-alnum-non-space chars / total chars. */
   def punctRatio(text: Column): Column =
@@ -129,8 +127,6 @@ object TextOps {
       aggregate(ws, lit(0L), (acc, w) => acc + length(w).cast("long"))
         .cast("double") / size(ws).cast("double"))
       .otherwise(lit(0.0))
-
-  def meanWordLen(text: Column): Column = meanWordLenOf(words(text))
 
   /** Composite quality score in [0,1]: rewards moderate length, low
     * punctuation density, and a natural stopword ratio. Deterministic,

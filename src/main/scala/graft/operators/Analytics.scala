@@ -755,4 +755,223 @@ object Analytics {
         min(col("n")).as("min_freq"),
         max(col("n")).as("max_freq"))
       .orderBy(col("digits"))
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("zorder_key", (s, d) => zorderKey(s, d),
+      """WITH li AS (
+        |  SELECT CAST(l_orderkey AS BIGINT) AS orderkey,
+        |         CAST(l_partkey AS BIGINT) AS partkey
+        |  FROM lineitem),
+        |nr AS (SELECT CAST(count(*) AS BIGINT) AS nr FROM li),
+        |r AS (
+        |  SELECT orderkey, partkey,
+        |    CAST(2 * RANK() OVER (ORDER BY orderkey)
+        |         + COUNT(*) OVER (PARTITION BY orderkey) - 1 AS BIGINT) AS rx2,
+        |    CAST(2 * RANK() OVER (ORDER BY partkey)
+        |         + COUNT(*) OVER (PARTITION BY partkey) - 1 AS BIGINT) AS ry2
+        |  FROM li),
+        |b AS (
+        |  SELECT orderkey, partkey,
+        |    CAST(floor((rx2 - 1) * 256 / (nr * 2)) AS BIGINT) AS x,
+        |    CAST(floor((ry2 - 1) * 256 / (nr * 2)) AS BIGINT) AS y
+        |  FROM r CROSS JOIN nr),
+        |s1 AS (SELECT orderkey, partkey,
+        |         ((x | (x << 8)) & 16711935) AS xs,
+        |         ((y | (y << 8)) & 16711935) AS ys FROM b),
+        |s2 AS (SELECT orderkey, partkey,
+        |         ((xs | (xs << 4)) & 252645135) AS xs,
+        |         ((ys | (ys << 4)) & 252645135) AS ys FROM s1),
+        |s3 AS (SELECT orderkey, partkey,
+        |         ((xs | (xs << 2)) & 858993459) AS xs,
+        |         ((ys | (ys << 2)) & 858993459) AS ys FROM s2),
+        |s4 AS (SELECT orderkey, partkey,
+        |         ((xs | (xs << 1)) & 1431655765) AS xs,
+        |         ((ys | (ys << 1)) & 1431655765) AS ys FROM s3)
+        |SELECT orderkey, partkey, (xs | (ys << 1)) AS z
+        |FROM s4 ORDER BY z, orderkey, partkey LIMIT 100""".stripMargin),
+    Query("full_outer_nations", (s, d) => fullOuterNationActivity(s, d),
+      """WITH c AS (SELECT CAST(c_nationkey AS BIGINT) AS ck, CAST(count(*) AS BIGINT) AS n_rich_cust
+        |           FROM customer WHERE c_acctbal > 9800.0 GROUP BY 1),
+        |     s AS (SELECT CAST(s_nationkey AS BIGINT) AS sk, CAST(count(*) AS BIGINT) AS n_rich_supp
+        |           FROM supplier WHERE s_acctbal > 5000.0 GROUP BY 1)
+        |SELECT coalesce(ck, sk) AS nationkey,
+        |       coalesce(n_rich_cust, 0) AS n_rich_cust,
+        |       coalesce(n_rich_supp, 0) AS n_rich_supp
+        |FROM c FULL OUTER JOIN s ON ck = sk
+        |ORDER BY nationkey""".stripMargin),
+    Query("stats_lineitem", (s, d) => statsLineitem(s, d),
+      """WITH m AS (
+        |  SELECT l_returnflag,
+        |    CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS sx,
+        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(28,2))) AS DOUBLE) AS sy,
+        |    CAST(sum(CAST(l_quantity*l_quantity AS DECIMAL(28,4))) AS DOUBLE) AS sxx,
+        |    CAST(sum(CAST(l_extendedprice*l_extendedprice AS DECIMAL(28,4))) AS DOUBLE) AS syy,
+        |    CAST(sum(CAST(l_quantity*l_extendedprice AS DECIMAL(28,4))) AS DOUBLE) AS sxy,
+        |    round(quantile_cont(l_quantity, 0.5), 4) AS median_qty
+        |  FROM lineitem GROUP BY l_returnflag)
+        |SELECT l_returnflag, n,
+        |  round((n*sxy - sx*sy) / (sqrt(n*sxx - sx*sx) * sqrt(n*syy - sy*sy)), 6) AS corr_qty_price,
+        |  round((n*sxy - sx*sy) / (n*(n-1)), 4) AS covar_qty_price,
+        |  round(sqrt((n*sxx - sx*sx) / (n*(n-1))), 6) AS stddev_qty,
+        |  median_qty
+        |FROM m ORDER BY l_returnflag""".stripMargin),
+    Query("order_ship_latency", (s, d) => orderShipLatency(s, d),
+      """SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
+        |       CAST(month(o_orderdate) AS BIGINT) AS mon,
+        |       CAST(count(*) AS BIGINT) AS n_lines,
+        |       CAST(sum(date_diff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE))) AS BIGINT) AS total_days,
+        |       CAST(sum(date_diff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE))) AS DOUBLE) / count(*) AS avg_days,
+        |       CAST(min(date_diff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE))) AS BIGINT) AS min_days,
+        |       CAST(max(date_diff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE))) AS BIGINT) AS max_days
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY 1, 2 ORDER BY yr, mon""".stripMargin),
+    Query("rolling_7d_qty", (s, d) => rolling7dQty(s, d),
+      """WITH t AS (
+        |  SELECT l_suppkey, l_orderkey, l_linenumber, l_quantity,
+        |         date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)) AS day
+        |  FROM lineitem WHERE l_suppkey <= 10)
+        |SELECT l_suppkey, l_orderkey, l_linenumber, CAST(day AS BIGINT) AS day,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) OVER (
+        |    PARTITION BY l_suppkey ORDER BY day
+        |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE) AS qty_7d
+        |FROM t ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin),
+    Query("conditional_agg", (s, d) => conditionalAgg(s, d),
+      """SELECT n_name, CAST(count(*) AS BIGINT) AS n_cust,
+        |  CAST(count(*) FILTER (WHERE c_acctbal < 0.0) AS BIGINT) AS n_negative,
+        |  CAST(count(*) FILTER (WHERE c_acctbal > 7000.0) AS BIGINT) AS n_high,
+        |  round(CAST(count(*) FILTER (WHERE c_acctbal < 0.0) AS DOUBLE) / count(*), 6) AS share_negative,
+        |  CAST(sum(CAST(CASE WHEN c_acctbal > 0.0 THEN c_acctbal ELSE 0.0 END AS DECIMAL(28,2))) AS DOUBLE) AS sum_positive
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    Query("string_kit", (s, d) => stringKit(s, d),
+      """SELECT p_partkey,
+        |  concat_ws('-', p_brand, lpad(CAST(p_size AS VARCHAR), 2, '0')) AS brand_size,
+        |  translate(p_type, ' ', '_') AS type_key,
+        |  reverse(p_name) AS name_rev,
+        |  upper(substr(p_name, 1, 5)) AS name_head,
+        |  CAST(length(p_name) AS BIGINT) AS name_len
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    // no ORDER BY: the Spark side deliberately returns the (quadratic
+    // -sized) pair multiset unsorted — see levenshteinPairs' Scaladoc;
+    // the compare is order-independent on both sides
+    Query("levenshtein_pairs", (s, d) => levenshteinPairs(s, d),
+      """SELECT a.p_partkey AS partkey_1, b.p_partkey AS partkey_2, a.p_brand,
+        |       CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS edit_dist
+        |FROM part a JOIN part b ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
+        |WHERE levenshtein(a.p_name, b.p_name) <= 3""".stripMargin),
+    Query("zipf_buckets", (s, d) => zipfBuckets(s, d),
+      """WITH toks AS (
+        |  SELECT lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+        |  FROM documents),
+        |wc AS (SELECT word, CAST(count(*) AS BIGINT) AS n FROM toks WHERE length(word) > 0 GROUP BY word)
+        |SELECT CAST(length(CAST(n AS VARCHAR)) AS BIGINT) AS digits,
+        |       CAST(count(*) AS BIGINT) AS n_words,
+        |       CAST(min(n) AS BIGINT) AS min_freq, CAST(max(n) AS BIGINT) AS max_freq
+        |FROM wc GROUP BY 1 ORDER BY digits""".stripMargin),
+    Query("array_agg_orders", (s, d) => arrayAggOrders(s, d),
+      """SELECT o_custkey,
+        |  array_to_string(list_sort(list_distinct(list(o_orderpriority))), ',') AS prios_csv,
+        |  CAST(len(list_distinct(list(o_orderpriority))) AS BIGINT) AS n_prios,
+        |  list_contains(list(o_orderpriority), '1-URGENT') AS has_urgent,
+        |  list_sort(list_distinct(list(o_orderpriority)))[1] AS first_prio
+        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
+    Query("map_roundtrip", (s, d) => mapRoundtrip(s, d),
+      """SELECT o_orderstatus, o_orderpriority AS priority,
+        |       CAST(count(*) AS BIGINT) AS n_orders
+        |FROM orders GROUP BY 1, 2 ORDER BY o_orderstatus, priority""".stripMargin),
+    Query("source_ids", (s, d) => sourceIds(s, d),
+      """SELECT CAST(regexp_extract(source, 'src([0-9]+)', 1) AS BIGINT) AS source_id,
+        |       CAST(count(*) AS BIGINT) AS n_docs
+        |FROM documents GROUP BY 1 ORDER BY source_id""".stripMargin),
+    Query("upsert_snapshot", (s, d) => upsertSnapshot(s, d),
+      """WITH base AS (
+        |  SELECT o_orderkey, o_orderstatus, o_totalprice
+        |  FROM orders WHERE o_orderkey % 10 <> 0),
+        |upd AS (
+        |  SELECT o_orderkey, 'U' AS o_orderstatus, o_totalprice + 1000.0 AS o_totalprice
+        |  FROM orders WHERE o_orderkey % 3 = 0)
+        |SELECT * FROM (
+        |  SELECT b.* FROM base b WHERE o_orderkey NOT IN (SELECT o_orderkey FROM upd)
+        |  UNION ALL
+        |  SELECT * FROM upd)
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("hash_sample", (s, d) => hashSample(s, d),
+      """SELECT doc_id, lang, n_chars FROM documents
+        |WHERE CAST(concat('0x', substr(md5(text), 1, 4)) AS INTEGER) % 100 < 10
+        |ORDER BY doc_id""".stripMargin),
+    Query("stratified_sample", (s, d) => stratifiedSample(s, d),
+      """SELECT lang, CAST(count(*) AS BIGINT) AS n_kept
+        |FROM documents
+        |WHERE CAST(concat('0x', substr(md5(text), 1, 4)) AS INTEGER) % 100 <
+        |      CASE lang WHEN 'en' THEN 10 WHEN 'de' THEN 50 ELSE 100 END
+        |GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("quota_sample", (s, d) => quotaSample(s, d),
+      """SELECT lang, pick, doc_id FROM (
+        |  SELECT lang, doc_id,
+        |         CAST(row_number() OVER (PARTITION BY lang ORDER BY md5(text) NULLS LAST, doc_id) AS INTEGER) AS pick
+        |  FROM documents)
+        |WHERE pick <= 5 ORDER BY lang, pick""".stripMargin),
+    Query("corr_subquery", (s, d) => corrSubquery(s, d),
+      """SELECT c_custkey,
+        |  (SELECT max(o_totalprice) FROM orders WHERE o_custkey = c_custkey) AS max_price
+        |FROM customer
+        |WHERE c_custkey <= 200
+        |ORDER BY c_custkey""".stripMargin),
+    Query("null_semantics", (s, d) => nullSemantics(s, d),
+      """SELECT o_orderstatus AS status,
+        |  CAST(count(*) AS BIGINT) AS n_all,
+        |  CAST(count(nullif(o_orderpriority, '3-MEDIUM')) AS BIGINT) AS n_nonnull,
+        |  CAST(count(DISTINCT nullif(o_orderpriority, '3-MEDIUM')) AS BIGINT) AS n_distinct_p,
+        |  max(nullif(o_orderpriority, '3-MEDIUM')) AS max_p,
+        |  CAST(count(*) FILTER (WHERE nullif(o_orderpriority, '3-MEDIUM') IS NULL) AS BIGINT) AS n_null
+        |FROM orders GROUP BY o_orderstatus ORDER BY status""".stripMargin),
+    Query("sql_cte_having", (s, d) => sqlCteHaving(s, d),
+      """WITH active AS (
+        |  SELECT c_custkey, c_nationkey FROM customer
+        |  WHERE EXISTS (SELECT 1 FROM orders
+        |                WHERE o_custkey = c_custkey
+        |                  AND o_orderpriority = '1-URGENT'))
+        |SELECT n_name, CAST(count(*) AS BIGINT) AS n_active
+        |FROM active JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name
+        |HAVING count(*) * 25 > (SELECT count(*) FROM active)
+        |ORDER BY n_name""".stripMargin),
+    Query("rank_corr", (s, d) => rankCorr(s, d),
+      """WITH nr AS (SELECT CAST(count(*) AS BIGINT) AS nr FROM lineitem),
+        |r AS (
+        |  SELECT l_quantity AS x, l_extendedprice AS y,
+        |    CAST(2 * RANK() OVER (ORDER BY l_quantity)
+        |         + COUNT(*) OVER (PARTITION BY l_quantity) - 1 AS BIGINT) - nr - 1 AS cx,
+        |    CAST(2 * RANK() OVER (ORDER BY l_extendedprice)
+        |         + COUNT(*) OVER (PARTITION BY l_extendedprice) - 1 AS BIGINT) - nr - 1 AS cy
+        |  FROM lineitem CROSS JOIN nr),
+        |s AS (SELECT
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  sum(CAST(cx AS DECIMAL(38,0)) * CAST(cx AS DECIMAL(38,0))) AS sxx,
+        |  sum(CAST(cy AS DECIMAL(38,0)) * CAST(cy AS DECIMAL(38,0))) AS syy,
+        |  sum(CAST(cx AS DECIMAL(38,0)) * CAST(cy AS DECIMAL(38,0))) AS sxy,
+        |  CAST(sum(CAST(x AS DECIMAL(28,2))) AS DOUBLE) AS px,
+        |  CAST(sum(CAST(y AS DECIMAL(28,2))) AS DOUBLE) AS py,
+        |  CAST(sum(CAST(x * x AS DECIMAL(28,4))) AS DOUBLE) AS pxx,
+        |  CAST(sum(CAST(y * y AS DECIMAL(28,4))) AS DOUBLE) AS pyy,
+        |  CAST(sum(CAST(x * y AS DECIMAL(28,4))) AS DOUBLE) AS pxy
+        |  FROM r)
+        |SELECT n,
+        |  round(CAST(sxy AS DOUBLE) /
+        |    (sqrt(CAST(sxx AS DOUBLE)) * sqrt(CAST(syy AS DOUBLE))), 6) AS spearman_qty_price,
+        |  round((n * pxy - px * py) /
+        |    (sqrt(n * pxx - px * px) * sqrt(n * pyy - py * py)), 6) AS pearson_qty_price
+        |FROM s""".stripMargin),
+    Query("weighted_sample", (s, d) => weightedSample(s, d),
+      """WITH t AS (
+        |  SELECT doc_id,
+        |    CAST(len(list_filter(string_split_regex(text, '[ \t\n]+'), x -> length(x) > 0)) AS BIGINT) AS n_tokens,
+        |    (CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) + 0.5) / 4294967296.0 AS u
+        |  FROM documents)
+        |SELECT doc_id, n_tokens, round(-ln(u) / n_tokens, 9) AS es_key
+        |FROM t WHERE n_tokens > 0
+        |ORDER BY -ln(u) / n_tokens, doc_id
+        |LIMIT 20""".stripMargin))
 }

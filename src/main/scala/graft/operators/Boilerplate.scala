@@ -201,4 +201,111 @@ object Boilerplate {
       .localCheckpoint(eager = false)
       .orderBy(col("doc_id"))
   }
+
+  /** Shared by boilerplate_blocks and boilerplate_filter: per-block
+    * signals predicted from the closed-form HTML page
+    * ([[graft.operators.Boilerplate.htmlView]] — nav at block 0, one
+    * `<p>` per relineated line with the planted entity token and
+    * "read more" anchor, footer last). The oracle never parses HTML:
+    * it derives each block's visible text, word count, and anchor-text
+    * length directly from the integer arithmetic the page was built
+    * with, so only an extractor that actually walks the body, strips
+    * tags, and decodes entities can match it.
+    */
+  private val BoilerSigCte: String = TextQuality.RelineatedCte + """,
+    |ls AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM structured),
+    |lb AS (
+    |  SELECT doc_id, i AS block_idx, 'p' AS tag,
+    |    ls[i]
+    |      || CASE WHEN (doc_id + i - 1) % 13 = 5 THEN ' a<b' ELSE '' END
+    |      || CASE WHEN (doc_id + i - 1) % 5 = 2 THEN ' read more' ELSE '' END AS vis,
+    |    CASE WHEN (doc_id + i - 1) % 5 = 2 THEN 9 ELSE 0 END AS link_len
+    |  FROM ls, unnest(range(1, len(ls) + 1)) AS t(i)),
+    |nv AS (
+    |  SELECT doc_id, 0 AS block_idx, 'nav' AS tag,
+    |    'home about us' AS vis, 12 AS link_len
+    |  FROM structured),
+    |ft AS (
+    |  SELECT doc_id, len(ls) + 1 AS block_idx, 'footer' AS tag,
+    |    'copyright 2024 privacy & terms' AS vis, 12 AS link_len
+    |  FROM ls),
+    |blocks AS (
+    |  SELECT * FROM nv UNION ALL SELECT * FROM lb UNION ALL SELECT * FROM ft),
+    |sig AS (
+    |  SELECT doc_id, CAST(block_idx AS INT) AS block_idx, tag,
+    |    CAST(len(list_filter(string_split_regex(trim(vis), '[ \t]+'),
+    |      w -> length(w) > 0)) AS BIGINT) AS n_words,
+    |    CAST(length(trim(vis)) AS BIGINT) AS text_len,
+    |    CAST(link_len AS BIGINT) AS link_len,
+    |    trim(vis) AS text
+    |  FROM blocks),
+    |verd AS (
+    |  SELECT *,
+    |    CASE WHEN text_len = 0 THEN 1.0
+    |         ELSE round(CAST(link_len AS DOUBLE) / text_len, 6)
+    |    END AS link_density,
+    |    (tag = 'p' AND n_words >= 5
+    |      AND link_len * 100 <= text_len * 33) AS keep
+    |  FROM sig)""".stripMargin
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    // trafilatura/jusText-shaped markup removal over the closed-form
+    // HTML page view: tag strip + entity decode + per-block link
+    // density; verdicts and the extracted-content digest replay in SQL
+    // boilerplate removal: every block verdict predicted from the
+    // closed-form page — see BoilerSigCte
+    Query("boilerplate_blocks", (s, d) => boilerplateBlocks(s, d),
+      (BoilerSigCte + """
+        |SELECT doc_id, block_idx, tag, n_words, text_len, link_len,
+        |  link_density, keep
+        |FROM verd ORDER BY doc_id, block_idx""".stripMargin)),
+    Query("boilerplate_filter", (s, d) => boilerplateFilter(s, d),
+      (BoilerSigCte + """,
+        |per AS (
+        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_blocks,
+        |    CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+        |    md5(coalesce(string_agg(CASE WHEN keep THEN text END,
+        |      chr(10) ORDER BY block_idx), '')) AS clean_md5
+        |  FROM verd GROUP BY doc_id)
+        |SELECT doc_id, n_blocks, n_kept,
+        |  round(CAST(n_kept AS DOUBLE) / n_blocks, 4) AS kept_ratio,
+        |  clean_md5, n_kept >= 3 AS keep
+        |FROM per ORDER BY doc_id""".stripMargin)),
+    // the composed crawl-pipeline stage: C4 line rules over the
+    // boilerplate-EXTRACTED main content — both stages replayed in SQL
+    // html_curated: BOTH pipeline stages replayed — the extracted
+    // main content (kept blocks joined in document order) becomes the
+    // corpus the c4_filter rules run over
+    Query("html_curated", (s, d) => htmlCurated(s, d),
+      (BoilerSigCte + """,
+        |cleaned AS (
+        |  SELECT doc_id, coalesce(string_agg(CASE WHEN keep THEN text END,
+        |    chr(10) ORDER BY block_idx), '') AS text
+        |  FROM verd GROUP BY doc_id),
+        |base AS (
+        |  SELECT doc_id, text,
+        |    string_split(text, chr(10)) AS lines,
+        |    list_filter(string_split(text, chr(10)), l ->
+        |      regexp_matches(trim(l), '[.!?"]$')
+        |      AND len(list_filter(string_split_regex(trim(l), '[ \t]+'), w -> length(w) > 0)) >= 5
+        |      AND NOT contains(lower(l), 'javascript')) AS kept,
+        |    list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
+        |  FROM cleaned),
+        |csig AS (
+        |  SELECT doc_id,
+        |    CAST(len(lines) AS BIGINT) AS n_lines,
+        |    CAST(len(kept) AS BIGINT) AS n_kept_lines,
+        |    round(CASE WHEN len(lines) = 0 THEN 0.0 ELSE CAST(len(kept) AS DOUBLE) / len(lines) END, 4) AS kept_ratio,
+        |    CAST(len(regexp_extract_all(coalesce(array_to_string(kept, chr(10)), ''), '[.!?]')) AS BIGINT) AS n_sentences,
+        |    contains(lower(text), 'lorem ipsum') AS has_lorem,
+        |    contains(text, '{') AS has_brace,
+        |    (list_contains(ws, 'viagra') OR list_contains(ws, 'casino')
+        |      OR list_contains(ws, 'xxx')) AS has_blocked,
+        |    md5(coalesce(array_to_string(kept, chr(10)), '')) AS clean_md5
+        |  FROM base)
+        |SELECT *,
+        |  n_sentences >= 3 AND NOT has_lorem AND NOT has_brace
+        |    AND NOT has_blocked AS keep
+        |FROM csig ORDER BY doc_id""".stripMargin)))
 }

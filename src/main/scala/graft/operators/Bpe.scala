@@ -237,12 +237,6 @@ object Bpe {
     }
   }
 
-  /** Bench hook: force the next demo maintenance to re-run (the
-    * persisted word table deliberately stays — serving from it IS the
-    * maintenance being measured). */
-  private[graft] def invalidateIncrMerges(dir: String): Unit =
-    incrMergeCache.invalidate(dir)
-
   /** Registry entry: the maintained merge table over the merged corpus
     * (original documents + the re-keyed reversed every-29th delta) —
     * [[train]]'s shape. The oracle replays the census merge and the
@@ -327,4 +321,94 @@ object Bpe {
         }
       }
     }
+
+  /** Independent DuckDB replay of the BPE training loop
+    * ([[graft.operators.Bpe]]): k chained CTE triples (pair census →
+    * 1-row argmax → merge application). The segmentation travels as
+    * the same chr(31)-wrapped string the engine uses, so DuckDB's
+    * left-to-right non-overlapping `replace` reproduces the greedy
+    * merge pass exactly (see Bpe's representation Scaladoc for the
+    * proof sketch). The LEFT JOIN ON TRUE guard keeps v_t = v_{t-1}
+    * when a tiny corpus runs out of pairs before k merges.
+    */
+  private[graft] val BpeK = 20
+
+  private[graft] def bpeVocabCte(k: Int, pre: String = "",
+      docsRel: String = "documents"): String = {
+    val S = "chr(31)"
+    val SS = "chr(31) || chr(31)"
+    val sb = new StringBuilder
+    sb.append(
+      s"""WITH ${pre}dtoks AS (
+        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \\t\\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+        |  FROM $docsRel),
+        |v0 AS MATERIALIZED (
+        |  SELECT word, CAST(count(*) AS BIGINT) AS n,
+        |    chr(31) || array_to_string(list_transform(range(1, length(word) + 1), i -> substring(word, CAST(i AS INTEGER), 1)), chr(31) || chr(31)) || chr(31) AS s
+        |  FROM dtoks WHERE length(word) >= 2 GROUP BY word)""".stripMargin)
+    for (t <- 1 to k) {
+      sb.append(s""",
+        |p$t AS (
+        |  SELECT syms[CAST(i AS INTEGER)] AS a, syms[CAST(i AS INTEGER) + 1] AS b, sum(n) AS cnt
+        |  FROM (SELECT n, string_split(s[2:-2], $SS) AS syms FROM v${t - 1}),
+        |       unnest(range(1, len(syms))) AS u$t(i)
+        |  GROUP BY 1, 2),
+        |best$t AS MATERIALIZED (SELECT a, b, cnt FROM p$t ORDER BY cnt DESC, a, b LIMIT 1),
+        |v$t AS MATERIALIZED (
+        |  SELECT word, n, CASE WHEN b.a IS NULL THEN v.s
+        |    ELSE replace(v.s, $S || b.a || $SS || b.b || $S, $S || b.a || b.b || $S) END AS s
+        |  FROM v${t - 1} v LEFT JOIN best$t b ON TRUE)""".stripMargin)
+    }
+    sb.toString
+  }
+
+  private def bpeMergesTail(k: Int): String =
+    "\n" + (1 to k).map(t =>
+      s"""SELECT CAST($t AS INTEGER) AS "rank", a AS lhs, b AS rhs, a || b AS merged, CAST(cnt AS BIGINT) AS n FROM best$t""")
+      .mkString("SELECT * FROM (\n", "\nUNION ALL\n", s"""\n) ORDER BY "rank"""")
+
+  private val BpeTrainSql: String = bpeVocabCte(BpeK) + bpeMergesTail(BpeK)
+
+  /** bpe_incremental oracle: the identical merge-loop replay, over the
+    * merged corpus (documents + the re-keyed reversed every-29th
+    * delta) — training from the merged census is bit-equal to a full
+    * retrain, so the oracle IS the retrain. */
+  private val BpeIncrementalSql: String =
+    bpeVocabCte(BpeK,
+      pre = """mx AS (SELECT max(doc_id) + 1 AS m FROM documents),
+        |docs2 AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + m AS doc_id, reverse(text) AS text
+        |  FROM documents, mx WHERE doc_id % 29 = 3),
+        |""".stripMargin,
+      docsRel = "docs2") + bpeMergesTail(BpeK)
+
+  private val BpeTokenizeSql: String =
+    bpeVocabCte(BpeK) +
+      s""",
+        |tokc AS (
+        |  SELECT word, CAST(1 + (length(s) - length(replace(s, chr(31) || chr(31), ''))) // 2 AS BIGINT) AS tok FROM v$BpeK
+        |  UNION ALL
+        |  SELECT DISTINCT word, CAST(1 AS BIGINT) FROM dtoks WHERE length(word) = 1),
+        |dw AS (
+        |  SELECT doc_id, word, CAST(count(*) AS BIGINT) AS c
+        |  FROM dtoks WHERE length(word) > 0 GROUP BY doc_id, word),
+        |agg AS (
+        |  SELECT doc_id, sum(c) AS w, sum(c * tok) AS t, sum(c * length(word)) AS ch
+        |  FROM dw JOIN tokc USING (word) GROUP BY doc_id)
+        |SELECT d.doc_id,
+        |  CAST(coalesce(a.w, 0) AS BIGINT) AS n_words,
+        |  CAST(coalesce(a.t, 0) AS BIGINT) AS n_tokens,
+        |  CAST(coalesce(a.ch, 0) AS BIGINT) AS n_chars,
+        |  round(CASE WHEN coalesce(a.t, 0) = 0 THEN 0.0 ELSE CAST(a.ch AS DOUBLE) / a.t END, 6) AS chars_per_token
+        |FROM documents d LEFT JOIN agg a USING (doc_id)
+        |ORDER BY doc_id""".stripMargin
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("bpe_train", (s, d) => train(s, d, BpeK), BpeTrainSql),
+    Query("bpe_incremental", (s, d) => incrementalTrain(s, d, BpeK),
+      BpeIncrementalSql),
+    Query("bpe_tokenize", (s, d) => tokenizeDocs(s, d, BpeK), BpeTokenizeSql))
 }

@@ -389,18 +389,6 @@ object Dedup {
   private def derivedMinHashes(base: Column): Seq[Column] =
     (0 until NumHashes).map(i => min(xxhash64(lit(i), base)).as(s"h$i"))
 
-  /** MinHash signature per doc: NumHashes derived permutations of one
-    * base xxhash64, each a plain `min` aggregate, so the whole
-    * signature is ONE map-side-combined hash aggregate — no per-doc
-    * array materialization of shingles.
-    */
-  def minhashSignatures(docs: DataFrame, n: Int = 3): DataFrame = {
-    val hashes = derivedMinHashes(col("ng"))
-    docNgrams(docs, n)
-      .groupBy(col("doc_id"))
-      .agg(hashes.head, hashes.tail: _*)
-  }
-
   /** Candidate pairs via banding: docs agreeing on all BandRows hashes
     * of any band. Emits b rows per doc (constant fanout), self-joins on
     * the (band, band_hash) key.
@@ -1092,4 +1080,324 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
       .orderBy(col("doc_id_1"), col("doc_id_2"))
   }
+
+  /** Shared by dup_span_coverage and dup_span_coverage128: the oracle
+    * groups the literal gram STRINGS, so one SQL gates both the 64-bit
+    * and the 128-bit hash-keyed modes — the hash width is an engine-side
+    * implementation detail the result must be independent of.
+    */
+  private val DupSpanCoverageOracle: String =
+    """WITH words AS (
+      |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
+      |  FROM documents),
+      |g AS (
+      |  SELECT doc_id, array_to_string(ws[i:i+7], ' ') AS gram
+      |  FROM words, unnest(range(1, len(ws) - 6)) AS t(i)
+      |  WHERE len(ws) >= 8),
+      |pg AS (SELECT doc_id, gram, CAST(count(*) AS BIGINT) AS tf
+      |       FROM g GROUP BY doc_id, gram),
+      |occ AS (SELECT gram, CAST(sum(tf) AS BIGINT) AS n_occ
+      |        FROM pg GROUP BY gram),
+      |per AS (
+      |  SELECT pg.doc_id,
+      |    CAST(sum(tf) AS BIGINT) AS n_grams,
+      |    CAST(sum(CASE WHEN n_occ > 1 THEN tf ELSE 0 END) AS BIGINT) AS n_dup_grams
+      |  FROM pg JOIN occ ON pg.gram = occ.gram
+      |  GROUP BY pg.doc_id)
+      |SELECT d.doc_id,
+      |  COALESCE(n_grams, 0) AS n_grams,
+      |  COALESCE(n_dup_grams, 0) AS n_dup_grams,
+      |  CASE WHEN n_grams IS NULL THEN 0.0
+      |       ELSE round(CAST(n_dup_grams AS DOUBLE) / CAST(n_grams AS DOUBLE), 6)
+      |  END AS dup_frac
+      |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
+      |ORDER BY d.doc_id""".stripMargin
+
+  /** Transitive closure of the exact >= 0.5 Jaccard pair graph —
+    * shared by `dedup_clusters` (label propagation) and
+    * `dedup_clusters_star` (large-star/small-star): the two
+    * formulations must produce identical components.
+    */
+  private val DedupClustersOracle: String =
+    """WITH RECURSIVE words AS (
+      |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
+      |  FROM documents),
+      |ng AS (
+      |  SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS ngram
+      |  FROM words, unnest(range(1, len(ws) - 1)) AS t(i)
+      |  WHERE len(ws) >= 3),
+      |sizes AS (SELECT doc_id, count(*) AS n FROM ng GROUP BY doc_id),
+      |inter AS (
+      |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
+      |  FROM ng a JOIN ng b ON a.ngram = b.ngram AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2),
+      |p AS (
+      |  SELECT d1, d2 FROM inter
+      |  JOIN sizes s1 ON d1 = s1.doc_id JOIN sizes s2 ON d2 = s2.doc_id
+      |  WHERE CAST(c AS DOUBLE) / CAST(s1.n + s2.n - c AS DOUBLE) >= 0.5),
+      |edges AS (
+      |  SELECT d1 AS src, d2 AS dst FROM p
+      |  UNION ALL SELECT d2, d1 FROM p),
+      |reach(src, dst) AS (
+      |  SELECT src, dst FROM edges
+      |  UNION
+      |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
+      |SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
+      |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin
+
+  /** Shared by dedup_ngram_jaccard (exact path) and dedup_minhash_lsh:
+    * with these LSH parameters (n=64, r=2, b=32) the candidate miss
+    * probability at the 0.5 threshold is < 1e-14, so the LSH output
+    * equals the exact similarity join and both check against the same
+    * brute-force DuckDB oracle.
+    */
+  private val NgramJaccardOracle: String =
+    """WITH words AS (
+      |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
+      |  FROM documents),
+      |ng AS (
+      |  SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS ngram
+      |  FROM words, unnest(range(1, len(ws) - 1)) AS t(i)
+      |  WHERE len(ws) >= 3),
+      |sizes AS (SELECT doc_id, count(*) AS n FROM ng GROUP BY doc_id),
+      |inter AS (
+      |  SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2, count(*) AS c
+      |  FROM ng a JOIN ng b ON a.ngram = b.ngram AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2)
+      |SELECT doc_id_1, doc_id_2,
+      |       round(CAST(c AS DOUBLE) / CAST(s1.n + s2.n - c AS DOUBLE), 6) AS jaccard
+      |FROM inter
+      |JOIN sizes s1 ON doc_id_1 = s1.doc_id
+      |JOIN sizes s2 ON doc_id_2 = s2.doc_id
+      |WHERE CAST(c AS DOUBLE) / CAST(s1.n + s2.n - c AS DOUBLE) >= 0.5
+      |ORDER BY doc_id_1, doc_id_2""".stripMargin
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("dedup_exact", (s, d) => exactDedup(s, d),
+      """SELECT doc_id, md5(text) AS content_key,
+        |  count(*) OVER (PARTITION BY md5(text)) AS cluster_size,
+        |  doc_id = min(doc_id) OVER (PARTITION BY md5(text)) AS is_keeper
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("dedup_fingerprint", (s, d) => fingerprintDedup(s, d),
+      """SELECT doc_id,
+        |  md5(array_to_string(list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0), ' ')) AS content_key,
+        |  count(*) OVER (PARTITION BY md5(array_to_string(list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0), ' '))) AS cluster_size,
+        |  doc_id = min(doc_id) OVER (PARTITION BY md5(array_to_string(list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0), ' '))) AS is_keeper
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("dedup_ngram_jaccard", (s, d) => ngramJaccardDedup(s, d),
+      NgramJaccardOracle),
+    Query("dedup_minhash_lsh", (s, d) => minhashLshDedup(s, d),
+      NgramJaccardOracle),
+    // SimHash oracles recompute the bit votes, fingerprint pack, and
+    // (for pairs) the ground-truth quadratic hamming join from the
+    // Spark-exported word-hash table (oracleAux: DuckDB has no
+    // xxhash64). Shift semantics match Spark: >> is arithmetic on
+    // BIGINT in both engines, and (wh >> i) & 1 extracts bit i either
+    // way; bit 63 of the pack is the MIN_VALUE literal because DuckDB
+    // errors on 1 << 63 rather than wrapping.
+    Query("dedup_simhash", (s, d) => simhashDedup(s, d),
+      """WITH w AS (SELECT doc_id, tf, wh
+        |           FROM read_parquet('/tmp/graft_oracle_aux/simhash_words/*.parquet')),
+        |bits AS (
+        |  SELECT w.doc_id, t.i,
+        |         SUM(CASE WHEN ((w.wh >> t.i) & 1) = 1 THEN w.tf ELSE -w.tf END) AS s
+        |  FROM w, range(64) t(i)
+        |  GROUP BY w.doc_id, t.i),
+        |fp AS (
+        |  SELECT doc_id,
+        |         bit_or(CASE WHEN s > 0 THEN
+        |           (CASE WHEN i = 63 THEN (-9223372036854775807 - 1)
+        |                 ELSE (1::BIGINT << CAST(i AS INTEGER)) END)
+        |           ELSE 0 END) AS simhash
+        |  FROM bits GROUP BY doc_id)
+        |SELECT doc_id, to_hex(simhash) AS simhash_hex
+        |FROM fp ORDER BY doc_id""".stripMargin),
+    Query("dedup_clusters", (s, d) => nearDupClusters(s, d),
+      DedupClustersOracle),
+    // same pair graph, same transitive closure — the star formulation
+    // must be output-identical to label propagation
+    Query("dedup_clusters_star", (s, d) => nearDupClustersStar(s, d),
+      DedupClustersOracle),
+    Query("decontaminate", (s, d) => decontaminate(s, d),
+      """WITH words AS (
+        |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
+        |  FROM documents),
+        |ng AS (
+        |  SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS ngram
+        |  FROM words, unnest(range(1, len(ws) - 1)) AS t(i)
+        |  WHERE len(ws) >= 3),
+        |shared AS (
+        |  SELECT t.doc_id, b.doc_id AS bench_id, count(*) AS n_shared
+        |  FROM ng t JOIN ng b ON t.ngram = b.ngram
+        |  WHERE t.doc_id >= 50 AND b.doc_id < 50
+        |  GROUP BY t.doc_id, b.doc_id
+        |  HAVING count(*) >= 5)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_contaminated_refs,
+        |       CAST(max(n_shared) AS BIGINT) AS max_shared
+        |FROM shared GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("simhash_pairs", (s, d) => simhashPairs(s, d),
+      """WITH w AS (SELECT doc_id, tf, wh
+        |           FROM read_parquet('/tmp/graft_oracle_aux/simhash_words/*.parquet')),
+        |bits AS (
+        |  SELECT w.doc_id, t.i,
+        |         SUM(CASE WHEN ((w.wh >> t.i) & 1) = 1 THEN w.tf ELSE -w.tf END) AS s
+        |  FROM w, range(64) t(i)
+        |  GROUP BY w.doc_id, t.i),
+        |fp AS (
+        |  SELECT doc_id,
+        |         bit_or(CASE WHEN s > 0 THEN
+        |           (CASE WHEN i = 63 THEN (-9223372036854775807 - 1)
+        |                 ELSE (1::BIGINT << CAST(i AS INTEGER)) END)
+        |           ELSE 0 END) AS simhash
+        |  FROM bits GROUP BY doc_id)
+        |SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2,
+        |       bit_count(xor(a.simhash, b.simhash)) AS hamming
+        |FROM fp a JOIN fp b ON a.doc_id < b.doc_id
+        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+        |ORDER BY doc_id_1, doc_id_2""".stripMargin),
+    Query("dup_span_coverage", (s, d) => dupSpanCoverage(s, d),
+      DupSpanCoverageOracle),
+    // the at-scale (128-bit gram key) mode of the same operator: both
+    // gated against the identical string-keyed oracle, so the shipped
+    // answer to the 64-bit birthday-bound caveat is itself oracle-green
+    Query("dup_span_coverage128",
+      (s, d) => dupSpanCoverage(s, d, wideHash = true),
+      DupSpanCoverageOracle),
+    Query("top_dup_spans", (s, d) => topDupSpans(s, d),
+      """WITH words AS (
+        |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
+        |  FROM documents),
+        |g AS (
+        |  SELECT doc_id, array_to_string(ws[i:i+7], ' ') AS span
+        |  FROM words, unnest(range(1, len(ws) - 6)) AS t(i)
+        |  WHERE len(ws) >= 8)
+        |SELECT span, CAST(count(*) AS BIGINT) AS n_occ,
+        |       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+        |       min(doc_id) AS first_doc
+        |FROM g GROUP BY span
+        |HAVING count(*) > 1
+        |ORDER BY n_occ DESC, span LIMIT 25""".stripMargin),
+    // same tokenization/window CTEs as DupSpanCoverageOracle, then the
+    // removal semantics replayed set-wise: a word position is covered
+    // iff a duplicated 8-word window starts within the 7 positions at
+    // or before it
+    Query("dedup_span_removal",
+      (s, d) => dupSpanRemoval(Tables.documents(s, d)),
+      """WITH words0 AS (
+        |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
+        |  FROM documents),
+        |w AS (
+        |  SELECT doc_id, i - 1 AS idx, ws[i] AS w
+        |  FROM words0, unnest(range(1, len(ws) + 1)) AS t(i)),
+        |g AS (
+        |  SELECT doc_id, i - 1 AS s, array_to_string(ws[i:i+7], ' ') AS gram
+        |  FROM words0, unnest(range(1, len(ws) - 6)) AS t(i)
+        |  WHERE len(ws) >= 8),
+        |occ AS (SELECT gram FROM g GROUP BY gram HAVING count(*) > 1),
+        |dup AS (SELECT g.doc_id, g.s FROM g JOIN occ ON g.gram = occ.gram),
+        |cov AS (
+        |  SELECT w.doc_id, w.idx, any_value(w.w) AS w,
+        |         count(dup.s) AS nc
+        |  FROM w LEFT JOIN dup
+        |    ON dup.doc_id = w.doc_id AND dup.s BETWEEN w.idx - 7 AND w.idx
+        |  GROUP BY w.doc_id, w.idx),
+        |kept AS (
+        |  SELECT doc_id, string_agg(w, ' ' ORDER BY idx) AS clean_text,
+        |         CAST(count(*) AS BIGINT) AS n_kept
+        |  FROM cov WHERE nc = 0 GROUP BY doc_id),
+        |tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words
+        |        FROM w GROUP BY doc_id)
+        |SELECT d.doc_id,
+        |  COALESCE(kept.clean_text, '') AS clean_text,
+        |  COALESCE(tot.n_words, 0) AS n_words,
+        |  COALESCE(tot.n_words, 0) - COALESCE(kept.n_kept, 0) AS n_removed
+        |FROM documents d
+        |LEFT JOIN tot ON d.doc_id = tot.doc_id
+        |LEFT JOIN kept ON d.doc_id = kept.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
+    // over the re-lineated view: the raw corpus has no line structure
+    // (TextQuality.relineated Scaladoc), and the view's planted
+    // boilerplate line is exactly the cross-doc duplicate to find
+    Query("line_dedup",
+      (s, d) => lineDedup(TextQuality.relineated(Tables.documents(s, d))),
+      (TextQuality.RelineatedCte + """,
+        |ls AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM structured),
+        |lines AS (
+        |  SELECT doc_id, i AS idx, trim(ls[i]) AS l
+        |  FROM ls, unnest(range(1, len(ls) + 1)) AS t(i)
+        |  WHERE length(trim(ls[i])) > 0),
+        |occ AS (SELECT l, CAST(count(*) AS BIGINT) AS n_occ FROM lines GROUP BY l),
+        |kept AS (
+        |  SELECT doc_id, idx, lines.l, n_occ < 3 AS keep
+        |  FROM lines JOIN occ USING (l)),
+        |per AS (
+        |  SELECT doc_id,
+        |    CAST(count(*) AS BIGINT) AS n_lines,
+        |    CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT) AS n_removed,
+        |    md5(coalesce(string_agg(CASE WHEN keep THEN l END, chr(10) ORDER BY idx), '')) AS clean_md5
+        |  FROM kept GROUP BY doc_id)
+        |SELECT d.doc_id,
+        |  coalesce(n_lines, 0) AS n_lines,
+        |  coalesce(n_removed, 0) AS n_removed,
+        |  coalesce(clean_md5, md5('')) AS clean_md5
+        |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
+        |ORDER BY d.doc_id""".stripMargin)),
+    Query("pagerank_neardup", (s, d) => pagerankNearDup(s, d),
+      """WITH toks AS (
+        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+        |  FROM documents),
+        |tf AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
+        |       FROM toks WHERE length(word) > 0 GROUP BY doc_id, word),
+        |df AS (SELECT word, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY word),
+        |nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+        |vec AS (
+        |  SELECT doc_id, word, w FROM (
+        |    SELECT tf.doc_id, tf.word,
+        |      tf * ln(CAST(n AS DOUBLE) / df) AS w,
+        |      row_number() OVER (PARTITION BY tf.doc_id
+        |        ORDER BY tf * ln(CAST(n AS DOUBLE) / df) DESC, tf.word) AS rn
+        |    FROM tf JOIN df USING (word) CROSS JOIN nd
+        |    WHERE df * 8 <= n AND df <= 1000)
+        |  WHERE rn <= 8),
+        |norms AS (
+        |  SELECT doc_id,
+        |    sqrt(CAST(sum(CAST(round(w * w, 12) AS DECIMAL(38,12))) AS DOUBLE)) AS nrm
+        |  FROM vec GROUP BY doc_id),
+        |dots AS (
+        |  SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2,
+        |         sum(CAST(round(a.w * b.w, 12) AS DECIMAL(38,12))) AS dot
+        |  FROM vec a JOIN vec b ON a.word = b.word AND a.doc_id < b.doc_id
+        |  GROUP BY 1, 2),
+        |pairs AS (
+        |  SELECT doc_id_1, doc_id_2 FROM dots
+        |  JOIN norms n1 ON doc_id_1 = n1.doc_id
+        |  JOIN norms n2 ON doc_id_2 = n2.doc_id
+        |  WHERE CAST(dot AS DOUBLE) / (n1.nrm * n2.nrm) >= 0.7),
+        |edges AS (SELECT doc_id_1 AS src, doc_id_2 AS dst FROM pairs
+        |          UNION ALL
+        |          SELECT doc_id_2 AS src, doc_id_1 AS dst FROM pairs),
+        |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY src),
+        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM deg),
+        |p0 AS (SELECT src AS node, 1.0 / n AS pr FROM deg CROSS JOIN nn),
+        |c1 AS (SELECT e.dst AS node, sum(CAST(round(p.pr / d.deg, 12) AS DECIMAL(38,12))) AS s
+        |       FROM edges e JOIN p0 p ON e.src = p.node JOIN deg d ON e.src = d.src
+        |       GROUP BY e.dst),
+        |p1 AS (SELECT deg.src AS node,
+        |         round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / n + 0.85 * CAST(COALESCE(s, 0) AS DOUBLE), 12) AS pr
+        |       FROM deg LEFT JOIN c1 ON deg.src = c1.node CROSS JOIN nn),
+        |c2 AS (SELECT e.dst AS node, sum(CAST(round(p.pr / d.deg, 12) AS DECIMAL(38,12))) AS s
+        |       FROM edges e JOIN p1 p ON e.src = p.node JOIN deg d ON e.src = d.src
+        |       GROUP BY e.dst),
+        |p2 AS (SELECT deg.src AS node,
+        |         round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / n + 0.85 * CAST(COALESCE(s, 0) AS DOUBLE), 12) AS pr
+        |       FROM deg LEFT JOIN c2 ON deg.src = c2.node CROSS JOIN nn),
+        |c3 AS (SELECT e.dst AS node, sum(CAST(round(p.pr / d.deg, 12) AS DECIMAL(38,12))) AS s
+        |       FROM edges e JOIN p2 p ON e.src = p.node JOIN deg d ON e.src = d.src
+        |       GROUP BY e.dst),
+        |p3 AS (SELECT deg.src AS node,
+        |         round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / n + 0.85 * CAST(COALESCE(s, 0) AS DOUBLE), 12) AS pr
+        |       FROM deg LEFT JOIN c3 ON deg.src = c3.node CROSS JOIN nn)
+        |SELECT node AS doc_id, pr AS pagerank
+        |FROM p3 ORDER BY pr DESC, node LIMIT 25""".stripMargin))
 }

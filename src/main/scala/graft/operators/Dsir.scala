@@ -102,4 +102,58 @@ object Dsir {
       .orderBy(col("gumbel_key").desc, col("doc_id"))
       .limit(k)
   }
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("dsir_weights", (s, d) => importanceWeights(s, d),
+      """WITH toks AS (
+        |  SELECT doc_id, lang,
+        |    CAST(concat('0x', substr(md5(word), 1, 8)) AS BIGINT) % 1024 AS b
+        |  FROM (
+        |    SELECT doc_id, lang,
+        |      lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+        |    FROM documents) t
+        |  WHERE length(word) > 0),
+        |stats AS (
+        |  SELECT b, count(*) AS n_raw,
+        |    sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_tgt
+        |  FROM toks GROUP BY b),
+        |totals AS (SELECT sum(n_raw) AS t_raw, sum(n_tgt) AS t_tgt FROM stats),
+        |ratios AS (
+        |  SELECT b,
+        |    CAST(round(ln((n_tgt + 1.0) / (t_tgt + 1024.0))
+        |             - ln((n_raw + 1.0) / (t_raw + 1024.0)), 12) AS DECIMAL(20,12)) AS lr
+        |  FROM stats, totals)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+        |  CAST(sum(lr) AS DOUBLE) AS log_weight
+        |FROM toks JOIN ratios USING (b)
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("dsir_sample", (s, d) => gumbelTopK(s, d),
+      """WITH toks AS (
+        |  SELECT doc_id, lang,
+        |    CAST(concat('0x', substr(md5(word), 1, 8)) AS BIGINT) % 1024 AS b
+        |  FROM (
+        |    SELECT doc_id, lang,
+        |      lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+        |    FROM documents) t
+        |  WHERE length(word) > 0),
+        |stats AS (
+        |  SELECT b, count(*) AS n_raw,
+        |    sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_tgt
+        |  FROM toks GROUP BY b),
+        |totals AS (SELECT sum(n_raw) AS t_raw, sum(n_tgt) AS t_tgt FROM stats),
+        |ratios AS (
+        |  SELECT b,
+        |    CAST(round(ln((n_tgt + 1.0) / (t_tgt + 1024.0))
+        |             - ln((n_raw + 1.0) / (t_raw + 1024.0)), 12) AS DECIMAL(20,12)) AS lr
+        |  FROM stats, totals),
+        |w AS (
+        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+        |    CAST(sum(lr) AS DOUBLE) AS log_weight
+        |  FROM toks JOIN ratios USING (b) GROUP BY doc_id)
+        |SELECT doc_id, n_tokens, log_weight,
+        |  round(log_weight + (-ln(-ln(
+        |    (CAST(concat('0x', substr(md5('dsir' || CAST(doc_id AS VARCHAR)), 1, 6)) AS BIGINT) + 0.5) / 16777216.0))), 9) AS gumbel_key
+        |FROM w
+        |ORDER BY gumbel_key DESC, doc_id LIMIT 100""".stripMargin))
 }

@@ -190,4 +190,92 @@ object EventOps {
           .as("retention"))
       .orderBy(col("cohort_week"), col("week_offset"))
   }
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("hourly_rollup", (s, d) => hourlyRollup(s, d),
+      """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_start,
+        |       event_type, CAST(count(*) AS BIGINT) AS n_events,
+        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
+        |       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+        |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin),
+    Query("sessionize", (s, d) => sessionize(s, d),
+      """WITH e AS (
+        |  SELECT user_id, event_id, ts,
+        |    CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS sec,
+        |    lag(CAST(epoch(date_trunc('second', ts)) AS BIGINT))
+        |      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_sec
+        |  FROM events),
+        |flagged AS (
+        |  SELECT user_id, event_id, ts, sec,
+        |    CASE WHEN prev_sec IS NULL OR sec - prev_sec > 1800 THEN 1 ELSE 0 END AS new_session
+        |  FROM e),
+        |sessions AS (
+        |  SELECT user_id, sec,
+        |    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
+        |  FROM flagged),
+        |per_session AS (
+        |  SELECT user_id, session_id, CAST(count(*) AS BIGINT) AS n_events,
+        |    max(sec) - min(sec) AS duration_sec
+        |  FROM sessions GROUP BY user_id, session_id)
+        |SELECT user_id, CAST(max(session_id) AS BIGINT) AS n_sessions,
+        |       CAST(sum(n_events) AS BIGINT) AS n_events,
+        |       CAST(max(duration_sec) AS BIGINT) AS longest_session_sec
+        |FROM per_session GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Query("json_prop_rollup", (s, d) => jsonPropRollup(s, d),
+      """SELECT CAST(floor(CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS BIGINT) / 10.0) AS BIGINT) AS k_bucket,
+        |       CAST(count(*) AS BIGINT) AS n,
+        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |FROM events GROUP BY 1 ORDER BY k_bucket""".stripMargin),
+    Query("type_funnel", (s, d) => typeFunnel(s, d),
+      """WITH agg AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n FROM events GROUP BY event_type)
+        |SELECT event_type, n, round(CAST(n AS DOUBLE) / CAST(sum(n) OVER () AS DOUBLE), 6) AS share
+        |FROM agg ORDER BY event_type""".stripMargin),
+    Query("cohort_retention", (s, d) => cohortRetention(s, d),
+      """WITH ev AS (
+        |  SELECT user_id,
+        |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS eday
+        |  FROM events),
+        |f AS (SELECT user_id, min(eday) AS fday FROM ev GROUP BY user_id),
+        |cells AS (
+        |  SELECT CAST(floor(fday / 7) AS BIGINT) AS cohort_week,
+        |         CAST(floor((eday - fday) / 7) AS BIGINT) AS week_offset,
+        |         CAST(count(DISTINCT ev.user_id) AS BIGINT) AS n_users
+        |  FROM ev JOIN f ON ev.user_id = f.user_id
+        |  GROUP BY 1, 2),
+        |base AS (SELECT cohort_week, n_users AS cohort_size
+        |         FROM cells WHERE week_offset = 0)
+        |SELECT c.cohort_week, week_offset, n_users, cohort_size,
+        |  round(CAST(n_users AS DOUBLE) / cohort_size, 6) AS retention
+        |FROM cells c JOIN base b ON c.cohort_week = b.cohort_week
+        |ORDER BY c.cohort_week, week_offset""".stripMargin),
+    // rolling_users_7d: the HLL estimate crosses engines as DATA (aux
+    // export, same pattern as the ANN indexes); the deterministic part
+    // — which days exist, which feed each 7-day window, n_days — is
+    // recomputed independently. LEFT JOIN, not INNER: the aux comes
+    // from the same Spark function under test, so a day the Spark side
+    // dropped would vanish from an inner join in lockstep and go
+    // undetected — the left join keeps the independently-derived spine
+    // authoritative, surfacing a dropped day as a NULL estimate row
+    // the hash compare then catches (extra/mispaired days change the
+    // row set either way).
+    Query("rolling_users_7d", (s, d) => rollingUsers7d(s, d),
+      """WITH days AS (
+        |  SELECT DISTINCT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day FROM events),
+        |w AS (
+        |  SELECT a.day, CAST(count(*) AS BIGINT) AS n_days
+        |  FROM days a JOIN days b ON b.day BETWEEN a.day - 6 AND a.day
+        |  GROUP BY a.day)
+        |SELECT w.day, s.approx_users_7d, w.n_days
+        |FROM w LEFT JOIN read_parquet('/tmp/graft_oracle_aux/rolling_users_7d_est/*.parquet') s USING (day)
+        |ORDER BY w.day""".stripMargin),
+    Query("type_transitions", (s, d) => typeTransitions(s, d),
+      """WITH seq AS (
+        |  SELECT user_id, event_type,
+        |         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
+        |  FROM events)
+        |SELECT prev_type, event_type, CAST(count(*) AS BIGINT) AS n
+        |FROM seq WHERE prev_type IS NOT NULL
+        |GROUP BY prev_type, event_type ORDER BY prev_type, event_type""".stripMargin))
 }

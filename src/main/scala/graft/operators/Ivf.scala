@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.operators.Similarity.{cosine, topKPerQuery}
+import graft.operators.Query.OracleAuxDir
 
 /** IVF (inverted-file) ANN: partition the vector space by a small set
   * of centroids (Lloyd iterations, all DataFrame ops), store each
@@ -732,4 +733,90 @@ object Ivf {
       }
     }
   }
+
+  /** Shared IVF search oracle (see the ivf_topk/ann_topk entries):
+    * probe the nProbe nearest exported centroids per query (ties on
+    * cid, matching the Spark window's (qd, cid) order), score every
+    * vector assigned to a probed cell, rank (cos desc, vec_id), top 5.
+    */
+  private[graft] def IvfSearchOracle(nProbe: Int): String =
+    s"""WITH cents AS (SELECT cid, CAST(cvec AS DOUBLE[]) AS cv
+       |               FROM read_parquet('/tmp/graft_oracle_aux/ivf_centroids/*.parquet')),
+       |cells AS (SELECT vec_id, cell FROM read_parquet('/tmp/graft_oracle_aux/ivf_cells/*.parquet')),
+       |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
+       |probes AS (
+       |  SELECT query_id, cid FROM (
+       |    SELECT q.query_id, c.cid,
+       |           row_number() OVER (PARTITION BY q.query_id ORDER BY
+       |             -(list_dot_product(q.qv, c.cv) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.cv, c.cv)))),
+       |             c.cid) AS rn
+       |    FROM q, cents c) WHERE rn <= $nProbe),
+       |scored AS (
+       |  SELECT q.query_id, e.vec_id,
+       |         list_dot_product(q.qv, e.v) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(e.v, e.v))) AS cos
+       |  FROM q JOIN probes p ON q.query_id = p.query_id
+       |       JOIN cells ce ON ce.cell = p.cid
+       |       JOIN e ON e.vec_id = ce.vec_id
+       |  WHERE e.vec_id <> q.query_id),
+       |ranked AS (
+       |  SELECT query_id, vec_id, cos,
+       |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
+       |  FROM scored)
+       |SELECT query_id, vec_id AS neighbor_id, rank, round(cos, 6) AS cos_sim
+       |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+
+  /** ivf_incremental_topk oracle: same probe/score/rank replay as
+    * [[IvfSearchOracle]], but over the MERGED corpus (original
+    * embeddings plus the re-keyed reversed every-17th slice, rebuilt
+    * here in SQL — the oracle never sees Spark's union) under the
+    * exported MAINTAINED index. Mis-assigned delta vectors, a stale
+    * centroid table, or a wrong merged id-space all mismatch.
+    */
+  private val IvfIncrSearchOracle: String =
+    s"""WITH cents AS (SELECT cid, CAST(cvec AS DOUBLE[]) AS cv
+       |               FROM read_parquet('$OracleAuxDir/ivf_incr_centroids/*.parquet')),
+       |cells AS (SELECT vec_id, cell FROM read_parquet('$OracleAuxDir/ivf_incr_cells/*.parquet')),
+       |mx AS (SELECT max(vec_id) + 1 AS m FROM embeddings),
+       |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+       |      UNION ALL
+       |      SELECT vec_id + (SELECT m FROM mx),
+       |             CAST(list_reverse(embedding) AS DOUBLE[])
+       |      FROM embeddings WHERE vec_id % 17 = 4),
+       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
+       |probes AS (
+       |  SELECT query_id, cid FROM (
+       |    SELECT q.query_id, c.cid,
+       |           row_number() OVER (PARTITION BY q.query_id ORDER BY
+       |             -(list_dot_product(q.qv, c.cv) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.cv, c.cv)))),
+       |             c.cid) AS rn
+       |    FROM q, cents c) WHERE rn <= 4),
+       |scored AS (
+       |  SELECT q.query_id, e.vec_id,
+       |         list_dot_product(q.qv, e.v) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(e.v, e.v))) AS cos
+       |  FROM q JOIN probes p ON q.query_id = p.query_id
+       |       JOIN cells ce ON ce.cell = p.cid
+       |       JOIN e ON e.vec_id = ce.vec_id
+       |  WHERE e.vec_id <> q.query_id),
+       |ranked AS (
+       |  SELECT query_id, vec_id, cos,
+       |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
+       |  FROM scored)
+       |SELECT query_id, vec_id AS neighbor_id, rank, round(cos, 6) AS cos_sim
+       |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    // IVF search oracles: the index (centroids + assignments) crosses
+    // engines as DATA (oracleAux export of the bit-deterministic
+    // build); probe selection, scoring, and ranking are recomputed
+    // independently. ivf_topk probes 4 cells, ann_topk (the IVF-routed
+    // ANN entry point) probes 8 — same index, same SQL shape.
+    Query("ivf_topk", (s, d) => ivfTopK(s, d), IvfSearchOracle(nProbe = 4)),
+    // incremental index maintenance for the embedding side: fold a
+    // synthetic ingest batch into the served centroids (occupancy-
+    // weighted mini-batch update, drift-gated rebuild fallback) and
+    // search the merged corpus under the maintained index
+    Query("ivf_incremental_topk", (s, d) => incrementalQuery(s, d),
+      IvfIncrSearchOracle))
 }

@@ -248,4 +248,113 @@ object Lossy {
       maxHamming: Int = 3): DataFrame =
     Multimodal.hammingPairs(
       lossyFingerprints(spark, dir).toDF().localCheckpoint(), maxHamming)
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    // LOSSY codec through the media seam (JPEG-shaped quantize /
+    // dequantize): feature battery over the dequantized stream, and
+    // near-dup pairs across the original -> lossy-re-encode boundary
+    // (the perceptual family's reason to exist); corrupted subset
+    // decodes empty
+    // media_jpegish: the decoded stream is the DEQUANTIZATION of the
+    // padded printable projection — byte i decodes to (a//q)*q + q//2
+    // (bucket midpoint; identity at q=1 since q//2=0), q = 1/4/16 by
+    // doc_id % 3, geometry w = (len % 5) + 2. The oracle rebuilds the
+    // decoded string per char, so only a decoder that walks the marker
+    // segments, validates the quantizer, and reconstructs midpoints
+    // matches; the corrupted subset (doc_id % 23 = 5) decodes empty.
+    Query("media_jpegish", (s, d) => mediaJpegish(s, d),
+      """WITH cl AS (
+        |  SELECT doc_id, 'image' AS kind,
+        |         CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 4 ELSE 16 END AS q,
+        |         CASE WHEN doc_id % 23 = 5 THEN ''
+        |              ELSE regexp_replace(text, '[^ -~]', '', 'g') END AS s
+        |  FROM documents),
+        |pad AS (
+        |  SELECT doc_id, kind, q,
+        |         CASE WHEN length(s) = 0 THEN ''
+        |              ELSE rpad(s, CAST(((length(s) % 5) + 2)
+        |                * ((length(s) + (length(s) % 5) + 1)
+        |                   // ((length(s) % 5) + 2)) AS INTEGER), ' ')
+        |         END AS ds0
+        |  FROM cl),
+        |dq AS (
+        |  SELECT doc_id, kind,
+        |         CASE WHEN length(ds0) = 0 THEN ''
+        |              ELSE list_aggregate([chr(CAST((ascii(c)//q)*q + q//2 AS INTEGER))
+        |                     FOR c IN string_split(ds0, '')], 'string_agg', '')
+        |         END AS ds
+        |  FROM pad),
+        |m AS (
+        |  SELECT doc_id, kind, hex(encode(ds)) AS hx,
+        |         octet_length(encode(ds)) AS n
+        |  FROM dq),
+        |nib AS (
+        |  SELECT m.doc_id, substr(m.hx, 2*t.i + 1, 1) AS hi, count(*) AS c
+        |  FROM m, UNNEST(range(m.n)) AS t(i)
+        |  GROUP BY 1, 2),
+        |ent AS (
+        |  SELECT nib.doc_id,
+        |         round(-SUM((c::DOUBLE / m.n) * ln(c::DOUBLE / m.n)) / ln(2), 6) AS entropy
+        |  FROM nib JOIN m USING (doc_id)
+        |  GROUP BY 1)
+        |SELECT m.doc_id, m.kind, CAST(m.n AS BIGINT) AS n_bytes,
+        |       COALESCE(ent.entropy, 0.0) AS entropy,
+        |       CAST(CASE WHEN m.n = 0 THEN 0 ELSE (m.n - 1) // 64 + 1 END AS INT) AS frames_sampled,
+        |       CASE WHEN m.n = 0 THEN repeat('00', 16)
+        |            ELSE list_aggregate([substr(m.hx, 2*CAST(i * m.n // 16 AS BIGINT) + 1, 2) FOR i IN range(16)], 'string_agg', '')
+        |       END AS preview_hex
+        |FROM m LEFT JOIN ent USING (doc_id)
+        |ORDER BY m.doc_id""".stripMargin),
+    // media_lossy_near_dup: dHash pairs across the lossy re-encode
+    // boundary. Side A (id = doc_id) hashes the original raster (q=1),
+    // side B (id = doc_id + 10000000) hashes the doc's dequantized
+    // raster ((a//q)*q + q//2, q = 1/4/16 by doc_id % 3) — quantization
+    // is monotone, so gradients collapse but never reverse, and the
+    // oracle's brute-force join equals the engine's chunk-blocked join
+    // by the hamming<=3 pigeonhole. Corrupted docs (doc_id % 23 = 5)
+    // decode empty and are absent; w = (len % 5) + 2 is always >= 2.
+    Query("media_lossy_near_dup", (s, d) => mediaLossyNearDup(s, d),
+      """WITH cl AS (
+        |  SELECT doc_id, regexp_replace(text, '[^ -~]', '', 'g') AS s,
+        |         CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 4 ELSE 16 END AS q
+        |  FROM documents WHERE doc_id % 23 <> 5),
+        |geo AS (
+        |  SELECT doc_id, s, q, (length(s) % 5) + 2 AS w,
+        |    (length(s) + (length(s) % 5) + 1) // ((length(s) % 5) + 2) AS h
+        |  FROM cl WHERE length(s) > 0),
+        |ras AS (
+        |  SELECT doc_id, q, w, h, rpad(s, CAST(w * h AS INTEGER), ' ') AS r
+        |  FROM geo),
+        |sides AS (
+        |  SELECT doc_id AS id, 1 AS q, w, h, r FROM ras
+        |  UNION ALL
+        |  SELECT doc_id + 10000000, q, w, h, r FROM ras),
+        |grid AS (
+        |  SELECT id, q, w, r, (t1.j * 8 + t2.i) AS bit,
+        |    (t1.j * h) // 8 AS y, (t2.i * w) // 9 AS x0,
+        |    ((t2.i + 1) * w) // 9 AS x1
+        |  FROM sides, unnest(range(8)) AS t1(j), unnest(range(8)) AS t2(i)),
+        |ck AS (
+        |  SELECT id, bit // 16 AS chunk,
+        |    CAST(sum(CASE WHEN
+        |        (ascii(substr(r, CAST(y * w + x1 + 1 AS INTEGER), 1))//q)*q + q//2 >
+        |        (ascii(substr(r, CAST(y * w + x0 + 1 AS INTEGER), 1))//q)*q + q//2
+        |      THEN 1 << (bit % 16) ELSE 0 END) AS INTEGER) AS ck
+        |  FROM grid GROUP BY id, bit // 16),
+        |h4 AS (
+        |  SELECT id,
+        |    max(CASE WHEN chunk = 0 THEN ck END) AS c0,
+        |    max(CASE WHEN chunk = 1 THEN ck END) AS c1,
+        |    max(CASE WHEN chunk = 2 THEN ck END) AS c2,
+        |    max(CASE WHEN chunk = 3 THEN ck END) AS c3
+        |  FROM ck GROUP BY id)
+        |SELECT * FROM (
+        |  SELECT a.id AS doc_id_1, b.id AS doc_id_2,
+        |    CAST(bit_count(xor(a.c0, b.c0)) + bit_count(xor(a.c1, b.c1)) +
+        |         bit_count(xor(a.c2, b.c2)) + bit_count(xor(a.c3, b.c3))
+        |      AS INTEGER) AS hamming
+        |  FROM h4 a JOIN h4 b ON a.id < b.id)
+        |WHERE hamming <= 3
+        |ORDER BY doc_id_1, doc_id_2""".stripMargin))
 }

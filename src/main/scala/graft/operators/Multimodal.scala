@@ -1274,4 +1274,426 @@ object Multimodal {
         .select(col("doc_id_1"), col("doc_id_2")))
       .withColumnRenamed("node", "doc_id")
       .orderBy(col("doc_id"))
+
+  /** Shared by audio_near_dup and audio_dup_clusters: per-doc 4x16-bit
+    * energy-envelope fingerprint chunks, recomputed from the WAV
+    * table's closed-form decoded sample stream (the printable
+    * projection; `Multimodal.audioHashChunks` semantics — 65 equal
+    * spans, exact integer span energies, bit k = span k+1 louder than
+    * span k). Corrupted subset (doc_id % 11 = 7) and sub-65-sample
+    * clips excluded by construction.
+    */
+  private val AudioH4Cte: String =
+    """WITH cl AS (
+      |  SELECT doc_id, regexp_replace(text, '[^ -~]', '', 'g') AS s
+      |  FROM documents WHERE doc_id % 11 <> 7),
+      |m AS (
+      |  SELECT doc_id, s, length(s) AS n FROM cl WHERE length(s) >= 65),
+      |sam AS (
+      |  SELECT doc_id, n, t.i AS pos,
+      |    ascii(substr(s, CAST(t.i + 1 AS INTEGER), 1)) AS v
+      |  FROM m, unnest(range(m.n)) AS t(i)),
+      |fr AS (
+      |  SELECT doc_id, (pos * 65) // n AS f, sum(v) AS e
+      |  FROM sam GROUP BY doc_id, (pos * 65) // n),
+      |ck AS (
+      |  SELECT a.doc_id, a.f // 16 AS chunk,
+      |    CAST(sum(CASE WHEN b.e > a.e THEN 1 << CAST(a.f % 16 AS INTEGER)
+      |             ELSE 0 END) AS INTEGER) AS ck
+      |  FROM fr a JOIN fr b ON a.doc_id = b.doc_id AND b.f = a.f + 1
+      |  GROUP BY a.doc_id, a.f // 16),
+      |h4 AS (
+      |  SELECT doc_id,
+      |    max(CASE WHEN chunk = 0 THEN ck END) AS c0,
+      |    max(CASE WHEN chunk = 1 THEN ck END) AS c1,
+      |    max(CASE WHEN chunk = 2 THEN ck END) AS c2,
+      |    max(CASE WHEN chunk = 3 THEN ck END) AS c3
+      |  FROM ck GROUP BY doc_id)""".stripMargin
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("media_stats", (s, d) => mediaStats(s, d),
+      """SELECT doc_id,
+        |  CASE WHEN doc_id % 3 = 0 THEN 'image'
+        |       WHEN doc_id % 3 = 1 THEN 'audio'
+        |       ELSE 'video' END AS kind,
+        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+        |  sha256(text) AS sha_hex
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    // media_features is fully deterministic (the stub codec is the
+    // identity), so DuckDB recomputes every column from the UTF-8
+    // bytes: the 16-bin HIGH-nibble histogram/entropy read off the odd
+    // positions of the hex rendering, ceil-division frame count, and
+    // the stride-sampled 16-byte preview.
+    Query("media_features", (s, d) => mediaFeatures(s, d),
+      """WITH m AS (
+        |  SELECT doc_id,
+        |         CASE WHEN doc_id % 3 = 0 THEN 'image'
+        |              WHEN doc_id % 3 = 1 THEN 'audio'
+        |              ELSE 'video' END AS kind,
+        |         hex(encode(text)) AS hx,
+        |         octet_length(encode(text)) AS n
+        |  FROM documents),
+        |nib AS (
+        |  SELECT m.doc_id, substr(m.hx, 2*t.i + 1, 1) AS hi, count(*) AS c
+        |  FROM m, UNNEST(range(m.n)) AS t(i)
+        |  GROUP BY 1, 2),
+        |ent AS (
+        |  SELECT nib.doc_id,
+        |         round(-SUM((c::DOUBLE / m.n) * ln(c::DOUBLE / m.n)) / ln(2), 6) AS entropy
+        |  FROM nib JOIN m USING (doc_id)
+        |  GROUP BY 1)
+        |SELECT m.doc_id, m.kind, CAST(m.n AS BIGINT) AS n_bytes,
+        |       COALESCE(ent.entropy, 0.0) AS entropy,
+        |       CAST(CASE WHEN m.n = 0 THEN 0 ELSE (m.n - 1) // 64 + 1 END AS INT) AS frames_sampled,
+        |       CASE WHEN m.n = 0 THEN repeat('00', 16)
+        |            ELSE list_aggregate([substr(m.hx, 2*CAST(i * m.n // 16 AS BIGINT) + 1, 2) FOR i IN range(16)], 'string_agg', '')
+        |       END AS preview_hex
+        |FROM m LEFT JOIN ent USING (doc_id)
+        |ORDER BY m.doc_id""".stripMargin),
+    Query("media_decode", (s, d) => mediaDecode(s, d),
+      """WITH cl AS (
+        |  SELECT doc_id,
+        |         CASE WHEN doc_id % 3 = 0 THEN 'image'
+        |              WHEN doc_id % 3 = 1 THEN 'audio'
+        |              ELSE 'video' END AS kind,
+        |         regexp_replace(text, '[^ -~]', '', 'g') AS s
+        |  FROM documents),
+        |ch AS (
+        |  SELECT doc_id, substring(s, CAST(i AS INTEGER), 1) AS c,
+        |         CAST((i % 5) + 1 AS INTEGER) AS rl, i
+        |  FROM cl, unnest(range(1, length(s) + 1)) AS u(i)),
+        |dec AS (
+        |  SELECT doc_id, string_agg(repeat(c, rl), '' ORDER BY i) AS ds
+        |  FROM ch GROUP BY doc_id),
+        |m AS (
+        |  SELECT cl.doc_id, cl.kind,
+        |         hex(encode(coalesce(dec.ds, ''))) AS hx,
+        |         octet_length(encode(coalesce(dec.ds, ''))) AS n
+        |  FROM cl LEFT JOIN dec USING (doc_id)),
+        |nib AS (
+        |  SELECT m.doc_id, substr(m.hx, 2*t.i + 1, 1) AS hi, count(*) AS c
+        |  FROM m, UNNEST(range(m.n)) AS t(i)
+        |  GROUP BY 1, 2),
+        |ent AS (
+        |  SELECT nib.doc_id,
+        |         round(-SUM((c::DOUBLE / m.n) * ln(c::DOUBLE / m.n)) / ln(2), 6) AS entropy
+        |  FROM nib JOIN m USING (doc_id)
+        |  GROUP BY 1)
+        |SELECT m.doc_id, m.kind, CAST(m.n AS BIGINT) AS n_bytes,
+        |       COALESCE(ent.entropy, 0.0) AS entropy,
+        |       CAST(CASE WHEN m.n = 0 THEN 0 ELSE (m.n - 1) // 64 + 1 END AS INT) AS frames_sampled,
+        |       CASE WHEN m.n = 0 THEN repeat('00', 16)
+        |            ELSE list_aggregate([substr(m.hx, 2*CAST(i * m.n // 16 AS BIGINT) + 1, 2) FOR i IN range(16)], 'string_agg', '')
+        |       END AS preview_hex
+        |FROM m LEFT JOIN ent USING (doc_id)
+        |ORDER BY m.doc_id""".stripMargin),
+    // real RIFF/WAVE container walk (variable JUNK chunk, word
+    // alignment, malformed subset decodes empty) — the oracle rebuilds
+    // every column from documents.text without seeing the container
+    // media_decode runs the NON-identity RleCodec: the oracle rebuilds
+    // the decoded byte stream itself (each printable-ASCII char of the
+    // document repeated by its closed-form run length) from
+    // documents.text — it never sees the payload, so only a correct
+    // run expansion reproduces n_bytes, the high-nibble histogram
+    // entropy, the ceil-division frame count, and the stride preview.
+    // media_wav: the decoded stream IS the printable projection (the
+    // WAV samples), so the oracle replays n_bytes/entropy/frames/
+    // preview from documents.text directly; the corrupted subset
+    // (doc_id % 11 = 7) must decode EMPTY — a codec that threw, or
+    // walked past the JUNK chunk wrongly, mismatches those rows
+    Query("media_wav", (s, d) => mediaWav(s, d),
+      """WITH cl AS (
+        |  SELECT doc_id, 'audio' AS kind,
+        |         CASE WHEN doc_id % 11 = 7 THEN ''
+        |              ELSE regexp_replace(text, '[^ -~]', '', 'g') END AS ds
+        |  FROM documents),
+        |m AS (
+        |  SELECT doc_id, kind, hex(encode(ds)) AS hx,
+        |         octet_length(encode(ds)) AS n
+        |  FROM cl),
+        |nib AS (
+        |  SELECT m.doc_id, substr(m.hx, 2*t.i + 1, 1) AS hi, count(*) AS c
+        |  FROM m, UNNEST(range(m.n)) AS t(i)
+        |  GROUP BY 1, 2),
+        |ent AS (
+        |  SELECT nib.doc_id,
+        |         round(-SUM((c::DOUBLE / m.n) * ln(c::DOUBLE / m.n)) / ln(2), 6) AS entropy
+        |  FROM nib JOIN m USING (doc_id)
+        |  GROUP BY 1)
+        |SELECT m.doc_id, m.kind, CAST(m.n AS BIGINT) AS n_bytes,
+        |       COALESCE(ent.entropy, 0.0) AS entropy,
+        |       CAST(CASE WHEN m.n = 0 THEN 0 ELSE (m.n - 1) // 64 + 1 END AS INT) AS frames_sampled,
+        |       CASE WHEN m.n = 0 THEN repeat('00', 16)
+        |            ELSE list_aggregate([substr(m.hx, 2*CAST(i * m.n // 16 AS BIGINT) + 1, 2) FOR i IN range(16)], 'string_agg', '')
+        |       END AS preview_hex
+        |FROM m LEFT JOIN ent USING (doc_id)
+        |ORDER BY m.doc_id""".stripMargin),
+    // real BMP container walk (bfOffBits indirection, 4-byte row
+    // stride, bottom-up vs top-down row order; corrupted subset
+    // decodes empty) — oracle rebuilds every column from documents.text
+    // media_bmp: the decoded raster is the printable projection padded
+    // with spaces to w*ceil(len/w) where w = (len % 5) + 1 — a closed
+    // form replayed from documents.text; the corrupted subset
+    // (doc_id % 13 = 5) must decode EMPTY. A decoder that read the
+    // palette as pixels (ignored bfOffBits), kept the stride padding,
+    // or mis-ordered bottom-up rows mismatches on every column.
+    Query("media_bmp", (s, d) => mediaBmp(s, d),
+      """WITH cl AS (
+        |  SELECT doc_id, 'image' AS kind,
+        |         CASE WHEN doc_id % 13 = 5 THEN ''
+        |              ELSE regexp_replace(text, '[^ -~]', '', 'g') END AS s
+        |  FROM documents),
+        |pad AS (
+        |  SELECT doc_id, kind,
+        |         CASE WHEN length(s) = 0 THEN ''
+        |              ELSE rpad(s, CAST(((length(s) % 5) + 1)
+        |                * ((length(s) + (length(s) % 5))
+        |                   // ((length(s) % 5) + 1)) AS INTEGER), ' ')
+        |         END AS ds
+        |  FROM cl),
+        |m AS (
+        |  SELECT doc_id, kind, hex(encode(ds)) AS hx,
+        |         octet_length(encode(ds)) AS n
+        |  FROM pad),
+        |nib AS (
+        |  SELECT m.doc_id, substr(m.hx, 2*t.i + 1, 1) AS hi, count(*) AS c
+        |  FROM m, UNNEST(range(m.n)) AS t(i)
+        |  GROUP BY 1, 2),
+        |ent AS (
+        |  SELECT nib.doc_id,
+        |         round(-SUM((c::DOUBLE / m.n) * ln(c::DOUBLE / m.n)) / ln(2), 6) AS entropy
+        |  FROM nib JOIN m USING (doc_id)
+        |  GROUP BY 1)
+        |SELECT m.doc_id, m.kind, CAST(m.n AS BIGINT) AS n_bytes,
+        |       COALESCE(ent.entropy, 0.0) AS entropy,
+        |       CAST(CASE WHEN m.n = 0 THEN 0 ELSE (m.n - 1) // 64 + 1 END AS INT) AS frames_sampled,
+        |       CASE WHEN m.n = 0 THEN repeat('00', 16)
+        |            ELSE list_aggregate([substr(m.hx, 2*CAST(i * m.n // 16 AS BIGINT) + 1, 2) FOR i IN range(16)], 'string_agg', '')
+        |       END AS preview_hex
+        |FROM m LEFT JOIN ent USING (doc_id)
+        |ORDER BY m.doc_id""".stripMargin),
+    // real PNG container walk with an ENTROPY-CODED payload: per-chunk
+    // CRC32 validation, split-IDAT zlib inflate, all five scanline
+    // filters reconstructed; corrupted subset decodes empty — oracle
+    // rebuilds every column from documents.text
+    // media_png: the decoded raster is the printable projection padded
+    // with spaces to w*ceil(len/w) where w = (len % 6) + 1 — the BMP
+    // closed form at a different modulus; the corrupted subset
+    // (doc_id % 17 = 3) must decode EMPTY. Unlike BMP the raster is
+    // UNREACHABLE without actually inflating the split-IDAT zlib
+    // stream and reconstructing the five cycling scanline filters —
+    // no header arithmetic reproduces these columns.
+    Query("media_png", (s, d) => mediaPng(s, d),
+      """WITH cl AS (
+        |  SELECT doc_id, 'image' AS kind,
+        |         CASE WHEN doc_id % 17 = 3 THEN ''
+        |              ELSE regexp_replace(text, '[^ -~]', '', 'g') END AS s
+        |  FROM documents),
+        |pad AS (
+        |  SELECT doc_id, kind,
+        |         CASE WHEN length(s) = 0 THEN ''
+        |              ELSE rpad(s, CAST(((length(s) % 6) + 1)
+        |                * ((length(s) + (length(s) % 6))
+        |                   // ((length(s) % 6) + 1)) AS INTEGER), ' ')
+        |         END AS ds
+        |  FROM cl),
+        |m AS (
+        |  SELECT doc_id, kind, hex(encode(ds)) AS hx,
+        |         octet_length(encode(ds)) AS n
+        |  FROM pad),
+        |nib AS (
+        |  SELECT m.doc_id, substr(m.hx, 2*t.i + 1, 1) AS hi, count(*) AS c
+        |  FROM m, UNNEST(range(m.n)) AS t(i)
+        |  GROUP BY 1, 2),
+        |ent AS (
+        |  SELECT nib.doc_id,
+        |         round(-SUM((c::DOUBLE / m.n) * ln(c::DOUBLE / m.n)) / ln(2), 6) AS entropy
+        |  FROM nib JOIN m USING (doc_id)
+        |  GROUP BY 1)
+        |SELECT m.doc_id, m.kind, CAST(m.n AS BIGINT) AS n_bytes,
+        |       COALESCE(ent.entropy, 0.0) AS entropy,
+        |       CAST(CASE WHEN m.n = 0 THEN 0 ELSE (m.n - 1) // 64 + 1 END AS INT) AS frames_sampled,
+        |       CASE WHEN m.n = 0 THEN repeat('00', 16)
+        |            ELSE list_aggregate([substr(m.hx, 2*CAST(i * m.n // 16 AS BIGINT) + 1, 2) FOR i IN range(16)], 'string_agg', '')
+        |       END AS preview_hex
+        |FROM m LEFT JOIN ent USING (doc_id)
+        |ORDER BY m.doc_id""".stripMargin),
+    // real GIF container walk with the SECOND entropy coding:
+    // variable-width LZW (growing dictionary, width-widening points,
+    // clear/EOI), sub-block stream reassembly, extension skipping,
+    // 4-pass interlace; corrupted subset decodes empty
+    // media_gif: the decoded raster is the printable projection padded
+    // with spaces to w*ceil(len/w) where w = (len % 7) + 1 — the
+    // BMP/PNG closed form at modulus 7; the corrupted subset
+    // (doc_id % 19 = 7) must decode EMPTY. The raster is unreachable
+    // without reassembling the sub-block stream, decoding variable-
+    // width LZW through every code-width widening point, and
+    // de-interlacing the 4-pass row order on even-length docs.
+    Query("media_gif", (s, d) => mediaGif(s, d),
+      """WITH cl AS (
+        |  SELECT doc_id, 'image' AS kind,
+        |         CASE WHEN doc_id % 19 = 7 THEN ''
+        |              ELSE regexp_replace(text, '[^ -~]', '', 'g') END AS s
+        |  FROM documents),
+        |pad AS (
+        |  SELECT doc_id, kind,
+        |         CASE WHEN length(s) = 0 THEN ''
+        |              ELSE rpad(s, CAST(((length(s) % 7) + 1)
+        |                * ((length(s) + (length(s) % 7))
+        |                   // ((length(s) % 7) + 1)) AS INTEGER), ' ')
+        |         END AS ds
+        |  FROM cl),
+        |m AS (
+        |  SELECT doc_id, kind, hex(encode(ds)) AS hx,
+        |         octet_length(encode(ds)) AS n
+        |  FROM pad),
+        |nib AS (
+        |  SELECT m.doc_id, substr(m.hx, 2*t.i + 1, 1) AS hi, count(*) AS c
+        |  FROM m, UNNEST(range(m.n)) AS t(i)
+        |  GROUP BY 1, 2),
+        |ent AS (
+        |  SELECT nib.doc_id,
+        |         round(-SUM((c::DOUBLE / m.n) * ln(c::DOUBLE / m.n)) / ln(2), 6) AS entropy
+        |  FROM nib JOIN m USING (doc_id)
+        |  GROUP BY 1)
+        |SELECT m.doc_id, m.kind, CAST(m.n AS BIGINT) AS n_bytes,
+        |       COALESCE(ent.entropy, 0.0) AS entropy,
+        |       CAST(CASE WHEN m.n = 0 THEN 0 ELSE (m.n - 1) // 64 + 1 END AS INT) AS frames_sampled,
+        |       CASE WHEN m.n = 0 THEN repeat('00', 16)
+        |            ELSE list_aggregate([substr(m.hx, 2*CAST(i * m.n // 16 AS BIGINT) + 1, 2) FOR i IN range(16)], 'string_agg', '')
+        |       END AS preview_hex
+        |FROM m LEFT JOIN ent USING (doc_id)
+        |ORDER BY m.doc_id""".stripMargin),
+    // media_near_dup: dHash over the PNG table's decoded rasters.
+    // The oracle recomputes the hash from the closed-form raster
+    // (printable projection padded to w*ceil(n/w), w = n%6+1), with
+    // the corrupted subset (doc_id % 17 = 3, empty decode) and
+    // degenerate w < 2 geometries excluded by construction. The
+    // brute-force pair join here equals the engine's chunk-blocked
+    // join exactly: pigeonhole makes blocking lossless at hamming<=3.
+    Query("media_near_dup", (s, d) => mediaNearDup(s, d),
+      """WITH cl AS (
+        |  SELECT doc_id, regexp_replace(text, '[^ -~]', '', 'g') AS s
+        |  FROM documents WHERE doc_id % 17 <> 3),
+        |geo AS (
+        |  SELECT doc_id, s, (length(s) % 6) + 1 AS w,
+        |    (length(s) + (length(s) % 6)) // ((length(s) % 6) + 1) AS h
+        |  FROM cl WHERE length(s) > 0),
+        |ras AS (
+        |  SELECT doc_id, w, h, rpad(s, CAST(w * h AS INTEGER), ' ') AS r
+        |  FROM geo WHERE w >= 2),
+        |grid AS (
+        |  SELECT doc_id, w, r, (t1.j * 8 + t2.i) AS bit,
+        |    (t1.j * h) // 8 AS y, (t2.i * w) // 9 AS x0,
+        |    ((t2.i + 1) * w) // 9 AS x1
+        |  FROM ras, unnest(range(8)) AS t1(j), unnest(range(8)) AS t2(i)),
+        |ck AS (
+        |  SELECT doc_id, bit // 16 AS chunk,
+        |    CAST(sum(CASE WHEN
+        |        ascii(substr(r, CAST(y * w + x1 + 1 AS INTEGER), 1)) >
+        |        ascii(substr(r, CAST(y * w + x0 + 1 AS INTEGER), 1))
+        |      THEN 1 << (bit % 16) ELSE 0 END) AS INTEGER) AS ck
+        |  FROM grid GROUP BY doc_id, bit // 16),
+        |h4 AS (
+        |  SELECT doc_id,
+        |    max(CASE WHEN chunk = 0 THEN ck END) AS c0,
+        |    max(CASE WHEN chunk = 1 THEN ck END) AS c1,
+        |    max(CASE WHEN chunk = 2 THEN ck END) AS c2,
+        |    max(CASE WHEN chunk = 3 THEN ck END) AS c3
+        |  FROM ck GROUP BY doc_id)
+        |SELECT * FROM (
+        |  SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2,
+        |    CAST(bit_count(xor(a.c0, b.c0)) + bit_count(xor(a.c1, b.c1)) +
+        |         bit_count(xor(a.c2, b.c2)) + bit_count(xor(a.c3, b.c3))
+        |      AS INTEGER) AS hamming
+        |  FROM h4 a JOIN h4 b ON a.doc_id < b.doc_id)
+        |WHERE hamming <= 3
+        |ORDER BY doc_id_1, doc_id_2""".stripMargin),
+    // media_dup_clusters: the same pair graph, closed transitively —
+    // the dedup_clusters recursive-CTE pattern over dHash pairs
+    Query("media_dup_clusters", (s, d) => mediaDupClusters(s, d),
+      """WITH RECURSIVE cl AS (
+        |  SELECT doc_id, regexp_replace(text, '[^ -~]', '', 'g') AS s
+        |  FROM documents WHERE doc_id % 17 <> 3),
+        |geo AS (
+        |  SELECT doc_id, s, (length(s) % 6) + 1 AS w,
+        |    (length(s) + (length(s) % 6)) // ((length(s) % 6) + 1) AS h
+        |  FROM cl WHERE length(s) > 0),
+        |ras AS (
+        |  SELECT doc_id, w, h, rpad(s, CAST(w * h AS INTEGER), ' ') AS r
+        |  FROM geo WHERE w >= 2),
+        |grid AS (
+        |  SELECT doc_id, w, r, (t1.j * 8 + t2.i) AS bit,
+        |    (t1.j * h) // 8 AS y, (t2.i * w) // 9 AS x0,
+        |    ((t2.i + 1) * w) // 9 AS x1
+        |  FROM ras, unnest(range(8)) AS t1(j), unnest(range(8)) AS t2(i)),
+        |ck AS (
+        |  SELECT doc_id, bit // 16 AS chunk,
+        |    CAST(sum(CASE WHEN
+        |        ascii(substr(r, CAST(y * w + x1 + 1 AS INTEGER), 1)) >
+        |        ascii(substr(r, CAST(y * w + x0 + 1 AS INTEGER), 1))
+        |      THEN 1 << (bit % 16) ELSE 0 END) AS INTEGER) AS ck
+        |  FROM grid GROUP BY doc_id, bit // 16),
+        |h4 AS (
+        |  SELECT doc_id,
+        |    max(CASE WHEN chunk = 0 THEN ck END) AS c0,
+        |    max(CASE WHEN chunk = 1 THEN ck END) AS c1,
+        |    max(CASE WHEN chunk = 2 THEN ck END) AS c2,
+        |    max(CASE WHEN chunk = 3 THEN ck END) AS c3
+        |  FROM ck GROUP BY doc_id),
+        |p AS (
+        |  SELECT a.doc_id AS d1, b.doc_id AS d2
+        |  FROM h4 a JOIN h4 b ON a.doc_id < b.doc_id
+        |  WHERE bit_count(xor(a.c0, b.c0)) + bit_count(xor(a.c1, b.c1)) +
+        |        bit_count(xor(a.c2, b.c2)) + bit_count(xor(a.c3, b.c3)) <= 3),
+        |edges AS (
+        |  SELECT d1 AS src, d2 AS dst FROM p
+        |  UNION ALL SELECT d2, d1 FROM p),
+        |reach(src, dst) AS (
+        |  SELECT src, dst FROM edges
+        |  UNION
+        |  SELECT r2.src, e.dst FROM reach r2 JOIN edges e ON r2.dst = e.src)
+        |SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
+        |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin),
+    // energy-envelope fingerprint over DECODED WAV samples: the audio
+    // analog of media_near_dup, same chunk-blocked join + CC closure;
+    // corrupted payloads and sub-65-sample clips absent by construction
+    // audio_near_dup: energy-envelope fingerprint over the WAV table's
+    // DECODED PCM samples (the printable projection — unreachable
+    // without a correct RIFF chunk walk). The oracle recomputes the
+    // 65-span envelope from the closed-form sample stream with exact
+    // integer span energies, rebuilds the 64 delta-sign bits, and
+    // brute-force pair-joins: pigeonhole makes the engine's chunk
+    // blocking lossless at hamming<=3, so the joins are equal. The
+    // corrupted subset (doc_id % 11 = 7, empty decode) and sub-65-
+    // sample clips are excluded by construction.
+    Query("audio_near_dup", (s, d) => audioNearDup(s, d),
+      (AudioH4Cte + """
+        |SELECT * FROM (
+        |  SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2,
+        |    CAST(bit_count(xor(a.c0, b.c0)) + bit_count(xor(a.c1, b.c1)) +
+        |         bit_count(xor(a.c2, b.c2)) + bit_count(xor(a.c3, b.c3))
+        |      AS INTEGER) AS hamming
+        |  FROM h4 a JOIN h4 b ON a.doc_id < b.doc_id)
+        |WHERE hamming <= 3
+        |ORDER BY doc_id_1, doc_id_2""".stripMargin)),
+    // audio_dup_clusters: the same pair graph, closed transitively —
+    // the media_dup_clusters recursive-CTE pattern over envelope pairs
+    Query("audio_dup_clusters", (s, d) => audioDupClusters(s, d),
+      ("WITH RECURSIVE" + AudioH4Cte.stripPrefix("WITH") + """,
+        |p AS (
+        |  SELECT a.doc_id AS d1, b.doc_id AS d2
+        |  FROM h4 a JOIN h4 b ON a.doc_id < b.doc_id
+        |  WHERE bit_count(xor(a.c0, b.c0)) + bit_count(xor(a.c1, b.c1)) +
+        |        bit_count(xor(a.c2, b.c2)) + bit_count(xor(a.c3, b.c3)) <= 3),
+        |edges AS (
+        |  SELECT d1 AS src, d2 AS dst FROM p
+        |  UNION ALL SELECT d2, d1 FROM p),
+        |reach(src, dst) AS (
+        |  SELECT src, dst FROM edges
+        |  UNION
+        |  SELECT r2.src, e.dst FROM reach r2 JOIN edges e ON r2.dst = e.src)
+        |SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
+        |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin)))
 }

@@ -246,4 +246,92 @@ object Pipeline {
           6).as("oversample"))
       .orderBy(col("source"))
   }
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("curated_corpus", (s, d) => curatedCorpus(s, d),
+      """WITH normed AS (
+        |  SELECT doc_id, lang, text,
+        |    md5(array_to_string(list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0), ' ')) AS fp
+        |  FROM documents),
+        |keepers AS (
+        |  SELECT doc_id, lang, text FROM (
+        |    SELECT doc_id, lang, text,
+        |           min(doc_id) OVER (PARTITION BY fp) AS keeper
+        |    FROM normed) WHERE doc_id = keeper),
+        |words AS (
+        |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
+        |  FROM keepers),
+        |ng AS (
+        |  SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS ngram
+        |  FROM words, unnest(range(1, len(ws) - 1)) AS t(i)
+        |  WHERE len(ws) >= 3),
+        |sizes AS (SELECT doc_id, count(*) AS n FROM ng GROUP BY doc_id),
+        |inter AS (
+        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
+        |  FROM ng a JOIN ng b ON a.ngram = b.ngram AND a.doc_id < b.doc_id
+        |  GROUP BY 1, 2),
+        |losers AS (
+        |  SELECT DISTINCT d2 AS doc_id FROM inter
+        |  JOIN sizes s1 ON d1 = s1.doc_id JOIN sizes s2 ON d2 = s2.doc_id
+        |  WHERE CAST(c AS DOUBLE) / CAST(s1.n + s2.n - c AS DOUBLE) >= 0.5)
+        |SELECT k.doc_id, k.lang,
+        |  CAST(len(list_filter(string_split_regex(k.text, '[ \t\n]+'), t -> length(t) > 0)) AS BIGINT) AS n_tokens
+        |FROM keepers k
+        |WHERE k.doc_id NOT IN (SELECT doc_id FROM losers)
+        |  AND len(list_filter(string_split_regex(k.text, '[ \t\n]+'), t -> length(t) > 0)) >= 10
+        |  AND k.lang IN ('en', 'de', 'fr', 'es')
+        |ORDER BY k.doc_id""".stripMargin),
+    Query("split_assign", (s, d) => splitAssign(s, d),
+      """WITH b AS (
+        |  SELECT doc_id,
+        |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INTEGER) % 100 AS bucket
+        |  FROM documents)
+        |SELECT doc_id, CAST(bucket AS BIGINT) AS bucket,
+        |  CASE WHEN bucket < 80 THEN 'train'
+        |       WHEN bucket < 90 THEN 'validation'
+        |       ELSE 'test' END AS split
+        |FROM b ORDER BY doc_id""".stripMargin),
+    Query("pack_sequences", (s, d) => packSequences(s, d),
+      """WITH t AS (
+        |  SELECT doc_id, lang,
+        |    CAST(len(list_filter(string_split_regex(text, '[ \t\n]+'), t -> length(t) > 0)) AS BIGINT) AS n_tokens
+        |  FROM documents),
+        |c AS (
+        |  SELECT doc_id, lang, n_tokens,
+        |    COALESCE(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
+        |  FROM t)
+        |SELECT doc_id, lang, n_tokens,
+        |  CAST(FLOOR(cum_before / 2048) AS BIGINT) AS bin,
+        |  CAST(cum_before % 2048 AS BIGINT) AS bin_offset
+        |FROM c ORDER BY doc_id""".stripMargin),
+    Query("chunk_docs", (s, d) => chunkDocs(s, d),
+      """WITH t AS (
+        |  SELECT doc_id,
+        |    CASE WHEN length(trim(text)) = 0 THEN []
+        |         ELSE string_split_regex(trim(text), '[ \t\n]+') END AS ws
+        |  FROM documents),
+        |s AS (SELECT doc_id, ws, len(ws) AS n FROM t WHERE len(ws) > 0),
+        |c AS (
+        |  SELECT doc_id, ws, n, CAST(i AS INTEGER) AS chunk_id
+        |  FROM s, unnest(range(0, CAST(ceil(CAST(n AS DOUBLE) / 48) AS BIGINT))) AS u(i))
+        |SELECT doc_id, chunk_id,
+        |  CAST(len(ws[chunk_id * 48 + 1 : least(chunk_id * 48 + 64, n)]) AS BIGINT) AS n_chunk_tokens,
+        |  md5(array_to_string(ws[chunk_id * 48 + 1 : least(chunk_id * 48 + 64, n)], ' ')) AS chunk_md5
+        |FROM c ORDER BY doc_id, chunk_id""".stripMargin),
+    Query("data_mix", (s, d) => dataMix(s, d),
+      """WITH per AS (
+        |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        |    CAST(sum(len(list_filter(string_split_regex(text, '[ \t\n]+'), t -> length(t) > 0))) AS BIGINT) AS n_tokens
+        |  FROM documents GROUP BY source),
+        |w AS (SELECT source, n_docs, n_tokens,
+        |        CAST(round(sqrt(CAST(n_tokens AS DOUBLE)), 9) AS DECIMAL(28,9)) AS w_raw
+        |      FROM per),
+        |tot AS (SELECT sum(n_tokens) AS tot_tokens, sum(w_raw) AS tot_w FROM w)
+        |SELECT source, n_docs, n_tokens,
+        |  round(CAST(w_raw AS DOUBLE) / CAST(tot_w AS DOUBLE), 9) AS weight,
+        |  round((CAST(w_raw AS DOUBLE) / CAST(tot_w AS DOUBLE)) /
+        |        (CAST(n_tokens AS DOUBLE) / CAST(tot_tokens AS DOUBLE)), 6) AS oversample
+        |FROM w CROSS JOIN tot ORDER BY source""".stripMargin))
 }

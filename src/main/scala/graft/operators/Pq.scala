@@ -473,4 +473,99 @@ object Pq {
       }
     }
   }
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    // PQ search oracle: codebook + codes cross as data; the ADC
+    // lookup table (decimal partial dots), approximate candidate
+    // ranking, and exact re-rank are recomputed in SQL. DECIMAL(28,12)
+    // sums are exact in both engines, so the approximate scores — and
+    // therefore the candidate cut — are bit-identical.
+    Query("pq_topk", (s, d) => pqTopK(s, d),
+      """WITH cb AS (SELECT sub, code, CAST(cword AS DOUBLE[]) AS cw
+        |            FROM read_parquet('/tmp/graft_oracle_aux/pq_codebook/*.parquet')),
+        |codes AS (SELECT vec_id, sub, code FROM read_parquet('/tmp/graft_oracle_aux/pq_codes/*.parquet')),
+        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |q AS (SELECT vec_id AS query_id, v AS qv, sqrt(list_dot_product(v, v)) AS qnorm
+        |      FROM e WHERE vec_id < 10),
+        |qsub AS (SELECT query_id, s.s AS sub, list_slice(qv, s.s*8 + 1, s.s*8 + 8) AS svec
+        |         FROM q, (VALUES (0),(1),(2),(3),(4),(5),(6),(7)) s(s)),
+        |lut AS (SELECT query_id, cb.sub, cb.code,
+        |               CAST(list_dot_product(qsub.svec, cb.cw) AS DECIMAL(28,12)) AS pdot,
+        |               CAST(list_dot_product(cb.cw, cb.cw) AS DECIMAL(28,12)) AS c2
+        |        FROM qsub JOIN cb ON cb.sub = qsub.sub),
+        |approx AS (
+        |  SELECT l.query_id, c.vec_id,
+        |         CAST(SUM(l.pdot) AS DOUBLE) AS adot,
+        |         sqrt(CAST(SUM(l.c2) AS DOUBLE)) AS rnorm
+        |  FROM codes c JOIN lut l ON l.sub = c.sub AND l.code = c.code
+        |  GROUP BY l.query_id, c.vec_id),
+        |cand AS (
+        |  SELECT query_id, vec_id FROM (
+        |    SELECT a.query_id, a.vec_id,
+        |           row_number() OVER (PARTITION BY a.query_id ORDER BY
+        |             (a.adot / (q.qnorm * a.rnorm)) DESC, a.vec_id) AS crn
+        |    FROM approx a JOIN q ON q.query_id = a.query_id
+        |    WHERE a.vec_id <> a.query_id) WHERE crn <= 50),
+        |scored AS (
+        |  SELECT q.query_id, e.vec_id,
+        |         list_dot_product(q.qv, e.v) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(e.v, e.v))) AS cos
+        |  FROM cand JOIN q ON q.query_id = cand.query_id
+        |       JOIN e ON e.vec_id = cand.vec_id),
+        |ranked AS (
+        |  SELECT query_id, vec_id, cos,
+        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
+        |  FROM scored)
+        |SELECT query_id, vec_id AS neighbor_id, rank, round(cos, 6) AS cos_sim
+        |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // incremental codebook maintenance (the IVF pattern per subspace):
+    // fold the shared synthetic ingest batch into the served codebook
+    // and search the merged corpus under it
+    // pq_incremental_topk: the same ADC/candidate/re-rank replay over
+    // the MERGED corpus (rebuilt in SQL — original embeddings plus the
+    // re-keyed reversed every-17th slice) under the exported MAINTAINED
+    // codebook + merged codes. A stale codebook, mis-encoded delta, or
+    // wrong merged id-space all mismatch.
+    Query("pq_incremental_topk", (s, d) => incrementalQuery(s, d),
+      """WITH cb AS (SELECT sub, code, CAST(cword AS DOUBLE[]) AS cw
+        |            FROM read_parquet('/tmp/graft_oracle_aux/pq_incr_codebook/*.parquet')),
+        |codes AS (SELECT vec_id, sub, code FROM read_parquet('/tmp/graft_oracle_aux/pq_incr_codes/*.parquet')),
+        |mx AS (SELECT max(vec_id) + 1 AS m FROM embeddings),
+        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+        |      UNION ALL
+        |      SELECT vec_id + (SELECT m FROM mx),
+        |             CAST(list_reverse(embedding) AS DOUBLE[])
+        |      FROM embeddings WHERE vec_id % 17 = 4),
+        |q AS (SELECT vec_id AS query_id, v AS qv, sqrt(list_dot_product(v, v)) AS qnorm
+        |      FROM e WHERE vec_id < 10),
+        |qsub AS (SELECT query_id, s.s AS sub, list_slice(qv, s.s*8 + 1, s.s*8 + 8) AS svec
+        |         FROM q, (VALUES (0),(1),(2),(3),(4),(5),(6),(7)) s(s)),
+        |lut AS (SELECT query_id, cb.sub, cb.code,
+        |               CAST(list_dot_product(qsub.svec, cb.cw) AS DECIMAL(28,12)) AS pdot,
+        |               CAST(list_dot_product(cb.cw, cb.cw) AS DECIMAL(28,12)) AS c2
+        |        FROM qsub JOIN cb ON cb.sub = qsub.sub),
+        |approx AS (
+        |  SELECT l.query_id, c.vec_id,
+        |         CAST(SUM(l.pdot) AS DOUBLE) AS adot,
+        |         sqrt(CAST(SUM(l.c2) AS DOUBLE)) AS rnorm
+        |  FROM codes c JOIN lut l ON l.sub = c.sub AND l.code = c.code
+        |  GROUP BY l.query_id, c.vec_id),
+        |cand AS (
+        |  SELECT query_id, vec_id FROM (
+        |    SELECT a.query_id, a.vec_id,
+        |           row_number() OVER (PARTITION BY a.query_id ORDER BY
+        |             (a.adot / (q.qnorm * a.rnorm)) DESC, a.vec_id) AS crn
+        |    FROM approx a JOIN q ON q.query_id = a.query_id
+        |    WHERE a.vec_id <> a.query_id) WHERE crn <= 50),
+        |scored AS (
+        |  SELECT q.query_id, e.vec_id,
+        |         list_dot_product(q.qv, e.v) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(e.v, e.v))) AS cos
+        |  FROM cand JOIN q ON q.query_id = cand.query_id
+        |       JOIN e ON e.vec_id = cand.vec_id),
+        |ranked AS (
+        |  SELECT query_id, vec_id, cos,
+        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
+        |  FROM scored)
+        |SELECT query_id, vec_id AS neighbor_id, rank, round(cos, 6) AS cos_sim
+        |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
 }

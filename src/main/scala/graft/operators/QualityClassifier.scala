@@ -102,11 +102,6 @@ object QualityClassifier {
       .drop("cnt")
   }
 
-  /** Probe hook ([[graft.LangIdPlanDump]]): the shared feature table,
-    * for plan-artifact dumps of the training lineage. */
-  private[graft] def probeBaseFeatures(docs: DataFrame,
-      buckets: Int): DataFrame = baseFeatures(docs, buckets)
-
   /** (doc_id, y, n_bg, b, x): the binary-labeled view for one target. */
   private def labeled(base: DataFrame, targetLang: String): DataFrame =
     base.select(col("doc_id"),
@@ -312,4 +307,125 @@ object QualityClassifier {
   /** Registry form of [[langScores]] over the documents table. */
   def langIdLearned(spark: SparkSession, dir: String): DataFrame =
     langScores(spark, Tables.documents(spark, dir))
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    // 2-epoch full-batch logistic GD over hashed bigrams, replayed
+    // exactly: per-row products in IEEE double rounded to 12 dp and
+    // summed as DECIMAL (order-independent), sigmoid outputs rounded
+    // to 9 dp so libm ulp differences cannot propagate across epochs
+    Query("quality_classifier", (s, d) => scores(s, d),
+      """WITH ws AS (
+        |  SELECT doc_id, lang,
+        |    list_filter(list_transform(string_split_regex(text, '[ \t\n]+'),
+        |      w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))),
+        |      w -> length(w) > 0) AS l
+        |  FROM documents),
+        |bgr AS (
+        |  SELECT doc_id, CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
+        |    len(l) - 1 AS n_bg,
+        |    CAST(concat('0x', substr(md5(l[i] || ' ' || l[i+1]), 1, 8)) AS BIGINT) % 1024 AS b
+        |  FROM ws, unnest(range(1, len(l))) AS t(i)
+        |  WHERE len(l) >= 2),
+        |feat AS (
+        |  SELECT doc_id, y, n_bg, b,
+        |    CAST(count(*) AS DOUBLE) / CAST(n_bg AS DOUBLE) AS x
+        |  FROM bgr GROUP BY doc_id, y, n_bg, b),
+        |w1 AS (
+        |  SELECT b, round(0.5 * CAST(sum(CAST(round((y - 0.5) * x, 12) AS DECIMAL(26,12))) AS DOUBLE), 12) AS w
+        |  FROM feat GROUP BY b),
+        |b1 AS (
+        |  SELECT round(0.5 * CAST(sum(CAST(round(y - 0.5, 12) AS DECIMAL(26,12))) AS DOUBLE), 12) AS bias0
+        |  FROM (SELECT DISTINCT doc_id, y FROM feat)),
+        |p1 AS (
+        |  SELECT doc_id, y, round(1.0 / (1.0 + exp(-z)), 9) AS p
+        |  FROM (
+        |    SELECT doc_id, y,
+        |      bias0 + CAST(sum(CAST(round(x * w, 12) AS DECIMAL(26,12))) AS DOUBLE) AS z
+        |    FROM feat JOIN w1 USING (b) CROSS JOIN b1
+        |    GROUP BY doc_id, y, bias0)),
+        |w2 AS (
+        |  SELECT w1.b, round(w1.w + 0.5 * coalesce(g.g, 0.0), 12) AS w
+        |  FROM w1 LEFT JOIN (
+        |    SELECT b, CAST(sum(CAST(round((feat.y - p.p) * x, 12) AS DECIMAL(26,12))) AS DOUBLE) AS g
+        |    FROM feat JOIN (SELECT doc_id, p FROM p1) p USING (doc_id)
+        |    GROUP BY b) g ON w1.b = g.b),
+        |b2 AS (
+        |  SELECT round(bias0 + 0.5 * CAST(sum(CAST(round(y - p, 12) AS DECIMAL(26,12))) AS DOUBLE), 12) AS bias2
+        |  FROM p1 CROSS JOIN b1 GROUP BY bias0),
+        |z2 AS (
+        |  SELECT doc_id, n_bg,
+        |    bias2 + CAST(sum(CAST(round(x * w, 12) AS DECIMAL(26,12))) AS DOUBLE) AS z
+        |  FROM feat JOIN w2 USING (b) CROSS JOIN b2
+        |  GROUP BY doc_id, n_bg, bias2)
+        |SELECT doc_id, CAST(n_bg AS BIGINT) AS n_bigrams,
+        |  round(1.0 / (1.0 + exp(-z)), 9) AS score,
+        |  (z >= 0.0) AS keep
+        |FROM z2 ORDER BY doc_id""".stripMargin),
+    // fastText-style one-vs-rest lang-id over the same hashed-bigram
+    // GD recipe; the oracle replays all K trainings and the argmax
+    // one-vs-rest lang-id: the quality_classifier training replay with
+    // a tgt (target language) dimension threaded through every CTE —
+    // K binary models trained in one pass of grouped SQL, then the
+    // per-doc argmax on raw margins (ties broken by language code)
+    Query("lang_id_learned", (s, d) => langIdLearned(s, d),
+      """WITH ws AS (
+        |  SELECT doc_id, lang,
+        |    list_filter(list_transform(string_split_regex(text, '[ \t\n]+'),
+        |      w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))),
+        |      w -> length(w) > 0) AS l
+        |  FROM documents),
+        |bgr AS (
+        |  SELECT doc_id, lang, len(l) - 1 AS n_bg,
+        |    CAST(concat('0x', substr(md5(l[i] || ' ' || l[i+1]), 1, 8)) AS BIGINT) % 1024 AS b
+        |  FROM ws, unnest(range(1, len(l))) AS t(i)
+        |  WHERE len(l) >= 2),
+        |feat0 AS (
+        |  SELECT doc_id, lang, n_bg, b,
+        |    CAST(count(*) AS DOUBLE) / CAST(n_bg AS DOUBLE) AS x
+        |  FROM bgr GROUP BY doc_id, lang, n_bg, b),
+        |langs AS (SELECT DISTINCT lang AS tgt FROM documents),
+        |feat AS (
+        |  SELECT f.doc_id, l.tgt,
+        |    CASE WHEN f.lang = l.tgt THEN 1.0 ELSE 0.0 END AS y,
+        |    f.n_bg, f.b, f.x
+        |  FROM feat0 f CROSS JOIN langs l),
+        |w1 AS (
+        |  SELECT tgt, b, round(0.5 * CAST(sum(CAST(round((y - 0.5) * x, 12) AS DECIMAL(26,12))) AS DOUBLE), 12) AS w
+        |  FROM feat GROUP BY tgt, b),
+        |b1 AS (
+        |  SELECT tgt, round(0.5 * CAST(sum(CAST(round(y - 0.5, 12) AS DECIMAL(26,12))) AS DOUBLE), 12) AS bias0
+        |  FROM (SELECT DISTINCT tgt, doc_id, y FROM feat) GROUP BY tgt),
+        |p1 AS (
+        |  SELECT tgt, doc_id, y, round(1.0 / (1.0 + exp(-z)), 9) AS p
+        |  FROM (
+        |    SELECT f.tgt, doc_id, y,
+        |      bias0 + CAST(sum(CAST(round(x * w, 12) AS DECIMAL(26,12))) AS DOUBLE) AS z
+        |    FROM feat f JOIN w1 ON f.tgt = w1.tgt AND f.b = w1.b
+        |    JOIN b1 ON b1.tgt = f.tgt
+        |    GROUP BY f.tgt, doc_id, y, bias0)),
+        |w2 AS (
+        |  SELECT w1.tgt, w1.b, round(w1.w + 0.5 * coalesce(g.g, 0.0), 12) AS w
+        |  FROM w1 LEFT JOIN (
+        |    SELECT f.tgt, b, CAST(sum(CAST(round((f.y - p.p) * x, 12) AS DECIMAL(26,12))) AS DOUBLE) AS g
+        |    FROM feat f JOIN p1 p ON p.tgt = f.tgt AND p.doc_id = f.doc_id
+        |    GROUP BY f.tgt, b) g ON w1.tgt = g.tgt AND w1.b = g.b),
+        |b2 AS (
+        |  SELECT b1.tgt, round(bias0 + 0.5 * CAST(sum(CAST(round(y - p, 12) AS DECIMAL(26,12))) AS DOUBLE), 12) AS bias2
+        |  FROM p1 JOIN b1 ON b1.tgt = p1.tgt GROUP BY b1.tgt, bias0),
+        |z2 AS (
+        |  SELECT f.tgt, doc_id, n_bg,
+        |    bias2 + CAST(sum(CAST(round(x * w, 12) AS DECIMAL(26,12))) AS DOUBLE) AS z
+        |  FROM feat f JOIN w2 ON w2.tgt = f.tgt AND w2.b = f.b
+        |  JOIN b2 ON b2.tgt = f.tgt
+        |  GROUP BY f.tgt, doc_id, n_bg, bias2),
+        |pick AS (
+        |  SELECT doc_id, n_bg, tgt, z,
+        |    row_number() OVER (PARTITION BY doc_id ORDER BY z DESC, tgt) AS rn
+        |  FROM z2)
+        |SELECT p.doc_id, CAST(n_bg AS BIGINT) AS n_bigrams,
+        |  tgt AS pred_lang, round(1.0 / (1.0 + exp(-z)), 9) AS score,
+        |  (tgt = d.lang) AS matches_label
+        |FROM pick p JOIN documents d ON d.doc_id = p.doc_id
+        |WHERE rn = 1 ORDER BY p.doc_id""".stripMargin))
 }

@@ -408,4 +408,189 @@ object Relational {
       .select(col("p_partkey"), col("p_brand"), col("p_retailprice"))
       .orderBy(col("p_partkey"))
   }
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("q1_pricing", (s, d) => q1Pricing(s, d),
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+        |  CAST(round(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_disc_price,
+        |  CAST(round(sum(CAST(l_extendedprice*(1.0-l_discount)*(1.0+l_tax) AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_charge,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_price,
+        |  CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_disc,
+        |  CAST(count(*) AS BIGINT) AS count_order
+        |FROM lineitem
+        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Query("q3_shipping_priority", (s, d) => q3ShippingPriority(s, d),
+      """SELECT l_orderkey,
+        |  CAST(CAST(o_orderdate AS DATE) AS VARCHAR) AS o_orderdate,
+        |  CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |  AND o_orderdate < TIMESTAMP '1998-01-01'
+        |  AND l_shipdate > TIMESTAMP '1998-01-01'
+        |GROUP BY l_orderkey, o_orderdate
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin),
+    Query("q5_local_volume", (s, d) => q5LocalVolume(s, d),
+      """SELECT n_name,
+        |  CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1997-01-01'
+        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin),
+    Query("top_orders", (s, d) => topOrders(s, d),
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin),
+    Query("semi_join_customers", (s, d) => semiJoinCustomers(s, d),
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 400000.0)
+        |ORDER BY c_custkey""".stripMargin),
+    Query("anti_join_customers", (s, d) => antiJoinCustomers(s, d),
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice > 450000.0)
+        |ORDER BY c_custkey""".stripMargin),
+    Query("orders_per_nation", (s, d) => ordersPerNation(s, d),
+      """SELECT n_name, CAST(count(*) AS BIGINT) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
+        |FROM orders
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    Query("setops_nations", (s, d) => setOpsNations(s, d),
+      """WITH cn AS (SELECT DISTINCT CAST(c_nationkey AS BIGINT) AS nationkey FROM customer),
+        |     sn AS (SELECT DISTINCT CAST(s_nationkey AS BIGINT) AS nationkey FROM supplier)
+        |SELECT nationkey, 'both' AS which FROM (SELECT * FROM cn INTERSECT SELECT * FROM sn)
+        |UNION ALL
+        |SELECT nationkey, 'cust_only' AS which FROM (SELECT * FROM cn EXCEPT SELECT * FROM sn)
+        |UNION ALL
+        |SELECT nationkey, 'supp_only' AS which FROM (SELECT * FROM sn EXCEPT SELECT * FROM cn)
+        |ORDER BY which, nationkey""".stripMargin),
+    Query("distinct_parts", (s, d) => distinctParts(s, d),
+      """SELECT DISTINCT p_brand, p_type FROM part ORDER BY p_brand, p_type""".stripMargin),
+    Query("rollup_orders", (s, d) => rollupOrders(s, d),
+      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
+        |       coalesce(o_orderpriority, 'ALL') AS priority,
+        |       CAST(count(*) AS BIGINT) AS n,
+        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
+        |ORDER BY status, priority""".stripMargin),
+    Query("cube_parts", (s, d) => cubeParts(s, d),
+      """SELECT coalesce(p_brand, 'ALL') AS brand,
+        |       coalesce(CAST(p_size AS VARCHAR), 'ALL') AS size,
+        |       CAST(count(*) AS BIGINT) AS n,
+        |       CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
+        |FROM part GROUP BY CUBE(p_brand, p_size)
+        |ORDER BY brand, size""".stripMargin),
+    Query("grouping_sets", (s, d) => groupingSetsLineitem(s, d),
+      """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
+        |       coalesce(l_linestatus, 'ALL') AS linestatus,
+        |       CAST(count(*) AS BIGINT) AS n,
+        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
+        |FROM lineitem
+        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
+        |ORDER BY returnflag, linestatus""".stripMargin),
+    Query("percentiles", (s, d) => quantityPercentiles(s, d),
+      """SELECT l_returnflag,
+        |       round(quantile_cont(l_quantity, 0.25), 4) AS p25,
+        |       round(quantile_cont(l_quantity, 0.5), 4) AS p50,
+        |       round(quantile_cont(l_quantity, 0.75), 4) AS p75,
+        |       round(quantile_cont(l_extendedprice, 0.9), 4) AS price_p90
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("monthly_revenue", (s, d) => monthlyRevenue(s, d),
+      """SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
+        |       CAST(month(o_orderdate) AS BIGINT) AS mon,
+        |       CAST(count(*) AS BIGINT) AS n_orders,
+        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+        |       round(sqrt(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)), 6) AS revenue_sqrt,
+        |       round(ln(CAST(count(*) AS DOUBLE)), 6) AS log_orders
+        |FROM orders GROUP BY 1, 2 ORDER BY yr, mon""".stripMargin),
+    Query("window_top_orders", (s, d) => windowTopOrdersPerCustomer(s, d),
+      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
+        |  SELECT o_custkey, o_orderkey, o_totalprice,
+        |    CAST(row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS rn
+        |  FROM orders) t
+        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin),
+    Query("window_running_qty", (s, d) => windowRunningQty(s, d),
+      """SELECT l_suppkey, l_orderkey, l_linenumber,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))
+        |    OVER (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber
+        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_qty
+        |FROM lineitem WHERE l_suppkey <= 10
+        |ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin),
+    Query("above_brand_avg", (s, d) => aboveBrandAvgParts(s, d),
+      """WITH ba AS (
+        |  SELECT p_brand, CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS brand_avg
+        |  FROM part GROUP BY p_brand)
+        |SELECT p_partkey, part.p_brand, p_retailprice
+        |FROM part JOIN ba ON part.p_brand = ba.p_brand
+        |WHERE p_retailprice > brand_avg ORDER BY p_partkey""".stripMargin),
+    Query("window_analytics", (s, d) => windowAnalytics(s, d),
+      """SELECT o_orderstatus, o_orderkey,
+        |  CAST(ntile(4) OVER w AS INTEGER) AS quartile,
+        |  round(percent_rank() OVER w, 6) AS pct_rank,
+        |  round(cume_dist() OVER w, 6) AS cume,
+        |  first_value(o_orderkey) OVER w AS cheapest_order
+        |FROM orders WHERE o_custkey <= 50
+        |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)
+        |ORDER BY o_orderstatus, o_orderkey""".stripMargin),
+    Query("pivot_orders", (s, d) => pivotOrders(s, d),
+      """SELECT o_orderpriority,
+        |  CAST(count(*) FILTER (WHERE o_orderstatus = 'F') AS BIGINT) AS n_f,
+        |  CAST(count(*) FILTER (WHERE o_orderstatus = 'O') AS BIGINT) AS n_o,
+        |  CAST(count(*) FILTER (WHERE o_orderstatus = 'P') AS BIGINT) AS n_p
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    // approx_stats: same skeleton-plus-estimates shape as hll_rollup
+    // (see the oracleAux notes for the determinism argument per leg).
+    // HLL estimates cross as aux data (estimate-as-data pattern); the
+    // histogram median is DETERMINISTIC integer math and replays
+    // exactly: smallest unit bin with 2*cum >= n, at the bin midpoint
+    Query("approx_stats", (s, d) => approxStats(s, d),
+      """WITH h AS (
+        |  SELECT l_returnflag, CAST(floor(l_quantity) AS BIGINT) AS bin,
+        |    count(*) AS c
+        |  FROM lineitem GROUP BY 1, 2),
+        |m AS (
+        |  SELECT l_returnflag, min(bin) + 0.5 AS approx_median_qty
+        |  FROM (
+        |    SELECT l_returnflag, bin,
+        |      sum(c) OVER (PARTITION BY l_returnflag ORDER BY bin) AS cum,
+        |      sum(c) OVER (PARTITION BY l_returnflag) AS n
+        |    FROM h)
+        |  WHERE cum * 2 >= n GROUP BY 1)
+        |SELECT g.l_returnflag, s.approx_parts, s.approx_orders, m.approx_median_qty
+        |FROM (SELECT DISTINCT l_returnflag FROM lineitem) g
+        |LEFT JOIN read_parquet('/tmp/graft_oracle_aux/approx_stats_est/*.parquet') s USING (l_returnflag)
+        |LEFT JOIN m USING (l_returnflag)
+        |ORDER BY g.l_returnflag""".stripMargin),
+    // hll_rollup: the deterministic skeleton — which returnflag groups
+    // the rollup must produce — comes from DuckDB's own DISTINCT scan;
+    // the merged HLL estimate crosses as aux data (per-register max →
+    // merge-order independent, byte-stable across re-runs). LEFT JOIN
+    // for the same reason as rolling_users_7d: a group the Spark side
+    // dropped must surface as a NULL-estimate row, not vanish from an
+    // inner join in lockstep.
+    Query("hll_rollup", (s, d) => hllRollup(s, d),
+      """SELECT g.l_returnflag, s.approx_parts_merged
+        |FROM (SELECT DISTINCT l_returnflag FROM lineitem) g
+        |LEFT JOIN read_parquet('/tmp/graft_oracle_aux/hll_rollup_est/*.parquet') s USING (l_returnflag)
+        |ORDER BY g.l_returnflag""".stripMargin),
+    Query("extra_orders_multiset", (s, d) => extraOrdersMultiset(s, d),
+      """WITH extra AS (
+        |  SELECT o_custkey AS custkey FROM orders
+        |  EXCEPT ALL
+        |  SELECT c_custkey AS custkey FROM customer)
+        |SELECT custkey, CAST(count(*) AS BIGINT) AS n_extra_orders
+        |FROM extra GROUP BY custkey ORDER BY custkey""".stripMargin))
 }

@@ -480,4 +480,104 @@ object Similarity {
         col("neighbor_id"), round(col("cos"), 6).as("cos_sim"))
       .orderBy(col("vec_id"), col("rank"))
   }
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("cosine_topk", (s, d) => cosineTopK(s, d),
+      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 10),
+        |c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
+        |scored AS (
+        |  SELECT query_id, vec_id,
+        |         list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cos
+        |  FROM q JOIN c ON vec_id <> query_id),
+        |ranked AS (
+        |  SELECT query_id, vec_id, cos,
+        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
+        |  FROM scored)
+        |SELECT query_id, vec_id AS neighbor_id, rank, round(cos, 6) AS cos_sim
+        |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    Query("ann_topk", (s, d) => annTopK(s, d), Ivf.IvfSearchOracle(nProbe = 8)),
+    Query("cosine_near_dup", (s, d) => cosineNearDupExact(s, d),
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+        |                  sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
+        |           FROM embeddings)
+        |SELECT a.vec_id AS vec_id_1, b.vec_id AS vec_id_2,
+        |       round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) AS cos_sim
+        |FROM e a JOIN e b ON a.vec_id < b.vec_id
+        |WHERE list_dot_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.4
+        |ORDER BY vec_id_1, vec_id_2""".stripMargin),
+    // LSH near-dup oracle: buckets cross as data; the Hamming-ball
+    // probe masks (nPlanes=4, maxFlips=2: all 4-bit values with <= 2
+    // bits set) and the verify join are recomputed in SQL.
+    Query("cosine_near_dup_lsh", (s, d) => cosineNearDupLsh(s, d),
+      """WITH b AS (SELECT vec_id, bucket FROM read_parquet('/tmp/graft_oracle_aux/lsh_buckets/*.parquet')),
+        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+        |             sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
+        |      FROM embeddings),
+        |probing AS (
+        |  SELECT b.vec_id, xor(b.bucket, m.m) AS bucket
+        |  FROM b, (VALUES (0),(1),(2),(3),(4),(5),(6),(8),(9),(10),(12)) m(m)),
+        |pairs AS (
+        |  SELECT DISTINCT a.vec_id AS vec_id_1, bb.vec_id AS vec_id_2
+        |  FROM probing a JOIN b bb ON a.bucket = bb.bucket AND a.vec_id < bb.vec_id)
+        |SELECT p.vec_id_1, p.vec_id_2,
+        |       round(list_dot_product(e1.v, e2.v) / (e1.nrm * e2.nrm), 6) AS cos_sim
+        |FROM pairs p
+        |JOIN e e1 ON e1.vec_id = p.vec_id_1
+        |JOIN e e2 ON e2.vec_id = p.vec_id_2
+        |WHERE list_dot_product(e1.v, e2.v) / (e1.nrm * e2.nrm) >= 0.4
+        |ORDER BY vec_id_1, vec_id_2""".stripMargin),
+    Query("knn_graph", (s, d) => knnGraph(s, d),
+      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v,
+        |                  sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
+        |           FROM embeddings),
+        |s AS (SELECT a.vec_id, a.label, b.vec_id AS neighbor_id,
+        |             list_dot_product(a.v, b.v) / (a.nrm * b.nrm) AS cos
+        |      FROM e a JOIN e b ON a.label = b.label AND a.vec_id <> b.vec_id),
+        |r AS (SELECT vec_id, label, neighbor_id, cos,
+        |             CAST(row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rank
+        |      FROM s)
+        |SELECT vec_id, label, rank, neighbor_id, round(cos, 6) AS cos_sim
+        |FROM r WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin),
+    // within-cell pair scan + lower-id drop rule replayed in SQL from
+    // the exported IVF cell assignment (the same ivf_cells artifact the
+    // search oracles use)
+    Query("semantic_dedup", (s, d) => semanticDedup(s, d),
+      """WITH cells AS (SELECT vec_id, cell FROM read_parquet('/tmp/graft_oracle_aux/ivf_cells/*.parquet')),
+        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+        |             sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
+        |      FROM embeddings),
+        |j AS (SELECT c.vec_id, c.cell, e.v, e.nrm
+        |      FROM cells c JOIN e ON c.vec_id = e.vec_id),
+        |d AS (SELECT DISTINCT b.vec_id
+        |      FROM j a JOIN j b ON a.cell = b.cell AND a.vec_id < b.vec_id
+        |      WHERE list_dot_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.4)
+        |SELECT j.vec_id, j.cell, (d.vec_id IS NULL) AS kept
+        |FROM j LEFT JOIN d ON j.vec_id = d.vec_id
+        |ORDER BY j.vec_id""".stripMargin),
+    Query("hard_negatives", (s, d) => hardNegatives(s, d),
+      """WITH q AS (SELECT vec_id AS query_id, label AS q_label, CAST(embedding AS DOUBLE[]) AS qv
+        |           FROM embeddings WHERE vec_id < 10),
+        |c AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
+        |scored AS (
+        |  SELECT query_id, q_label, vec_id, label,
+        |    list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cos
+        |  FROM q JOIN c ON vec_id <> query_id),
+        |ranked AS (
+        |  SELECT query_id, vec_id, cos, (label = q_label) AS same,
+        |    row_number() OVER (PARTITION BY query_id, (label = q_label)
+        |                       ORDER BY cos DESC, vec_id) AS rn
+        |  FROM scored),
+        |pos AS (SELECT query_id, vec_id AS pos_id, cos AS pos_cos
+        |        FROM ranked WHERE same AND rn = 1),
+        |neg AS (SELECT query_id, vec_id AS neg_id, cos AS neg_cos
+        |        FROM ranked WHERE NOT same AND rn = 1)
+        |SELECT q.query_id, CAST(q.q_label AS BIGINT) AS q_label,
+        |  pos_id, round(pos_cos, 6) AS pos_cos,
+        |  neg_id, round(neg_cos, 6) AS neg_cos,
+        |  round(pos_cos - neg_cos, 6) AS margin
+        |FROM q
+        |LEFT JOIN pos ON q.query_id = pos.query_id
+        |LEFT JOIN neg ON q.query_id = neg.query_id
+        |ORDER BY q.query_id""".stripMargin))
 }

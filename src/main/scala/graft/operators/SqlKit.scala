@@ -210,4 +210,111 @@ object SqlKit {
         expr("bit_xor(user_id)").as("xor_uid"),
         count(lit(1)).as("n"))
       .orderBy(col("event_type"))
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("unpivot_orders", (s, d) => unpivotOrders(s, d),
+      """WITH wide AS (
+        |  SELECT o_orderstatus,
+        |    CAST(count(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS BIGINT) AS n_urgent,
+        |    CAST(count(*) FILTER (WHERE o_orderpriority = '2-HIGH') AS BIGINT) AS n_high,
+        |    CAST(count(*) FILTER (WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH')) AS BIGINT) AS n_other
+        |  FROM orders GROUP BY o_orderstatus)
+        |SELECT o_orderstatus, metric, n FROM (
+        |  SELECT o_orderstatus, 'n_urgent' AS metric, n_urgent AS n FROM wide
+        |  UNION ALL
+        |  SELECT o_orderstatus, 'n_high' AS metric, n_high AS n FROM wide
+        |  UNION ALL
+        |  SELECT o_orderstatus, 'n_other' AS metric, n_other AS n FROM wide)
+        |ORDER BY o_orderstatus, metric""".stripMargin),
+    Query("listagg_nations", (s, d) => listaggNations(s, d),
+      """SELECT r_name, CAST(count(*) AS BIGINT) AS n_nations,
+        |       string_agg(n_name, ',' ORDER BY n_name) AS nations_csv
+        |FROM nation JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY r_name ORDER BY r_name""".stripMargin),
+    Query("price_histogram", (s, d) => priceHistogram(s, d),
+      """SELECT least(CAST(floor(o_totalprice / 50000.0) AS BIGINT), 9) AS bucket,
+        |       CAST(count(*) AS BIGINT) AS n_orders,
+        |       round(min(o_totalprice), 2) AS min_price,
+        |       round(max(o_totalprice), 2) AS max_price
+        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin),
+    Query("robust_stats", (s, d) => robustStats(s, d),
+      """WITH m AS (
+        |  SELECT l_returnflag,
+        |    CAST(count(*) AS DOUBLE) AS n,
+        |    CAST(sum(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS s1,
+        |    CAST(sum(CAST(l_quantity*l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS s2,
+        |    CAST(sum(CAST(l_quantity*l_quantity*l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS s3,
+        |    CAST(sum(CAST(l_quantity*l_quantity*l_quantity*l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS s4
+        |  FROM lineitem GROUP BY l_returnflag),
+        |d AS (
+        |  SELECT l_returnflag, n, s1 / n AS mean,
+        |         s2 / n - (s1/n) * (s1/n) AS m2,
+        |         s3 / n - 3.0 * (s1/n) * (s2/n) + 2.0 * (s1/n) * (s1/n) * (s1/n) AS m3,
+        |         s4 / n - 4.0 * (s1/n) * (s3/n) + 6.0 * (s1/n) * (s1/n) * (s2/n)
+        |           - 3.0 * (s1/n) * (s1/n) * (s1/n) * (s1/n) AS m4
+        |  FROM m),
+        |modes AS (
+        |  SELECT l_returnflag, l_quantity AS mode_qty FROM (
+        |    SELECT l_returnflag, l_quantity,
+        |           row_number() OVER (PARTITION BY l_returnflag
+        |                              ORDER BY count(*) DESC, l_quantity) AS rn
+        |    FROM lineitem GROUP BY l_returnflag, l_quantity)
+        |  WHERE rn = 1)
+        |SELECT d.l_returnflag, CAST(n AS BIGINT) AS n,
+        |       round(mean, 6) AS mean_qty,
+        |       round(m3 / pow(m2, 1.5), 6) AS skewness_qty,
+        |       round(m4 / (m2 * m2) - 3.0, 6) AS kurtosis_qty,
+        |       mode_qty
+        |FROM d JOIN modes ON d.l_returnflag = modes.l_returnflag
+        |ORDER BY d.l_returnflag""".stripMargin),
+    Query("date_kit", (s, d) => dateKit(s, d),
+      """SELECT o_orderkey,
+        |       strftime(o_orderdate, '%Y-%m-%d') AS order_date,
+        |       CAST(quarter(o_orderdate) AS BIGINT) AS qtr,
+        |       CAST(week(o_orderdate) AS BIGINT) AS iso_week,
+        |       CAST(dayofweek(o_orderdate) AS BIGINT) AS dow,
+        |       strftime(last_day(CAST(o_orderdate AS DATE)), '%Y-%m-%d') AS month_end,
+        |       strftime(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH, '%Y-%m-%d') AS plus_3m,
+        |       CAST(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS epoch_day
+        |FROM orders WHERE o_orderkey <= 200 ORDER BY o_orderkey""".stripMargin),
+    Query("window_lag_lead", (s, d) => windowLagLead(s, d),
+      """SELECT o_custkey, o_orderkey, o_totalprice,
+        |       lag(o_totalprice, 1, -1.0) OVER w AS prev_price,
+        |       lead(o_totalprice, 1, -1.0) OVER w AS next_price,
+        |       CAST(dense_rank() OVER (PARTITION BY o_custkey ORDER BY o_orderpriority) AS BIGINT) AS prio_rank,
+        |       nth_value(o_orderkey, 2) OVER w AS second_order
+        |FROM orders WHERE o_custkey <= 30
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Query("bitwise_kit", (s, d) => bitwiseKit(s, d),
+      """SELECT event_type,
+        |       CAST(bit_and(user_id) AS BIGINT) AS and_uid,
+        |       CAST(bit_or(user_id) AS BIGINT) AS or_uid,
+        |       CAST(bit_xor(user_id) AS BIGINT) AS xor_uid,
+        |       CAST(count(*) AS BIGINT) AS n
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("month_spine", (s, d) => monthSpine(s, d),
+      """WITH b AS (
+        |  SELECT date_trunc('month', min(o_orderdate)) AS lo,
+        |         date_trunc('month', max(o_orderdate)) AS hi
+        |  FROM orders),
+        |spine AS (
+        |  SELECT unnest(generate_series(lo, hi, INTERVAL 1 MONTH)) AS m FROM b),
+        |rev AS (
+        |  SELECT date_trunc('month', o_orderdate) AS m,
+        |         CAST(count(*) AS BIGINT) AS n,
+        |         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS r
+        |  FROM orders GROUP BY 1)
+        |SELECT strftime(spine.m, '%Y-%m') AS month,
+        |       coalesce(n, 0) AS n_orders,
+        |       coalesce(r, 0.0) AS revenue
+        |FROM spine LEFT JOIN rev ON spine.m = rev.m
+        |ORDER BY month""".stripMargin),
+    Query("safe_casts", (s, d) => safeCasts(s, d),
+      """SELECT o_orderkey,
+        |       TRY_CAST(o_orderstatus AS INTEGER) AS status_as_int,
+        |       TRY_CAST(substr(o_orderpriority, 1, 1) AS INTEGER) AS prio_digit,
+        |       round(o_totalprice / nullif(CAST(o_orderkey % 3 AS DOUBLE), 0.0), 4) AS per_bucket
+        |FROM orders WHERE o_orderkey <= 200 ORDER BY o_orderkey""".stripMargin))
 }

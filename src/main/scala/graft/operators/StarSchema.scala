@@ -267,4 +267,35 @@ object StarSchema {
     scopedForBloom(spark) {
       urgentRevenueAgg(spark, dir).localCheckpoint()
     }.orderBy(col("o_orderpriority"))
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    // star-schema runtime filtering: DPP over the nation-partitioned
+    // fact copy; runtime bloom-filter join on the non-partition key.
+    // Oracles are the plain joins over the ORIGINAL tables — the fact
+    // copy holds the same rows, and the bloom filter never changes a
+    // result; the mechanisms are plan-gated in PlanShapeSpec.
+    // dpp_star_revenue: the engine reads a nation-partitioned fact COPY
+    // (orders x customer.nationkey) so the region filter prunes fact
+    // partitions at runtime; the copy holds exactly these rows, so the
+    // plain star join over the original tables is the oracle.
+    Query("dpp_star_revenue", (s, d) => dppStarRevenue(s, d),
+      """SELECT n_name,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+        |  count(*) AS n_orders
+        |FROM orders
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |WHERE n_regionkey = 1
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    // bloom_join_revenue: the runtime bloom filter is a pure pruning
+    // device — the join verifies every surviving row — so the plain
+    // filtered join IS the oracle.
+    Query("bloom_join_revenue", (s, d) => bloomJoinRevenue(s, d),
+      """SELECT o_orderpriority,
+        |  CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+        |  count(*) AS n_items
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE o_orderpriority = '1-URGENT'
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin))
 }

@@ -691,4 +691,78 @@ object SuffixRanks {
         coalesce(col("max_occ"), lit(0L)).as("max_occ"))
       .orderBy(col("doc_id"))
   }
+
+  /** Shared by the suffix-rank oracles: every position's PrefixLen-char
+    * window of the normalized char stream. */
+  private val SuffixPosCte: String =
+    """WITH st AS (
+      |  SELECT doc_id, array_to_string(list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0), ' ') AS s
+      |  FROM documents),
+      |pos AS (
+      |  SELECT doc_id, CAST(i AS INTEGER) AS pos, substring(s, CAST(i AS INTEGER), @PLEN) AS pfx
+      |  FROM st, unnest(range(1, length(s) + 1)) AS u(i)
+      |  WHERE length(s) > 0)"""
+      .stripMargin
+      .replace("@PLEN", graft.operators.SuffixRanks.PrefixLen.toString)
+
+  // suffix_ranks: the prefix-doubling dense rank must equal a plain
+  // dense_rank over the window STRINGS (memcmp order both engines);
+  // repeated_spans_sa recounts occurrences on the strings, so a rank
+  // collision or split in the doubling would mismatch either query.
+  private val SuffixRanksSql: String = SuffixPosCte + """
+    |SELECT doc_id, pos,
+    |  CAST(dense_rank() OVER (ORDER BY pfx) - 1 AS BIGINT) AS r
+    |FROM pos ORDER BY doc_id, pos""".stripMargin
+
+  // suffix_ranks_incremental: the Spark side merges a re-keyed,
+  // text-REVERSED slice (every 29th doc, ~3%) into the persisted index via
+  // SuffixRanks.incremental; the oracle knows nothing of the merge —
+  // it rebuilds the dense rank over the synthetic merged corpus from
+  // scratch, so stale old ranks, missed shifts, or mis-interleaved
+  // delta classes all hash-mismatch.
+  private val SuffixRanksIncrSql: String =
+    ("""WITH mx AS (SELECT max(doc_id) + 1 AS m FROM documents),
+      |docs2 AS (
+      |  SELECT doc_id, text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + m AS doc_id, reverse(text) AS text
+      |  FROM documents, mx WHERE doc_id % 29 = 3),
+      |st AS (
+      |  SELECT doc_id, array_to_string(list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0), ' ') AS s
+      |  FROM docs2),
+      |pos AS (
+      |  SELECT doc_id, CAST(i AS INTEGER) AS pos, substring(s, CAST(i AS INTEGER), @PLEN) AS pfx
+      |  FROM st, unnest(range(1, length(s) + 1)) AS u(i)
+      |  WHERE length(s) > 0)
+      |SELECT doc_id, pos,
+      |  CAST(dense_rank() OVER (ORDER BY pfx) - 1 AS BIGINT) AS r
+      |FROM pos ORDER BY doc_id, pos""")
+      .stripMargin
+      .replace("@PLEN", graft.operators.SuffixRanks.PrefixLen.toString)
+
+  private val RepeatedSpansSql: String = SuffixPosCte + """,
+    |occ AS (SELECT pfx, CAST(count(*) AS BIGINT) AS occ FROM pos GROUP BY pfx),
+    |per AS (
+    |  SELECT doc_id,
+    |    CAST(count(*) AS BIGINT) AS n_pos,
+    |    CAST(sum(CASE WHEN occ > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_repeated,
+    |    CAST(max(occ) AS BIGINT) AS max_occ
+    |  FROM pos JOIN occ USING (pfx) GROUP BY doc_id)
+    |SELECT d.doc_id,
+    |  CAST(coalesce(p.n_pos, 0) AS BIGINT) AS n_pos,
+    |  CAST(coalesce(p.n_repeated, 0) AS BIGINT) AS n_repeated,
+    |  CAST(coalesce(p.max_occ, 0) AS BIGINT) AS max_occ
+    |FROM documents d LEFT JOIN per p USING (doc_id)
+    |ORDER BY d.doc_id""".stripMargin
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("suffix_ranks", (s, d) => suffixRankTable(s, d), SuffixRanksSql),
+    Query("repeated_spans_sa", (s, d) => repeatedSpans(s, d), RepeatedSpansSql),
+    // delta ingest merged into the persisted index WITHOUT re-running
+    // the doubling over old positions; the oracle replays the merged
+    // corpus's dense rank from scratch, so only an exact merge
+    // (shifted old ranks AND interleaved delta ranks) matches
+    Query("suffix_ranks_incremental", (s, d) => incrementalQuery(s, d),
+      SuffixRanksIncrSql))
 }

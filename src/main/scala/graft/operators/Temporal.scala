@@ -272,4 +272,57 @@ object Temporal {
           .cast("long").as("gap_sec"))
       .orderBy(col("purchase_id"), col("error_id"))
   }
+
+  /** Shared by asof_join_forward (window formulation) and
+    * asof_join_forward_native (AsOfMergeJoinExec, forward direction).
+    */
+  private val AsOfForwardOracle: String =
+    """WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'error'),
+      |     r AS (SELECT user_id, ts, MIN(value) AS value FROM events
+      |           WHERE event_type = 'purchase' GROUP BY 1, 2)
+      |SELECT l.event_id, l.user_id,
+      |       CAST(epoch_ns(l.ts) // 1000000000 AS BIGINT) AS error_sec,
+      |       CAST(epoch_ns(r.ts) // 1000000000 AS BIGINT) AS purchase_sec,
+      |       r.value AS purchase_value
+      |FROM l ASOF JOIN r ON l.user_id = r.user_id AND l.ts <= r.ts
+      |ORDER BY event_id""".stripMargin
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("asof_join", (s, d) => purchaseAsofClick(s, d),
+      """WITH l AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'),
+        |     r AS (SELECT user_id, ts, MIN(value) AS value FROM events
+        |           WHERE event_type = 'click' GROUP BY 1, 2)
+        |SELECT l.event_id, l.user_id,
+        |       CAST(epoch_ns(l.ts) // 1000000000 AS BIGINT) AS purchase_sec,
+        |       CAST(epoch_ns(r.ts) // 1000000000 AS BIGINT) AS click_sec,
+        |       r.value AS click_value
+        |FROM l ASOF JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
+        |ORDER BY event_id""".stripMargin),
+    // identical SQL to asof_join by design: the native merge operator
+    // must reproduce the window formulation's rows exactly
+    Query("asof_join_native", (s, d) => purchaseAsofClickNative(s, d),
+      """WITH l AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'),
+        |     r AS (SELECT user_id, ts, MIN(value) AS value FROM events
+        |           WHERE event_type = 'click' GROUP BY 1, 2)
+        |SELECT l.event_id, l.user_id,
+        |       CAST(epoch_ns(l.ts) // 1000000000 AS BIGINT) AS purchase_sec,
+        |       CAST(epoch_ns(r.ts) // 1000000000 AS BIGINT) AS click_sec,
+        |       r.value AS click_value
+        |FROM l ASOF JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
+        |ORDER BY event_id""".stripMargin),
+    Query("asof_join_forward", (s, d) => errorNextPurchase(s, d),
+      AsOfForwardOracle),
+    // native forward merge: same rows as the window formulation by the
+    // AsOfMergeJoinExec direction contract (bit-equality spec'd)
+    Query("asof_join_forward_native", (s, d) => errorNextPurchaseNative(s, d),
+      AsOfForwardOracle),
+    Query("range_join", (s, d) => purchaseThenError(s, d),
+      """SELECT a.event_id AS purchase_id, b.event_id AS error_id,
+        |       a.user_id AS user_id,
+        |       CAST((epoch_ns(b.ts) - epoch_ns(a.ts)) // 1000000000 AS BIGINT) AS gap_sec
+        |FROM events a JOIN events b
+        |  ON a.user_id = b.user_id AND a.event_type = 'purchase' AND b.event_type = 'error'
+        | AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 60 MINUTE
+        |ORDER BY purchase_id, error_id""".stripMargin))
 }

@@ -580,4 +580,269 @@ object TextAnalysis {
       .orderBy(col("pmi").desc, col("word_a"), col("word_b"))
       .limit(k)
   }
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("inverted_index",
+      (s, d) => InvertedIndex.asStrings(Tables.documents(s, d))
+        .orderBy(col("word")),
+      """WITH toks AS (
+        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+        |  FROM documents
+        |), pairs AS (
+        |  SELECT DISTINCT word, doc_id FROM toks WHERE length(word) > 0
+        |)
+        |SELECT word, string_agg(CAST(doc_id AS VARCHAR), ' ' ORDER BY doc_id) AS doc_ids,
+        |       CAST(count(*) AS BIGINT) AS n_docs
+        |FROM pairs GROUP BY word ORDER BY word""".stripMargin),
+    Query("word_stats", (s, d) => wordStats(s, d),
+      """WITH toks AS (
+        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+        |  FROM documents
+        |)
+        |SELECT word, CAST(count(*) AS BIGINT) AS n_occurrences,
+        |       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
+        |FROM toks WHERE length(word) > 0 GROUP BY word ORDER BY word""".stripMargin),
+    Query("top_words", (s, d) => topWords(s, d),
+      """WITH toks AS (
+        |  SELECT lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+        |  FROM documents
+        |)
+        |SELECT word, CAST(count(*) AS BIGINT) AS n
+        |FROM toks WHERE length(word) > 0 GROUP BY word
+        |ORDER BY n DESC, word LIMIT 20""".stripMargin),
+    Query("lang_profile", (s, d) => langProfile(s, d),
+      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+        |       CAST(sum(n_chars) AS BIGINT) AS total_chars,
+        |       CAST(sum(n_chars) AS DOUBLE) / count(*) AS avg_chars,
+        |       min(n_chars) AS min_chars, max(n_chars) AS max_chars
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("doc_stats", (s, d) => docStats(s, d),
+      """WITH base AS (
+        |  SELECT doc_id, lang, text,
+        |    list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
+        |  FROM documents)
+        |SELECT doc_id, lang,
+        |  CAST(len(list_filter(string_split_regex(text, '[ \t\n]+'), t -> length(t) > 0)) AS BIGINT) AS n_tokens,
+        |  CAST(len(regexp_extract_all(text, '[a-zA-Z0-9]+')) + length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS BIGINT) AS n_bpeish_tokens,
+        |  CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct_words,
+        |  round(CASE WHEN len(ws) > 0 THEN CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE) / len(ws) ELSE 0.0 END, 4) AS mean_word_len,
+        |  round(CASE WHEN length(text) > 0 THEN CAST(length(regexp_replace(text, '[a-zA-Z0-9 \t\n]', '', 'g')) AS DOUBLE) / length(text) ELSE 0.0 END, 4) AS punct_ratio,
+        |  round(CASE WHEN len(ws) > 0 THEN CAST(len(list_filter(ws, w -> w IN ('the','a','an','and','or','of','to','in','is','are','was','on','for','it','that','this','with','as','by','at'))) AS DOUBLE) / len(ws) ELSE 0.0 END, 4) AS stopword_ratio,
+        |  round((
+        |    least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
+        |    + (1.0 - least((CASE WHEN length(text) > 0 THEN CAST(length(regexp_replace(text, '[a-zA-Z0-9 \t\n]', '', 'g')) AS DOUBLE) / length(text) ELSE 0.0 END) * 4.0, 1.0))
+        |    + greatest(1.0 - abs((CASE WHEN len(ws) > 0 THEN CAST(len(list_filter(ws, w -> w IN ('the','a','an','and','or','of','to','in','is','are','was','on','for','it','that','this','with','as','by','at'))) AS DOUBLE) / len(ws) ELSE 0.0 END) - 0.35) * 2.0, 0.0)
+        |  ) / 3.0, 4) AS quality
+        |FROM base ORDER BY doc_id""".stripMargin),
+    Query("lang_id", (s, d) => langIdQuery(s, d),
+      """WITH base AS (
+        |  SELECT doc_id,
+        |    list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
+        |  FROM documents),
+        |scores AS (
+        |  SELECT doc_id,
+        |    CAST(len(list_filter(ws, w -> w IN ('the','and','of','to','in','is','that','with'))) AS BIGINT) AS s_en,
+        |    CAST(len(list_filter(ws, w -> w IN ('der','die','das','und','ist','nicht','mit','ein'))) AS BIGINT) AS s_de,
+        |    CAST(len(list_filter(ws, w -> w IN ('el','la','de','que','y','en','un','es'))) AS BIGINT) AS s_es,
+        |    CAST(len(list_filter(ws, w -> w IN ('le','la','de','et','un','est','que','dans'))) AS BIGINT) AS s_fr,
+        |    CAST(len(list_filter(ws, w -> w IN ('de','shi','le','zai','he','you','wo','ta'))) AS BIGINT) AS s_zh
+        |  FROM base)
+        |SELECT doc_id,
+        |  CASE WHEN s_zh = m THEN 'zh' WHEN s_fr = m THEN 'fr' WHEN s_es = m THEN 'es'
+        |       WHEN s_en = m THEN 'en' ELSE 'de' END AS pred_lang,
+        |  m AS marker_hits
+        |FROM (SELECT *, greatest(s_en, s_de, s_es, s_fr, s_zh) AS m FROM scores)
+        |ORDER BY doc_id""".stripMargin),
+    Query("tfidf_top_term", (s, d) => tfidfTopTerm(s, d),
+      """WITH toks AS (
+        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+        |  FROM documents),
+        |tf AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
+        |       FROM toks WHERE length(word) > 0 GROUP BY doc_id, word),
+        |df AS (SELECT word, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY word),
+        |nd AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n FROM documents),
+        |scored AS (
+        |  SELECT tf.doc_id, tf.word,
+        |         round(CAST(tf.tf AS DOUBLE) * ln(CAST(nd.n AS DOUBLE) / CAST(df.df AS DOUBLE)), 6) AS tfidf
+        |  FROM tf JOIN df ON tf.word = df.word CROSS JOIN nd),
+        |ranked AS (
+        |  SELECT doc_id, word, tfidf,
+        |         row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, word) AS rn
+        |  FROM scored)
+        |SELECT doc_id, word AS top_term, tfidf FROM ranked WHERE rn = 1 ORDER BY doc_id""".stripMargin),
+    Query("doc_fingerprints", (s, d) => fingerprints(s, d),
+      """WITH s AS (
+        |  SELECT doc_id,
+        |    string_split(trim(regexp_replace(lower(regexp_replace(text, '[^a-zA-Z \t\n]', '', 'g')), '[ \t\n]+', ' ', 'g')), ' ') AS ws
+        |  FROM documents),
+        |g AS (
+        |  SELECT doc_id, i,
+        |    CAST(concat('0x', substr(md5(ws[i-1] || ' ' || ws[i] || ' ' || ws[i+1]), 1, 8)) AS BIGINT) AS h
+        |  FROM s, unnest(range(2, len(ws))) AS r(i)
+        |  WHERE len(ws) >= 3),
+        |wmin AS (
+        |  SELECT doc_id,
+        |    min(h) OVER (PARTITION BY doc_id ORDER BY i
+        |                 ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS fp
+        |  FROM g),
+        |fps AS (SELECT DISTINCT doc_id, fp FROM wmin)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fps,
+        |       min(fp) AS min_fp, max(fp) AS max_fp,
+        |       CAST(sum(fp) AS BIGINT) AS fp_sum
+        |FROM fps GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("topk_words_per_lang", (s, d) => topWordsPerLang(s, d),
+      """WITH toks AS (
+        |  SELECT lang, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+        |  FROM documents),
+        |counts AS (SELECT lang, word, CAST(count(*) AS BIGINT) AS n
+        |           FROM toks WHERE length(word) > 0 GROUP BY lang, word),
+        |ranked AS (
+        |  SELECT lang, word, n,
+        |         CAST(row_number() OVER (PARTITION BY lang ORDER BY n DESC, word) AS INTEGER) AS rank
+        |  FROM counts)
+        |SELECT lang, word, n, rank FROM ranked WHERE rank <= 3
+        |ORDER BY lang, rank""".stripMargin),
+    Query("bm25_topk", (s, d) => bm25TopK(s, d),
+      """WITH toks AS (
+        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+        |  FROM documents),
+        |w AS (SELECT doc_id, word FROM toks WHERE length(word) > 0),
+        |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM w GROUP BY doc_id),
+        |corpus AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
+        |                  CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
+        |tf AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
+        |       FROM w WHERE word IN ('hash', 'join', 'scan', 'filter')
+        |       GROUP BY doc_id, word),
+        |df AS (SELECT word, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY word),
+        |scored AS (
+        |  SELECT tf.doc_id,
+        |    CAST(round(
+        |      ln(1.0 + (CAST(n_docs - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) *
+        |      (tf * 2.25) / (tf + 1.25 * (0.25 + 0.75 * dl / avgdl)),
+        |      12) AS DECIMAL(28,12)) AS s
+        |  FROM tf JOIN df ON tf.word = df.word
+        |  JOIN dl ON tf.doc_id = dl.doc_id
+        |  CROSS JOIN corpus)
+        |SELECT doc_id, round(CAST(sum(s) AS DOUBLE), 6) AS bm25,
+        |       CAST(count(*) AS BIGINT) AS n_terms_hit
+        |FROM scored GROUP BY doc_id
+        |ORDER BY bm25 DESC, doc_id LIMIT 25""".stripMargin),
+    Query("pmi_pairs", (s, d) => pmiPairs(s, d),
+      """WITH toks AS (
+        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+        |  FROM documents),
+        |dw AS (SELECT DISTINCT doc_id, word FROM toks WHERE length(word) > 0),
+        |nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
+        |df AS (
+        |  SELECT word, CAST(count(*) AS BIGINT) AS df FROM dw GROUP BY word
+        |  HAVING count(*) * 10 >= (SELECT n_docs FROM nd)),
+        |fdw AS (SELECT dw.doc_id, dw.word, df.df FROM dw JOIN df ON dw.word = df.word),
+        |pairs AS (
+        |  SELECT a.word AS word_a, b.word AS word_b,
+        |    CAST(count(*) AS BIGINT) AS n_ab,
+        |    any_value(a.df) AS n_a, any_value(b.df) AS n_b
+        |  FROM fdw a JOIN fdw b ON a.doc_id = b.doc_id AND a.word < b.word
+        |  GROUP BY a.word, b.word
+        |  HAVING count(*) * 20 >= (SELECT n_docs FROM nd))
+        |SELECT word_a, word_b, n_ab,
+        |  round(ln(CAST(n_ab AS DOUBLE) * n_docs / (CAST(n_a AS DOUBLE) * n_b)), 6) AS pmi
+        |FROM pairs CROSS JOIN nd
+        |ORDER BY pmi DESC, word_a, word_b LIMIT 50""".stripMargin),
+    Query("bpe_pairs", (s, d) => bpePairs(s, d),
+      """WITH toks AS (
+        |  SELECT lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+        |  FROM documents),
+        |wc AS (SELECT word, CAST(count(*) AS BIGINT) AS n_word
+        |       FROM toks WHERE length(word) >= 2 GROUP BY word),
+        |pairs AS (
+        |  SELECT substr(word, CAST(i AS INTEGER), 2) AS pair, n_word
+        |  FROM wc, unnest(range(1, length(word))) AS t(i))
+        |SELECT pair, CAST(sum(n_word) AS BIGINT) AS n
+        |FROM pairs GROUP BY pair
+        |ORDER BY n DESC, pair LIMIT 50""".stripMargin),
+    Query("doc_perplexity", (s, d) => docPerplexity(s, d),
+      """WITH words AS (
+        |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
+        |  FROM documents),
+        |uni AS (SELECT w AS word, CAST(count(*) AS BIGINT) AS c1
+        |        FROM (SELECT unnest(ws) AS w FROM words) GROUP BY w),
+        |v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM uni),
+        |bg AS (
+        |  SELECT doc_id, ws[i] || ' ' || ws[i+1] AS bg, ws[i] AS w1,
+        |         CAST(count(*) AS BIGINT) AS tf
+        |  FROM words, unnest(range(1, len(ws))) AS t(i)
+        |  WHERE len(ws) >= 2
+        |  GROUP BY 1, 2, 3),
+        |c2 AS (SELECT bg, CAST(sum(tf) AS BIGINT) AS c2 FROM bg GROUP BY bg),
+        |scored AS (
+        |  SELECT doc_id, tf,
+        |    CAST(round(tf * -ln(CAST(c2.c2 + 1 AS DOUBLE) / CAST(c1 + v AS DOUBLE)), 12) AS DECIMAL(28,12)) AS term
+        |  FROM bg JOIN c2 USING (bg)
+        |  JOIN uni ON bg.w1 = uni.word
+        |  CROSS JOIN v),
+        |per AS (
+        |  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
+        |         round(CAST(sum(term) AS DOUBLE) / sum(tf), 6) AS cross_entropy
+        |  FROM scored GROUP BY doc_id)
+        |SELECT d.doc_id,
+        |  COALESCE(n_bigrams, 0) AS n_bigrams,
+        |  COALESCE(cross_entropy, 0.0) AS cross_entropy
+        |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
+    Query("tfidf_cosine_pairs", (s, d) => tfidfCosinePairs(s, d),
+      """WITH toks AS (
+        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+        |  FROM documents),
+        |tf AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
+        |       FROM toks WHERE length(word) > 0 GROUP BY doc_id, word),
+        |df AS (SELECT word, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY word),
+        |nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+        |vec AS (
+        |  SELECT doc_id, word, w FROM (
+        |    SELECT tf.doc_id, tf.word,
+        |      tf * ln(CAST(n AS DOUBLE) / df) AS w,
+        |      row_number() OVER (PARTITION BY tf.doc_id
+        |        ORDER BY tf * ln(CAST(n AS DOUBLE) / df) DESC, tf.word) AS rn
+        |    FROM tf JOIN df USING (word) CROSS JOIN nd
+        |    WHERE df * 8 <= n AND df <= 1000)
+        |  WHERE rn <= 8),
+        |norms AS (
+        |  SELECT doc_id,
+        |    sqrt(CAST(sum(CAST(round(w * w, 12) AS DECIMAL(38,12))) AS DOUBLE)) AS nrm
+        |  FROM vec GROUP BY doc_id),
+        |dots AS (
+        |  SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2,
+        |         sum(CAST(round(a.w * b.w, 12) AS DECIMAL(38,12))) AS dot
+        |  FROM vec a JOIN vec b ON a.word = b.word AND a.doc_id < b.doc_id
+        |  GROUP BY 1, 2)
+        |SELECT doc_id_1, doc_id_2,
+        |  round(CAST(dot AS DOUBLE) / (n1.nrm * n2.nrm), 6) AS cosine
+        |FROM dots
+        |JOIN norms n1 ON doc_id_1 = n1.doc_id
+        |JOIN norms n2 ON doc_id_2 = n2.doc_id
+        |WHERE CAST(dot AS DOUBLE) / (n1.nrm * n2.nrm) >= 0.7
+        |ORDER BY doc_id_1, doc_id_2""".stripMargin),
+    // Count-min heavy-hitter oracle: the cell map crosses as data; the
+    // grid (sum per touched cell over the full token stream), the
+    // min-of-d-cells estimate, and the top-k cut are recomputed in SQL
+    // — including the never-undercount property (overcount >= 0).
+    Query("cms_heavy_hitters", (s, d) => cmsHeavyHitters(s, d),
+      """WITH m AS (SELECT word, row_i, cell FROM read_parquet('/tmp/graft_oracle_aux/cms_cells/*.parquet')),
+        |toks AS (
+        |  SELECT lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+        |  FROM documents),
+        |cnt AS (SELECT word, CAST(count(*) AS BIGINT) AS n
+        |        FROM toks WHERE length(word) > 0 GROUP BY word),
+        |grid AS (SELECT m.row_i, m.cell, CAST(SUM(cnt.n) AS BIGINT) AS g
+        |         FROM cnt JOIN m USING (word) GROUP BY m.row_i, m.cell),
+        |exact AS (SELECT word, n AS n_exact FROM cnt ORDER BY n DESC, word LIMIT 20)
+        |SELECT e.word AS word, e.n_exact AS n_exact,
+        |       CAST(MIN(g.g) AS BIGINT) AS n_est,
+        |       CAST(MIN(g.g) - e.n_exact AS BIGINT) AS overcount
+        |FROM exact e
+        |JOIN m ON m.word = e.word
+        |JOIN grid g ON g.row_i = m.row_i AND g.cell = m.cell
+        |GROUP BY e.word, e.n_exact
+        |ORDER BY e.n_exact DESC, e.word""".stripMargin))
 }

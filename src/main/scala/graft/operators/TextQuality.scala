@@ -543,4 +543,276 @@ object TextQuality {
       .localCheckpoint(eager = false)
       .orderBy(col("doc_id"))
   }
+
+  /** Shared by c4_filter and line_dedup: the deterministic
+    * re-lineation of the flat synthetic corpus. Mirrors
+    * `TextQuality.relineated` — see its Scaladoc for why the line-rule
+    * operators cannot discriminate on the raw corpus (no newlines, no
+    * punctuation) and how each rule's violators are planted by integer
+    * arithmetic on (doc_id, line index).
+    */
+  private[graft] val RelineatedCte: String =
+    """WITH tok AS (
+      |  SELECT doc_id,
+      |    list_filter(string_split_regex(text, '[ \t\n]+'), t -> length(t) > 0) AS tk
+      |  FROM documents),
+      |structured AS (
+      |  SELECT doc_id,
+      |    concat(
+      |      coalesce(array_to_string(list_transform(
+      |        range(0, CAST(floor((len(tk) + 7) / 8.0) AS BIGINT)), i ->
+      |          CASE WHEN (doc_id + i) % 11 = 0
+      |               THEN 'all rights reserved by the original author.'
+      |               ELSE array_to_string(tk[i*8+1 : i*8+8], ' ')
+      |                 || CASE WHEN (doc_id + i) % 3 <> 0 THEN '.' ELSE '' END
+      |                 || CASE WHEN (doc_id + i) % 7 = 0 THEN ' javascript.' ELSE '' END
+      |          END),
+      |        chr(10)), ''),
+      |      CASE WHEN doc_id % 23 = 0 THEN chr(10) || 'lorem ipsum here it comes.' ELSE '' END,
+      |      CASE WHEN doc_id % 29 = 0 THEN chr(10) || 'brace { line here.' ELSE '' END,
+      |      CASE WHEN doc_id % 31 = 0 THEN chr(10) || 'visit our casino today now.' ELSE '' END
+      |    ) AS text
+      |  FROM tok)""".stripMargin
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("doc_repetition", (s, d) => docRepetition(s, d),
+      """WITH base AS (
+        |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
+        |  FROM documents),
+        |wc AS (
+        |  SELECT doc_id, w, count(*) AS c
+        |  FROM (SELECT doc_id, unnest(ws) AS w FROM base)
+        |  GROUP BY doc_id, w),
+        |wa AS (
+        |  SELECT doc_id, sum(c) AS n_words, count(*) AS n_distinct, max(c) AS top_freq
+        |  FROM wc GROUP BY doc_id),
+        |bg AS (
+        |  SELECT doc_id, ws[i] || ' ' || ws[i+1] AS g
+        |  FROM base, unnest(range(1, len(ws))) AS t(i)
+        |  WHERE len(ws) >= 2),
+        |ba AS (
+        |  SELECT doc_id, count(*) AS n_bg, count(DISTINCT g) AS n_bg_distinct
+        |  FROM bg GROUP BY doc_id)
+        |SELECT d.doc_id,
+        |  CAST(coalesce(wa.n_words, 0) AS BIGINT) AS n_words,
+        |  round(CASE WHEN wa.n_words IS NULL OR wa.n_words = 0 THEN 0.0
+        |    ELSE CAST(wa.n_distinct AS DOUBLE) / CAST(wa.n_words AS DOUBLE) END, 6) AS distinct_word_ratio,
+        |  round(CASE WHEN wa.n_words IS NULL OR wa.n_words = 0 THEN 0.0
+        |    ELSE CAST(wa.top_freq AS DOUBLE) / CAST(wa.n_words AS DOUBLE) END, 6) AS top_word_share,
+        |  round(CASE WHEN ba.n_bg IS NULL OR ba.n_bg = 0 THEN 0.0
+        |    ELSE 1.0 - CAST(ba.n_bg_distinct AS DOUBLE) / CAST(ba.n_bg AS DOUBLE) END, 6) AS dup_bigram_ratio
+        |FROM documents d
+        |LEFT JOIN wa ON d.doc_id = wa.doc_id
+        |LEFT JOIN ba ON d.doc_id = ba.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
+    Query("doc_entropy", (s, d) => docEntropy(s, d),
+      """WITH toks AS (
+        |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+        |  FROM documents),
+        |w AS (SELECT doc_id, word FROM toks WHERE length(word) > 0),
+        |freq AS (SELECT word, CAST(count(*) AS BIGINT) AS freq FROM w GROUP BY word),
+        |tot AS (SELECT CAST(sum(freq) AS BIGINT) AS n_total FROM freq),
+        |per_doc AS (
+        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
+        |         round(CAST(sum(CAST(-ln(CAST(freq AS DOUBLE) / n_total) AS DECIMAL(28,12))) AS DOUBLE) / count(*), 6) AS cross_entropy
+        |  FROM w JOIN freq ON w.word = freq.word CROSS JOIN tot
+        |  GROUP BY doc_id)
+        |SELECT d.doc_id,
+        |       coalesce(n_words, 0) AS n_words,
+        |       coalesce(cross_entropy, 0.0) AS cross_entropy
+        |FROM documents d LEFT JOIN per_doc ON d.doc_id = per_doc.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
+    Query("pii_scrub", (s, d) => piiScrub(s, d),
+      """SELECT doc_id,
+        |  CAST(len(regexp_extract_all(text, 'https?://[^ \t\n]+')) AS BIGINT) AS n_urls,
+        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
+        |  CAST(len(regexp_extract_all(text, '[0-9]{6,}')) AS BIGINT) AS n_long_nums,
+        |  md5(regexp_replace(regexp_replace(regexp_replace(text,
+        |    'https?://[^ \t\n]+', '<URL>', 'g'),
+        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+        |    '[0-9]{6,}', '<NUM>', 'g')) AS scrubbed_md5
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("gopher_filter", (s, d) => gopherQualityFilter(s, d),
+      """WITH base AS (
+        |  SELECT doc_id, text,
+        |    list_filter(string_split_regex(text, '[ \t\n]+'), t -> length(t) > 0) AS rt,
+        |    list_filter(string_split(text, chr(10)), l -> length(trim(l)) > 0) AS lines,
+        |    list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
+        |  FROM documents),
+        |sig AS (
+        |  SELECT doc_id,
+        |    CAST(len(rt) AS BIGINT) AS n_words,
+        |    round(CASE WHEN len(rt) = 0 THEN 0.0 ELSE CAST(list_sum(list_transform(rt, t -> length(t))) AS DOUBLE) / len(rt) END, 4) AS mean_word_len,
+        |    round(CASE WHEN len(rt) = 0 THEN 0.0 ELSE CAST((length(text) - length(replace(text, '#', ''))) + (length(text) - length(replace(text, '...', ''))) / 3 AS DOUBLE) / len(rt) END, 4) AS symbol_ratio,
+        |    round(CASE WHEN len(lines) = 0 THEN 0.0 ELSE CAST(len(list_filter(lines, l -> regexp_matches(trim(l), '^[-*•]'))) AS DOUBLE) / len(lines) END, 4) AS bullet_line_ratio,
+        |    round(CASE WHEN len(lines) = 0 THEN 0.0 ELSE CAST(len(list_filter(lines, l -> regexp_matches(trim(l), '\.\.\.$'))) AS DOUBLE) / len(lines) END, 4) AS ellipsis_line_ratio,
+        |    round(CASE WHEN len(rt) = 0 THEN 0.0 ELSE CAST(len(list_filter(rt, t -> regexp_matches(t, '[a-zA-Z]'))) AS DOUBLE) / len(rt) END, 4) AS alpha_word_ratio,
+        |    CAST((CASE WHEN list_contains(ws, 'the') THEN 1 ELSE 0 END)
+        |       + (CASE WHEN list_contains(ws, 'be') THEN 1 ELSE 0 END)
+        |       + (CASE WHEN list_contains(ws, 'to') THEN 1 ELSE 0 END)
+        |       + (CASE WHEN list_contains(ws, 'of') THEN 1 ELSE 0 END)
+        |       + (CASE WHEN list_contains(ws, 'and') THEN 1 ELSE 0 END)
+        |       + (CASE WHEN list_contains(ws, 'that') THEN 1 ELSE 0 END)
+        |       + (CASE WHEN list_contains(ws, 'have') THEN 1 ELSE 0 END)
+        |       + (CASE WHEN list_contains(ws, 'with') THEN 1 ELSE 0 END) AS BIGINT) AS n_stop_hits
+        |  FROM base)
+        |SELECT *,
+        |  (n_words BETWEEN 50 AND 100000) AND (mean_word_len BETWEEN 3.0 AND 10.0)
+        |  AND symbol_ratio <= 0.1 AND bullet_line_ratio <= 0.9
+        |  AND ellipsis_line_ratio <= 0.3 AND alpha_word_ratio >= 0.8
+        |  AND n_stop_hits >= 2 AS keep
+        |FROM sig ORDER BY doc_id""".stripMargin),
+    // over the re-lineated view (see TextQuality.relineated): the
+    // line/paragraph repetition signals need line structure, and the
+    // view's planted boilerplate line is a real cross-line duplicate
+    Query("gopher_repetition", (s, d) => gopherRepetition(s, d),
+      (RelineatedCte + """,
+        |ls AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM structured),
+        |lines AS (
+        |  SELECT doc_id, i - 1 AS idx, trim(ls[i]) AS l
+        |  FROM ls, unnest(range(1, len(ls) + 1)) AS t(i)
+        |  WHERE length(trim(ls[i])) > 0),
+        |linedup AS (SELECT doc_id, l, count(*) AS cnt FROM lines GROUP BY 1, 2),
+        |linestats AS (
+        |  SELECT doc_id, sum(cnt) AS n_line, sum(cnt - 1) AS n_dup_line,
+        |         sum((cnt - 1) * length(l)) AS dup_chars_line,
+        |         sum(cnt * length(l)) AS chars_line
+        |  FROM linedup GROUP BY doc_id),
+        |paras AS (
+        |  SELECT doc_id, idx // 4 AS pidx,
+        |         string_agg(l, chr(10) ORDER BY idx) AS u
+        |  FROM lines GROUP BY doc_id, idx // 4),
+        |paradup AS (SELECT doc_id, u, count(*) AS cnt FROM paras GROUP BY 1, 2),
+        |parastats AS (
+        |  SELECT doc_id, sum(cnt) AS n_para, sum(cnt - 1) AS n_dup_para,
+        |         sum((cnt - 1) * length(u)) AS dup_chars_para,
+        |         sum(cnt * length(u)) AS chars_para
+        |  FROM paradup GROUP BY doc_id),
+        |wordarr AS (
+        |  SELECT doc_id,
+        |    list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
+        |  FROM structured),
+        |wchars AS (
+        |  SELECT doc_id,
+        |    CAST(coalesce(list_sum(list_transform(ws, w -> length(w))), 0) AS BIGINT) AS w_chars
+        |  FROM wordarr),
+        |gr AS (
+        |  SELECT doc_id, n, g, length(g) - (n - 1) AS glen, count(*) AS cnt
+        |  FROM wordarr,
+        |       unnest([2, 3, 4, 5, 6, 7, 8, 9, 10]) AS tn(n),
+        |       unnest(list_transform(range(1, len(ws) - n + 2), i ->
+        |         array_to_string(ws[i : i + n - 1], ' '))) AS tg(g)
+        |  GROUP BY doc_id, n, g, glen),
+        |gramagg AS (
+        |  SELECT doc_id, n, max(cnt * glen) AS top_cov,
+        |         sum((cnt - 1) * glen) AS dup_cov
+        |  FROM gr GROUP BY doc_id, n),
+        |grambydoc AS (
+        |  SELECT doc_id,
+        |    max(CASE WHEN n = 2 THEN top_cov END) AS c2,
+        |    max(CASE WHEN n = 3 THEN top_cov END) AS c3,
+        |    max(CASE WHEN n = 4 THEN top_cov END) AS c4,
+        |    max(CASE WHEN n = 5 THEN dup_cov END) AS c5,
+        |    max(CASE WHEN n = 6 THEN dup_cov END) AS c6,
+        |    max(CASE WHEN n = 7 THEN dup_cov END) AS c7,
+        |    max(CASE WHEN n = 8 THEN dup_cov END) AS c8,
+        |    max(CASE WHEN n = 9 THEN dup_cov END) AS c9,
+        |    max(CASE WHEN n = 10 THEN dup_cov END) AS c10
+        |  FROM gramagg GROUP BY doc_id),
+        |sig AS (
+        |  SELECT d.doc_id,
+        |    round(CASE WHEN coalesce(n_line, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(n_dup_line, 0) AS DOUBLE) / n_line) END, 6) AS dup_line_frac,
+        |    round(CASE WHEN coalesce(chars_line, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(dup_chars_line, 0) AS DOUBLE) / chars_line) END, 6) AS dup_line_char_frac,
+        |    round(CASE WHEN coalesce(n_para, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(n_dup_para, 0) AS DOUBLE) / n_para) END, 6) AS dup_para_frac,
+        |    round(CASE WHEN coalesce(chars_para, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(dup_chars_para, 0) AS DOUBLE) / chars_para) END, 6) AS dup_para_char_frac,
+        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c2, 0) AS DOUBLE) / w_chars) END, 6) AS top_2gram_char_frac,
+        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c3, 0) AS DOUBLE) / w_chars) END, 6) AS top_3gram_char_frac,
+        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c4, 0) AS DOUBLE) / w_chars) END, 6) AS top_4gram_char_frac,
+        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c5, 0) AS DOUBLE) / w_chars) END, 6) AS dup_5gram_char_frac,
+        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c6, 0) AS DOUBLE) / w_chars) END, 6) AS dup_6gram_char_frac,
+        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c7, 0) AS DOUBLE) / w_chars) END, 6) AS dup_7gram_char_frac,
+        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c8, 0) AS DOUBLE) / w_chars) END, 6) AS dup_8gram_char_frac,
+        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c9, 0) AS DOUBLE) / w_chars) END, 6) AS dup_9gram_char_frac,
+        |    round(CASE WHEN coalesce(w_chars, 0) = 0 THEN 0.0 ELSE least(1.0, CAST(coalesce(c10, 0) AS DOUBLE) / w_chars) END, 6) AS dup_10gram_char_frac
+        |  FROM documents d
+        |  LEFT JOIN linestats USING (doc_id)
+        |  LEFT JOIN parastats USING (doc_id)
+        |  LEFT JOIN wchars USING (doc_id)
+        |  LEFT JOIN grambydoc USING (doc_id))
+        |SELECT *,
+        |  dup_line_frac <= 0.30 AND dup_line_char_frac <= 0.20
+        |  AND dup_para_frac <= 0.30 AND dup_para_char_frac <= 0.20
+        |  AND top_2gram_char_frac <= 0.20 AND top_3gram_char_frac <= 0.18
+        |  AND top_4gram_char_frac <= 0.16 AND dup_5gram_char_frac <= 0.15
+        |  AND dup_6gram_char_frac <= 0.14 AND dup_7gram_char_frac <= 0.13
+        |  AND dup_8gram_char_frac <= 0.12 AND dup_9gram_char_frac <= 0.11
+        |  AND dup_10gram_char_frac <= 0.10 AS keep
+        |FROM sig ORDER BY doc_id""".stripMargin)),
+    Query("c4_filter", (s, d) => c4Filter(s, d),
+      (RelineatedCte + """,
+        |base AS (
+        |  SELECT doc_id, text,
+        |    string_split(text, chr(10)) AS lines,
+        |    list_filter(string_split(text, chr(10)), l ->
+        |      regexp_matches(trim(l), '[.!?"]$')
+        |      AND len(list_filter(string_split_regex(trim(l), '[ \t]+'), w -> length(w) > 0)) >= 5
+        |      AND NOT contains(lower(l), 'javascript')) AS kept,
+        |    list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
+        |  FROM structured),
+        |sig AS (
+        |  SELECT doc_id,
+        |    CAST(len(lines) AS BIGINT) AS n_lines,
+        |    CAST(len(kept) AS BIGINT) AS n_kept_lines,
+        |    round(CASE WHEN len(lines) = 0 THEN 0.0 ELSE CAST(len(kept) AS DOUBLE) / len(lines) END, 4) AS kept_ratio,
+        |    CAST(len(regexp_extract_all(coalesce(array_to_string(kept, chr(10)), ''), '[.!?]')) AS BIGINT) AS n_sentences,
+        |    contains(lower(text), 'lorem ipsum') AS has_lorem,
+        |    contains(text, '{') AS has_brace,
+        |    (list_contains(ws, 'viagra') OR list_contains(ws, 'casino')
+        |      OR list_contains(ws, 'xxx')) AS has_blocked,
+        |    md5(coalesce(array_to_string(kept, chr(10)), '')) AS clean_md5
+        |  FROM base)
+        |SELECT *,
+        |  n_sentences >= 3 AND NOT has_lorem AND NOT has_brace
+        |    AND NOT has_blocked AS keep
+        |FROM sig ORDER BY doc_id""".stripMargin)),
+    Query("ccnet_buckets", (s, d) => ccnetBuckets(s, d),
+      """WITH words AS (
+        |  SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[ \t\n]+'), w -> lower(regexp_replace(w, '[^a-zA-Z]', '', 'g'))), w -> length(w) > 0) AS ws
+        |  FROM documents),
+        |uni AS (SELECT w AS word, CAST(count(*) AS BIGINT) AS c1
+        |        FROM (SELECT unnest(ws) AS w FROM words) GROUP BY w),
+        |v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM uni),
+        |bg AS (
+        |  SELECT doc_id, ws[i] || ' ' || ws[i+1] AS bg, ws[i] AS w1,
+        |         CAST(count(*) AS BIGINT) AS tf
+        |  FROM words, unnest(range(1, len(ws))) AS t(i)
+        |  WHERE len(ws) >= 2
+        |  GROUP BY 1, 2, 3),
+        |c2 AS (SELECT bg, CAST(sum(tf) AS BIGINT) AS c2 FROM bg GROUP BY bg),
+        |scored AS (
+        |  SELECT doc_id, tf,
+        |    CAST(round(tf * -ln(CAST(c2.c2 + 1 AS DOUBLE) / CAST(c1 + v AS DOUBLE)), 12) AS DECIMAL(28,12)) AS term
+        |  FROM bg JOIN c2 USING (bg)
+        |  JOIN uni ON bg.w1 = uni.word
+        |  CROSS JOIN v),
+        |per AS (
+        |  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
+        |         round(CAST(sum(term) AS DOUBLE) / sum(tf), 6) AS cross_entropy
+        |  FROM scored GROUP BY doc_id),
+        |sc AS (
+        |  SELECT d.doc_id, d.lang,
+        |    COALESCE(n_bigrams, 0) AS n_bigrams,
+        |    COALESCE(cross_entropy, 0.0) AS cross_entropy
+        |  FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id),
+        |ranked AS (
+        |  SELECT *, percent_rank() OVER (
+        |    PARTITION BY lang ORDER BY cross_entropy, doc_id) AS pct
+        |  FROM sc)
+        |SELECT doc_id, lang, n_bigrams, cross_entropy,
+        |  round(pct, 9) AS pct_rank,
+        |  CASE WHEN pct * 3.0 < 1.0 THEN 'head'
+        |       WHEN pct * 3.0 < 2.0 THEN 'middle'
+        |       ELSE 'tail' END AS bucket
+        |FROM ranked ORDER BY doc_id""".stripMargin))
 }

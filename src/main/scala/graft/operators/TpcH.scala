@@ -537,4 +537,278 @@ object TpcH {
       .select(col("s_suppkey"), col("s_name"), col("n_name"))
       .orderBy(col("s_name"))
   }
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("q4_priority_exists", (s, d) => q4PriorityExists(s, d),
+      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders
+        |FROM orders
+        |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1996-10-01'
+        |  AND EXISTS (SELECT 1 FROM lineitem
+        |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("q6_revenue_delta", (s, d) => q6RevenueDelta(s, d),
+      """SELECT CAST(sum(CAST(l_extendedprice*l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+        |       CAST(count(*) AS BIGINT) AS n_lines
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01'
+        |  AND l_discount BETWEEN 0.05 AND 0.07
+        |  AND l_quantity < 24""".stripMargin),
+    Query("q7_nation_volume", (s, d) => q7NationVolume(s, d),
+      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+        |       CAST(year(l_shipdate) AS BIGINT) AS ship_year,
+        |       CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS volume
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        |WHERE (n1.n_name = 'NATION_18' AND n2.n_name = 'NATION_19')
+        |   OR (n1.n_name = 'NATION_19' AND n2.n_name = 'NATION_18')
+        |GROUP BY 1, 2, 3 ORDER BY supp_nation, cust_nation, ship_year""".stripMargin),
+    Query("q8_market_share", (s, d) => q8MarketShare(s, d),
+      """WITH flat AS (
+        |  SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
+        |         CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4)) AS vol,
+        |         n2.n_name AS supp_nation
+        |  FROM lineitem
+        |  JOIN part ON l_partkey = p_partkey AND p_type = 'PROMO'
+        |  JOIN orders ON l_orderkey = o_orderkey
+        |  JOIN customer ON o_custkey = c_custkey
+        |  JOIN nation n1 ON c_nationkey = n1.n_nationkey
+        |  JOIN region ON n1.n_regionkey = r_regionkey AND r_name = 'ASIA'
+        |  JOIN supplier ON l_suppkey = s_suppkey
+        |  JOIN nation n2 ON s_nationkey = n2.n_nationkey),
+        |agg AS (
+        |  SELECT o_year,
+        |    CAST(sum(CASE WHEN supp_nation = 'NATION_1' THEN vol
+        |             ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE) AS nation_volume,
+        |    CAST(sum(vol) AS DOUBLE) AS total_volume
+        |  FROM flat GROUP BY o_year)
+        |SELECT o_year, round(nation_volume, 4) AS nation_volume,
+        |       round(total_volume, 4) AS total_volume,
+        |       round(nation_volume / total_volume, 6) AS mkt_share
+        |FROM agg ORDER BY o_year""".stripMargin),
+    Query("q10_returned_revenue", (s, d) => q10ReturnedRevenue(s, d),
+      """SELECT c_custkey, c_name,
+        |       CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE l_returnflag = 'R'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1996-04-01'
+        |GROUP BY c_custkey, c_name
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin),
+    Query("q12_priority_class", (s, d) => q12PriorityClass(s, d),
+      """SELECT l_returnflag,
+        |  CAST(count(*) FILTER (WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')) AS BIGINT) AS high_line_count,
+        |  CAST(count(*) FILTER (WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH')) AS BIGINT) AS low_line_count
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01'
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q13_cust_distribution", (s, d) => q13CustDistribution(s, d),
+      """WITH per_cust AS (
+        |  SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
+        |  FROM customer LEFT OUTER JOIN orders
+        |    ON c_custkey = o_custkey AND o_orderpriority <> '3-MEDIUM'
+        |  GROUP BY c_custkey)
+        |SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
+        |FROM per_cust GROUP BY c_count
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin),
+    Query("q14_promo_share", (s, d) => q14PromoShare(s, d),
+      """WITH agg AS (
+        |  SELECT
+        |    CAST(sum(CASE WHEN p_type = 'PROMO'
+        |      THEN CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))
+        |      ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE) AS promo_revenue,
+        |    CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS total_revenue
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |    AND l_shipdate < TIMESTAMP '1996-04-01')
+        |SELECT round(promo_revenue, 4) AS promo_revenue,
+        |       round(total_revenue, 4) AS total_revenue,
+        |       round(promo_revenue / total_revenue, 6) AS promo_share
+        |FROM agg""".stripMargin),
+    Query("q16_supplier_variety", (s, d) => q16SupplierVariety(s, d),
+      """SELECT p_brand, p_size, CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
+        |FROM lineitem
+        |JOIN part ON l_partkey = p_partkey
+        |WHERE p_brand <> 'Brand#1' AND p_size BETWEEN 1 AND 15
+        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+        |GROUP BY p_brand, p_size
+        |ORDER BY supplier_cnt DESC, p_brand, p_size""".stripMargin),
+    Query("q15_top_supplier", (s, d) => q15TopSupplier(s, d),
+      """WITH rev AS (
+        |  SELECT l_suppkey, sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS total_rev
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |    AND l_shipdate < TIMESTAMP '1996-04-01'
+        |  GROUP BY l_suppkey)
+        |SELECT s_suppkey, s_name, CAST(total_rev AS DOUBLE) AS total_rev
+        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
+        |WHERE total_rev = (SELECT max(total_rev) FROM rev)
+        |ORDER BY s_suppkey""".stripMargin),
+    Query("q17_small_quantity", (s, d) => q17SmallQuantity(s, d),
+      """WITH pa AS (
+        |  SELECT l_partkey,
+        |         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) * 0.2 AS qty_limit
+        |  FROM lineitem GROUP BY l_partkey)
+        |SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0, 4) AS avg_yearly,
+        |       CAST(count(*) AS BIGINT) AS n_lines
+        |FROM lineitem
+        |JOIN part ON l_partkey = p_partkey
+        |JOIN pa ON lineitem.l_partkey = pa.l_partkey
+        |WHERE p_brand = 'Brand#3' AND l_quantity < qty_limit""".stripMargin),
+    // r17: the last three TPC-H members (partsupp-adapted shapes —
+    // correlated MIN, scalar-subquery HAVING, nested IN chain)
+    // q2 adaptation: the supply relation derives from lineitem
+    // (supplier s supplies part p at unit cost min(extendedprice /
+    // quantity)); the double division is identical IEEE on both
+    // engines and MIN is an exact selection, so the cost = min_cost
+    // equality join-back is safe cross-engine.
+    Query("q2_min_cost_supplier", (s, d) => q2MinCostSupplier(s, d),
+      """WITH rsupp AS (
+        |  SELECT s_suppkey, s_name, s_acctbal, n_name
+        |  FROM supplier
+        |  JOIN nation ON s_nationkey = n_nationkey
+        |  JOIN region ON n_regionkey = r_regionkey
+        |  WHERE r_name = 'EUROPE'),
+        |supply AS (
+        |  SELECT l_partkey, l_suppkey,
+        |         min(l_extendedprice / l_quantity) AS cost
+        |  FROM lineitem GROUP BY 1, 2),
+        |eligible AS (
+        |  SELECT l_partkey, cost, s_acctbal, s_name, n_name
+        |  FROM supply JOIN rsupp ON l_suppkey = s_suppkey),
+        |mc AS (
+        |  SELECT l_partkey, min(cost) AS min_cost
+        |  FROM eligible GROUP BY 1)
+        |SELECT s_acctbal, s_name, n_name, p_partkey, p_type,
+        |       round(min_cost, 4) AS min_cost
+        |FROM eligible e
+        |JOIN mc ON e.l_partkey = mc.l_partkey AND e.cost = mc.min_cost
+        |JOIN part ON e.l_partkey = p_partkey
+        |WHERE p_size BETWEEN 10 AND 20 AND p_type = 'LARGE'
+        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
+        |LIMIT 100""".stripMargin),
+    // q11 adaptation: per-part revenue of one nation's suppliers
+    // stands in for partsupp stock value; the canonical fraction/SF
+    // threshold becomes the scale-invariant above-average form
+    // (value * n_parts > total), which runs entirely in decimal x
+    // integer arithmetic on both engines, so a boundary part cannot
+    // flip — at any SF.
+    Query("q11_important_stock", (s, d) => q11ImportantStock(s, d),
+      """WITH val AS (
+        |  SELECT l_partkey AS p_partkey,
+        |         sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS value
+        |  FROM lineitem
+        |  JOIN supplier ON l_suppkey = s_suppkey
+        |  JOIN nation ON s_nationkey = n_nationkey
+        |  WHERE n_name = 'NATION_3'
+        |  GROUP BY 1),
+        |tot AS (SELECT sum(value) AS total, count(*) AS n_parts FROM val)
+        |SELECT p_partkey, CAST(value AS DOUBLE) AS value
+        |FROM val, tot
+        |WHERE value * n_parts > total
+        |ORDER BY value DESC, p_partkey""".stripMargin),
+    // q20 adaptation: shipped 1997 quantity stands in for partsupp
+    // availqty on both sides of the correlated comparison, which runs
+    // in exact decimal as sq * 2 > tq (no 0.5 double multiply).
+    Query("q20_promotion_suppliers", (s, d) => q20PromotionSuppliers(s, d),
+      """WITH shipped AS (
+        |  SELECT l_partkey, l_suppkey,
+        |         sum(CAST(l_quantity AS DECIMAL(18,2))) AS sq
+        |  FROM lineitem
+        |  JOIN part ON l_partkey = p_partkey
+        |  WHERE p_type = 'ECONOMY'
+        |    AND l_shipdate >= TIMESTAMP '1997-01-01'
+        |    AND l_shipdate < TIMESTAMP '1998-01-01'
+        |  GROUP BY 1, 2),
+        |totals AS (
+        |  SELECT l_partkey, sum(sq) AS tq FROM shipped GROUP BY 1)
+        |SELECT s_suppkey, s_name, n_name
+        |FROM supplier
+        |JOIN nation ON s_nationkey = n_nationkey
+        |WHERE s_suppkey IN (
+        |  SELECT s.l_suppkey
+        |  FROM shipped s JOIN totals t ON s.l_partkey = t.l_partkey
+        |  WHERE s.sq * 2 > t.tq)
+        |ORDER BY s_name""".stripMargin),
+    Query("q18_large_orders", (s, d) => q18LargeOrders(s, d),
+      """WITH big AS (
+        |  SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS sq
+        |  FROM lineitem GROUP BY l_orderkey
+        |  HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 300)
+        |SELECT c_name, c_custkey, o_orderkey, o_totalprice,
+        |       CAST(sq AS DOUBLE) AS sum_qty
+        |FROM big
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q19_disjunctive", (s, d) => q19Disjunctive(s, d),
+      """SELECT CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+        |       CAST(count(*) AS BIGINT) AS n_lines
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 AND 20)
+        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 11 AND 20 AND l_quantity BETWEEN 10 AND 30)
+        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 21 AND 30 AND l_quantity BETWEEN 20 AND 40)""".stripMargin),
+    Query("q21_waiting_suppliers", (s, d) => q21WaitingSuppliers(s, d),
+      """SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
+        |FROM lineitem l1
+        |JOIN orders ON l1.l_orderkey = o_orderkey
+        |JOIN supplier ON l1.l_suppkey = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |WHERE o_orderstatus = 'F'
+        |  AND l1.l_shipdate > o_orderdate + INTERVAL 90 DAY
+        |  AND n_name = 'NATION_3'
+        |  AND EXISTS (SELECT 1 FROM lineitem l2
+        |              WHERE l2.l_orderkey = l1.l_orderkey
+        |                AND l2.l_suppkey <> l1.l_suppkey)
+        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
+        |                  WHERE l3.l_orderkey = l1.l_orderkey
+        |                    AND l3.l_suppkey <> l1.l_suppkey
+        |                    AND l3.l_shipdate > o_orderdate + INTERVAL 90 DAY)
+        |GROUP BY s_name
+        |ORDER BY numwait DESC, s_name
+        |LIMIT 100""".stripMargin),
+    // q9 adaptation: supply cost is 0.5 * p_retailprice (no partsupp
+    // in the testdata); the double expression is written in the same
+    // left-associated order as the Spark column so the IEEE sequence
+    // matches before the DECIMAL(18,4) cast. The literals are cast to
+    // DOUBLE explicitly — bare 1.0/0.5 parse as DECIMAL(2,1) in DuckDB
+    // and only become double today via promotion against the all-DOUBLE
+    // testdata columns; a future DECIMAL-typed testdata generation
+    // would silently flip the whole expression to decimal arithmetic
+    // while Spark's lit(1.0)/lit(0.5) stay double.
+    Query("q9_profit", (s, d) => q9Profit(s, d),
+      """SELECT n_name AS nation,
+        |       CAST(year(o_orderdate) AS BIGINT) AS o_year,
+        |       CAST(sum(CAST(l_extendedprice * (CAST(1.0 AS DOUBLE) - l_discount) -
+        |                     CAST(0.5 AS DOUBLE) * p_retailprice * l_quantity
+        |                     AS DECIMAL(18,4))) AS DOUBLE) AS sum_profit
+        |FROM lineitem
+        |JOIN part ON l_partkey = p_partkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |WHERE p_name LIKE '%red%'
+        |GROUP BY 1, 2
+        |ORDER BY nation, o_year DESC""".stripMargin),
+    Query("q22_dormant_rich", (s, d) => q22DormantRich(s, d),
+      """WITH ab AS (
+        |  SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_bal
+        |  FROM customer WHERE c_acctbal > 0.0)
+        |SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n_cust,
+        |       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
+        |FROM customer
+        |WHERE c_acctbal > (SELECT avg_bal FROM ab)
+        |  AND NOT EXISTS (SELECT 1 FROM orders
+        |                  WHERE o_custkey = c_custkey
+        |                    AND o_orderdate >= TIMESTAMP '2000-01-01')
+        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextOps
 import graft.sources.Tables
+import graft.operators.Query.OracleAuxDir
 
 /** Unigram-language-model tokenizer training (Kudo 2018, "Subword
   * Regularization: Improving Neural Network Translation Models with
@@ -674,4 +675,194 @@ object Unigram {
           .as("token_ratio"))
       .orderBy(col("doc_id"))
   }
+
+  /** Unigram-LM oracle (Unigram's oracle-decomposition Scaladoc). The
+    * seed census + prune is replayed from `documents` directly; each
+    * EM round's vocabulary is then rebuilt from the exported per-round
+    * segmentations (oracleAux `unigram_segs`) with validity guards
+    * folded into the joins: a segmentation row only counts if its
+    * (word, n) matches the independently recomputed frequency table,
+    * its pieces concatenate back to the word, and every piece exists
+    * in the PREVIOUS round's re-derived vocabulary. The multi-piece
+    * prune cap replays Unigram.multiCap's pure-integer schedule with
+    * the char-alphabet size read from the census (DuckDB `//` and
+    * Scala Int `/` agree on the positive operands involved).
+    * `throughRound` = how many EM vocab rebuilds to emit (0 = seed
+    * only, which also skips the aux read so the seed oracle stands
+    * alone).
+    */
+  private def unigramCte(throughRound: Int): String =
+    """WITH dtoks AS (
+      |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+      |  FROM documents),
+      |""".stripMargin + unigramBodyCte(throughRound)
+
+  /** The unigram CTE chain sans the WITH/dtoks header, so it can also
+    * be appended to [[bpeVocabCte]] (which defines the identical
+    * `dtoks`) for the combined tokenizer-comparison oracle.
+    * `segsTable` picks which exported segmentation aux feeds the EM
+    * rebuild — `unigram_segs` (base corpus) or `unigram_incr_segs`
+    * (the incremental demo's merged corpus). */
+  private def unigramBodyCte(throughRound: Int,
+      segsTable: String = "unigram_segs"): String = {
+    val base = """wf AS MATERIALIZED (
+      |  SELECT word, CAST(count(*) AS BIGINT) AS n FROM dtoks WHERE length(word) > 0 GROUP BY word),
+      |census AS MATERIALIZED (
+      |  SELECT piece, CAST(sum(n) AS BIGINT) AS cnt FROM (
+      |    SELECT substring(word, CAST(i AS INTEGER), CAST(l AS INTEGER)) AS piece, n
+      |    FROM wf,
+      |         unnest(range(1, length(word) + 1)) AS u(i),
+      |         unnest(range(1, least(@MPL, length(word) - i + 1) + 1)) AS v(l)) t
+      |  GROUP BY piece),
+      |chars AS MATERIALIZED (SELECT piece, cnt FROM census WHERE length(piece) = 1),
+      |vocab0 AS MATERIALIZED (
+      |  SELECT piece, cnt FROM chars
+      |  UNION ALL
+      |  SELECT piece, cnt FROM (SELECT piece, cnt FROM census WHERE length(piece) > 1 ORDER BY cnt DESC, piece LIMIT @SEEDM) q)"""
+      .stripMargin
+      .replace("@MPL", Unigram.MaxPieceLen.toString)
+      .replace("@SEEDM", Unigram.SeedMulti.toString)
+    val S = "chr(31)"
+    val sb = new StringBuilder(base)
+    if (throughRound >= 1)
+      sb.append(s""",
+        |segs AS MATERIALIZED (SELECT round, word, n, seg FROM read_parquet('$OracleAuxDir/$segsTable/*.parquet'))"""
+        .stripMargin)
+    val nCh = "(SELECT count(*) FROM chars)"
+    val tgt = s"greatest(1, ${Unigram.VocabSize} - $nCh)"
+    for (r <- 1 to throughRound) {
+      val cap =
+        s"$tgt + ((${Unigram.SeedMulti} - $tgt) * (${Unigram.Rounds} - ${math.min(r, Unigram.Rounds)})) // ${Unigram.Rounds}"
+      sb.append(s""",
+        |segok$r AS (
+        |  SELECT s.word, s.n, s.seg FROM segs s JOIN wf USING (word, n)
+        |  WHERE s.round = $r AND replace(s.seg, $S, '') = s.word),
+        |pc$r AS MATERIALIZED (
+        |  SELECT p.piece, CAST(sum(p.n) AS BIGINT) AS cnt
+        |  FROM (SELECT unnest(string_split(seg, $S)) AS piece, n FROM segok$r) p
+        |  JOIN vocab${r - 1} v ON p.piece = v.piece GROUP BY p.piece),
+        |vocab$r AS MATERIALIZED (
+        |  SELECT c.piece, coalesce(p.cnt, 0) AS cnt
+        |  FROM chars c LEFT JOIN pc$r p ON c.piece = p.piece
+        |  UNION ALL
+        |  SELECT piece, cnt FROM (
+        |    SELECT piece, cnt FROM pc$r WHERE length(piece) > 1
+        |    QUALIFY row_number() OVER (ORDER BY cnt DESC, piece) <= $cap) q)"""
+        .stripMargin)
+    }
+    sb.toString
+  }
+
+  /** (rank, piece, len, cnt) projection of vocab`r`, the shape
+    * Unigram.vocabDf emits. */
+  private def unigramVocabSql(r: Int): String =
+    unigramCte(r) + s"""
+      |SELECT CAST(row_number() OVER (ORDER BY cnt DESC, piece) AS INTEGER) AS "rank",
+      |  piece, CAST(length(piece) AS INTEGER) AS len, CAST(cnt AS BIGINT) AS cnt
+      |FROM vocab$r ORDER BY "rank"""".stripMargin
+
+  /** unigram_incremental oracle: the full unigram census→EM→prune
+    * rebuild — but over the MERGED corpus (original documents ∪ the
+    * re-keyed reversed every-29th delta, rebuilt here in SQL — the
+    * suffix_ranks_incremental fixture) with the incremental demo's
+    * exported segmentations. The Spark side never re-scans the old
+    * corpus (persisted word table + delta census); the oracle knows
+    * nothing of the split and recomputes the merged word table
+    * wholesale, so a stale count, a missed delta word, or a wrong
+    * prune all hash-mismatch.
+    */
+  private def unigramIncrVocabSql(r: Int): String =
+    """WITH mx AS (SELECT max(doc_id) + 1 AS m FROM documents),
+      |docs2 AS (
+      |  SELECT doc_id, text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + m AS doc_id, reverse(text) AS text
+      |  FROM documents, mx WHERE doc_id % 29 = 3),
+      |dtoks AS (
+      |  SELECT doc_id, lower(regexp_replace(unnest(string_split_regex(text, '[ \t\n]+')), '[^a-zA-Z]', '', 'g')) AS word
+      |  FROM docs2),
+      |""".stripMargin +
+      unigramBodyCte(r, segsTable = "unigram_incr_segs") + s"""
+      |SELECT CAST(row_number() OVER (ORDER BY cnt DESC, piece) AS INTEGER) AS "rank",
+      |  piece, CAST(length(piece) AS INTEGER) AS len, CAST(cnt AS BIGINT) AS cnt
+      |FROM vocab$r ORDER BY "rank"""".stripMargin
+
+  /** Application-pass CTEs (guarded round Rounds+1 segmentations and
+    * their per-word unigram token counts), appended after a CTE chain
+    * that already defines wf/segs/vocab{Rounds}. */
+  private def unigramAppCte: String = {
+    val S = "chr(31)"
+    val app = Unigram.Rounds + 1
+    s""",
+      |segok$app AS (
+      |  SELECT s.word, s.seg FROM segs s JOIN wf USING (word, n)
+      |  WHERE s.round = $app AND replace(s.seg, $S, '') = s.word),
+      |papp AS (SELECT word, unnest(string_split(seg, $S)) AS piece FROM segok$app),
+      |validw AS (
+      |  SELECT papp.word FROM papp LEFT JOIN vocab${Unigram.Rounds} v ON papp.piece = v.piece
+      |  GROUP BY papp.word HAVING count(*) = count(v.piece)),
+      |utokc AS (
+      |  SELECT s.word, CAST(len(string_split(s.seg, $S)) AS BIGINT) AS utok
+      |  FROM segok$app s JOIN validw USING (word))""".stripMargin
+  }
+
+  private val UnigramTokenizeSql: String = {
+    unigramCte(Unigram.Rounds) + unigramAppCte + s""",
+      |tokc AS (SELECT word, utok AS tok FROM utokc),
+      |dw AS (
+      |  SELECT doc_id, word, CAST(count(*) AS BIGINT) AS c
+      |  FROM dtoks WHERE length(word) > 0 GROUP BY doc_id, word),
+      |agg AS (
+      |  SELECT doc_id, sum(c) AS w, sum(c * tok) AS t, sum(c * length(word)) AS ch
+      |  FROM dw JOIN tokc USING (word) GROUP BY doc_id)
+      |SELECT d.doc_id,
+      |  CAST(coalesce(a.w, 0) AS BIGINT) AS n_words,
+      |  CAST(coalesce(a.t, 0) AS BIGINT) AS n_tokens,
+      |  CAST(coalesce(a.ch, 0) AS BIGINT) AS n_chars,
+      |  round(CASE WHEN coalesce(a.t, 0) = 0 THEN 0.0 ELSE CAST(a.ch AS DOUBLE) / a.t END, 6) AS chars_per_token
+      |FROM documents d LEFT JOIN agg a USING (doc_id)
+      |ORDER BY doc_id""".stripMargin
+  }
+
+  /** tokenizer_compare: BOTH tokenizer replays in one statement — the
+    * BPE merge chain (Bpe.bpeVocabCte) and the unigram EM rebuild
+    * (unigramBodyCte; the two share the identical `dtoks` and their
+    * other CTE names are disjoint) — joined per word, then per doc.
+    */
+  private val TokenizerCompareSql: String = {
+    val SS = "chr(31) || chr(31)"
+    Bpe.bpeVocabCte(Bpe.BpeK) + ",\n" + unigramBodyCte(Unigram.Rounds) +
+      unigramAppCte + s""",
+      |btokc AS (
+      |  SELECT word, CAST(1 + (length(s) - length(replace(s, $SS, ''))) // 2 AS BIGINT) AS btok FROM v${Bpe.BpeK}
+      |  UNION ALL
+      |  SELECT DISTINCT word, CAST(1 AS BIGINT) FROM dtoks WHERE length(word) = 1),
+      |cdw AS (
+      |  SELECT doc_id, word, CAST(count(*) AS BIGINT) AS c
+      |  FROM dtoks WHERE length(word) > 0 GROUP BY doc_id, word),
+      |cagg AS (
+      |  SELECT doc_id, sum(c) AS w, sum(c * btok) AS bt, sum(c * utok) AS ut, sum(c * length(word)) AS ch
+      |  FROM cdw JOIN btokc USING (word) JOIN utokc USING (word) GROUP BY doc_id)
+      |SELECT d.doc_id,
+      |  CAST(coalesce(a.w, 0) AS BIGINT) AS n_words,
+      |  CAST(coalesce(a.ch, 0) AS BIGINT) AS n_chars,
+      |  CAST(coalesce(a.bt, 0) AS BIGINT) AS bpe_tokens,
+      |  CAST(coalesce(a.ut, 0) AS BIGINT) AS uni_tokens,
+      |  round(CASE WHEN coalesce(a.bt, 0) = 0 THEN 0.0 ELSE CAST(a.ch AS DOUBLE) / a.bt END, 6) AS bpe_chars_per_token,
+      |  round(CASE WHEN coalesce(a.ut, 0) = 0 THEN 0.0 ELSE CAST(a.ch AS DOUBLE) / a.ut END, 6) AS uni_chars_per_token,
+      |  round(CASE WHEN coalesce(a.bt, 0) = 0 THEN 0.0 ELSE CAST(a.ut AS DOUBLE) / a.bt END, 6) AS token_ratio
+      |FROM documents d LEFT JOIN cagg a USING (doc_id)
+      |ORDER BY d.doc_id""".stripMargin
+  }
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("unigram_seed", (s, d) => seed(s, d), unigramVocabSql(0)),
+    Query("unigram_train", (s, d) => train(s, d),
+      unigramVocabSql(Unigram.Rounds)),
+    Query("unigram_incremental", (s, d) => incrementalTrain(s, d),
+      unigramIncrVocabSql(Unigram.Rounds)),
+    Query("unigram_tokenize", (s, d) => tokenizeDocs(s, d), UnigramTokenizeSql),
+    Query("tokenizer_compare", (s, d) => compareWithBpe(s, d, Bpe.BpeK),
+      TokenizerCompareSql))
 }

@@ -568,4 +568,192 @@ object Vectors {
           .orderBy(col("vec_id"))
     }
   }
+
+  /** pca_top_component oracle: the fixed-iteration power method
+    * replayed in SQL, one CTE block per iteration (the pagerank
+    * chained-CTE pattern). Every numeric step mirrors the Spark
+    * implementation exactly — list_dot_product == VecDot's
+    * left-to-right fold, decimal(28,12)/(20,6) sums are
+    * order-independent in both engines, and the s/normalization
+    * arithmetic is the same IEEE expression tree — so the comparison
+    * is a full-precision hash match, not a tolerance. dim=64 and
+    * iters=3 are literals here (oracle SQL pins corpus facts, like
+    * the PQ oracle's m=8/dim=64).
+    */
+  private def pcaCtes(iters: Int): String = {
+    def iter(k: Int): String = {
+      val p = if (k == 1) "v0" else s"v${k - 1}"
+      s"""d$k AS MATERIALIZED (SELECT x, list_dot_product(x, (SELECT v FROM $p)) - list_dot_product((SELECT mv FROM mv), (SELECT v FROM $p)) AS dd FROM e),
+         |g$k AS MATERIALIZED (SELECT j, sum(CAST(dd * x[j] AS DECIMAL(28,12))) AS a
+         |  FROM d$k, unnest(range(1, 65)) AS t(j) GROUP BY j),
+         |b$k AS MATERIALIZED (SELECT sum(CAST(dd AS DECIMAL(28,12))) AS b FROM d$k),
+         |s$k AS MATERIALIZED (SELECT g.j, CAST(g.a AS DOUBLE) - mj.m * CAST((SELECT b FROM b$k) AS DOUBLE) AS s
+         |  FROM g$k g JOIN mj ON mj.j = g.j),
+         |sv$k AS MATERIALIZED (SELECT list(s ORDER BY j) AS sv FROM s$k),
+         |v$k AS MATERIALIZED (SELECT CASE WHEN list_dot_product(sv, sv) = 0 THEN list_transform(sv, z -> 0.0)
+         |  ELSE list_transform(sv, z -> z / sqrt(list_dot_product(sv, sv))) END AS v FROM sv$k),""".stripMargin
+    }
+    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x FROM embeddings WHERE embedding IS NOT NULL),
+       |cnt AS MATERIALIZED (SELECT count(*) AS n FROM e),
+       |mj AS MATERIALIZED (
+       |  SELECT j, CAST(sum(CAST(x[j] AS DECIMAL(20,6))) AS DOUBLE) / (SELECT n FROM cnt) AS m
+       |  FROM e, unnest(range(1, 65)) AS t(j) GROUP BY j),
+       |mv AS MATERIALIZED (SELECT list(m ORDER BY j) AS mv FROM mj),
+       |v0 AS MATERIALIZED (SELECT list(CASE WHEN j = 1 THEN 1.0 ELSE 0.0 END ORDER BY j) AS v
+       |  FROM unnest(range(1, 65)) AS t(j)),
+       |${(1 to iters).map(iter).mkString("\n")}
+       |fin AS MATERIALIZED (SELECT v FROM v$iters)""".stripMargin
+  }
+
+  private def pcaOracle(iters: Int): String =
+    s"""${pcaCtes(iters)}
+       |SELECT CAST(t.j AS BIGINT) AS dim, round(mj.m, 6) AS mu,
+       |  round(fin.v[t.j], 6) AS loading
+       |FROM unnest(range(1, 65)) AS t(j) JOIN mj ON mj.j = t.j CROSS JOIN fin
+       |ORDER BY dim""".stripMargin
+
+  /** pca_components oracle (k=2): component 1 is the pcaCtes fit;
+    * component 2 re-runs the same iteration blocks with the extracted
+    * component projected out of the RAW iterate by Gram-Schmidt —
+    * s = s_raw − (v1·s_raw) v1 — before normalization, exactly as the
+    * driver does it (so the two components are orthogonal by
+    * construction). Eigenvalues are the final projected iterate's
+    * Rayleigh estimate sqrt(sv·sv) in both engines.
+    */
+  private def pcaComponentsOracle(iters: Int): String = {
+    def wIter(k: Int): String = {
+      val p = if (k == 1) "w0" else s"wv${k - 1}"
+      s"""wd$k AS MATERIALIZED (SELECT x, list_dot_product(x, (SELECT v FROM $p)) - list_dot_product((SELECT mv FROM mv), (SELECT v FROM $p)) AS dd FROM e),
+         |wg$k AS MATERIALIZED (SELECT j, sum(CAST(dd * x[j] AS DECIMAL(28,12))) AS a
+         |  FROM wd$k, unnest(range(1, 65)) AS t(j) GROUP BY j),
+         |wb$k AS MATERIALIZED (SELECT sum(CAST(dd AS DECIMAL(28,12))) AS b FROM wd$k),
+         |wsr$k AS MATERIALIZED (SELECT g.j,
+         |  CAST(g.a AS DOUBLE) - mj.m * CAST((SELECT b FROM wb$k) AS DOUBLE) AS s
+         |  FROM wg$k g JOIN mj ON mj.j = g.j),
+         |wsvr$k AS MATERIALIZED (SELECT list(s ORDER BY j) AS sv FROM wsr$k),
+         |ws$k AS MATERIALIZED (SELECT r.j,
+         |  r.s - list_dot_product(fin.v, wsvr$k.sv) * fin.v[r.j] AS s
+         |  FROM wsr$k r CROSS JOIN fin CROSS JOIN wsvr$k),
+         |wsv$k AS MATERIALIZED (SELECT list(s ORDER BY j) AS sv FROM ws$k),
+         |wv$k AS MATERIALIZED (SELECT CASE WHEN list_dot_product(sv, sv) = 0 THEN list_transform(sv, z -> 0.0)
+         |  ELSE list_transform(sv, z -> z / sqrt(list_dot_product(sv, sv))) END AS v FROM wsv$k),""".stripMargin
+    }
+    s"""${pcaCtes(iters)},
+       |w0 AS MATERIALIZED (SELECT list(CASE WHEN j = 2 THEN 1.0 ELSE 0.0 END ORDER BY j) AS v
+       |  FROM unnest(range(1, 65)) AS t(j)),
+       |${(1 to iters).map(wIter).mkString("\n")}
+       |wfin AS MATERIALIZED (SELECT v FROM wv$iters)
+       |SELECT CAST(1 AS BIGINT) AS component, CAST(t.j AS BIGINT) AS dim,
+       |  round(sqrt(list_dot_product(sv$iters.sv, sv$iters.sv)), 6) AS eigenvalue,
+       |  round(fin.v[t.j], 6) AS loading
+       |FROM unnest(range(1, 65)) AS t(j) CROSS JOIN fin CROSS JOIN sv$iters
+       |UNION ALL
+       |SELECT CAST(2 AS BIGINT), CAST(t.j AS BIGINT),
+       |  round(sqrt(list_dot_product(wsv$iters.sv, wsv$iters.sv)), 6),
+       |  round(wfin.v[t.j], 6)
+       |FROM unnest(range(1, 65)) AS t(j) CROSS JOIN wfin CROSS JOIN wsv$iters
+       |ORDER BY component, dim""".stripMargin
+  }
+
+  /** pca_incremental oracle: the served fit (the cold pcaCtes blocks
+    * over the ORIGINAL corpus → `fin`), then the merged corpus rebuilt
+    * in SQL (original ∪ re-keyed reversed every-17th — the
+    * IvfIncrSearchOracle fixture), its exact decimal mean, and the warm
+    * power iteration(s) starting FROM `fin` — precisely what
+    * Vectors.incrementalPcaFitK computes, block for block, so the
+    * comparison is a full-precision hash match like the other PCA
+    * oracles. A maintenance that served a stale mean, skipped the warm
+    * iteration, or warm-started from the wrong vector all mismatch.
+    */
+  private def pcaIncrOracle(iters: Int, warmIters: Int): String = {
+    def wIter(k: Int): String = {
+      val p = if (k == 1) "fin" else s"uv${k - 1}"
+      s"""ud$k AS MATERIALIZED (SELECT x, list_dot_product(x, (SELECT v FROM $p)) - list_dot_product((SELECT mv FROM mv2), (SELECT v FROM $p)) AS dd FROM e2),
+         |ug$k AS MATERIALIZED (SELECT j, sum(CAST(dd * x[j] AS DECIMAL(28,12))) AS a
+         |  FROM ud$k, unnest(range(1, 65)) AS t(j) GROUP BY j),
+         |ub$k AS MATERIALIZED (SELECT sum(CAST(dd AS DECIMAL(28,12))) AS b FROM ud$k),
+         |us$k AS MATERIALIZED (SELECT g.j, CAST(g.a AS DOUBLE) - mj2.m * CAST((SELECT b FROM ub$k) AS DOUBLE) AS s
+         |  FROM ug$k g JOIN mj2 ON mj2.j = g.j),
+         |usv$k AS MATERIALIZED (SELECT list(s ORDER BY j) AS sv FROM us$k),
+         |uv$k AS MATERIALIZED (SELECT CASE WHEN list_dot_product(sv, sv) = 0 THEN list_transform(sv, z -> 0.0)
+         |  ELSE list_transform(sv, z -> z / sqrt(list_dot_product(sv, sv))) END AS v FROM usv$k),""".stripMargin
+    }
+    s"""${pcaCtes(iters)},
+       |e2 AS MATERIALIZED (
+       |  SELECT CAST(embedding AS DOUBLE[]) AS x FROM embeddings
+       |  WHERE embedding IS NOT NULL
+       |  UNION ALL
+       |  SELECT CAST(list_reverse(embedding) AS DOUBLE[]) FROM embeddings
+       |  WHERE vec_id % 17 = 4 AND embedding IS NOT NULL),
+       |cnt2 AS MATERIALIZED (SELECT count(*) AS n FROM e2),
+       |mj2 AS MATERIALIZED (
+       |  SELECT j, CAST(sum(CAST(x[j] AS DECIMAL(20,6))) AS DOUBLE) / (SELECT n FROM cnt2) AS m
+       |  FROM e2, unnest(range(1, 65)) AS t(j) GROUP BY j),
+       |mv2 AS MATERIALIZED (SELECT list(m ORDER BY j) AS mv FROM mj2),
+       |${(1 to warmIters).map(wIter).mkString("\n")}
+       |ufin AS MATERIALIZED (SELECT v FROM uv$warmIters)
+       |SELECT CAST(t.j AS BIGINT) AS dim, round(mj2.m, 6) AS mu,
+       |  round(ufin.v[t.j], 6) AS loading
+       |FROM unnest(range(1, 65)) AS t(j) JOIN mj2 ON mj2.j = t.j CROSS JOIN ufin
+       |ORDER BY dim""".stripMargin
+  }
+
+  /** abtt_debias oracle: same fit CTEs, then the per-row projection /
+    * residual replayed with the identical IEEE expression tree (see
+    * Vectors.abttDebias — the expanded ||x−μ||² form exists exactly so
+    * every term is a left-to-right list_dot_product here).
+    */
+  private def abttOracle(iters: Int): String =
+    s"""${pcaCtes(iters)},
+       |scal AS MATERIALIZED (SELECT list_dot_product(mv.mv, fin.v) AS mdv,
+       |    list_dot_product(mv.mv, mv.mv) AS mdm FROM mv CROSS JOIN fin)
+       |SELECT e.vec_id,
+       |  round(list_dot_product(e.x, fin.v) - scal.mdv, 6) AS proj,
+       |  round(sqrt(greatest(
+       |    list_dot_product(e.x, e.x) - 2.0 * list_dot_product(e.x, mv.mv) + scal.mdm
+       |      - (list_dot_product(e.x, fin.v) - scal.mdv) * (list_dot_product(e.x, fin.v) - scal.mdv),
+       |    0.0)), 6) AS resid_norm
+       |FROM e CROSS JOIN fin CROSS JOIN mv CROSS JOIN scal
+       |ORDER BY vec_id""".stripMargin
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("label_centroids", (s, d) => labelCentroids(s, d),
+      """WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |norms AS (
+        |  SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
+        |    round(CAST(sum(CAST(sqrt(list_dot_product(v, v)) AS DECIMAL(28,6))) AS DOUBLE) / count(*), 6) AS avg_norm
+        |  FROM e GROUP BY label),
+        |dims AS (
+        |  SELECT label, i, CAST(sum(CAST(v[i] AS DECIMAL(20,6))) AS DOUBLE) / count(*) AS mean
+        |  FROM e, unnest(range(1, len(v) + 1)) AS t(i)
+        |  GROUP BY label, i),
+        |cent AS (
+        |  SELECT label, round(sqrt(CAST(sum(CAST(mean * mean AS DECIMAL(28,16))) AS DOUBLE)), 6) AS centroid_norm
+        |  FROM dims GROUP BY label)
+        |SELECT CAST(norms.label AS BIGINT) AS label, n_vecs, centroid_norm, avg_norm
+        |FROM norms JOIN cent ON norms.label = cent.label
+        |ORDER BY label""".stripMargin),
+    Query("vec_quantize", (s, d) => vecQuantize(s, d),
+      """WITH q AS (
+        |  SELECT vec_id,
+        |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS scale,
+        |    embedding
+        |  FROM embeddings)
+        |SELECT vec_id, round(scale, 9) AS scale,
+        |  CASE WHEN scale = 0 THEN 0
+        |       ELSE CAST(list_sum(list_transform(embedding,
+        |         x -> CAST(round(CAST(x AS DOUBLE) / scale) AS BIGINT))) AS BIGINT)
+        |  END AS q_sum,
+        |  CASE WHEN scale = 0 THEN 0.0
+        |       ELSE round(list_max(list_transform(embedding,
+        |         x -> abs(CAST(x AS DOUBLE) - round(CAST(x AS DOUBLE) / scale) * scale))), 9)
+        |  END AS max_err
+        |FROM q ORDER BY vec_id""".stripMargin),
+    Query("pca_top_component", (s, d) => pcaTopComponent(s, d), pcaOracle(3)),
+    Query("pca_incremental", (s, d) => pcaIncremental(s, d),
+      pcaIncrOracle(3, 1)),
+    Query("abtt_debias", (s, d) => abttDebias(s, d), abttOracle(3)),
+    Query("pca_components", (s, d) => pcaComponents(s, d),
+      pcaComponentsOracle(3)))
 }

@@ -239,4 +239,96 @@ object Video {
         .select(col("doc_id_1"), col("doc_id_2")))
       .withColumnRenamed("node", "doc_id")
       .orderBy(col("doc_id"))
+
+  /** Shared by video_near_dup and video_dup_clusters: per-clip 4x16-bit
+    * MAJORITY-VOTE fingerprint chunks, recomputed from the animated-GIF
+    * closed form (geometry w = (len % 6) + 2; F = (len % 3) + 2 frames:
+    * F-1 content frames whose uniform +f brightness shift preserves
+    * every gradient — so they share the base raster's dHash — plus one
+    * reversed-raster outlier). Majority (bit set iff 2*count > F)
+    * therefore reduces to: content hash for F >= 3, content AND
+    * reversed for F = 2. Corrupted subset (doc_id % 29 = 11) decodes
+    * to no frames and is excluded by construction.
+    */
+  private val VideoH4Cte: String =
+    """WITH cl AS (
+      |  SELECT doc_id, regexp_replace(text, '[^ -~]', '', 'g') AS s
+      |  FROM documents WHERE doc_id % 29 <> 11),
+      |geo AS (
+      |  SELECT doc_id, s, (length(s) % 3) + 2 AS nf,
+      |    (length(s) % 6) + 2 AS w,
+      |    (length(s) + (length(s) % 6) + 1) // ((length(s) % 6) + 2) AS h
+      |  FROM cl WHERE length(s) > 0),
+      |sides AS (
+      |  SELECT doc_id, w, h, 0 AS side,
+      |         rpad(s, CAST(w * h AS INTEGER), ' ') AS r FROM geo
+      |  UNION ALL
+      |  SELECT doc_id, w, h, 1,
+      |         reverse(rpad(s, CAST(w * h AS INTEGER), ' ')) FROM geo),
+      |grid AS (
+      |  SELECT doc_id, side, w, r, (t1.j * 8 + t2.i) AS bit,
+      |    (t1.j * h) // 8 AS y, (t2.i * w) // 9 AS x0,
+      |    ((t2.i + 1) * w) // 9 AS x1
+      |  FROM sides, unnest(range(8)) AS t1(j), unnest(range(8)) AS t2(i)),
+      |ck AS (
+      |  SELECT doc_id, side, bit // 16 AS chunk,
+      |    CAST(sum(CASE WHEN
+      |        ascii(substr(r, CAST(y * w + x1 + 1 AS INTEGER), 1)) >
+      |        ascii(substr(r, CAST(y * w + x0 + 1 AS INTEGER), 1))
+      |      THEN 1 << (bit % 16) ELSE 0 END) AS INTEGER) AS ck
+      |  FROM grid GROUP BY doc_id, side, bit // 16),
+      |piv AS (
+      |  SELECT ck.doc_id, chunk,
+      |    max(CASE WHEN side = 0 THEN ck END) AS cc,
+      |    max(CASE WHEN side = 1 THEN ck END) AS cd
+      |  FROM ck GROUP BY ck.doc_id, chunk),
+      |vote AS (
+      |  SELECT piv.doc_id, chunk,
+      |    CASE WHEN g.nf = 2 THEN piv.cc & piv.cd ELSE piv.cc END AS ck
+      |  FROM piv JOIN geo g ON piv.doc_id = g.doc_id),
+      |h4 AS (
+      |  SELECT doc_id,
+      |    max(CASE WHEN chunk = 0 THEN ck END) AS c0,
+      |    max(CASE WHEN chunk = 1 THEN ck END) AS c1,
+      |    max(CASE WHEN chunk = 2 THEN ck END) AS c2,
+      |    max(CASE WHEN chunk = 3 THEN ck END) AS c3
+      |  FROM vote GROUP BY doc_id)""".stripMargin
+
+  /** This family's registry queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    // video-shaped clips (animated GIF, multi-frame LZW + GCE skip):
+    // per-frame dHash, majority-vote clip fingerprint, the shared
+    // chunk-blocked pair join + CC closure; corrupted clips decode to
+    // no frames
+    // video_near_dup: majority-vote clip fingerprints over the animated
+    // closed form (see VideoH4Cte), brute-force pair join — equal to
+    // the engine's chunk-blocked join by the hamming<=3 pigeonhole
+    Query("video_near_dup", (s, d) => videoNearDup(s, d),
+      (VideoH4Cte + """
+        |SELECT * FROM (
+        |  SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2,
+        |    CAST(bit_count(xor(a.c0, b.c0)) + bit_count(xor(a.c1, b.c1)) +
+        |         bit_count(xor(a.c2, b.c2)) + bit_count(xor(a.c3, b.c3))
+        |      AS INTEGER) AS hamming
+        |  FROM h4 a JOIN h4 b ON a.doc_id < b.doc_id)
+        |WHERE hamming <= 3
+        |ORDER BY doc_id_1, doc_id_2""".stripMargin)),
+    // video_dup_clusters: the same pair graph, closed transitively —
+    // the media_dup_clusters recursive-CTE pattern over clip pairs
+    Query("video_dup_clusters", (s, d) => videoDupClusters(s, d),
+      ("WITH RECURSIVE" + VideoH4Cte.stripPrefix("WITH") + """,
+        |p AS (
+        |  SELECT a.doc_id AS d1, b.doc_id AS d2
+        |  FROM h4 a JOIN h4 b ON a.doc_id < b.doc_id
+        |  WHERE bit_count(xor(a.c0, b.c0)) + bit_count(xor(a.c1, b.c1)) +
+        |        bit_count(xor(a.c2, b.c2)) + bit_count(xor(a.c3, b.c3)) <= 3),
+        |edges AS (
+        |  SELECT d1 AS src, d2 AS dst FROM p
+        |  UNION ALL SELECT d2, d1 FROM p),
+        |reach(src, dst) AS (
+        |  SELECT src, dst FROM edges
+        |  UNION
+        |  SELECT r2.src, e.dst FROM reach r2 JOIN edges e ON r2.dst = e.src)
+        |SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
+        |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin)))
 }

@@ -260,20 +260,6 @@ object EventStreams {
       }
   }
 
-  /** Closed sessions per user from the streaming state machine, with
-    * the still-open session excluded (it has not ended).
-    */
-  def sessionizeEvents(events: DataFrame, gapSec: Long = 1800): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    sessionize(
-      events.select(
-        col("user_id"),
-        col("event_id"),
-        unix_timestamp(date_trunc("second", col("ts"))).as("sec"))
-        .as[Ev],
-      gapSec)
-  }
-
   // ---- streaming curation ingest ----
 
   /** Streaming ingest variant of the curation pipeline

@@ -201,17 +201,6 @@ class BenchBaselineSpec extends AnyFunSuite {
       === Seq("ok_slow", "boom"))
   }
 
-  test("every indexBuilds entry has an indexPrewarms twin") {
-    // an unpaired build would leave its family's caches COLD under
-    // SPARK_GRAFT_ONLY (the bench now logs + falls back to the build
-    // thunk, but the right state is a real prewarm twin) — pin the
-    // pairing here so a new build entry cannot land without one
-    val builds = SparkEntry.indexBuilds.map(_._1).toSet
-    val prewarms = SparkEntry.indexPrewarms.map(_._1).toSet
-    assert((builds -- prewarms).isEmpty,
-      s"indexBuilds without an indexPrewarms twin: ${builds -- prewarms}")
-  }
-
   test("non-bench files are ignored; empty dir yields empty baseline") {
     val dir = fixture(
       "BENCH_rX.json" -> "not json",

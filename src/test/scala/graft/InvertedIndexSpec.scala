@@ -30,6 +30,45 @@ class InvertedIndexSpec extends SparkTestBase {
     assert(a.sameElements(b))
   }
 
+  /** The flagship contract end to end (manifest → TextCorpus →
+    * InvertedIndex → LetterSink) on hand-derived corpora, so it is
+    * checked byte for byte on any host, golden fixtures or not. Each
+    * case lists its files in manifest order and its non-empty letter
+    * files; every other letter file must exist and be empty.
+    */
+  test("letter files match hand-derived fixture corpora byte for byte") {
+    val cases: Seq[(Seq[String], Map[Char, String])] = Seq(
+      // apostrophes, a dot inside a token, a non-ASCII letter, an empty
+      // file, CRLF line ends, an all-digit token, a hyphenated token
+      (Seq("don't Stop", "end.Begin café", "", "DON'T stop\r\n42 stop-it"),
+        Map('c' -> "caf:[2]\n", 'd' -> "dont:[1 4]\n",
+          'e' -> "endbegin:[2]\n", 's' -> "stop:[1 4]\nstopit:[4]\n")),
+      // within a letter: doc count descending, then word ascending
+      (Seq("b a", "a", "ab aa"),
+        Map('a' -> "a:[1 2]\naa:[3]\nab:[3]\n", 'b' -> "b:[1]\n")),
+      // runs of tabs and spaces; a word repeated within one file
+      (Seq("x\t\tx  y", "Y"),
+        Map('x' -> "x:[1]\n", 'y' -> "y:[1 2]\n")))
+    cases.zipWithIndex.foreach { case ((files, want), k) =>
+      val dir = Files.createTempDirectory(s"graft-letters-$k")
+      files.zipWithIndex.foreach { case (text, i) =>
+        Files.write(dir.resolve(s"f$i.txt"), text.getBytes("UTF-8"))
+      }
+      val manifest = dir.resolve("manifest.txt")
+      Files.writeString(manifest,
+        (files.size.toString +: files.indices.map(i => s"f$i.txt"))
+          .mkString("", "\n", "\n"))
+      val out = dir.resolve("out").toString
+      LetterSink.write(
+        InvertedIndex(TextCorpus.fromManifest(spark, manifest.toString)), out)
+      ('a' to 'z').foreach { c =>
+        val got = new String(Files.readAllBytes(Paths.get(out, s"$c.txt")),
+          "US-ASCII")
+        assert(got === want.getOrElse(c, ""), s"case $k: $c.txt differs")
+      }
+    }
+  }
+
   /** Golden fidelity: run the full pipeline over the reference's own small
     * corpus (read in place, never copied) and diff against its golden
     * outputs `checker/test_out_small/{a..z}.txt`.

@@ -1,13 +1,18 @@
 package graft
 
-/** Every registered query must run on sf0.001 and produce rows, and every
-  * oracleSql key must reference a registered query.
+/** Every registered query must run on sf0.001 and produce rows, and the
+  * registry's names must be unique across the families that declare them.
   */
 class QueriesSpec extends SparkTestBase {
 
-  test("oracleSql keys are a subset of queries keys") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracleSql without query: $orphans")
+  test("registry names are unique and every NljAllowed name is registered") {
+    // the name-keyed views silently keep one of two same-named queries
+    val names = SparkEntry.registry.map(_.name)
+    val dups = names.diff(names.distinct).distinct
+    assert(dups.isEmpty, s"registered more than once: $dups")
+    // a renamed query would otherwise leave a stale allowlist entry
+    val stale = NljAllowed -- names
+    assert(stale.isEmpty, s"NljAllowed names no registered query: $stale")
   }
 
   test("oracle-checked queries emit only hash-safe column types") {

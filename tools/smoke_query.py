@@ -5,10 +5,9 @@ oracle SQL without running the full Verify suite.
     python3 tools/smoke_query.py <query> [sfdir]
 
 Queries whose oracle reads the /tmp/graft_oracle_aux exports (simhash,
-IVF/PQ, LSH, count-min families) need SPARK_GRAFT_AUX set (a
-comma-separated list of oracleAux names, or "all") so VerifyOne
-(re)exports them first; the env var passes through to the sbt
-subprocess."""
+IVF/PQ, LSH, count-min families) need no setup: VerifyOne re-exports
+exactly the oracleAux tables named in the query's oracle SQL before it
+runs the query."""
 import json, subprocess, sys
 from pathlib import Path
 
